@@ -10,14 +10,26 @@ The headline set spans the engine's cost classes: fact-table aggregation
 (q1), selective join pipelines (q3/q5), event-time windowing and
 sessionization, dedup (exact hash + MinHash-LSH — the 100 TB path, not the
 exhaustive pair scan), vector similarity, text feature extraction, and the
-composite dashboard. Each query is materialized with a count() action after
-a warm-up of the input footers.
+composite dashboard. After a warm-up of the input footers and one executed
+warm-up per query, each query is timed as the median of three count()
+reps; a second, noop-sink pass (every column of every row computed) goes
+to the local record only. Every rep of every phase runs through
+`time_reps`, which is also the rep loop of tools_profile_query.py.
+
+The full record (per-rep spread, noop twins, failure tracebacks,
+host-noise markers) is written as JSON to `local_record_path(...)`, or to
+$SPARK_GRAFT_BENCH_LOCAL when set. The 10x/100x scale experiments that
+older records carry under `experiments` were retired once settled; their
+numbers stay in the committed BENCH_local*.json records and SCALE.md.
 
 Fault isolation: every per-query step is wrapped so one broken query can
 never zero the whole round's performance signal (round-2 postmortem: a
 single AnalysisException in warm-up crashed the run before the JSON line).
 Failures are reported in the JSON under "failed" and excluded from the
 total; the line is ALWAYS emitted.
+
+Usage: SPARK_GRAFT_SF_DIR=<fixtures>/sf0.01 \
+       [SPARK_GRAFT_BENCH_LOCAL=out.json] python bench.py
 """
 
 from __future__ import annotations
@@ -28,6 +40,8 @@ import re
 import sys
 import time
 import traceback
+from dataclasses import dataclass, field
+from typing import Any, Callable
 
 from mini_hive_server_spark import registry
 from mini_hive_server_spark.session import get_spark
@@ -100,7 +114,7 @@ EXTENDED = (
     # Round-7 late additions: the converged star-contraction CC (round-8
     # rework: local-contract pre-pass + one observe-fused job per round +
     # single-build entry checkpoint took it from 7.1-7.5s to ~4s at
-    # sf0.1; see the cc_path experiment for the growth curve), DSIR
+    # sf0.1; SCALE.md "Driver round 8" has the growth curve), DSIR
     # selection, and the MV delta refresh
     "graph_connected_components",
     "corpus_dsir_selection",
@@ -128,8 +142,8 @@ EXTENDED = (
     # story's third measured number next to agg_salted_hot_key and
     # events_click_attribution (those two measure the salted AGG and the
     # AQE skew-split paths; this one measures the manual salted JOIN at
-    # its ~30%-hot design regime; the plain-vs-salted payoff curve lives
-    # in the salted_skew experiment block)
+    # its ~30%-hot design regime; the plain-vs-salted payoff curve is in
+    # SCALE.md "Round-13: the skew defense")
     "join_salted_skew_planted",
 )
 
@@ -280,6 +294,88 @@ def local_record_path(
     return ("BENCH_local_noisy.json" if suspect else "BENCH_local.json"), suspect
 
 
+
+
+def count_rows(df) -> int:
+    return df.count()
+
+
+def noop_write(df) -> None:
+    # the noop sink computes every column of every row; count() lets
+    # Catalyst prune value expressions and sometimes whole subtrees
+    df.write.format("noop").mode("overwrite").save()
+
+
+@dataclass
+class Reps:
+    """One query's completed repetitions: (job label, wall-clock start,
+    seconds) per rep, plus the last rep's action result."""
+
+    marks: list[tuple[str, float, float]] = field(default_factory=list)
+    result: Any = None
+
+    @property
+    def median(self) -> float:
+        secs = sorted(s for _, _, s in self.marks)
+        return secs[len(secs) // 2]
+
+    @property
+    def spread(self) -> list[float]:
+        secs = [s for _, _, s in self.marks]
+        return [round(min(secs), 3), round(max(secs), 3)]
+
+
+def time_reps(
+    spark,
+    qs: dict[str, Callable],
+    sf_dir: str,
+    names,
+    phase: str,
+    reps: int,
+    action: Callable = count_rows,
+    failed: dict[str, str] | None = None,
+) -> dict[str, Reps]:
+    """Time `reps` runs of `action(qs[name](spark, sf_dir))` per name: the
+    one rep loop behind every bench phase and tools_profile_query.py.
+
+    Each rep runs under the job description `{phase}:{name}#{rep}`, so an
+    event log or UI maps every job back to its query and rep. The cache
+    is cleared after every rep: queries that persist() intermediates build
+    a NEW DataFrame per invocation, so earlier blocks are dead weight in a
+    long-lived session. A query that raises is cleared too (a multi-stage
+    query can persist intermediates before throwing, and orphaned blocks
+    would distort every later query's medians), reported on stderr,
+    recorded as `failed[name] = "{phase}: <error>"` when `failed` is
+    given, and left out of the result; the remaining names still run."""
+    sc = spark.sparkContext
+    out: dict[str, Reps] = {}
+    for name in names:
+        got = Reps()
+        try:
+            for rep in range(reps):
+                label = f"{phase}:{name}#{rep}"
+                sc.setJobDescription(label)
+                start, t0 = time.time(), time.perf_counter()
+                got.result = action(qs[name](spark, sf_dir))
+                got.marks.append((label, start, time.perf_counter() - t0))
+                spark.catalog.clearCache()
+        except Exception as e:
+            if failed is not None:
+                failed[name] = f"{phase}: {type(e).__name__}: {e}"
+            print(
+                f"# {phase.upper()} FAIL {name}: {traceback.format_exc()}",
+                file=sys.stderr,
+            )
+            try:
+                spark.catalog.clearCache()
+            except Exception:
+                pass
+            continue
+        out[name] = got
+    sc.setJobDescription(None)
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -289,7 +385,6 @@ def main() -> None:
     spark = get_spark(app_name="mhs-bench")
 
     qs = registry.queries()
-    timings: dict[str, float] = {}
     failed: dict[str, str] = {}
     # warm-up: list files + read footers once (a metadata count per table)
     # so per-query timings measure execution, not first-touch file listing
@@ -313,182 +408,62 @@ def main() -> None:
             f"# calibration probe failed:\n{traceback.format_exc()}",
             file=sys.stderr,
         )
-    for name in HEADLINE:
-        try:
-            # EXECUTED warm-up (round 8, VERDICT r7 #6): rounds 1-7 only
-            # BUILT the plan here, so the first timed rep still paid
-            # janino codegen + first-touch shuffle setup — the source of
-            # the dedup_exact 0.232-2.301s outlier class. One untimed
-            # count() retires those one-time costs before timing starts.
-            # Job label (guide §1.5): maps every job/stage in an event
-            # log or UI back to its query (round-13 optimization pass).
-            spark.sparkContext.setJobDescription(f"warmup:{name}")
-            qs[name](spark, sf_dir).count()
-            spark.catalog.clearCache()
-        except Exception as e:
-            failed[name] = f"warmup: {type(e).__name__}: {e}"
-            print(f"# WARMUP FAIL {name}: {traceback.format_exc()}", file=sys.stderr)
-            try:
-                # a multi-stage query can persist intermediates BEFORE
-                # throwing; without this clear the orphaned blocks distort
-                # every later query's medians (round-10 self-review)
-                spark.catalog.clearCache()
-            except Exception:
-                pass
+    # EXECUTED warm-up (round 8, VERDICT r7 #6): one untimed count() per
+    # query retires janino codegen + first-touch shuffle setup before
+    # timing starts (a built-only warm-up left the dedup_exact
+    # 0.232-2.301s outlier class in the first timed rep).
+    time_reps(spark, qs, sf_dir, HEADLINE, "warmup", reps=1, failed=failed)
 
-    spark.sparkContext.setJobDescription(None)
     # Repeat-median timing (since round 7; rounds 1-6 reported min-of-2):
     # three timed repetitions per query, report the per-query MEDIAN plus
-    # the [min, max] spread. The executed warm-up above already paid the
-    # one-time janino codegen compilation, so the three reps measure
-    # steady state; the host shows multi-second CPU-steal bursts
+    # the [min, max] spread. The host shows multi-second CPU-steal bursts
     # (round-5 measurement: one >2s query varied 1.9-6.0s across runs on
     # load-average-6 neighbors), and median-of-3 with a reported spread
     # lets a reader distinguish a noise burst (wide spread, stable
     # median) from a real plan regression (shifted median, tight
     # spread). Medians sit slightly above the old mins — compare r7+
     # rounds to each other on medians, to r1-r6 only directionally.
-    total = 0.0
-    spread: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        if name in failed:
-            continue
-        times: list[float] = []
-        rows = 0
-        try:
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                rows = qs[name](spark, sf_dir).count()
-                times.append(time.perf_counter() - t0)
-                # Queries that persist() intermediates (the dedup/similarity
-                # tiers) build a NEW DataFrame per invocation, so earlier
-                # blocks are dead weight — drop them so repeated invocations
-                # in this long-lived session don't accumulate cached blocks.
-                spark.catalog.clearCache()
-        except Exception as e:
-            failed[name] = f"timed: {type(e).__name__}: {e}"
-            print(f"# TIMED FAIL {name}: {traceback.format_exc()}", file=sys.stderr)
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
-            continue
-        times.sort()
-        med = times[len(times) // 2]
-        timings[name] = round(med, 3)
-        spread[name] = [round(times[0], 3), round(times[-1], 3)]
-        total += med
+    timed = time_reps(
+        spark, qs, sf_dir, [n for n in HEADLINE if n not in failed], "timed",
+        reps=3, failed=failed,
+    )
+    timings = {n: round(r.median, 3) for n, r in timed.items()}
+    spread = {n: r.spread for n, r in timed.items()}
+    for name, r in timed.items():
+        lo, hi = spread[name]
         print(
-            f"# {name}: median {med:.3f}s [{times[0]:.3f}-{times[-1]:.3f}] "
-            f"({rows} rows)",
+            f"# {name}: median {r.median:.3f}s [{lo:.3f}-{hi:.3f}] "
+            f"({r.result} rows)",
             file=sys.stderr,
         )
 
-    # Round-14 methodology twin (guide §1.4, VERDICT r13 #6): time every
-    # headline query a SECOND way through the noop sink, which computes
-    # every column of every row (count() lets Catalyst prune value
-    # expressions and sometimes whole subtrees). The twins live in the
-    # LOCAL record (`noop_queries`) and stderr ONLY: the driver-facing
-    # stdout `queries`/`value` stays count()-timed, because adding 33
-    # twin entries would (a) double the headline total and fake a 2x
+    # Timing methodology twin (guide §1.4): every headline query timed a
+    # SECOND way through the noop sink. The twins live in the LOCAL record
+    # (`noop_queries`) and stderr ONLY: the driver-facing stdout
+    # `queries`/`value` stays count()-timed, because adding 33 twin
+    # entries would (a) double the headline total and fake a 2x
     # regression in the round-over-round comparison and (b) breach the
-    # ~2000-char stdout tail budget. Both methodologies now coexist in
-    # the committed record so a future round can switch with evidence.
-    noop_timings: dict[str, float] = {}
-    noop_spread: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        if name in failed:
-            continue
-        times = []
-        try:
-            spark.sparkContext.setJobDescription(f"bench-noop:{name}")
-            for _ in range(3):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                times.append(time.perf_counter() - t0)
-                spark.catalog.clearCache()
-        except Exception:
-            print(
-                f"# NOOP FAIL {name}: {traceback.format_exc()}",
-                file=sys.stderr,
-            )
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass
-            continue
-        times.sort()
-        noop_timings[name] = round(times[len(times) // 2], 3)
-        noop_spread[name] = [round(times[0], 3), round(times[-1], 3)]
-    print(f"# noop-sink twins: {json.dumps(noop_timings)}", file=sys.stderr)
-
-    spark.sparkContext.setJobDescription(None)
-    # NOTE for plan readers: any `WindowExec: No Partition Defined`
-    # warnings below are EXPECTED — they come from the deliberate
-    # single-partition `*_window` BASELINE arms of the scale experiments
-    # (the before/after pairs), never from a registered query (the plan
-    # audit forbids that shape repo-wide).
-    print(
-        "# NOTE: WindowExec 'No Partition Defined' warnings come from the "
-        "deliberate single-partition experiment baseline arms, not from "
-        "registered queries",
-        file=sys.stderr,
+    # ~2000-char stdout tail budget. A noop failure is reported on stderr
+    # only; it never marks the query failed.
+    noop = time_reps(
+        spark, qs, sf_dir, [n for n in HEADLINE if n not in failed], "noop",
+        reps=3, action=noop_write,
     )
-    experiments = {}
-    for exp in (
-        _ntile_scale_experiment,
-        _cumsum_scale_experiment,
-        _lsh_band_scale_experiment,
-        _cc_scale_experiment,
-        _prefix_filter_scale_experiment,
-        _kcore_scale_experiment,
-        _textrank_scale_experiment,
-        _minhash_fidelity_scale_experiment,
-        _oph_scale_experiment,
-        _oph_longdoc_experiment,
-        _pq_adc_scale_experiment,
-        _bfs_scale_experiment,
-        _rfm_scale_experiment,
-        _pca_scale_experiment,
-        _salted_skew_scale_experiment,
-    ):
-        try:
-            got = exp(spark, sf_dir)
-            experiments.update(got)
-            for k, v in got.items():
-                # only *_sec / *x keys are seconds; rounds / fracs are unitless
-                # seconds iff *_sec, or a scale-multiplier suffix
-                # (…10x / …_window / …_distributed); counts like
-                # textrank_10x_vocab / fidelity_10x_pairs are unitless
-                unit = (
-                    "s"
-                    if (
-                        k.endswith("_sec")
-                        or re.search(r"\d+x(_window|_distributed)?$", k)
-                    )
-                    else ""
-                )
-                print(f"# experiment {k}: {v:.3f}{unit}", file=sys.stderr)
-        except Exception:
-            print(
-                f"# experiment {exp.__name__} failed:\n{traceback.format_exc()}",
-                file=sys.stderr,
-            )
+    noop_timings = {n: round(r.median, 3) for n, r in noop.items()}
+    noop_spread = {n: r.spread for n, r in noop.items()}
+    print(f"# noop-sink twins: {json.dumps(noop_timings)}", file=sys.stderr)
 
     # STDOUT budget (VERDICT r8 #1 — BENCH_r07 AND r08 both came back
     # `parsed: null`): the driver captures a bounded ~2000-char TAIL of
     # stdout, so a single JSON line longer than that loses its head and
     # never parses. The stdout line therefore carries ONLY the driver
-    # contract (`metric/value/unit/queries/sf` + subtotals; with 32
+    # contract (`metric/value/unit/queries/sf` + subtotals; with 33
     # headline queries that is ~1.2 KB — `tests/test_bench_record.py`
     # pins the worst case under 1900). Everything else — per-rep spread,
-    # the experiments block, the timing-methodology string, full failure
-    # tracebacks, host-noise markers — goes to stderr AND to the COMPLETE
-    # local record file (committed per round as BENCH_local_rN.json) so
-    # drift adjudication never again depends on the builder's memory.
+    # the timing-methodology string, full failure tracebacks, host-noise
+    # markers — goes to stderr AND to the COMPLETE local record file
+    # (committed per round as BENCH_local_rN.json) so drift adjudication
+    # never depends on the builder's memory.
     print(f"# spread: {json.dumps(spread)}", file=sys.stderr)
     noise_after = _noise_context()
     # Compact noise marker INSIDE the stdout record (VERDICT r9 #2): the
@@ -520,11 +495,10 @@ def main() -> None:
         "timing": "median-of-3, executed warmup (r7: median-of-3 built-only"
         " warmup; r1-r6: min-of-2)",
         "spread": spread,
-        # guide §1.4 twins (round 14): same queries, noop-sink action —
-        # the stdout `queries` stays count()-timed for comparability
+        # same queries, noop-sink action — the stdout `queries` stays
+        # count()-timed for comparability
         "noop_queries": noop_timings,
         "noop_spread": noop_spread,
-        "experiments": experiments,
         "failed_detail": failed,
         "noise": {"before": noise_before, "after": noise_after},
     }
@@ -542,8 +516,6 @@ def main() -> None:
     except OSError:
         print(f"# could not write {local_path}:\n{traceback.format_exc()}", file=sys.stderr)
     print(f"# timing: {full['timing']}", file=sys.stderr)
-    if experiments:
-        print(f"# experiments: {json.dumps(experiments)}", file=sys.stderr)
     line = json.dumps(out)
     # ADVICE r9: an `assert` is stripped under `python -O`, silently
     # reverting to the BENCH_r07/r08 `parsed: null` failure mode — the
@@ -554,1225 +526,6 @@ def main() -> None:
             "driver tail budget; move fields to stderr/local record"
         )
     print(line)
-
-
-def _ntile_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Before/after pair for the round-6 ntile repair, measured — the
-    single-partition `Window.orderBy` ntile vs `ranking.global_ntile`
-    (range-partitioned exact rank) on the SAME synthetic per-customer
-    aggregate, at 10× and 100× the fixture's customer cardinality (the
-    cardinalities a 100 TB run would push through this operator; no sf1
-    fixture exists, so the widened relation is generated in-memory with
-    deterministic hash-derived values). Both variants compute identical
-    buckets; the timing delta is purely the plan shape."""
-    import time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators.ranking import global_ntile
-
-    base = load_tables(spark, sf_dir)["customer"].count()
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base * mult
-        synth = spark.range(n).select(
-            F.col("id").alias("custkey"),
-            (F.pmod(F.xxhash64(F.col("id")), F.lit(1_000_000)) / 100.0).alias(
-                "monetary"
-            ),
-        )
-        order = [F.col("monetary").desc(), "custkey"]
-        variants = {
-            f"ntile_{mult}x_window": lambda: synth.select(
-                F.ntile(5).over(Window.orderBy(*order)).alias("b")
-            ),
-            f"ntile_{mult}x_distributed": lambda: global_ntile(
-                synth, 5, order, "b"
-            ),
-        }
-        for key, build in variants.items():
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                build().groupBy("b").count().count()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            out[key] = round(best, 3)
-    return out
-
-
-def _cumsum_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the distributed prefix-sum (`ranking.global_cumsum`
-    — the skeleton under sequence packing / Gini / ABC) vs the
-    single-partition `Window.orderBy` running sum, on a synthetic
-    token-count relation at 100x and 1000x the fixture's document
-    cardinality at sf0.1 (~500k / ~5M rows off the ~5k-doc base; VERDICT
-    r6 item 3: the ntile harness extended to the cumsum family, one
-    decade further because the prefix-sum stays cheap enough to afford
-    it). Deterministic hash-derived
-    integer token counts; both variants compute identical prefix sums,
-    so the timing delta is purely the plan shape — one range exchange +
-    P-row offsets fold vs a single-partition global sort."""
-    import time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators.ranking import global_cumsum
-
-    base = load_tables(spark, sf_dir)["documents"].count()
-    out: dict[str, float] = {}
-    for mult in (100, 1000):
-        n = base * mult
-        # order by a hash-derived key, NOT the monotone range id: ordering
-        # already-sorted input would let the single-partition baseline skip
-        # the one cost that kills it at scale (the global sort)
-        synth = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.xxhash64(F.col("id")).alias("sort_key"),
-            (F.pmod(F.xxhash64(F.col("id"), F.lit(1)), F.lit(2048)) + 1).alias(
-                "tok"
-            ),
-        )
-        order = [F.col("sort_key").asc()]
-        w = Window.orderBy(*order).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        variants = {
-            f"cumsum_{mult}x_window": lambda: synth.select(
-                F.sum("tok").over(w).alias("cum")
-            ),
-            f"cumsum_{mult}x_distributed": lambda: global_cumsum(
-                synth, order, "tok", "cum"
-            ),
-        }
-        for key, build in variants.items():
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.perf_counter()
-                # collect the 1-row reduction — NOT .count(): counting a
-                # grand aggregate lets Catalyst prune the aggregate
-                # expressions and with them the whole Window/cumsum
-                # subtree, timing an empty scan (measured: 50M-row
-                # "window cumsum" in 0.22s = the pruned plan)
-                build().agg(F.sum("cum"), F.max("cum")).collect()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-            out[key] = round(best, 3)
-    return out
-
-
-def _lsh_band_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the MinHash band-bucket candidate self-join — the
-    one dedup stage dedup.py's header names as the 100 TB skew risk (a
-    hot template band → hot bucket → quadratic pair blowup). The
-    signature stage is map-side linear, so the experiment synthesizes
-    the (doc_id, band, bh) relation DIRECTLY at 10x and 100x the sf0.1
-    corpus cardinality (16 bands/doc → 0.8M / 8M band rows) with the
-    fixture's pairing structure: ~2% of docs in planted 2-doc near-dup
-    buckets, everything else unique, plus ONE hot boilerplate bucket
-    holding 0.1% of the corpus (50 / 500 docs → 1.2k / 125k pairs from
-    that bucket alone). Timed: the same self-join + distinct the
-    registered `dedup_minhash_lsh` runs, over the persisted band
-    relation, AQE skew-join active. The curve substantiates the header's
-    claim with measured numbers instead of prose."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-
-    base = load_tables(spark, sf_dir)["documents"].count()
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base * mult
-        bands = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.explode(F.sequence(F.lit(0), F.lit(15))).alias("band"),
-        )
-        pair_root = F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(2))
-        bh = (
-            F.when(
-                (F.col("band") == 0)
-                & (F.pmod(F.col("doc_id"), F.lit(1000)) == 0),
-                F.lit(0),  # the hot boilerplate bucket: n/1000 docs
-            )
-            .when(
-                F.pmod(F.col("doc_id"), F.lit(100)) < 2,
-                F.xxhash64(pair_root, F.col("band")),  # 2-doc near-dup pair
-            )
-            .otherwise(F.xxhash64(F.col("doc_id"), F.col("band")))
-        )
-        rel = bands.select("doc_id", "band", bh.alias("bh")).persist()
-        rel.count()  # materialize OUTSIDE the timed window (mirrors the
-        # registered query, which joins a persisted band relation)
-        x, y = rel.alias("x"), rel.alias("y")
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            (
-                x.join(
-                    y,
-                    (F.col("x.band") == F.col("y.band"))
-                    & (F.col("x.bh") == F.col("y.bh"))
-                    & (F.col("x.doc_id") < F.col("y.doc_id")),
-                )
-                .select(
-                    F.col("x.doc_id").alias("d1"),
-                    F.col("y.doc_id").alias("d2"),
-                )
-                .distinct()
-                .count()
-            )
-            best = min(best, time.perf_counter() - t0)
-        rel.unpersist()
-        out[f"lsh_band_join_{mult}x"] = round(best, 3)
-    return out
-
-
-def _cc_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the star-contraction connected-components core on
-    its ADVERSARIAL shape — a path graph, where min-label propagation
-    needs diameter(=n) rounds but large-star/small-star needs O(log n).
-    Two measurements per size: (a) star contraction run to convergence
-    (rounds + seconds), and (b) plain synchronous min-label propagation
-    given the SAME round budget on the same graph, reporting the
-    fraction of nodes still mislabeled — at round budget R a path leaves
-    ~(n-R)/n of the graph unconverged, which is why the naive algorithm
-    cannot ship at 100 TB even though its per-round dataflow is
-    identical (one equi-join + one groupBy).
-
-    Sizes straddle the round-9 adaptive pre-pass budget (1M edges/chunk,
-    `graph._PREPASS_EDGE_BUDGET`): 300k = BELOW budget, certifying the
-    local-solve fast path (one bounded union-find chunk solves the path
-    outright, global rounds = 2 = compute + confirm); 3M = ABOVE budget,
-    certifying the distributed path (3 bounded chunks contract the
-    diameter-3M path to a 3-super-chain, then O(log chunks) star rounds
-    finish it) — the regime every 100 TB graph runs in."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.operators.graph import star_contraction_labels
-
-    out: dict[str, float] = {}
-    for n in (300_000, 3_000_000):
-        edges = spark.range(n - 1).select(
-            F.col("id").alias("u"), (F.col("id") + 1).alias("v")
-        )
-        stats: dict = {}
-        t0 = time.perf_counter()
-        bad = star_contraction_labels(edges, stats).filter(
-            F.col("label") != 0
-        ).count()
-        sec = time.perf_counter() - t0
-        rounds = stats["rounds"]
-        out[f"cc_path_{n}_star_sec"] = round(sec, 3)
-        out[f"cc_path_{n}_star_rounds"] = float(rounds)
-        out[f"cc_path_{n}_star_mislabeled"] = float(bad)  # 0 = exact
-        spark.catalog.clearCache()
-
-        # min-label propagation, SAME round budget, same checkpoint cadence
-        labels = (
-            edges.select(F.col("u").alias("node"))
-            .union(edges.select(F.col("v").alias("node")))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-        )
-        und = edges.union(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).persist()
-        prev = None
-        for _ in range(rounds):
-            nb = (
-                und.join(labels, und["v"] == labels["node"])
-                .groupBy(F.col("u").alias("node"))
-                .agg(F.min("label").alias("nb_min"))
-            )
-            labels = (
-                labels.join(nb, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        "label", F.coalesce("nb_min", F.col("label"))
-                    ).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            if prev is not None:
-                prev.unpersist(False)
-            # best-effort release handle: analyzed().rdd() reaches Spark
-            # internals (the checkpoint plan being a bare LogicalRDD); if
-            # a Spark upgrade changes that shape, leak the 2-3 small
-            # blocks instead of aborting the experiment (round-10
-            # self-review)
-            try:
-                prev = labels._jdf.queryExecution().analyzed().rdd()
-            except Exception:
-                prev = None
-        unconv = labels.filter(F.col("label") != 0).count()
-        out[f"cc_path_{n}_labelprop_same_rounds_unconverged_frac"] = round(
-            unconv / n, 4
-        )
-        und.unpersist()
-        if prev is not None:
-            prev.unpersist(False)
-        spark.catalog.clearCache()
-    return out
-
-
-def _prefix_filter_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the prefix-filtering candidate join (the exact-
-    recall dedup tier, `dedup_prefix_filter`) — VERDICT r7 #5. The
-    shingle/df stages are map-side linear, so the experiment synthesizes
-    the exploded (doc_id, n, psh) PREFIX relation directly at 10x and
-    100x the sf0.1 corpus cardinality (3 prefix tokens per doc) with the
-    fixture's pairing structure (~2% of docs in planted 2-doc near-dup
-    pairs sharing all prefix tokens, everything else unique) PLUS the
-    hot-token stress: one token planted into the prefix of 0.1% of the
-    corpus — the bucket df-ascending ordering normally exiles to the
-    suffix, so this measures the WORST case where a template token
-    slips into prefixes (50/500 docs -> 1.2k/125k candidate pairs from
-    that bucket alone). Timed: the same prefix equi-join + length filter
-    + distinct the registered query runs, over the persisted prefix
-    relation, AQE active."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-
-    base = load_tables(spark, sf_dir)["documents"].count()
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base * mult
-        toks = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.explode(F.sequence(F.lit(0), F.lit(2))).alias("slot"),
-        )
-        pair_root = F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(2))
-        psh = (
-            F.when(
-                (F.col("slot") == 0)
-                & (F.pmod(F.col("doc_id"), F.lit(1000)) == 0),
-                F.lit(0),  # the hot prefix token: n/1000 docs share it
-            )
-            .when(
-                F.pmod(F.col("doc_id"), F.lit(100)) < 2,
-                F.xxhash64(pair_root, F.col("slot")),  # 2-doc near-dup pair
-            )
-            .otherwise(F.xxhash64(F.col("doc_id"), F.col("slot")))
-        )
-        # document lengths: hash-derived 20..79 shingles, pair-equal for
-        # the planted pairs so the length filter keeps them
-        length = (
-            F.pmod(
-                F.xxhash64(
-                    F.when(
-                        F.pmod(F.col("doc_id"), F.lit(100)) < 2, pair_root
-                    ).otherwise(F.col("doc_id"))
-                ),
-                F.lit(60),
-            )
-            + 20
-        )
-        rel = toks.select(
-            "doc_id", length.alias("n"), psh.alias("psh")
-        ).persist()
-        rel.count()  # materialize OUTSIDE the timed window (mirrors the
-        # registered query, which explodes a persisted shingle relation)
-        x, y = rel.alias("x"), rel.alias("y")
-        t = 0.8
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            (
-                x.join(
-                    y,
-                    (F.col("x.psh") == F.col("y.psh"))
-                    & (F.col("x.doc_id") < F.col("y.doc_id"))
-                    & (F.col("y.n") >= F.ceil(F.lit(t) * F.col("x.n")))
-                    & (F.col("x.n") >= F.ceil(F.lit(t) * F.col("y.n"))),
-                )
-                .select(
-                    F.col("x.doc_id").alias("d1"),
-                    F.col("y.doc_id").alias("d2"),
-                )
-                .distinct()
-                .count()
-            )
-            best = min(best, time.perf_counter() - t0)
-        rel.unpersist()
-        out[f"prefix_filter_join_{mult}x"] = round(best, 3)
-    return out
-
-
-def _kcore_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the k-core peel (`kcore_peel`, k=3) on its
-    ADVERSARIAL depth shape — a complete binary tree, where each round
-    only peels the current leaf layer, so the round count is the tree
-    HEIGHT: growing the edge count 10x adds ~log2(10) ≈ 3 rounds while
-    wall-clock grows with rounds, not data (VERDICT r7 #5). A planted
-    20-clique (every degree 19 >= 3) rides along so the converged core
-    is NON-empty: the peel must erode the whole tree yet leave the
-    clique intact — `n_core` pins it (K20 = 190 edges), making each
-    measurement also a correctness certificate."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.operators.graph import kcore_peel
-
-    out: dict[str, float] = {}
-    for n in (30_000, 300_000):
-        tree = spark.range(2, n).select(
-            (F.col("id") / 2).cast("long").alias("u"), F.col("id").alias("v")
-        )
-        k20 = (
-            spark.range(20)
-            .select(F.col("id").alias("i"))
-            .crossJoin(spark.range(20).select(F.col("id").alias("j")))
-            .filter(F.col("i") < F.col("j"))
-            .select(
-                (F.lit(n) + F.col("i")).alias("u"),
-                (F.lit(n) + F.col("j")).alias("v"),
-            )
-        )
-        stats: dict = {}
-        t0 = time.perf_counter()
-        n_core = kcore_peel(tree.unionAll(k20), 3, stats).count()
-        sec = time.perf_counter() - t0
-        out[f"kcore_tree_{n}_sec"] = round(sec, 3)
-        out[f"kcore_tree_{n}_rounds"] = float(stats["rounds"])
-        out[f"kcore_tree_{n}_core_edges"] = float(n_core)  # 190 = exact
-        spark.catalog.clearCache()
-    return out
-
-
-def _textrank_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the TextRank core (`text_textrank_keywords`) —
-    VERDICT r8 #6: measure the VOCABULARY-BOUNDED claim. The tokenize +
-    adjacency stages are map-only, so the experiment synthesizes the
-    (a, b) word-adjacency relation directly at 10x and 100x the sf0.1
-    corpus's adjacency cardinality while the vocabulary grows only as
-    sqrt(mult) (Heaps' law with beta ~= 0.5), with a Zipf-ish skew
-    (quadratic concentration toward low word ids — hot function words)
-    so the word-keyed shuffles see realistic hot keys. Timed: the exact
-    post-tokenize dataflow the registered query runs — edge-weight
-    aggregate, degree aggregate, contribution-edge join, 3 unrolled
-    join+sum iterations — collected via a 2-column reduction (NOT
-    .count(), which would let Catalyst prune the rank arithmetic). The
-    claim being certified: wall time tracks the 10x/100x ADJACENCY pass
-    (linear map+shuffle volume), while every iterated relation stays
-    vocabulary-sized; `*_vocab` records that bound next to the
-    seconds."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    # the fixture's surviving-token adjacency cardinality + vocabulary,
-    # measured with the registered query's own tokenize rule
-    toks = docs.select(
-        F.filter(
-            F.split(F.lower(F.col("text")), "[^a-z]+"),
-            lambda x: F.length(x) >= 4,
-        ).alias("l")
-    )
-    row = toks.agg(
-        F.sum(F.greatest(F.size("l") - 1, F.lit(0))).alias("n_adj")
-    ).head()
-    base_adj = int(row["n_adj"])
-    # the FIXTURE's text is template-synthesized (~24 distinct surviving
-    # words — a degenerate vocabulary whose hot-key shuffles time
-    # scheduling constants, not the claim), so the curve uses a
-    # realistic English-corpus base vocabulary instead; what matters is
-    # the GROWTH LAW (V ~ sqrt(N), Heaps beta ~= 0.5), which is what the
-    # registered query's scale docstring claims
-    base_vocab = 20_000
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base_adj * mult
-        vocab = int(base_vocab * (mult**0.5))
-        uni = lambda seed: (
-            F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(1_000_000))
-            + 1
-        ) / 1_000_001.0
-        # log-uniform word draw: P(word = k) ~ 1/k — Zipf exponent ~1,
-        # real text's law. This matters for the measurement's honesty:
-        # a flatter skew (e.g. quadratic, exponent 1/2) lets DISTINCT
-        # bigrams grow ~linearly with the corpus and times a relation
-        # real corpora don't produce; under 1/k the distinct-bigram
-        # relation saturates toward the hot head, which is exactly the
-        # vocabulary-bounded behavior the registered query claims.
-        word = lambda seed: F.least(
-            F.floor(F.exp(uni(seed) * float(__import__("math").log(vocab)))).cast(
-                "long"
-            )
-            - 1,
-            F.lit(vocab - 1),
-        )
-        adj = spark.range(n).select(
-            word(0).alias("a"), word(1).alias("b")
-        )
-        t0 = time.perf_counter()
-        edges = (
-            adj.filter(F.col("a") != F.col("b"))
-            .groupBy(
-                F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
-            )
-            .agg(F.count(F.lit(1)).alias("w"))
-        )
-        und = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-        )
-        degs = und.groupBy(F.col("u").alias("word")).agg(
-            F.sum("w").cast("long").alias("deg")
-        ).persist()
-        ce = und.join(degs, und["u"] == degs["word"]).select(
-            "u", "v", (F.col("w").cast("double") / F.col("deg")).alias("wd")
-        ).persist()
-        nodes = degs.select("word")
-        ws = nodes.select("word", F.lit(1.0).alias("ws"))
-        for _ in range(3):
-            contrib = (
-                ws.join(ce, ws["word"] == ce["u"])
-                .groupBy("v")
-                .agg(F.sum(F.col("ws") * F.col("wd")).alias("c"))
-            )
-            ws = nodes.join(
-                contrib, nodes["word"] == contrib["v"], "left"
-            ).select(
-                "word",
-                (F.lit(0.15) + 0.85 * F.coalesce("c", F.lit(0.0))).alias("ws"),
-            )
-        ws.agg(F.sum("ws"), F.max("ws")).collect()
-        out[f"textrank_{mult}x_sec"] = round(time.perf_counter() - t0, 3)
-        out[f"textrank_{mult}x_vocab"] = float(vocab)
-        degs.unpersist()
-        ce.unpersist()
-        spark.catalog.clearCache()
-    return out
-
-
-def _minhash_fidelity_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the sketch-fidelity QA (`dedup_minhash_fidelity`)
-    — VERDICT r8 #6. The query's corpus-proportional stage is the
-    doc-keyed 16-slot min-signature aggregate (16 md5-derived slot
-    hashes per shingle row, map-side partial agg); the verified-pair
-    joins are bounded by the planted near-dup census, not the corpus.
-    The experiment synthesizes the exploded (doc_id, sh) shingle
-    relation directly at 10x and 100x the sf0.1 corpus cardinality
-    (40 shingles/doc, hash-derived; ~2% of docs in planted 2-doc pairs
-    sharing ALL shingles so the pair legs match end-to-end) and times
-    the registered query's own signature expression + the broadcast
-    pair joins + slot-agreement arithmetic. Linear seconds against 10x
-    corpus growth = the claim; the pair-join cost stays flat because
-    the pair list scales with the planted rate, not the corpus."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-
-    base = load_tables(spark, sf_dir)["documents"].count()
-    shingles_per_doc = 40
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n_docs = base * mult
-        pair_root = F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(2))
-        seed_doc = F.when(
-            F.pmod(F.col("doc_id"), F.lit(100)) < 2, pair_root
-        ).otherwise(F.col("doc_id"))
-        sh_rel = spark.range(n_docs * shingles_per_doc).select(
-            (F.col("id") / shingles_per_doc).cast("long").alias("doc_id"),
-            F.pmod(F.col("id"), F.lit(shingles_per_doc)).alias("slot"),
-        ).select(
-            "doc_id",
-            F.concat(
-                F.lit("sh:"), seed_doc.cast("string"), F.lit(":"), F.col("slot")
-            ).alias("sh"),
-        )
-        pairs = (
-            spark.range(n_docs)
-            .select(F.col("id").alias("doc_id"))
-            .filter(
-                (F.pmod(F.col("doc_id"), F.lit(100)) == 0)
-            )
-            .select(
-                F.col("doc_id").alias("d1"),
-                (F.col("doc_id") + 1).alias("d2"),
-                F.lit(1.0).alias("jaccard"),
-            )
-        )
-        t0 = time.perf_counter()
-        sig = sh_rel.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"{i}:"), F.col("sh"))), 1, 15
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).alias(f"m{i}")
-                for i in range(16)
-            ]
-        )
-        a = sig.select(
-            F.col("doc_id").alias("d1"),
-            *[F.col(f"m{i}").alias(f"a{i}") for i in range(16)],
-        )
-        b = sig.select(
-            F.col("doc_id").alias("d2"),
-            *[F.col(f"m{i}").alias(f"b{i}") for i in range(16)],
-        )
-        k = sum(
-            F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-            for i in range(16)
-        )
-        res = (
-            a.join(F.broadcast(pairs), "d1")
-            .join(b, "d2")
-            .agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.avg(k.cast("double") / 16).alias("mean_est"),
-            )
-            .collect()
-        )
-        out[f"fidelity_{mult}x_sec"] = round(time.perf_counter() - t0, 3)
-        out[f"fidelity_{mult}x_pairs"] = float(res[0]["n_pairs"])
-        spark.catalog.clearCache()
-    return out
-
-
-def _oph_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the OPH vs classic-64-permutation signature A/B
-    (VERDICT r9 #3) — the in-code A/B (dedup.py `dedup_minhash_oph`
-    docstring: classic 1.49s vs OPH 1.65s at sf0.1) finally gets its
-    10x/100x curve. Synthesizes the (doc_id, sh_arr) relation the two
-    PRODUCTION signature builders consume (`minhash_bands` /
-    `oph_bands` are called directly — no replica code) at 10x/100x the
-    sf0.1 corpus with 128 hash-shingles per doc (longer than the
-    10-99-word fixture — partway toward the long-document regime OPH
-    targets) and ~2% planted 2-doc near-dup pairs. Timed per arm: the
-    full signature + banding pipeline forced through a (count, sum(bh))
-    reduction. What the curve adjudicates: classic does 64 in-register
-    rehash-mins per shingle (compute-heavy, shuffle-light: 64-col
-    partial aggs), OPH does one rehash but a 64x-finer (doc, bucket)
-    aggregation plus the all-JVM window densification (shuffle-heavier)
-    — the crossover is a property of shingle count per doc, and the
-    measured numbers replace the docstring's prose claim. The curve's
-    first run already earned its keep: it caught the original per-doc
-    Python densify loop at 94s on the 100x point (vs classic 3.6s) and
-    drove the JVM rework (dedup.py `oph_bands`, round 10)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators.dedup import (
-        _minhash_bands_k,
-        oph_bands,
-    )
-
-    base = load_tables(spark, sf_dir)["documents"].count()
-    shingles_per_doc = 128
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n_docs = base * mult
-        pair_root = F.col("id") - F.pmod(F.col("id"), F.lit(2))
-        seed_doc = F.when(F.pmod(F.col("id"), F.lit(100)) < 2, pair_root).otherwise(
-            F.col("id")
-        )
-        sha = spark.range(n_docs).select(
-            F.col("id").alias("doc_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(shingles_per_doc - 1)),
-                lambda i: F.xxhash64(seed_doc, i),
-            ).alias("sh_arr"),
-        ).persist()
-        sha.count()  # materialize outside the timed window (the registered
-        # queries likewise consume a tracked-persisted sha)
-        # Two K operating points (round 11, VERDICT r10 #8): K=64 (the
-        # production default, 16 bands x 4 rows) and K=256 (the large-K
-        # regime `dedup_minhash_k256` registers, 64 bands x 4 rows) —
-        # the measured form of the crossover condition the K=64 curve
-        # only documented as prose ("OPH wins when K is in the hundreds").
-        arms = (
-            # (name, builder, reps) — the K=256 arms run ONE rep: they are
-            # 5-15x slower than K=64 and the comparison they adjudicate
-            # (classic-256 vs OPH-256, measured 21s vs 32s at 100x) is far
-            # outside rep noise; min-of-2 on them would add ~50s of bench
-            # wall for no adjudication value
-            ("classic", lambda s: _minhash_bands_k(s, 64, 16), 2),
-            ("oph", lambda s: oph_bands(s, 64, 16), 2),
-            ("classic256", lambda s: _minhash_bands_k(s, 256, 64), 1),
-            ("oph256", lambda s: oph_bands(s, 256, 64), 1),
-        )
-        for arm, builder, reps in arms:
-            best = float("inf")
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                builder(sha).agg(
-                    F.count(F.lit(1)).alias("n"),
-                    # xor-fold, not sum: summing 64M xxhash64 longs
-                    # overflows under the vanilla session's ANSI mode
-                    F.expr("bit_xor(bh)").alias("s"),
-                ).collect()
-                best = min(best, time.perf_counter() - t0)
-            out[f"oph_{arm}_sig_{mult}x_sec"] = round(best, 3)
-        sha.unpersist()
-        spark.catalog.clearCache()
-    return out
-
-
-def _oph_longdoc_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """The missing axis of the OPH/classic crossover (VERDICT r11 #7):
-    shingles-per-doc. The K=256 A/B refuted the documented crossover for
-    128-shingle docs (classic-256 beat OPH-256 at the 100x corpus
-    point), but OPH's theoretical win — one hash per shingle vs K
-    rehash-mins per shingle — scales with DOC LENGTH, not corpus size.
-    One long-document point: 15k docs x 4096 hash-shingles/doc (32x the
-    128-shingle arm; ~61M total shingles, the same total work as the
-    100x corpus point, so arm-vs-arm differences isolate the per-doc
-    length effect). At 4096 shingles and K=256 the expected bucket
-    occupancy is 16, so OPH's densification window is near-no-op and
-    its one-hash advantage should finally show — this measurement
-    decides whether the OPH tier's 'long-document scale path' docstring
-    claim survives (the dedup.py docstring records the outcome)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.operators.dedup import (
-        _minhash_bands_k,
-        oph_bands,
-    )
-
-    n_docs = 15_000
-    shingles_per_doc = 4_096
-    out: dict[str, float] = {}
-    sha = (
-        spark.range(n_docs)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(shingles_per_doc - 1)),
-                lambda i: F.xxhash64(F.col("id"), i),
-            ).alias("sh_arr"),
-        )
-        .repartition(2 * spark.sparkContext.defaultParallelism, "doc_id")
-        .persist()
-    )
-    sha.count()  # materialize outside the timed window
-    arms = (
-        ("classic", lambda s: _minhash_bands_k(s, 64, 16)),
-        ("oph", lambda s: oph_bands(s, 64, 16)),
-        ("classic256", lambda s: _minhash_bands_k(s, 256, 64)),
-        ("oph256", lambda s: oph_bands(s, 256, 64)),
-    )
-    for arm, builder in arms:
-        t0 = time.perf_counter()
-        builder(sha).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(bh)").alias("s"),  # xor-fold: ANSI-safe
-        ).collect()
-        out[f"oph_longdoc_{arm}_sig_sec"] = round(
-            time.perf_counter() - t0, 3
-        )
-    sha.unpersist()
-    spark.catalog.clearCache()
-    return out
-
-
-def _pq_adc_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for PQ+ADC retrieval (VERDICT r9 #3): codebook train
-    and the encode→LUT-scan→top-C stage at 10x/100x the sf0.1 vector
-    count (2k → 20k / 200k synthetic 64-dim vectors, hash-derived and
-    L2-normalized through the production expression). The two claims the
-    curve certifies: (a) codebook training is CORPUS-SIZE-INDEPENDENT —
-    `_pq_codebook` trains on a bounded 4096-subvector sample, so the
-    train seconds must stay flat from 10x to 100x; (b) the ADC scan is
-    linear in code rows — encode is one map-only Arrow argmin kernel,
-    the query LUTs ride the scoring kernel's task closure
-    (driver-bounded numpy), and the top-C exchange moves (qid, nid,
-    score) triples only. The scan stage calls the PRODUCTION
-    `_pq_scored_over`; the curve's first run earned its keep here too:
-    the original shape broadcast the per-query (M x k) LUT as a COLUMN,
-    materializing 16 KB of LUT into every scored row (21-41 s at the
-    200k-vector point, 16 GB of row traffic) — caught by this curve and
-    reworked into the thin-row closure kernel (similarity.py)."""
-    import time
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators import similarity as S
-
-    base = load_tables(spark, sf_dir)["embeddings"].count()
-    out: dict[str, float] = {}
-    # Fixture-point training cost (VERDICT r13 #7): the registered
-    # `similarity_pq_adc` memoizes its codebook per (session, sf_dir),
-    # so the bench's timed reps measure encode+scan+re-rank but NOT
-    # per-rep retraining (training runs once, in the untimed warm-up).
-    # This entry makes that excluded cost visible in the record: one
-    # direct `_pq_codebook` fit over the real fixture embeddings
-    # (bypassing the memo), timed after the MLlib warm-up below.
-    from mini_hive_server_spark.catalog import parallelize_scan
-
-    emb_fix = parallelize_scan(
-        load_tables(spark, sf_dir)["embeddings"], "vec_id"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    emb_fix = emb_fix.withColumn(
-        "vn",
-        F.expr("transform(v, e -> e / sqrt(" + S._DOT.format(a="v", b="v") + "))"),
-    )
-    # warm up MLlib before the timed trains: the first KMeans fit in a
-    # session pays class-loading + codegen (measured ~23s of pure warmup
-    # on the 10x point, which would fake an inverted train curve)
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    warm = spark.range(256).select(
-        array_to_vector(
-            F.expr(
-                "transform(sequence(0, 7),"
-                " i -> cast(pmod(xxhash64(id, i), 100) as double))"
-            )
-        ).alias("features")
-    )
-    KMeans(k=4, seed=1, maxIter=2).fit(warm)
-    t0 = time.perf_counter()
-    S._pq_codebook(spark, emb_fix)
-    out["pq_adc_train_sf_sec"] = round(time.perf_counter() - t0, 3)
-    spark.catalog.clearCache()
-    for mult in (10, 100):
-        n = base * mult
-        emb = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 63),"
-                " i -> cast(pmod(xxhash64(id, i), 1000) as double) / 500.0 - 1.0)"
-            ).alias("v"),
-        )
-        emb = emb.withColumn(
-            "vn",
-            F.expr("transform(v, e -> e / sqrt(" + S._DOT.format(a="v", b="v") + "))"),
-        ).persist()
-        emb.count()  # materialize outside both timed windows
-        t0 = time.perf_counter()
-        centers = S._pq_codebook(spark, emb)  # bounded-sample k-means
-        out[f"pq_adc_train_{mult}x_sec"] = round(time.perf_counter() - t0, 3)
-
-        q = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("qid"), F.col("vn").alias("qvn")
-        )
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            scored = S._pq_scored_over(emb, q, centers)
-            wc = Window.partitionBy("qid").orderBy(
-                F.col("adc_score").desc(), F.col("nid")
-            )
-            (
-                scored.withColumn("crank", F.row_number().over(wc))
-                .filter(F.col("crank") <= S._PQ_C)
-                .agg(F.count(F.lit(1)).alias("n"), F.sum("nid").alias("s"))
-                .collect()
-            )
-            best = min(best, time.perf_counter() - t0)
-        out[f"pq_adc_scan_{mult}x_sec"] = round(best, 3)
-        emb.unpersist()
-        spark.catalog.clearCache()
-    return out
-
-
-def _bfs_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the per-hop checkpoint + observed-census BFS body
-    (VERDICT r11 #4: `graph_bfs_3hop` was the most expensive bench query
-    and the one heavy tier with no 10x/100x entry). Drives the EXACT
-    production machinery (`graph.bfs_census`, factored out of the query
-    this round) over a deterministic expander-ish synthetic graph — per
-    node i, directed edges (i, (2i+1) mod n) and (i, (7i+3) mod n), so
-    every node appears as a source endpoint (node census = n exactly)
-    and the 3-hop frontier genuinely grows (the expensive regime; a path
-    graph would make BFS trivially cheap per hop).
-
-    Sizes are 10x apart (the CC path-graph protocol's ladder): 100k
-    nodes/200k directed edges and 1M/2M. What the curve certifies:
-    wall-clock is dominated by a FIXED number of rounds (hops+1
-    checkpoint jobs) whose per-round cost scales with |frontier|x|edges|
-    join throughput — there is no per-round growth term, so doubling
-    the ladder again is more executors, not more rounds. Built-in
-    exactness pin: tier-0 is every tenth node = exactly ceil(n/10),
-    asserted per size (a wrong frontier seed or node census would shift
-    it)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.operators.graph import bfs_census
-
-    out: dict[str, float] = {}
-
-    def _edges(n: int):
-        ids = spark.range(n)
-        return ids.select(
-            F.col("id").alias("u"), ((F.col("id") * 2 + 1) % n).alias("v")
-        ).union(
-            ids.select(
-                F.col("id").alias("u"), ((F.col("id") * 7 + 3) % n).alias("v")
-            )
-        )
-
-    # untimed warm-up at a throwaway size: the hop pipeline's codegen +
-    # first-touch shuffle setup otherwise lands on the SMALL curve point
-    # (measured: 12.7s cold vs 8.7s for the 10x-bigger size)
-    bfs_census(spark, _edges(10_000), hops=3).collect()
-    spark.catalog.clearCache()
-    for n in (100_000, 1_000_000):
-        edges = _edges(n)
-        t0 = time.perf_counter()
-        census = {
-            r["distance"]: r["n_nodes"]
-            for r in bfs_census(spark, edges, hops=3).collect()
-        }
-        sec = time.perf_counter() - t0
-        d0_expected = (n + 9) // 10
-        if census.get(0) != d0_expected:
-            raise AssertionError(
-                f"bfs tier-0 {census.get(0)} != {d0_expected} at n={n}"
-            )
-        out[f"bfs_expander_{n}_sec"] = round(sec, 3)
-        out[f"bfs_expander_{n}_reached_frac"] = round(
-            1.0 - census.get(-1, 0) / n, 4
-        )
-        spark.catalog.clearCache()
-    return out
-
-
-def _rfm_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the RFM composite's ranking machinery (VERDICT
-    r10 #5): three CHAINED `ranking.global_ntile` passes + the (R,F,M)
-    census over synthetic per-customer populations at 10x/100x the
-    sf0.1 customer cardinality, driving the PRODUCTION
-    `behavior._rfm_from_per_cust` (no replica code). The 100 TB question
-    is whether the exact-ntile path — range-partition, per-partition
-    rank, prefix-offset fold — keeps a linear slope when chained three
-    times over a customer-cardinality relation, with NO
-    single-partition sort (the plan audit forbids the `Window.orderBy`
-    shape; this curve measures what the audit only asserts
-    structurally). Values are deterministic hash-derived ints, sized
-    like the real columns (recency days 0-365, frequency 1-40, monetary
-    cents-scale)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators.behavior import _rfm_from_per_cust
-
-    base = load_tables(spark, sf_dir)["customer"].count()
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base * mult
-        per_cust = spark.range(n).select(
-            F.col("id").alias("o_custkey"),
-            F.pmod(F.xxhash64("id", F.lit(1)), F.lit(366)).cast("int").alias(
-                "recency_d"
-            ),
-            (F.pmod(F.xxhash64("id", F.lit(2)), F.lit(40)) + 1).alias(
-                "frequency"
-            ),
-            (F.pmod(F.xxhash64("id", F.lit(3)), F.lit(10_000_000)) / 100.0).alias(
-                "monetary"
-            ),
-        ).persist()
-        per_cust.count()  # materialize outside the timed window
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            # .collect() the bounded census (<= 125 cells), never .count():
-            # a count lets Catalyst prune the aggregate expressions
-            _rfm_from_per_cust(per_cust).collect()
-            best = min(best, time.perf_counter() - t0)
-        out[f"rfm_census_{mult}x_sec"] = round(best, 3)
-        per_cust.unpersist()
-        spark.catalog.clearCache()
-    return out
-
-
-def _pca_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Scale curve for the PCA power iteration (VERDICT r10 #5): the
-    Gram-accumulate -> integer-covariance -> two power steps pipeline
-    over synthetic 64-dim quantized corpora at 10x/100x the sf0.1
-    vector count, driving the PRODUCTION `similarity._pca_power_over`
-    (no replica code). The 100 TB question is the per-iteration corpus
-    pass: the mapInPandas Gram stage must emit <= d^2 + d + 1 partial
-    rows PER TASK regardless of corpus size (vectorized map-side
-    combine), so the curve should be linear in scan cost with a
-    corpus-size-INDEPENDENT shuffle/solve tail. Values are hash-derived
-    ints in the quantized range the production path produces
-    (round(x * 1e4) of unit-norm-ish coordinates)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.catalog import load_tables
-    from mini_hive_server_spark.operators.similarity import _pca_power_over
-
-    base = load_tables(spark, sf_dir)["embeddings"].count()
-    out: dict[str, float] = {}
-    for mult in (10, 100):
-        n = base * mult
-        q = spark.range(n).select(
-            F.expr(
-                "transform(sequence(0, 63),"
-                " i -> cast(pmod(xxhash64(id, i), 20001) - 10000 as bigint))"
-            ).alias("qv")
-        ).persist()
-        q.count()  # materialize outside the timed window
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            # collect the 64-row loading table (bounded) — not count()
-            _pca_power_over(q).collect()
-            best = min(best, time.perf_counter() - t0)
-        out[f"pca_power_{mult}x_sec"] = round(best, 3)
-        q.unpersist()
-        spark.catalog.clearCache()
-    return out
-
-
-def _salted_skew_scale_experiment(spark, sf_dir: str) -> dict[str, float]:
-    """Wall-clock payoff of manual key salting at its design regime
-    (round 13; the planted operating point `join_salted_skew_planted`
-    proves result-invariance — this measures the SPEED claim). Synthetic
-    events with ONE hot key carrying ~30% of both join sides (the
-    bot-traffic shape): within an SMJ key group the pairing work is
-    quadratic (hot_clicks x hot_purchases comparisons, the 1-hour window
-    applied as a post-join filter), so the unsalted AQE-less join puts
-    ~all of the work on one task while the salted twin caps every task
-    at ~1/8 of it — the per-reducer ceiling the rewrite exists to
-    enforce. Two salted arms since the round-13 rework: `salted` is the
-    live `_salted_attribution` (TARGETED — census-picked hot keys only),
-    `salted_all` is the blanket first cut kept inline for the A/B. Both arms run with AQE's skew-split OFF (manual salting's
-    stated regime: engines/stages where the split isn't available) and
-    auto-broadcast OFF (at 100 TB neither side is broadcastable; at the
-    experiment's row counts the purchase side would otherwise broadcast
-    and dodge the shuffle entirely). Arms must agree on the folded
-    output (checked; a silent semantic drift fails the experiment).
-    Scales 10k/100k events: within-key comparisons grow 100x (quadratic
-    in the hot share), so the salted win should hold ~constant at the
-    salt factor while absolute seconds grow.
-
-    The AQE arms (round 13 follow-up): the SAME plain join under
-    AQE's own skew-split, with thresholds scaled to the experiment's
-    KB-sized partitions (production defaults are 256MB; the
-    fixture-scaling pattern is `test_attribution_skew_join_splits_hot_key`).
-    `salted_skew_aqe_split_fired_*` records whether the executed plan
-    actually carried `skew=true`, so a threshold mis-scale reads as an
-    invalid arm, not a fake win. First measurement (round 13): on THIS
-    shape the default-conf arm's flag read 0.0 — the attribution join
-    feeds a groupBy on the join key, the SMJ's output partitioning
-    satisfies the aggregation's required distribution, and AQE refuses
-    a split that would break it (time ≈ plain: the defense never
-    engages). That is the `join_salted_skew` docstring's "stage whose
-    partitioning AQE will not break" regime, located empirically — the
-    attribution shape ITSELF is it, not an exotic corner. The forced
-    arm (`spark.sql.adaptive.forceOptimizeSkewedJoin=true`) makes AQE
-    split anyway and re-shuffle for the aggregation — the conf a 100 TB
-    operator must know about before trusting "AQE handles skew"."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mini_hive_server_spark.operators.behavior import _salted_attribution
-
-    n_users = 1_000
-    range_s = 10_000 * 3600  # 10k hours: bounds the per-hour pair density
-    out: dict[str, float] = {}
-    confs = {
-        "spark.sql.adaptive.skewJoin.enabled": "false",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-    }
-    # the AQE arm re-enables the skew-split with thresholds scaled to
-    # this experiment's KB-sized shuffle partitions (defaults: 256MB /
-    # 5x median — nothing here would ever register as skewed under them)
-    aqe_confs = {
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "1.2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32KB",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "16KB",
-    }
-    saved = {
-        k: spark.conf.get(k)
-        for k in {
-            **confs,
-            **aqe_confs,
-            "spark.sql.adaptive.forceOptimizeSkewedJoin": None,
-        }
-    }
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        for label, n_events in (("10k", 10_000), ("100k", 100_000)):
-            ev = (
-                spark.range(n_events)
-                .select(
-                    F.col("id").alias("event_id"),
-                    F.when(
-                        F.pmod(F.xxhash64("id", F.lit(1)), F.lit(100)) < 30,
-                        F.lit(-1),
-                    )
-                    .otherwise(F.pmod(F.xxhash64("id", F.lit(2)), F.lit(n_users)))
-                    .cast("long")
-                    .alias("user_id"),
-                    F.when(F.pmod("id", F.lit(2)) == 0, F.lit("click"))
-                    .otherwise(F.lit("purchase"))
-                    .alias("event_type"),
-                    F.timestamp_seconds(
-                        F.lit(1704067200)
-                        + F.pmod(F.xxhash64("id", F.lit(3)), F.lit(range_s))
-                    ).alias("ts"),
-                )
-                .repartition(2 * spark.sparkContext.defaultParallelism)
-                .persist()
-            )
-            ev.count()  # materialize outside the timed window
-            clicks = ev.filter(F.col("event_type") == "click").select(
-                "user_id", F.col("ts").alias("cts")
-            )
-            purchases = ev.filter(F.col("event_type") == "purchase").select(
-                F.col("user_id").alias("p_user_id"), F.col("ts").alias("pts")
-            )
-            plain = (
-                clicks.join(
-                    purchases,
-                    (F.col("p_user_id") == F.col("user_id"))
-                    & (F.col("pts") >= F.col("cts"))
-                    & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
-                )
-                .groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n_attributed"))
-            )
-            # the blanket salt-all shape (the round-13 FIRST CUT of
-            # _salted_attribution, kept inline as a measurement arm):
-            # every probe row salted, the ENTIRE build side replicated
-            # N x. The targeted rework exists because this arm measured
-            # 3.7x behind AQE's forced split — keep measuring it so the
-            # comparison lives in one record, same epoch, same data.
-            n_salt = 8
-            salts = F.array(*[F.lit(i) for i in range(n_salt)])
-            all_clicks = ev.filter(F.col("event_type") == "click").select(
-                "user_id",
-                F.col("ts").alias("cts"),
-                (F.col("event_id") % n_salt).cast("int").alias("salt"),
-            )
-            all_purchases = ev.filter(
-                F.col("event_type") == "purchase"
-            ).select(
-                F.col("user_id").alias("p_user_id"),
-                F.col("ts").alias("pts"),
-                F.explode(salts).alias("p_salt"),
-            )
-            salted_all = (
-                all_clicks.join(
-                    all_purchases,
-                    (F.col("p_user_id") == F.col("user_id"))
-                    & (F.col("p_salt") == F.col("salt"))
-                    & (F.col("pts") >= F.col("cts"))
-                    & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
-                )
-                .groupBy("user_id")
-                .agg(F.count(F.lit(1)).alias("n_attributed"))
-            )
-            for arm, df in (
-                ("plain", plain),
-                ("salted_all", salted_all),
-                ("salted", _salted_attribution(ev)),
-            ):
-                # 1-row fold over the arm's output defeats pruning while
-                # keeping the collect bounded (the salted arm's registered
-                # shape already ends in limit(20) — the extra ordering of
-                # ~1k per-user rows is noise next to the join)
-                folded = df.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("n_attributed").alias("s"),
-                )
-                t0 = time.perf_counter()
-                folded.collect()
-                out[f"salted_skew_{arm}_{label}_sec"] = round(
-                    time.perf_counter() - t0, 3
-                )
-            # third/fourth arms: the identical plain join under AQE
-            # skew-split — default rules, then forced. A FRESH .agg()
-            # Dataset is built after each conf flip — QueryExecution is
-            # cached per-Dataset, so re-collecting the existing `folded`
-            # would silently reuse the previous arm's plan.
-            try:
-                for arm, force in (("aqe", "false"), ("aqe_forced", "true")):
-                    for k, v in aqe_confs.items():
-                        spark.conf.set(k, v)
-                    spark.conf.set(
-                        "spark.sql.adaptive.forceOptimizeSkewedJoin", force
-                    )
-                    aqe_folded = plain.agg(
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum("n_attributed").alias("s"),
-                    )
-                    t0 = time.perf_counter()
-                    aqe_folded.collect()
-                    out[f"salted_skew_{arm}_{label}_sec"] = round(
-                        time.perf_counter() - t0, 3
-                    )
-                    plan = (
-                        aqe_folded._jdf.queryExecution()
-                        .executedPlan()
-                        .toString()
-                    )
-                    out[f"salted_skew_{arm}_split_fired_{label}"] = float(
-                        "skew=true" in plan
-                    )
-            finally:
-                # restore the manual-salting regime for the next size
-                # label (and the agreement check below)
-                for k, v in confs.items():
-                    spark.conf.set(k, v)
-                for k in aqe_confs:
-                    if k not in confs:
-                        spark.conf.set(k, saved[k])
-                spark.conf.set(
-                    "spark.sql.adaptive.forceOptimizeSkewedJoin",
-                    saved["spark.sql.adaptive.forceOptimizeSkewedJoin"],
-                )
-            # _salted_attribution ends in the registered query's
-            # orderBy+limit(20) — compare on the hot user's count, which
-            # both arms must agree on exactly (it dwarfs every other key)
-            hot_plain = plain.filter(F.col("user_id") == -1).collect()
-            hot_salted = (
-                _salted_attribution(ev).filter(F.col("user_id") == -1).collect()
-            )
-            if [tuple(r) for r in hot_plain] != [tuple(r) for r in hot_salted]:
-                raise AssertionError(
-                    f"salted/plain hot-key drift at {label}: "
-                    f"{hot_plain} vs {hot_salted}"
-                )
-            ev.unpersist()
-            spark.catalog.clearCache()
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-    return out
 
 
 if __name__ == "__main__":

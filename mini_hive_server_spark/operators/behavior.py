@@ -1047,12 +1047,12 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rfm_from_per_cust(per_cust: DataFrame) -> DataFrame:
     """The triple-global_ntile scoring + (R,F,M) census over an arbitrary
-    per-customer (o_custkey, recency_d, frequency, monetary) relation —
-    factored out so the bench scale experiment (bench.py
-    `_rfm_scale_experiment`) drives the EXACT production ranking path
-    over synthetic customer populations at 10x/100x (three chained
-    range-partitioned exact ntiles are the 100 TB question: the curve
-    certifies no single-partition sort sneaks in as cardinality grows)."""
+    per-customer (o_custkey, recency_d, frequency, monetary) relation.
+    Its 10x/100x scale curve over synthetic customer populations (three
+    chained range-partitioned exact ntiles are the 100 TB question; no
+    single-partition sort sneaks in as cardinality grows) is SCALE.md
+    "Round-11 scale curves"; the last numbers are the `rfm_census_*`
+    keys of the `experiments` block in BENCH_local_r14opt_final.json."""
     from .ranking import global_ntile
 
     scored = global_ntile(

@@ -292,9 +292,10 @@ def _minhash_bands_k(sha: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
     """`minhash_bands` parameterized over signature width: K rehash-min
     aggregation columns banded into n_bands × (K/n_bands) band hashes.
     The K=64 production tier and the K=256 large-K tier
-    (`dedup_minhash_k256`) share this one construction; the OPH/classic
-    crossover A/B (bench.py `_oph_scale_experiment`) drives it directly
-    at both widths."""
+    (`dedup_minhash_k256`) share this one construction. The OPH/classic
+    crossover A/B measured it at both widths: SCALE.md "Round-10 scale
+    curves" and "Round-11: the K=256 MinHash A/B" (the `oph_*` keys of
+    the `experiments` block in BENCH_local_r14opt_final.json)."""
     rows_per_band = n_perm // n_bands
     shh = sha.select("doc_id", F.explode_outer("sh_arr").alias("sh")).select(
         "doc_id", F.xxhash64("sh").alias("h")
@@ -749,8 +750,8 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.65s — at fixture scale the classic tier WINS: its 64 rehashes are
     fused in-register by whole-stage codegen, while OPH pays a
     64x-finer-grained (doc, bucket) aggregation plus the densification
-    window's shuffles. The round-10 scale curve (bench.py
-    `_oph_scale_experiment`, 128-shingle docs at 10x/100x corpus)
+    window's shuffles. The round-10 scale curve (SCALE.md "Round-10
+    scale curves", 128-shingle docs at 10x/100x corpus)
     measured the same verdict at scale — classic ~3s vs OPH ~26s at
     500k docs — so at K=64 the classic tier is the default at EVERY
     scale. Round 11 MEASURED the "K in the hundreds" crossover
@@ -763,8 +764,8 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc, two window passes) dominates; OPH's O(1)-per-element
     advantage needs shingles-per-doc >> sketch width (book-length
     documents), not merely large K. Round 12 MEASURED that remaining
-    axis (bench.py `_oph_longdoc_experiment`, 15k docs x 4096
-    shingles/doc — same ~61M total shingles as the 100x corpus point,
+    axis (SCALE.md "Round-12: the OPH long-document point", 15k docs x
+    4096 shingles/doc — same ~61M total shingles as the 100x corpus point,
     so only per-doc length varies): committed quiet record classic-256
     30.4s vs OPH-256 4.6s — **OPH wins 6.7x** (2.8x in the same-day
     protocol pass, 7.8s vs 22.2s; decisive in both windows) once
@@ -1021,12 +1022,13 @@ def dedup_minhash_k256(spark: SparkSession, sf_dir: str) -> DataFrame:
     operating point the OPH/classic crossover analysis names
     (`dedup_minhash_oph` docstring had hypothesized OPH wins once K is
     in the hundreds). Registering the tier turned that prose condition
-    into a second MEASURED A/B point — bench.py `_oph_scale_experiment`
-    runs classic-vs-OPH at BOTH K=64 and K=256 through these exact
-    production builders — and the measurement REFUTED it for this
+    into a second MEASURED A/B point — classic-vs-OPH at BOTH K=64 and
+    K=256 through these exact production builders (SCALE.md "Round-11:
+    the K=256 MinHash A/B") — and the measurement REFUTED it for this
     corpus shape: classic-256 21s vs OPH-256 32s at the 100x point
     (128-shingle docs). Round 12 measured the missing axis
-    (shingles-per-doc vs sketch width, `_oph_longdoc_experiment`): at
+    (shingles-per-doc vs sketch width, the `oph_longdoc_*` keys of
+    BENCH_local_r14opt_final.json's `experiments` block): at
     4096 shingles/doc OPH-256 WINS 2.8-6.7x across same-day windows
     (committed record 4.6s vs 30.4s) — so this
     classic-256 tier is the short-document large-K point, and the OPH

@@ -859,17 +859,17 @@ def graph_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted, which the old per-tier `agg(count)` form guaranteed and a
     groupBy over a unioned `visited` would have dropped."""
     edges = copurchase_edges(spark, sf_dir)  # session-scoped cached build
-    return bfs_census(spark, edges, hops=_BFS_HOPS)
+    return bfs_census(spark, edges)
 
 
-def bfs_census(spark: SparkSession, edges: DataFrame, hops: int) -> DataFrame:
-    """The per-hop checkpoint + observed-census BFS body, factored out of
-    `graph_bfs_3hop` (round 12) so the bench scale curve drives the
-    EXACT production machinery on synthetic 10x/100x graphs — VERDICT
-    r11 #4 (the most expensive bench query was the one heavy tier with
-    no curve). Takes a directed (u, v) edge relation; symmetrizes,
-    sources every tenth node, expands `hops` tiers, and returns the
-    (distance, n_nodes) census including the unreachable row (-1)."""
+def bfs_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
+    """The per-hop checkpoint + observed-census BFS body of
+    `graph_bfs_3hop`. Takes a directed (u, v) edge relation; symmetrizes,
+    sources every tenth node, expands `_BFS_HOPS` tiers, and returns the
+    (distance, n_nodes) census including the unreachable row (-1). Its
+    scale curve on synthetic 100k/1M-node expander graphs is SCALE.md
+    "Round-12: BFS scale curve"; the last numbers are the `bfs_expander_*`
+    keys of the `experiments` block in BENCH_local_r14opt_final.json."""
     from pyspark.sql import Observation
 
     par = 2 * spark.sparkContext.defaultParallelism
@@ -924,7 +924,7 @@ def bfs_census(spark: SparkSession, edges: DataFrame, hops: int) -> DataFrame:
         frontier = nodes.filter(F.col("node") % 10 == 0)
         counts = [n0]
         visited = frontier
-        for _ in range(1, hops + 1):
+        for _ in range(1, _BFS_HOPS + 1):
             nxt, nk = _ckpt_observed(
                 frontier.join(und, frontier["node"] == und["u"])
                 .select(F.col("v").alias("node"))
@@ -1325,8 +1325,10 @@ def star_contraction_stars(
     component's size is its child count + 1 — one exchange fewer than
     going through labels). Property-tested against union-find on
     synthetic path/star/random graphs in tests/test_llm_ops.py. Pass
-    `stats` to receive {"rounds": k} — the bench scale experiment reads
-    it to chart round growth vs graph size.
+    `stats` to receive {"rounds": k, "prepass_parts": p}; the path-graph
+    round-growth curve it fed is SCALE.md "Driver round 8" and "Driver
+    round 9, late" (the `cc_path_*` keys of the `experiments` block in
+    BENCH_local_r14opt_final.json).
 
     Round-8 constant-shaving (VERDICT r7 #3), three structural changes:
 

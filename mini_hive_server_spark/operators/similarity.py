@@ -750,26 +750,24 @@ def _pq_scored(spark: SparkSession, sf_dir: str):
     )
     # the bounded |q|-row collect feeding the closure LUTs is
     # deterministic per fixture — memoize it beside the codebook so the
-    # warm path skips a whole Spark job per call (round-11; the bench
-    # scale experiment passes its own q and is unaffected)
+    # warm path skips a whole Spark job per call (round-11)
     if cache_key not in _PQ_QROWS:
         _PQ_QROWS[cache_key] = sorted(
             q.select("qid", "qvn").collect(), key=lambda r: r["qid"]
         )
-    scored = _pq_scored_over(emb, q, centers, qrows=_PQ_QROWS[cache_key])
+    scored = _pq_scored_over(emb, centers, _PQ_QROWS[cache_key])
     return emb, q, scored
 
 
 def _pq_scored_over(
-    emb: DataFrame,
-    q: DataFrame,
-    centers: "np.ndarray",
-    qrows: list | None = None,
+    emb: DataFrame, centers: "np.ndarray", qrows: list
 ) -> DataFrame:
-    """The encode → LUT → ADC machinery over an arbitrary normalized
-    corpus (column `vn`) and query side (qid, qvn) with a trained
-    codebook — factored out so the bench scale experiment drives the
-    EXACT production path over synthetic corpora.
+    """The encode → LUT → ADC machinery over a normalized corpus (column
+    `vn`), the collected query rows (qid, qvn) sorted by qid, and a
+    trained codebook. Its 10x/100x scale curve (20k/200k synthetic
+    vectors) is SCALE.md "Round-10 scale curves" and "Round-11: PQ-ADC
+    encode+score fusion"; the last numbers are the `pq_adc_*` keys of
+    the `experiments` block in BENCH_local_r14opt_final.json.
 
     Round-10 rework (the r10 PQ scale curve caught it): the original ADC
     join broadcast the per-query (M x k) LUT as a COLUMN and scored with
@@ -801,10 +799,8 @@ def _pq_scored_over(
     c_sq = (centers**2).sum(axis=1)
 
     # bounded |q|-row collect: LUTs are (|q|, M, k) driver-local numpy,
-    # shipped via task closure — never through row data (callers on the
-    # registered path pass a memoized collect; see _pq_scored)
-    if qrows is None:
-        qrows = sorted(q.select("qid", "qvn").collect(), key=lambda r: r["qid"])
+    # shipped via task closure — never through row data (_pq_scored
+    # passes a memoized collect)
     q_ids = [int(r["qid"]) for r in qrows]
     qmat = np.array([r["qvn"] for r in qrows]).reshape(len(q_ids), _PQ_M, d_sub)
     luts = qmat @ centers.T  # (|q|, M, k)
@@ -1520,11 +1516,12 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pca_power_over(q: DataFrame) -> DataFrame:
     """The Gram-accumulate → integer-covariance → two power steps
     machinery over an arbitrary quantized corpus (column `qv`,
-    array<bigint>) — factored out so the bench scale experiment
-    (bench.py `_pca_scale_experiment`) drives the EXACT production path
-    over synthetic corpora at 10x/100x (the per-iteration corpus pass is
-    the 100 TB question; the curve certifies the shuffle stays at
-    <= d^2 + d + 1 rows per task regardless of corpus size)."""
+    array<bigint>). Its 10x/100x scale curve over synthetic corpora (the
+    per-iteration corpus pass is the 100 TB question; the shuffle stays
+    at <= d^2 + d + 1 rows per task regardless of corpus size) is
+    SCALE.md "Round-11 scale curves"; the last numbers are the
+    `pca_power_*` keys of the `experiments` block in
+    BENCH_local_r14opt_final.json."""
 
     def _gram_batches(it):
         # One Arrow pass accumulates the d x d product matrix, the per-dim

@@ -1514,10 +1514,13 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-bounded (Heaps' law: ~N^0.5); the ITERATED edge relation
     is distinct-BIGRAM-bounded, which stays far below the corpus only
     because real text is Zipf-distributed with exponent ~1 (the head
-    absorbs new adjacency mass) — bench.py's `textrank_*` curve
-    measures 10x corpus -> 1.3x wall under a 1/k word law, and its
-    documented negative result shows a flatter exponent-1/2 law loses
-    the bound (distinct bigrams then grow ~linearly with the corpus).
+    absorbs new adjacency mass) — the `textrank_*` scale curve (SCALE.md
+    "Driver round 9: scale-curve harness extended to the text/iterative
+    family"; last numbers in BENCH_local_r14opt_final.json's
+    `experiments` block) measures 10x corpus -> 1.3x wall under a 1/k
+    word law, and its documented negative result shows a flatter
+    exponent-1/2 law loses the bound (distinct bigrams then grow
+    ~linearly with the corpus).
     Float determinism: weights and degrees are BIGINTs, w/deg one IEEE
     division; per-word contribution sums reassociate at ~1e-15 relative,
     absorbed by ranking on the round(…, 6) value with a word tiebreak."""

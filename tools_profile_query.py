@@ -19,38 +19,53 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 EVENT_DIR = "/tmp/mhs_profile_events"
 
 
-def main() -> None:
-    # both `--reps N` and `--reps=N` are accepted (ADVICE r13: only the
-    # `=` form was parsed, so the advertised space form left a bare int
-    # in the query list and crashed in the registry lookup); any other
-    # `--` flag is an explicit error, not a silent query name
-    argv = sys.argv[1:]
-    args: list[str] = []
+USAGE = "usage: python tools_profile_query.py <query> [<query> ...] [--reps N]"
+
+
+def parse_args(argv: list[str]) -> tuple[list[str], int]:
+    """Query names and the rep count (default 2) from `argv`. Both
+    `--reps N` and `--reps=N` are accepted. Any other `--` flag, a rep
+    count that is missing or not a positive integer, or no query name
+    prints the usage line and exits with status 2."""
+
+    def usage(msg: str) -> None:
+        print(f"{msg}\n{USAGE}", file=sys.stderr)
+        raise SystemExit(2)
+
+    names: list[str] = []
     reps = 2
     i = 0
     while i < len(argv):
         a = argv[i]
-        if a.startswith("--reps="):
-            reps = int(a.split("=", 1)[1])
-        elif a == "--reps":
-            i += 1
-            reps = int(argv[i])
+        if a == "--reps" or a.startswith("--reps="):
+            if a == "--reps":
+                i += 1
+                val = argv[i] if i < len(argv) else ""
+            else:
+                val = a.split("=", 1)[1]
+            if not val.isdecimal() or int(val) < 1:
+                usage(f"--reps needs a positive integer, got {val!r}")
+            reps = int(val)
         elif a.startswith("--"):
-            raise SystemExit(
-                f"unknown flag {a!r}; usage: python tools_profile_query.py"
-                " <query> [<query> ...] [--reps N]"
-            )
+            usage(f"unknown flag {a!r}")
         else:
-            args.append(a)
+            names.append(a)
         i += 1
+    if not names:
+        usage("no query named")
+    return names, reps
+
+
+def main() -> None:
+    args, reps = parse_args(sys.argv[1:])
     os.makedirs(EVENT_DIR, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import time_reps
     from mini_hive_server_spark import registry
     from mini_hive_server_spark.session import get_spark
 
@@ -67,21 +82,19 @@ def main() -> None:
     for df in load_tables(spark, sf_dir).values():
         df.count()
 
-    marks: list[tuple[str, float, float]] = []  # (label, t0, t1)
-    for name in args:
-        fn = qs[name]
-        # untimed executed warm-up, mirroring bench.py
-        fn(spark, sf_dir).count()
-        spark.catalog.clearCache()
-        for rep in range(reps):
-            label = f"{name}#rep{rep}"
-            spark.sparkContext.setJobDescription(label)
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            t1 = time.time()
-            marks.append((label, t0, t1))
-            spark.sparkContext.setJobDescription(None)
-            spark.catalog.clearCache()
+    # untimed executed warm-up, then the profiled reps, both through
+    # bench's rep loop with the count() action
+    failed: dict[str, str] = {}
+    time_reps(spark, qs, sf_dir, args, "warmup", reps=1, failed=failed)
+    profiled = time_reps(
+        spark, qs, sf_dir, [n for n in args if n not in failed], "profile",
+        reps=reps, failed=failed,
+    )
+    marks = [
+        (label, t0, t0 + secs)
+        for r in profiled.values()
+        for label, t0, secs in r.marks
+    ]
     spark.stop()
 
     # ---- parse the event log ----
@@ -159,6 +172,8 @@ def main() -> None:
                 im = m.get("Input Metrics") or {}
                 st["input"] = st.get("input", 0) + im.get("Bytes Read", 0)
 
+    for name, err in failed.items():
+        print(f"\n=== {name}: FAILED {err}")
     for label, t0, t1 in marks:
         print(f"\n=== {label}: wall {t1 - t0:.3f}s ===")
         sel = [
