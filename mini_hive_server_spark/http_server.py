@@ -50,12 +50,16 @@ Design notes:
   or capped by construction (the registry's own scale audit), so
   serializing the collected result is serving, not a driver-side
   anti-pattern. Corpus-scale relations are never routed.
-* **One query at a time.** Request handling serializes on a lock: the
-  registry's `register` wrapper releases the PREVIOUS query's tracked
-  persist blocks when the next query builds (persistence.py), so two
-  concurrent builds could release blocks mid-collect. The Thrift
-  endpoint remains the concurrent-SQL surface; this facade trades
-  concurrency for exactly-the-driver's semantics per request.
+* **Requests run concurrently.** Every request is served on its own
+  handler thread, with no lock around query execution. The tracked
+  persist release cycle is per thread (persistence.py), so one
+  request's build never releases blocks another request is collecting,
+  and equal plans persisted by two requests share one owner-counted
+  cache entry. `collect_route_rows` runs each invocation in its own
+  persistence scope and releases all of it, pending blocks included,
+  once the rows are serialized: the request's DataFrame is discarded,
+  so nothing is left to protect and the handler thread leaves nothing
+  behind.
 * **Auth is out of scope** — the reference's Firebase-token middleware
   (``verifyFBToken``, index.js:60-80) is identity plumbing, not query
   semantics; the facade serves the already-synthesized multi-tenant
@@ -74,7 +78,7 @@ from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
-from . import registry
+from . import persistence, registry
 
 ROUTES: dict[str, str] = {
     "/buyer/home": "buyer_home_dashboard",  # index.js:542
@@ -154,12 +158,14 @@ def collect_route_rows(
 ) -> list[dict]:
     """Run registered query ``name`` and return its rows as JSON-safe
     dicts (explicit ``None`` for NULLs — unlike ``df.toJSON()``, which
-    silently drops null fields)."""
-    df = registry.queries()[name](spark, sf_dir)
-    return [
-        {k: _jsonable(v) for k, v in row.asDict(recursive=True).items()}
-        for row in df.collect()
-    ]
+    silently drops null fields). The blocks the invocation persisted are
+    released before returning (see the module's design notes)."""
+    with persistence.scope(keep=False):
+        df = registry.queries()[name](spark, sf_dir)
+        return [
+            {k: _jsonable(v) for k, v in row.asDict(recursive=True).items()}
+            for row in df.collect()
+        ]
 
 
 class QueryHTTPServer:
@@ -167,9 +173,6 @@ class QueryHTTPServer:
     port (exposed as ``.port``). Runs until ``.shutdown()``."""
 
     def __init__(self, spark: SparkSession, sf_dir: str, port: int = 0):
-        self._lock = threading.Lock()
-        outer = self
-
         class Handler(BaseHTTPRequestHandler):
             # socket timeout: bounds BLOCKING reads (request line, headers,
             # the POST body drain) so a trickling client can't pin a
@@ -283,8 +286,7 @@ class QueryHTTPServer:
 
             def _run(self, name: str, single: bool = False) -> None:
                 try:
-                    with outer._lock:
-                        rows = collect_route_rows(spark, sf_dir, name)
+                    rows = collect_route_rows(spark, sf_dir, name)
                 except Exception as e:  # surface, don't crash the server
                     self._reply(
                         500, {"message": f"{type(e).__name__}: {e}"}

@@ -1313,9 +1313,7 @@ def _unionfind_stars(pairs) -> tuple[list, list]:
     return out_a, out_b
 
 
-def star_contraction_stars(
-    edges: DataFrame, stats: dict | None = None
-) -> DataFrame:
+def star_contraction_stars(edges: DataFrame) -> DataFrame:
     """Run alternating large-star/small-star to convergence over an edge
     relation (columns `u`, `v`; direction and self-loops irrelevant) and
     return the converged STAR set (a, b): one star per component, every
@@ -1324,10 +1322,9 @@ def star_contraction_stars(
     from it; `graph_connected_components` reads the stars directly (a
     component's size is its child count + 1 — one exchange fewer than
     going through labels). Property-tested against union-find on
-    synthetic path/star/random graphs in tests/test_llm_ops.py. Pass
-    `stats` to receive {"rounds": k, "prepass_parts": p}; the path-graph
-    round-growth curve it fed is SCALE.md "Driver round 8" and "Driver
-    round 9, late" (the `cc_path_*` keys of the `experiments` block in
+    synthetic path/star/random graphs in tests/test_llm_ops.py. The
+    path-graph round-growth curve is in SCALE.md's round-8 and late
+    round-9 sections (the `cc_path_*` keys of the `experiments` block in
     BENCH_local_r14opt_final.json).
 
     Round-8 constant-shaving (VERDICT r7 #3), three structural changes:
@@ -1377,8 +1374,6 @@ def star_contraction_stars(
     # an already-wider-than-needed input is left alone
     n_edges = edges.count()
     prepass_parts = max(1, -(-n_edges // _PREPASS_EDGE_BUDGET))
-    if stats is not None:
-        stats["prepass_parts"] = prepass_parts
     # entry checkpoint: the upstream edge BUILD (often the expensive part
     # — e.g. the co-purchase pair aggregation) runs exactly once; round 1
     # reads these blocks. Must stay live until the function's output is
@@ -1476,21 +1471,17 @@ def star_contraction_stars(
     if prev_ckpt is not None:
         final_ckpt = prev_ckpt
         tracked_release(lambda: final_ckpt.unpersist(False))
-    if stats is not None:
-        stats["rounds"] = n_rounds
     return cur
 
 
-def star_contraction_labels(
-    edges: DataFrame, stats: dict | None = None
-) -> DataFrame:
+def star_contraction_labels(edges: DataFrame) -> DataFrame:
     """(node, label) component assignment, label = component minimum —
     the general-purpose face of `star_contraction_stars`. At convergence
     the star set alone determines the labels: children label as their
     root, roots (distinct b) label as themselves — no node-census
     anti-join needed, and every original node is covered because
     edge-derived node sets have no isolated members."""
-    cur = star_contraction_stars(edges, stats)
+    cur = star_contraction_stars(edges)
     return cur.select(F.col("a").alias("node"), F.col("b").alias("label")).unionAll(
         cur.select(F.col("b").alias("label"))
         .distinct()
@@ -1648,9 +1639,7 @@ SELECT CAST({_KCORE_K} AS INTEGER) AS k,
 """
 
 
-def kcore_peel(
-    edges: DataFrame, k: int = _KCORE_K, stats: dict | None = None
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
     """Converged k-core edge set of an undirected graph given as one row
     per canonical edge (u < v, deduplicated): repeat {degree count, drop
     nodes with deg < k and the edges touching them} until the edge count
@@ -1719,8 +1708,6 @@ def kcore_peel(
                 pass
     final_ckpt = prev_ckpt
     tracked_release(lambda: final_ckpt.unpersist(False))
-    if stats is not None:
-        stats["rounds"] = n_rounds
     return cur
 
 

@@ -57,6 +57,15 @@ def _cols(order_cols) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
+def _with_outputs(columns: list[str], outputs: dict[str, Column]) -> list:
+    """Select list with withColumn's semantics in one select: an output
+    named like an input column replaces it in place, the rest append in
+    order (a plain ``select(*columns, out.alias(c))`` would emit two
+    same-named columns)."""
+    sel = [outputs[c].alias(c) if c in outputs else c for c in columns]
+    return sel + [col.alias(n) for n, col in outputs.items() if n not in columns]
+
+
 def _ranged(df: DataFrame, cols: list[Column], num_partitions: int | None) -> DataFrame:
     """Range-repartition on the order keys, capture the partition id, and
     tracked-persist the result.
@@ -196,11 +205,11 @@ def global_row_number(
     # one select instead of withColumn + rename + drop (round 14: each
     # DataFrame op is a full py4j-analysis round trip; the output column
     # order is unchanged — df's columns, then total, then rank)
-    sel: list = list(df.columns)
-    if total_col:
-        sel.append(F.col(_TOT).alias(total_col))
-    sel.append((F.col(_OFF) + F.col("__rng_lrk")).cast("bigint").alias(rank_col))
-    return local.join(F.broadcast(offsets), _PID).select(*sel)
+    outputs = {total_col: F.col(_TOT)} if total_col else {}
+    outputs[rank_col] = (F.col(_OFF) + F.col("__rng_lrk")).cast("bigint")
+    return local.join(F.broadcast(offsets), _PID).select(
+        *_with_outputs(df.columns, outputs)
+    )
 
 
 def global_ntile(
@@ -238,7 +247,7 @@ def global_ntile(
         f"ELSE (__nt_n % {n}) + ((__nt_rk - (__nt_n % {n}) * ((__nt_n div {n}) + 1) - 1) "
         f"div greatest(__nt_n div {n}, 1)) + 1 END AS INT)"
     )
-    return ranked.select(*df.columns, bucket.alias(bucket_col))
+    return ranked.select(*_with_outputs(df.columns, {bucket_col: bucket}))
 
 
 def global_cumsum(
@@ -288,21 +297,21 @@ def global_cumsum(
         per_part[f"__nn_{v}"] = F.count(v).cast("bigint")
     offsets = _prefix_offsets(ranged, per_part, with_total=False)
     zero = F.lit(0).cast("bigint")
-    out_cols = [
-        F.when(
+    outputs = {
+        c: F.when(
             F.col(f"__cs_{v}").isNull() & (F.col(f"__nn_{v}") == 0),
             F.lit(None).cast("bigint"),
-        )
-        .otherwise(
+        ).otherwise(
             (
                 F.coalesce(F.col(f"__off_{v}"), zero)
                 + F.coalesce(F.col(f"__cs_{v}"), zero)
             ).cast("bigint")
         )
-        .alias(c)
         for v, c in zip(value_cols, cumsum_cols)
-    ]
-    return local.join(F.broadcast(offsets), _PID).select(*df.columns, *out_cols)
+    }
+    return local.join(F.broadcast(offsets), _PID).select(
+        *_with_outputs(df.columns, outputs)
+    )
 
 
 def global_cummin(
@@ -366,5 +375,7 @@ def global_cummin(
         F.expr("inline(r.offs)")
     )
     return local.join(F.broadcast(offsets), _PID).select(
-        *df.columns, F.least(F.col("__cm_loc"), F.col(_OFF)).alias(cummin_col)
+        *_with_outputs(
+            df.columns, {cummin_col: F.least(F.col("__cm_loc"), F.col(_OFF))}
+        )
     )

@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import persistence
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -189,15 +191,17 @@ def register(
 
         @functools.wraps(fn)
         def gated(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Release the previous query's tracked persist() blocks: the
-            # driver runs 50 queries in one session and never clears cache
-            # (see persistence.py). Queries composing other queries call
-            # the raw fn (module-level name), so internal persists survive
-            # until the NEXT top-level invocation.
-            from .persistence import release_tracked
-
-            release_tracked()
-            return fn(spark, sf_dir)
+            # Release this thread's previous query's tracked persist()
+            # blocks: a correctness sweep runs 50 queries in one session
+            # and never clears cache (see persistence.py). Queries composing other
+            # queries call the raw fn (module-level name), so internal
+            # persists survive until the NEXT top-level invocation. The
+            # scope releases what a query that raises had registered.
+            # release_tracked is looked up at call time so a tracer can
+            # wrap it (perfbench's traced run does).
+            persistence.release_tracked()
+            with persistence.scope():
+                return fn(spark, sf_dir)
 
         _REGISTRY[name] = QuerySpec(
             name=name, fn=gated, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or ""

@@ -98,11 +98,12 @@ def test_noise_suspect_run_never_clobbers_quiet_record(monkeypatch):
     # accrues some steal — the committed r10 quiet record carried 96 s
     # and the round-11 quiet retry 116 s over ~6-min runs (0.8-1.6% of
     # wall×CPUs); those must stay on the quiet path, while anything
-    # past 5% of wall×CPUs is suspect
+    # past 5% of wall×CPUs is suspect. The readings are 32-core ones, so
+    # they scale to this host's CPUs like the edge cases below.
     wall = 360.0
-    assert bench.local_record_path(116.0, 21.0, wall_s=wall) == (
-        "BENCH_local.json", False,
-    )
+    assert bench.local_record_path(
+        116.0 * ncpu / 32, 21.0 * ncpu / 32, wall_s=wall
+    ) == ("BENCH_local.json", False)
     quiet_edge = 0.04 * wall * ncpu
     noisy_edge = 0.06 * wall * ncpu
     assert bench.local_record_path(quiet_edge, 1.0, wall_s=wall) == (

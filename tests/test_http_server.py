@@ -198,3 +198,75 @@ def test_refused_drain_releases_connection_quickly(http_server):
         assert time.monotonic() - t0 < 15
     finally:
         s.close()
+
+
+def test_requests_are_served_concurrently(http_server, monkeypatch):
+    """The facade holds no lock around query execution: a request whose
+    collect blocks until a SECOND request has completed must finish. A
+    facade that serves one query at a time would hold the first request
+    until its bounded wait times out (500) before starting the second."""
+    import threading
+
+    from mini_hive_server_spark import http_server as http_mod
+
+    first_path, second_path = "/buyer/home", "/top-workers"
+    first_started, second_done = threading.Event(), threading.Event()
+
+    def fake_collect(spark, sf_dir, name):
+        if name == ROUTES[first_path]:
+            first_started.set()
+            if not second_done.wait(timeout=20):
+                raise TimeoutError("requests did not overlap")
+            return [{"request": 1}]
+        second_done.set()
+        return [{"request": 2}]
+
+    monkeypatch.setattr(http_mod, "collect_route_rows", fake_collect)
+    first: dict = {}
+
+    def send_first():
+        try:
+            first["reply"] = _get(http_server, first_path)
+        except urllib.error.HTTPError as e:
+            first["reply"] = (e.code, json.loads(e.read()))
+
+    t = threading.Thread(target=send_first)
+    t.start()
+    assert first_started.wait(timeout=20), "first request never started"
+    assert _get(http_server, second_path) == (200, [{"request": 2}])
+    t.join(timeout=30)
+    assert first.get("reply") == (200, [{"request": 1}])
+
+
+def test_concurrent_clients_get_sequential_bodies(http_server, spark):
+    """4 client threads send every GET and POST route at once; every body
+    equals what a sequential `collect_route_rows` returns for the route
+    (order-insensitive, through the same JSON encoding)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mini_hive_server_spark.http_server import collect_route_rows
+    from mini_hive_server_spark.plans.reference_model import _TASK_DETAIL_OID
+
+    def canon(body) -> list[str]:
+        rows = body if isinstance(body, list) else [body]
+        return sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+    requests = [("GET", p, n) for p, n in ROUTES.items()]
+    requests.append(("GET", f"/tasks/{_TASK_DETAIL_OID}", "ref_task_detail"))
+    requests += [("POST", p, n) for p, n in POST_ROUTES.items()]
+    expected = {
+        path: canon(json.loads(json.dumps(collect_route_rows(spark, SF_ORACLE, name))))
+        for _, path, name in requests
+    }
+
+    def send(request):
+        method, path, _ = request
+        status, body = (_get if method == "GET" else _post)(http_server, path)
+        return path, status, canon(body)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        replies = list(pool.map(send, requests))
+    assert len(replies) == len(requests)
+    for path, status, body in replies:
+        assert status == 200, path
+        assert body == expected[path], path

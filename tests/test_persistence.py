@@ -14,6 +14,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 from mini_hive_server_spark import persistence, registry
 
 from .conftest import SF_SMOKE
@@ -274,3 +276,157 @@ def test_edge_cache_is_session_identity_keyed(spark):
         assert copurchase_edges(child, SF_SMOKE) is child_edges
     finally:
         clear_copurchase_cache()
+
+
+def test_two_threads_keep_their_own_persists(spark):
+    """Two threads each run a correctness-bearing ranged persist
+    (`orders_gini_coefficient`) and plain persists (`dedup_minhash_lsh`),
+    interleaved step by step. The release cycle is per thread, so each
+    thread's `_LIVE` holds only its own entries, and the two equal ranged
+    plans share one owner-counted cache entry that survives the first
+    thread's release until the second thread has collected. Both
+    threads' results are oracle-equal, and once both threads released,
+    the session's cached-RDD count drains back to where it started."""
+    import threading
+
+    from .oracle_harness import compare
+
+    persistence.release_tracked()
+    _clear_all_persistent(spark)
+    pre = _drain_to(spark, 0)
+    main_live = list(persistence._LIVE)
+
+    qs, oracles = registry.queries(), registry.oracles()
+    gini, lsh = "orders_gini_coefficient", "dedup_minhash_lsh"
+    barrier = threading.Barrier(2, timeout=300)
+    errors: list[str] = []
+    seen: dict[str, list[int]] = {}
+
+    def check(name, df):
+        errors.extend(compare(name, df, oracles[name], SF_SMOKE))
+
+    def run(role: str) -> None:
+        try:
+            # step 1: both threads build the equal ranged plan
+            dfs = {gini: qs[gini](spark, SF_SMOKE)}
+            ranged = [
+                e
+                for e in persistence._LIVE
+                if isinstance(e, persistence._DeferredRelease)
+            ]
+            assert ranged, f"{role}: ranged relation not tracked on its own thread"
+            barrier.wait()
+            # step 2: A collects, then its next query releases its gini
+            # persist while B's equal persist is still uncollected
+            if role == "A":
+                assert persistence._OWNERS[ranged[0]._key][0] == 2, "not shared"
+                check(gini, dfs[gini])
+                dfs[lsh] = qs[lsh](spark, SF_SMOKE)
+            barrier.wait()
+            # step 3: B collects on the shared entry, then releases it;
+            # A collects its plain persists meanwhile
+            if role == "B":
+                state = persistence._cache_state(ranged[0]._df)
+                assert state == "loaded", f"shared ranged entry {state}"
+                check(gini, dfs[gini])
+                dfs[lsh] = qs[lsh](spark, SF_SMOKE)
+            else:
+                check(lsh, dfs[lsh])
+            barrier.wait()
+            if role == "B":
+                check(lsh, dfs[lsh])
+            seen[role] = [id(e) for e in persistence._LIVE]
+            barrier.wait()
+            persistence.release_tracked()
+            assert len(persistence._LIVE) == 0, f"{role}: tracker retained blocks"
+        except Exception as e:  # surface in the main thread
+            barrier.abort()
+            errors.append(f"{role}: {type(e).__name__}: {e}")
+
+    threads = [threading.Thread(target=run, args=(r,)) for r in "AB"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads), "threads did not finish"
+    assert not errors, errors
+    # each thread tracked its own lsh persists, and only those
+    assert seen["A"] and seen["B"]
+    assert not set(seen["A"]) & set(seen["B"])
+    assert list(persistence._LIVE) == main_live
+    main_keys = {getattr(e, "_key", None) for e in main_live}
+    assert set(persistence._OWNERS) <= main_keys, "owner counts outlived both releases"
+    assert _drain_to(spark, pre) == pre, "tracked blocks not released"
+
+
+def test_query_that_raises_releases_its_persists(spark):
+    """A registered query that raises after `tracked_persist` must not
+    leave its blocks for a later cycle: the registry wrapper releases
+    what that invocation registered before the error propagates, and
+    leaves the thread's earlier entries alone."""
+    from pyspark.storagelevel import StorageLevel
+
+    persistence.release_tracked()
+    before = list(persistence._LIVE)
+    persisted = []
+
+    def persist_then_raise(spark, sf_dir):
+        df = persistence.tracked_persist(spark.range(0, 100).selectExpr("id * 7 AS x"))
+        ranged = persistence.tracked_persist(
+            spark.range(0, 100).selectExpr("id * 11 AS y"), correctness_bearing=True
+        )
+        persisted.extend([df, ranged])
+        assert len(persistence._LIVE) == 2
+        raise RuntimeError("boom")
+
+    name = "__test_persist_then_raise"
+    registry.register(name, oracle="SELECT 1")(persist_then_raise)
+    try:
+        with pytest.raises(RuntimeError, match="boom"):
+            registry._REGISTRY[name].fn(spark, SF_SMOKE)
+    finally:
+        del registry._REGISTRY[name]
+    assert list(persistence._LIVE) == before
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+def test_owner_counts_hold_under_concurrent_persists(spark):
+    """More threads than cores persist and release one equal plan with a
+    short switch interval. Every owner must see the plan cached while it
+    holds it (an early unpersist would drop another owner's blocks), and
+    after the last release no owner count or cache entry is left (a lost
+    count update would keep the blocks forever)."""
+    import sys
+    import threading
+
+    from pyspark.storagelevel import StorageLevel
+
+    def plan():
+        return spark.range(0, 10).selectExpr("id * 13 AS z")
+
+    errors: list[str] = []
+
+    def worker() -> None:
+        try:
+            for _ in range(20):
+                entry = persistence._OwnedPersist(plan())
+                if entry._df.storageLevel == StorageLevel.NONE:
+                    errors.append("plan uncached while owned")
+                entry()
+        except Exception as e:
+            errors.append(f"{type(e).__name__}: {e}")
+
+    threads = [threading.Thread(target=worker) for _ in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads), "workers did not finish"
+    assert not errors, errors[:5]
+    assert plan().semanticHash() not in persistence._OWNERS
+    assert plan().storageLevel == StorageLevel.NONE

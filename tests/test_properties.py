@@ -409,3 +409,40 @@ def test_ranking_accepts_bare_string_order_cols(spark):
         r.name: r.rk for r in global_row_number(df, "id", "rk").collect()
     }
     assert got == {"a": 1, "b": 2, "c": 3}
+
+
+def test_ranking_output_named_like_input_replaces_it_in_place(spark):
+    """An output column named like an input column replaces it at its
+    original position (withColumn semantics) instead of emitting two
+    same-named columns, for every ranking operator."""
+    from mini_hive_server_spark.operators.ranking import (
+        global_cummin,
+        global_cumsum,
+        global_ntile,
+        global_row_number,
+    )
+
+    df = spark.createDataFrame(
+        [(3, 30, "c"), (1, 10, "a"), (2, 20, "b")], "id long, v long, name string"
+    )
+    outs = {
+        "row_number": global_row_number(df, "id", rank_col="v"),
+        "ntile": global_ntile(df, 3, "id", bucket_col="v"),
+        "cumsum": global_cumsum(df, "id", "v", cumsum_col="v"),
+        "cummin": global_cummin(df, "id", "v", cummin_col="v"),
+    }
+    expected = {
+        "row_number": {"a": 1, "b": 2, "c": 3},
+        "ntile": {"a": 1, "b": 2, "c": 3},
+        "cumsum": {"a": 10, "b": 30, "c": 60},
+        "cummin": {"a": 10, "b": 10, "c": 10},
+    }
+    for op, out in outs.items():
+        assert out.columns == ["id", "v", "name"], op
+        assert {r.name: r.v for r in out.collect()} == expected[op], op
+    # a total column named like an input also replaces it in place
+    ranked = global_row_number(df, "id", rank_col="rk", total_col="name")
+    assert ranked.columns == ["id", "v", "name", "rk"]
+    assert {r.id: (r.name, r.rk) for r in ranked.collect()} == {
+        1: (3, 1), 2: (3, 2), 3: (3, 3)
+    }
