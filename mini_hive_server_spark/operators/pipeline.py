@@ -733,7 +733,7 @@ def embedding_mapinarrow_normalize(spark: SparkSession, sf_dir: str) -> DataFram
     """Per-vector L2 normalization via mapInArrow — the zero-copy Arrow
     batch API, completing the engine's Python-surface matrix (pandas_udf
     scalar: dedup_simhash; grouped-agg UDAF: text_geomean_chars_udaf;
-    mapInPandas: multimodal; applyInPandas: write folds; WithState:
+    mapInPandas: multimodal; applyInPandas: events_forecast_holt; WithState:
     streaming; UDTF: text_tokenize_udtf; mapInArrow: HERE). For pure
     numeric array kernels mapInArrow beats mapInPandas: no pandas
     conversion, the numpy view aliases the Arrow buffer directly.

@@ -57,12 +57,23 @@ def _cols(order_cols) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, embedded backticks
+    doubled — the one way a column name enters this module's SQL
+    strings, so a backtick, quote, space or dot in it cannot break the
+    parse. Struct fields are named with ``AS <ident>`` rather than
+    ``named_struct('<name>', ...)`` string literals for the same reason."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _with_outputs(columns: list[str], outputs: dict[str, Column]) -> list:
     """Select list with withColumn's semantics in one select: an output
     named like an input column replaces it in place, the rest append in
     order (a plain ``select(*columns, out.alias(c))`` would emit two
     same-named columns)."""
-    sel = [outputs[c].alias(c) if c in outputs else c for c in columns]
+    sel = [
+        outputs[c].alias(c) if c in outputs else F.col(_ident(c)) for c in columns
+    ]
     return sel + [col.alias(n) for n, col in outputs.items() if n not in columns]
 
 
@@ -131,7 +142,11 @@ def _prefix_offsets(
     packed = (
         ranged.groupBy(_PID)
         .agg(*[col.alias(n) for n, col in per_partition.items()])
-        .agg(F.collect_list(F.struct(_PID, *names)).alias("pc"))
+        .agg(
+            F.collect_list(
+                F.struct(*[F.col(_ident(n)) for n in [_PID, *names]])
+            ).alias("pc")
+        )
     )
     # ONE O(P) fold over the pid-sorted partials (round-13 optimization
     # pass), replacing the per-pid transform ∘ filter ∘ aggregate form:
@@ -153,22 +168,22 @@ def _prefix_offsets(
     # built the identical expression through hundreds of py4j round
     # trips (~0.14 s of driver time per call, 3 calls in the RFM chain);
     # one expr() is one parse. The accumulator sums are positional
-    # (a_0..a_{k-1}, in `names` order) so no offset-name quoting is
-    # needed inside the lambda.
-    fields = ",".join([f"`{_PID}`:int"] + [f"`{n}`:bigint" for n in names])
+    # (a_0..a_{k-1}, in `names` order); every offset name goes through
+    # `_ident`.
+    pid, idents = _ident(_PID), [_ident(n) for n in names]
+    fields = ",".join([f"{pid}:int"] + [f"{q}:bigint" for q in idents])
     acc_init = ",".join(f"cast(0 as bigint) AS a_{i}" for i in range(len(names)))
     emitted = ",".join(
-        [f"'{_PID}', y.`{_PID}`"]
-        + [f"'{n}', s.a_{i}" for i, n in enumerate(names)]
+        [f"y.{pid} AS {pid}"] + [f"s.a_{i} AS {q}" for i, q in enumerate(idents)]
     )
     acc_step = ",".join(
-        f"s.a_{i} + coalesce(y.`{n}`, cast(0 as bigint)) AS a_{i}"
-        for i, n in enumerate(names)
+        f"s.a_{i} + coalesce(y.{q}, cast(0 as bigint)) AS a_{i}"
+        for i, q in enumerate(idents)
     )
     fold = (
         f"aggregate(array_sort(pc), "
         f"struct(cast(array() as array<struct<{fields}>>) AS offs, {acc_init}), "
-        f"(s, y) -> struct(concat(s.offs, array(named_struct({emitted}))) AS offs, {acc_step})"
+        f"(s, y) -> struct(concat(s.offs, array(struct({emitted}))) AS offs, {acc_step})"
         f")"
     )
     res = packed.select(F.expr(fold).alias("r"))
@@ -299,12 +314,13 @@ def global_cumsum(
     zero = F.lit(0).cast("bigint")
     outputs = {
         c: F.when(
-            F.col(f"__cs_{v}").isNull() & (F.col(f"__nn_{v}") == 0),
+            F.col(_ident(f"__cs_{v}")).isNull()
+            & (F.col(_ident(f"__nn_{v}")) == 0),
             F.lit(None).cast("bigint"),
         ).otherwise(
             (
-                F.coalesce(F.col(f"__off_{v}"), zero)
-                + F.coalesce(F.col(f"__cs_{v}"), zero)
+                F.coalesce(F.col(_ident(f"__off_{v}")), zero)
+                + F.coalesce(F.col(_ident(f"__cs_{v}")), zero)
             ).cast("bigint")
         )
         for v, c in zip(value_cols, cumsum_cols)
@@ -363,12 +379,13 @@ def global_cummin(
     # test_global_cummin_null_partition_regression contract. Like
     # `_prefix_offsets`, the fold is one SQL string: one parse instead
     # of dozens of py4j expression round trips.
+    pid, off = _ident(_PID), _ident(_OFF)
     fold = (
         f"aggregate(array_sort(pc), "
-        f"struct(cast(array() as array<struct<`{_PID}`:int,`{_OFF}`:bigint>>)"
+        f"struct(cast(array() as array<struct<{pid}:int,{off}:bigint>>)"
         f" AS offs, cast(null as bigint) AS run), "
-        f"(s, y) -> struct(concat(s.offs, array(named_struct("
-        f"'{_PID}', y.`{_PID}`, '{_OFF}', s.run))) AS offs, "
+        f"(s, y) -> struct(concat(s.offs, array(struct("
+        f"y.{pid} AS {pid}, s.run AS {off}))) AS offs, "
         f"least(s.run, y.m) AS run))"
     )
     offsets = packed.select(F.expr(fold).alias("r")).select(

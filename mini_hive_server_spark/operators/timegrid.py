@@ -530,15 +530,13 @@ def events_forecast_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     the seasonal decomposition (descriptive) and CUSUM (retrospective).
 
     The smoothing recursion is inherently sequential, so it runs as the
-    sanctioned per-group Arrow fold (`_greedy_budget_fold`'s pattern from
-    the reference write lifecycles, applied to a time series): events
-    reduce to DAY cardinality first, the fold sees only that bounded
-    series, and a production variant keys by series id (one group per
-    metric — group-level parallelism, the scale-guard property test
-    covers the pattern). The oracle replays the identical recurrence as a
-    recursive CTE; both engines execute the same float64 expression
-    sequence, so the folded state matches bit-for-bit before the output
-    rounding."""
+    sanctioned per-group Arrow fold — the package's one `applyInPandas`
+    outside streaming: events reduce to DAY cardinality first, the fold
+    sees only that bounded series, and a production variant keys by
+    series id (one group per metric — group-level parallelism). The
+    oracle replays the identical recurrence as a recursive CTE; both
+    engines execute the same float64 expression sequence, so the folded
+    state matches bit-for-bit before the output rounding."""
     events = load_tables(spark, sf_dir)["events"]
     daily = events.groupBy(F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("double").alias("y")

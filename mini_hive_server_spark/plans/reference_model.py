@@ -574,29 +574,33 @@ def ref_approve_submission_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # approve) are sequential ledgers: each request re-reads the user's coin
 # balance, so a rejected request consumes nothing and a later smaller one
 # can still succeed. That greedy-skip fold has no window/cumsum closed
-# form (rejections don't accumulate), so it runs as an Arrow-batched
-# applyInPandas over per-user groups — user-scale state, one shuffle on
-# the key, the policy-sanctioned Python boundary. All amounts are
-# quantized to INTEGER CENTS before folding, so the fold is exact integer
-# arithmetic in both engines and acceptance decisions can never flip on a
-# float ulp (same trick as text_perplexity_buckets' micro-nats); the
-# DuckDB oracles replay the identical fold as a recursive CTE.
+# form, so one SQL `aggregate` walks each key's requests in the JVM in
+# (ord_ts NULLs last, ord_id) order — the oracles' order — from the first
+# request's budget, keeping one counter struct per distinct grp: linear
+# in the key's requests (SCALE.md "Python boundary policy"). Amounts are
+# INTEGER CENTS, so acceptance can never flip on a float ulp (same trick
+# as text_perplexity_buckets' micro-nats); the DuckDB oracles replay the
+# identical fold as a recursive CTE.
 
-_FOLD_SCHEMA = "key string, grp string, cost_c long, budget_c long, accepted boolean"
+_BUDGET_FOLD_SQL = """inline(aggregate(rq,
+  named_struct('rem', rq[0].budget_c, 'g', transform(array_distinct(rq.grp),
+    g -> named_struct('grp', g, 'n', 0L, 'n_acc', 0L, 'acc_c', 0L))),
+  (a, r) -> named_struct('rem', IF(r.cost_c <= a.rem, a.rem - r.cost_c, a.rem),
+    'g', transform(a.g, v -> IF(v.grp <=> r.grp, named_struct('grp', v.grp,
+      'n', v.n + 1, 'n_acc', v.n_acc + IF(r.cost_c <= a.rem, 1, 0),
+      'acc_c', v.acc_c + IF(r.cost_c <= a.rem, r.cost_c, 0)), v))),
+  a -> a.g))"""
 
 
-def _greedy_budget_fold(pdf):
-    pdf = pdf.sort_values(["ord_ts", "ord_id"]).reset_index(drop=True)
-    rem = int(pdf["budget_c"].iloc[0])
-    accepted = []
-    for c in pdf["cost_c"]:
-        c = int(c)
-        ok = c <= rem
-        if ok:
-            rem -= c
-        accepted.append(ok)
-    pdf["accepted"] = accepted
-    return pdf[["key", "grp", "cost_c", "budget_c", "accepted"]]
+def _budget_fold(req: DataFrame) -> DataFrame:
+    """Requests (key, grp, ord_ts, ord_id, cost_c, budget_c) → one row
+    per (key, grp): the key's budget_c, the request count n, the accepted
+    count n_acc and the accepted cost acc_c."""
+    order = F.col("ord_ts").isNull().alias("ts_null"), "ord_ts", "ord_id"
+    rq = F.array_sort(F.collect_list(F.struct(*order, "grp", "cost_c", "budget_c")))
+    return req.groupBy("key").agg(rq.alias("rq")).select(
+        "key", F.expr("rq[0].budget_c AS budget_c"), F.expr(_BUDGET_FOLD_SQL)
+    )
 
 
 _REC_FOLD_SQL = """
@@ -669,10 +673,10 @@ def ref_post_task_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     later cheaper post can still succeed, which no prefix-cumsum
     reproduces. The fold runs in integer cents (exact in both engines).
 
-    Plan: tasks join the tenancy-sized users dim (AQE broadcasts), one
-    shuffle co-groups each buyer's requests for the Arrow-batched fold,
-    then a per-buyer aggregation and TakeOrderedAndProject with the
-    unique email tiebreak."""
+    Plan: tasks join the tenancy-sized users dim (broadcast), one
+    shuffle collects each buyer's requests for the JVM budget fold, whose
+    one row per buyer feeds TakeOrderedAndProject with the unique email
+    tiebreak — no Python worker."""
     tasks = reference_table(spark, "ref_tasks")
     users = reference_table(spark, "ref_users").select("email", "role", "coins")
     req = (
@@ -693,21 +697,20 @@ def ref_post_task_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("coins") * 100).cast("long").alias("budget_c"),
         )
     )
-    folded = req.groupBy("key").applyInPandas(_greedy_budget_fold, _FOLD_SCHEMA)
-    spent_c = F.sum(F.when(F.col("accepted"), F.col("cost_c")).otherwise(F.lit(0)))
+    # grp is the key: the fold emits one row per buyer
     return (
-        folded.groupBy("key")
-        .agg(
-            F.count(F.lit(1)).alias("n_requested"),
-            F.count_if(F.col("accepted")).alias("n_posted"),
-            F.count_if(~F.col("accepted")).alias("n_rejected_budget"),
-            F.round(F.any_value("budget_c") / 100.0, 2).alias("coins_before"),
-            F.round(spent_c / 100.0, 2).alias("coins_spent"),
-            F.round((F.any_value("budget_c") - spent_c) / 100.0, 2).alias(
+        _budget_fold(req)
+        .select(
+            F.col("key").alias("buyer_email"),
+            F.col("n").alias("n_requested"),
+            F.col("n_acc").alias("n_posted"),
+            (F.col("n") - F.col("n_acc")).alias("n_rejected_budget"),
+            F.round(F.col("budget_c") / 100.0, 2).alias("coins_before"),
+            F.round(F.col("acc_c") / 100.0, 2).alias("coins_spent"),
+            F.round((F.col("budget_c") - F.col("acc_c")) / 100.0, 2).alias(
                 "coins_after"
             ),
         )
-        .withColumnRenamed("key", "buyer_email")
         .orderBy(F.col("coins_spent").desc(), "buyer_email")
         .limit(20)
     )
@@ -776,8 +779,8 @@ def ref_approve_withdrawal_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: withdrawals join the users dim and the per-worker earnings
     aggregate (itself partial-agg'd from submissions); one shuffle
-    co-groups each worker's pending requests for the Arrow fold; the
-    final census is a 4-group aggregation."""
+    collects each worker's pending requests for the JVM budget fold; its
+    (worker, payment system) rows feed a 4-group aggregation."""
     wd = reference_table(spark, "ref_withdrawals")
     users = reference_table(spark, "ref_users").select("email", "coins")
     subs = reference_table(spark, "ref_submissions")
@@ -806,20 +809,15 @@ def ref_approve_withdrawal_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("budget_c"),
         )
     )
-    folded = req.groupBy("key").applyInPandas(_greedy_budget_fold, _FOLD_SCHEMA)
     return (
-        folded.groupBy("grp")
+        _budget_fold(req)
+        .groupBy(F.col("grp").alias("payment_system"))
         .agg(
-            F.count(F.lit(1)).alias("n_processed"),
-            F.count_if(F.col("accepted")).alias("n_approved"),
-            F.count_if(~F.col("accepted")).alias("n_rejected_insufficient"),
-            F.round(
-                F.sum(F.when(F.col("accepted"), F.col("cost_c")).otherwise(F.lit(0)))
-                / 100.0,
-                2,
-            ).alias("coins_paid"),
+            F.sum("n").alias("n_processed"),
+            F.sum("n_acc").alias("n_approved"),
+            F.sum(F.col("n") - F.col("n_acc")).alias("n_rejected_insufficient"),
+            F.round(F.sum("acc_c") / 100.0, 2).alias("coins_paid"),
         )
-        .withColumnRenamed("grp", "payment_system")
         .orderBy("payment_system")
     )
 

@@ -744,3 +744,31 @@ def test_woe_iv_pushes_returnflag_to_lineitem_scan(spark):
     plan = _plan(spark, "orders_woe_iv_binning")
     assert "PushedFilters" in plan and "l_returnflag" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_http_facade_routes_run_no_python(spark):
+    """SCALE.md "Reference-scope queries: zero Python UDFs", with no
+    exception: no query the HTTP facade serves (every GET and POST route
+    and GET /tasks/<oid>) plans a Python-evaluating operator, so a
+    process that only serves the facade never forks a Python worker."""
+    from mini_hive_server_spark import http_server, persistence
+
+    python_nodes = (
+        "FlatMapGroupsInPandas",
+        "ArrowEvalPython",
+        "BatchEvalPython",
+        "MapInPandas",
+        "MapInArrow",
+    )
+    names = {
+        *http_server.ROUTES.values(),
+        *http_server.POST_ROUTES.values(),
+        http_server._TASK_DETAIL_QUERY,
+    }
+    assert len(names) == 23, names
+    for name in sorted(names):
+        with persistence.scope(keep=False):
+            df = QS[name](spark, SF_SMOKE)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+        found = [n for n in python_nodes if n in plan]
+        assert not found, f"{name} plans {found}:\n{plan}"
