@@ -28,6 +28,7 @@ partition pruning cuts scans, with file sizes targeted at 128-512 MB via
 from __future__ import annotations
 
 import os
+import threading
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -131,22 +132,43 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-# Per-session memo of the fixture DataFrames: binding a table handle costs a
-# driver-side file listing + footer schema read (~90ms × 10 tables per call
-# through Py4J — measured ~0.9s, dominating every sub-second query). The
-# fixtures are immutable (mutation queries write DERIVED outputs to /tmp,
-# never back to sf_dir), and DataFrames are immutable plan handles, so
-# binding once per (session, sf_dir) is exactly the reference's
-# startup-bound collection handles (index.js:284-289). Weak-keyed so a
-# stopped session's entries die with it.
-_TABLES_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, dict[str, DataFrame]]]" = (
-    weakref.WeakKeyDictionary()
-)
+# What the engine reuses across the queries of one session lives in one
+# place: a dict per (session, kind) hung on the session object itself.
+# A module dict keyed by the session, even weakly, never frees its
+# entries: the memoized DataFrames hold their session, so the value keeps
+# the key alive. Held by the session, a dropped session and everything it
+# memoized form one garbage cycle. A `newSession()` child is a different
+# object with its own SQLConf, so it gets its own memos. `_SESSIONS` is
+# weak, so it lets callers reach every live session's memo
+# (`session_memos`) without pinning any of them.
+_MEMO_ATTR = "_graft_memos"
+_MEMO_LOCK = threading.Lock()
+_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+
+
+def session_memo(spark: SparkSession, kind: str) -> dict:
+    """The session's dict for one kind of reuse, created on first use.
+    The lock covers only the dict creation; callers build values
+    outside it."""
+    with _MEMO_LOCK:
+        _SESSIONS.add(spark)
+        return vars(spark).setdefault(_MEMO_ATTR, {}).setdefault(kind, {})
+
+
+def session_memos(kind: str) -> list[dict]:
+    """The `kind` memo of every live session."""
+    with _MEMO_LOCK:
+        return [vars(s)[_MEMO_ATTR].setdefault(kind, {}) for s in _SESSIONS]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read every fixture table as a DataFrame (lazy — no scan happens here).
-    Handles are memoized per (session, sf_dir); see _TABLES_CACHE."""
+
+    Handles are memoized per (session, sf_dir): binding one costs a
+    driver-side file listing and footer read (~0.9 s for the 10 tables
+    through py4j), and the fixtures are immutable (mutation queries
+    write derived outputs elsewhere), so this binds once like the
+    reference's startup-bound collection handles (index.js:284-289)."""
     # every query path funnels through here, so this is where driver-owned
     # vanilla sessions (correctness gate, foreign-cwd launches) get the
     # package zip shipped to executor Python workers (VERDICT r10 #6);
@@ -161,11 +183,8 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    try:
-        per_session = _TABLES_CACHE.setdefault(spark, {})
-    except TypeError:  # session not weak-referenceable on this build
-        per_session = {}
-    cached = per_session.get(sf_dir)
+    memo = session_memo(spark, "tables")
+    cached = memo.get(sf_dir)
     if cached is not None:
         return dict(cached)
     out = {}
@@ -174,7 +193,7 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             out[name] = _read_events(spark, sf_dir)
         else:
             out[name] = spark.read.parquet(table_path(sf_dir, name))
-    per_session[sf_dir] = out
+    memo[sf_dir] = out
     return dict(out)
 
 
@@ -200,32 +219,22 @@ def parallelize_scan(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(par, *keys) if keys else df.repartition(par)
 
 
-# Memo of the scan-partition probe: `df.rdd.getNumPartitions()` converts
-# the plan to an RDD (~120ms through Py4J) on EVERY invocation, even for a
-# plan Spark has analyzed before. The count is a pure function of the
-# (immutable) input layout + plan, so key it by the plan's semanticHash
-# (~7ms) per session. Assumptions this memo rests on (round-10
-# self-review): layout-affecting confs (spark.sql.files.maxPartitionBytes)
-# stay fixed within a session — nothing in the repo flips them after
-# startup — and the fixture files are immutable (TESTDATA.md). A stale
-# count degrades parallelism for the Arrow-kernel scans, never
-# correctness; flip those confs mid-session and this memo must be keyed
-# on them too.
-_NUMPARTS_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[int, int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def _scan_partitions(df: DataFrame) -> int:
+    """`df.rdd.getNumPartitions()`, memoized per session by the plan's
+    semanticHash (~7 ms against ~120 ms for the RDD conversion through
+    py4j). The count is a pure function of the immutable fixture layout
+    and the plan, provided layout confs (spark.sql.files.maxPartitionBytes)
+    stay fixed within a session, which nothing in the repo changes after
+    startup. A stale count would degrade scan parallelism, never
+    correctness."""
     try:
-        per_session = _NUMPARTS_CACHE.setdefault(df.sparkSession, {})
         key = df.semanticHash()
     except Exception:
         return df.rdd.getNumPartitions()
-    n = per_session.get(key)
+    memo = session_memo(df.sparkSession, "scan_partitions")
+    n = memo.get(key)
     if n is None:
-        n = df.rdd.getNumPartitions()
-        per_session[key] = n
+        n = memo[key] = df.rdd.getNumPartitions()
     return n
 
 

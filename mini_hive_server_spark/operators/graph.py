@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, session_memo, session_memos
 from ..registry import register
 
 _DAMPING = 0.85
@@ -1077,111 +1077,76 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     )
 
 
-# --- session-scoped edge-build cache (round 9, VERDICT r8 #7) ---------------
+# --- session-scoped edge-build cache ----------------------------------------
 #
 # Five registered queries (degree distribution, BFS, CC, label propagation,
-# k-core) consume the SAME co-purchase edge relation; run back-to-back by
-# the driver each one re-derived it (~3.9s of the ~4s build at sf0.1 —
-# measured, SCALE.md §"Graph-family edge-build cache"). The result is tiny
-# (3,573 rows / ~57 KB at sf0.1: support-thresholding caps it near the
-# part-catalog axis, not the lineitem axis), so one persisted copy per
-# (session, sf_dir) is the right trade at every scale.
+# k-core) consume the SAME co-purchase edge relation; built per query it
+# cost ~3.9 s of the ~4 s build at sf0.1 (SCALE.md §"Graph-family
+# edge-build cache"). The result is tiny (3,573 rows / ~57 KB at sf0.1:
+# support-thresholding caps it near the part-catalog axis, not the
+# lineitem axis), so one persisted copy per (session, sf_dir), held in the
+# session's memo (`catalog.session_memo`), is the right trade at every
+# scale.
 #
 # Lifetime rules (why this is NOT tracked_persist):
 # * `persist()` with INTACT lineage, never localCheckpoint — if anything
 #   evicts or clears the blocks (bench.py and tests call
 #   `spark.catalog.clearCache()` between reps), the next consumer silently
-#   recomputes instead of failing on truncated lineage; the storageLevel
-#   probe below re-marks it cached when that happens.
+#   recomputes instead of failing on truncated lineage.
 # * deliberately OUTSIDE persistence.py's per-query release cycle —
 #   tracked blocks die when the next registered query starts, which is
 #   exactly the boundary this cache must survive.
-# * bounded: ≤ _EDGE_CACHE_MAX entries, LRU-evicted with an explicit
-#   unpersist; one entry is ~57 KB at sf0.1 and grows with the PART
-#   catalog (dim-like), not the fact table.
-# * REBUILD-FRESH invalidation (measured, round 9): when an external
-#   clearCache drops the blocks, do NOT re-persist the stale captured
-#   DataFrame — re-marking the frozen plan made BFS reps 2x slower
-#   (9.4-11.2s vs 4.6-5.3s at sf0.1 under bench's clearCache-between-
-#   reps regime); building a FRESH plan on invalidation restores the
-#   baseline (4.6-5.2s measured) because AQE re-plans the build instead
-#   of re-executing the first materialization's frozen physical plan.
-#   No pre-persist coalesce either: the relation lands at the
-#   aggregate's AQE-coalesced width, and a forced coalesce(8) measured
-#   ~0.5s slower on the rebuild path for no warm-path gain.
-# Keyed by (id(session), sf_dir): applicationId alone cannot key the
-# cache because `spark.newSession()` children SHARE the parent's
-# applicationId while carrying their own SQLConf — serving a DataFrame
-# built under session A to a caller on session B would execute A's plan
-# under ambiguous conf semantics (the hostile-sweep false-green the
-# round-10 self-review caught). Keying by session identity (not just
-# checking it on hit, the r10 shape) lets sibling sessions on the same
-# sf_dir cache INDEPENDENTLY instead of thrashing each other's entry
-# (ADVICE r10 #2). The session ref in the entry is strong on purpose:
-# it pins the creating session alive for as long as the entry lives, so
-# id() cannot be reused by a new session while its key is in the cache,
-# and a retained stale session object is a few KB against the ~57 KB
-# persisted relation.
-_EDGE_CACHE: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
+# * bounded: ≤ _EDGE_CACHE_MAX sf_dirs per session, LRU-evicted with an
+#   explicit unpersist; one entry is ~57 KB at sf0.1 and grows with the
+#   PART catalog (dim-like), not the fact table.
+# * REBUILD-FRESH invalidation (measured): when an external clearCache
+#   drops the blocks, do NOT re-persist the stale captured DataFrame —
+#   re-marking the frozen plan made BFS reps 2x slower (9.4-11.2 s vs
+#   4.6-5.3 s at sf0.1 under bench's clearCache-between-reps regime);
+#   building a FRESH plan restores the baseline (4.6-5.2 s) because AQE
+#   re-plans the build instead of re-executing the first
+#   materialization's frozen physical plan. No pre-persist coalesce
+#   either: a forced coalesce(8) measured ~0.5 s slower on the rebuild
+#   path for no warm-path gain.
 _EDGE_CACHE_MAX = 2
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-scoped cached wrapper around `_copurchase_edges`: one
     persisted build per (session, sf_dir), shared by the five
-    graph-family consumers; safe under external clearCache (a fresh
-    plan is rebuilt — see the invalidation note above), size-bounded
-    (see the cache-design comment above), and session-identity-checked
-    (a `newSession()` sibling sharing the applicationId never serves or
-    poisons another session's entry — it rebuilds under its own conf)."""
+    graph-family consumers; a fresh plan is rebuilt after an external
+    clearCache, and the least recently used sf_dir is evicted past the
+    bound (see the cache-design comment above)."""
     from pyspark.storagelevel import StorageLevel
 
-    key = (id(spark), sf_dir)
-    entry = _EDGE_CACHE.get(key)
-    hit_session, hit = entry if entry is not None else (None, None)
-    # hit_session is spark is structurally guaranteed by the id() key +
-    # the entry's strong session ref (no id reuse while cached); kept as
-    # a cheap belt-and-braces identity check
-    if (
-        hit is not None
-        and hit_session is spark
-        and hit.storageLevel != StorageLevel.NONE
-    ):
-        # True LRU (ADVICE r9 / VERDICT r9 #4): refresh recency on hit by
-        # re-inserting the key at the end of the dict's insertion order —
-        # without this, eviction below is FIFO and with alternating
-        # sf_dirs the actively-hot entry could be the one evicted.
-        _EDGE_CACHE[key] = _EDGE_CACHE.pop(key)
+    memo = session_memo(spark, "copurchase_edges")
+    # popped and re-inserted so the dict's insertion order is recency order
+    hit = memo.pop(sf_dir, None)
+    if hit is not None and hit.storageLevel != StorageLevel.NONE:
+        memo[sf_dir] = hit
         return hit
     li = load_tables(spark, sf_dir)["lineitem"]
     edges = _copurchase_edges(li).persist(StorageLevel.MEMORY_AND_DISK)
-    if hit is not None:
-        # rebuild path (externally invalidated blocks — same session, per
-        # the id() key): drop the stale entry FIRST so the reassignment
-        # below lands at the END of insertion order — plain `d[key] = v`
-        # on an existing key keeps its old position, so without the pop a
-        # just-rebuilt entry could be evicted as "LRU" (round-10
-        # self-review). No unpersist needed: the blocks are already gone.
-        _EDGE_CACHE.pop(key, None)
-    if len(_EDGE_CACHE) >= _EDGE_CACHE_MAX:
-        lru = next(iter(_EDGE_CACHE))  # front of insertion order = LRU
+    if len(memo) >= _EDGE_CACHE_MAX:
         try:
-            _EDGE_CACHE.pop(lru)[1].unpersist()
+            memo.pop(next(iter(memo))).unpersist()
         except Exception:
             pass
-    _EDGE_CACHE[key] = (spark, edges)
+    memo[sf_dir] = edges
     return edges
 
 
 def clear_copurchase_cache() -> None:
-    """Explicit invalidation: unpersist and forget every cached edge
-    relation (tests use this to measure cold-vs-warm builds)."""
-    for _sess, df in _EDGE_CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _EDGE_CACHE.clear()
+    """Explicit invalidation: unpersist and forget every live session's
+    cached edge relations (tests use this to measure cold-vs-warm
+    builds)."""
+    for memo in session_memos("copurchase_edges"):
+        for df in memo.values():
+            try:
+                df.unpersist()
+            except Exception:
+                pass
+        memo.clear()
 
 
 @register(

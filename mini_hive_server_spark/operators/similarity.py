@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables, parallelize_scan
+from ..catalog import load_tables, parallelize_scan, session_memo
 from ..persistence import tracked_persist
 from ..registry import register
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
@@ -659,10 +659,6 @@ def _pq_codebook(spark: SparkSession, emb: DataFrame) -> "np.ndarray":
     return np.array(km.clusterCenters())  # (k, d_sub)
 
 
-_PQ_CODEBOOKS: dict[str, "np.ndarray"] = {}
-_PQ_QROWS: dict[str, list] = {}  # memoized bounded query-vector collects
-
-
 @register("similarity_pq_adc", oracle=_COSINE_TOPK_ORACLE, tags=("llm", "similarity"))
 def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization retrieval (Jégou et al. 2011) with asymmetric
@@ -695,8 +691,8 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (never vectors); re-rank joins the C*|q| winner ids back against the
     full-precision corpus via a size-bounded broadcast of the winner
     list. Codebook training is a bounded-sample k-means (shared-codebook
-    variant, see _pq_codebook), memoized per (session, sf_dir) like the
-    catalog handles."""
+    variant, see _pq_codebook), memoized per (session, sf_dir) in the
+    session's memo like the catalog handles."""
     emb, q, scored = _pq_scored(spark, sf_dir)
     from pyspark.sql import Window
 
@@ -740,23 +736,20 @@ def _pq_scored(spark: SparkSession, sf_dir: str):
         "vn",
         F.expr("transform(v, e -> e / sqrt(" + _DOT.format(a="v", b="v") + "))"),
     )
-    cache_key = f"{spark.sparkContext.applicationId}:{sf_dir}"
-    if cache_key not in _PQ_CODEBOOKS:
-        _PQ_CODEBOOKS[cache_key] = _pq_codebook(spark, emb)
-    centers = _PQ_CODEBOOKS[cache_key]  # (k, d_sub)
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"),
         F.col("vn").alias("qvn"),
     )
-    # the bounded |q|-row collect feeding the closure LUTs is
-    # deterministic per fixture — memoize it beside the codebook so the
-    # warm path skips a whole Spark job per call (round-11)
-    if cache_key not in _PQ_QROWS:
-        _PQ_QROWS[cache_key] = sorted(
-            q.select("qid", "qvn").collect(), key=lambda r: r["qid"]
-        )
-    scored = _pq_scored_over(emb, centers, _PQ_QROWS[cache_key])
-    return emb, q, scored
+    # the codebook (k, d_sub) and the bounded |q|-row collect feeding the
+    # closure LUTs are deterministic per fixture: memoized together, the
+    # warm path skips k-means training and a whole Spark job per call
+    memo = session_memo(spark, "pq_adc")
+    if sf_dir not in memo:
+        centers = _pq_codebook(spark, emb)
+        qrows = sorted(q.select("qid", "qvn").collect(), key=lambda r: r["qid"])
+        memo[sf_dir] = (centers, qrows)
+    centers, qrows = memo[sf_dir]
+    return emb, q, _pq_scored_over(emb, centers, qrows)
 
 
 def _pq_scored_over(

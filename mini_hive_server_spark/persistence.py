@@ -20,7 +20,9 @@ iteration and ``append`` as on a list), and `release_tracked` releases
 only the calling thread's entries, so a query built on one thread never
 releases blocks another thread is about to collect. On one thread (a
 query loop, bench, the tests) that is exactly "invocation N releases
-N-1".
+N-1". When a thread ends, whatever it still holds is released, pending
+entries too, so a DataFrame built on a thread must be collected before
+that thread ends.
 
 Two classes of tracked block exist:
 
@@ -66,6 +68,7 @@ memory manager, and dead cached blocks evict live ones or spill to disk.
 
 from __future__ import annotations
 
+import sys
 import threading
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
@@ -73,11 +76,40 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 
+class _Held:
+    """One thread's tracked releases. Only that thread's `_LIVE` slot
+    refers to it, so it dies when the thread ends, and whatever the
+    thread still holds is released then: otherwise its owner counts
+    never reach zero and an equal plan persisted later by another thread
+    stays cached after its own release. The release runs on a helper
+    thread because a py4j call from a thread being torn down opens a
+    gateway connection that nothing closes."""
+
+    def __init__(self) -> None:
+        self.entries: list[Callable[[], None]] = []
+
+    def __del__(self) -> None:
+        # at interpreter exit a new thread never starts (and start() would
+        # wait for it forever); the JVM's blocks go with the process
+        if self.entries and not sys.is_finalizing():
+            threading.Thread(
+                target=_release, args=(self.entries, False), daemon=True
+            ).start()
+
+
 class _ThreadEntries(threading.local):
     """The calling thread's tracked releases, in registration order."""
 
     def __init__(self) -> None:
-        self.entries: list[Callable[[], None]] = []
+        self._held = _Held()
+
+    @property
+    def entries(self) -> list[Callable[[], None]]:
+        return self._held.entries
+
+    @entries.setter
+    def entries(self, entries: list[Callable[[], None]]) -> None:
+        self._held.entries = entries
 
     def __len__(self) -> int:
         return len(self.entries)

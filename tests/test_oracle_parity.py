@@ -63,10 +63,10 @@ def test_hostile_session_full_sweep(spark):
     `spark.newSession()`: same SparkContext, but SQL confs
     (`spark.sql.*`) live in the per-session SQLConf, so the hostile
     ansi/shuffle settings never touch the fixture session and no stop()
-    is needed (the child session is simply dropped;
-    catalog._TABLES_CACHE is keyed per session, and the graph-family
-    edge cache is session-identity-checked, so no handle crosses
-    sessions in either direction)."""
+    is needed (the child session is simply dropped; every per-session
+    reuse, the table handles and the graph-family edge cache included,
+    lives in that session's own `catalog.session_memo`, so no handle
+    crosses sessions in either direction)."""
     from mini_hive_server_spark.operators.graph import clear_copurchase_cache
 
     hostile = spark.newSession()

@@ -430,3 +430,69 @@ def test_owner_counts_hold_under_concurrent_persists(spark):
     assert not errors, errors[:5]
     assert plan().semanticHash() not in persistence._OWNERS
     assert plan().storageLevel == StorageLevel.NONE
+
+
+@pytest.mark.parametrize(
+    "use", ["load_tables", "copurchase_edges", "similarity_pq_adc"]
+)
+def test_dropped_session_is_collectable(spark, use):
+    """What a session memoizes must not outlive the session: the memoized
+    DataFrames hold their session, so a module-level memo keyed by the
+    session (even weakly) keeps every session it ever saw alive. A
+    `newSession()` child that used one memo and was then dropped must be
+    garbage-collected."""
+    import gc
+    import weakref
+
+    from mini_hive_server_spark.catalog import load_tables
+    from mini_hive_server_spark.operators.graph import (
+        clear_copurchase_cache,
+        copurchase_edges,
+    )
+
+    child = spark.newSession()
+    if use == "load_tables":
+        load_tables(child, SF_SMOKE)
+    elif use == "copurchase_edges":
+        copurchase_edges(child, SF_SMOKE).count()
+    else:
+        registry.queries()[use](child, SF_SMOKE).collect()
+    clear_copurchase_cache()
+    persistence.release_tracked()
+    ref = weakref.ref(child)
+    del child
+    # PySpark's RDD.toDF patch holds the newest session; make it another
+    spark.newSession()
+    gc.collect()
+    assert ref() is None, [type(r).__name__ for r in gc.get_referrers(ref())]
+
+
+def test_thread_exit_releases_its_persists(spark):
+    """A plain thread runs a persisting query outside any
+    `persistence.scope(keep=False)` and exits. Its tracked persists must
+    be released when it ends: otherwise their owner counts never reach
+    zero, and the equal plans the main thread persists later stay cached
+    after the main thread's own release cycles."""
+    import threading
+
+    persistence.release_tracked()
+    _clear_all_persistent(spark)
+    pre = _drain_to(spark, 0)
+    query = registry.queries()["dedup_minhash_lsh"]
+    errors: list[str] = []
+
+    def run() -> None:
+        try:
+            query(spark, SF_SMOKE).collect()
+        except Exception as e:  # surface in the main thread
+            errors.append(f"{type(e).__name__}: {e}")
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(timeout=600)
+    assert not t.is_alive(), "thread did not finish"
+    assert not errors, errors
+    query(spark, SF_SMOKE).collect()
+    persistence.release_tracked()
+    persistence.release_tracked()
+    assert _drain_to(spark, pre) == pre, "an ended thread's persists stayed cached"

@@ -487,3 +487,53 @@ def test_bpe_chain_words_persist_shape(spark):
             assert "InMemoryTableScan" in plan, name
         got = _corpus_scans_outside_cache(plan, "documents")
         assert got == want_live_scans, (name, got, plan)
+
+
+def _documents_scans_run(store, execution) -> int:
+    """Number of `documents` scan nodes in one SQL execution's plan graph
+    that produced rows in that execution. A persisted relation's build
+    lineage stays in the graph of every execution that reads it, but its
+    scan's row metric is nonzero only in the execution that built it."""
+    eid = execution.executionId()
+    values = store.executionMetrics(eid)
+    nodes = store.planGraph(eid).allNodes()
+    ran = 0
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if not (
+            node.name().startswith("Scan parquet")
+            and "documents.parquet" in node.desc()
+        ):
+            continue
+        metrics = node.metrics()
+        for j in range(metrics.size()):
+            m = metrics.apply(j)
+            if m.name() == "number of output rows":
+                v = values.get(m.accumulatorId())
+                ran += v.isDefined() and int(v.get().replace(",", "")) > 0
+    return ran
+
+
+def test_bpe_merges_build_scans_corpus_once(spark):
+    """`tokenizer_bpe_merges` collects its per-round argmax at build time,
+    so its final plan is literal rows and the shape pin above cannot see
+    the corpus. Check the build's own SQL executions instead: across all
+    of them the `documents` scan runs exactly once, in the execution that
+    builds the `words` cache. Dropping that persist makes every argmax
+    job rescan the corpus. (The formatted plan text in the status store
+    names the file only in its node details, so the tree-line counter
+    above cannot be reused here; the scan's row metric is exact.)"""
+    sc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc.listenerBus().waitUntilEmpty()
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    before = {e.executionId() for e in executions()}
+    registry.queries()["tokenizer_bpe_merges"](spark, SF_SMOKE)
+    new = [e for e in executions() if e.executionId() not in before]
+    assert len(new) >= 3, "expected one argmax collect per merge round"
+    ran = sum(_documents_scans_run(store, e) for e in new)
+    assert ran == 1, f"documents scanned {ran} times during the build"
