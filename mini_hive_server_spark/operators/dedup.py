@@ -585,59 +585,27 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical doc per duplicate family (pairs alone can't: {A,B}, {B,C}
     must collapse to one cluster {A,B,C}).
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; fixpoint when no label
-    changes. Near-dup components are small (duplicate families, not a web
-    graph), so the loop converges in O(component diameter) ≈ 2-4 rounds.
-    (If duplicate families could chain — boilerplate threading thousands
-    of docs into one long component — the O(log n) star-contraction core
-    `operators.graph.star_contraction_labels` computes the same labels
-    with a diameter-independent round count; a pytest pins the two
-    algorithms equal on this very pair graph.)
-    Each round is one shuffle join + groupBy; `localCheckpoint` cuts the
-    growing lineage so round N doesn't replay rounds 1..N-1 (at cluster
-    scale: reliable checkpoint dir instead, same call shape). The oracle
-    is a DuckDB recursive CTE computing the same transitive closure.
+    The components come from `operators.graph.star_contraction_labels`
+    (alternating large-star/small-star, Kiveris et al. 2014), the core
+    `graph_connected_components` runs. Min-label propagation would need
+    as many rounds as a cluster's DIAMETER, which boilerplate chaining
+    thousands of docs into one family makes unbounded (SCALE.md
+    "Additions, internal sprint E"); star contraction needs O(log n)
+    rounds. The oracle is a DuckDB recursive CTE computing the same
+    transitive closure.
 
-    The driver-side loop touches only a per-round convergence COUNT —
-    data never leaves the executors."""
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
-    edges = pairs.union(
-        pairs.select(F.col("d2").alias("d1"), F.col("d1").alias("d2"))
-    ).localCheckpoint()
-    labels = (
-        edges.select(F.col("d1").alias("n"))
-        .distinct()
-        .withColumn("lbl", F.col("n"))
-        .localCheckpoint()
+    Block lifecycle is star contraction's: its last checkpoint backs the
+    returned labels and joins the next release cycle, and a loop that
+    raises drops its blocks at once. The driver-side loop touches only
+    per-round signature scalars — data never leaves the executors."""
+    from .graph import star_contraction_labels
+
+    pairs = dedup_minhash_lsh(spark, sf_dir)
+    labels = star_contraction_labels(
+        pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
     )
-    while True:
-        nbr = (
-            edges.join(labels, edges["d2"] == labels["n"])
-            .groupBy("d1")
-            .agg(F.min("lbl").alias("nbr_lbl"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["n"] == nbr["d1"], "left")
-            .select(
-                "n",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nbr_lbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("new")
-            .join(labels.alias("old"), "n")
-            .filter(F.col("new.lbl") != F.col("old.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
     return labels.select(
-        F.col("n").alias("doc_id"), F.col("lbl").alias("cluster_id")
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     ).orderBy("doc_id")
 
 

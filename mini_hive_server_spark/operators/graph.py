@@ -37,15 +37,6 @@ _DAMPING = 0.85
 _TELEPORT_NUM = repr(1 - _DAMPING)
 
 
-def _ckpt_rdd(df: "DataFrame"):
-    """The localCheckpointed LogicalRDD's BACKING rdd — the handle whose
-    unpersist actually drops the blocks (queryExecution.toRdd() returns a
-    DERIVED rdd whose unpersist is a silent no-op, verified against
-    getPersistentRDDs). One module-level definition (round-11 review:
-    four verbatim copies of this fragile private-API expression)."""
-    return df._jdf.queryExecution().analyzed().rdd()
-
-
 # the co-purchase edge relation's ORACLE preamble, shared by every graph
 # oracle (round-11 review: seven verbatim copies of the correctness
 # anchor — DISTINCT projection, u < v orientation, min-support HAVING —
@@ -314,31 +305,25 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     join + one partial-agg'd aggregate + one 1-row delta action; the
     driver touches only scalars, never data.
 
-    Oracle (round 8 — closes VERDICT r7 "missing #2"): a data-dependent
-    stopping rule cannot be expressed as a DuckDB query directly, but the
-    contraction of the PageRank operator makes the 12-round golden
-    unroll's VALUES a valid oracle for the ε-stopped iterate after
-    round(…, 6) — see `_pagerank_converged_oracle` for the quantified
-    bound and the measured rounding margins. The registered output
-    therefore carries no iteration count (that IS data-dependent);
-    `tests/test_llm_ops.py` additionally pins (a) agreement with an
-    independently-iterated reference within the guaranteed ε·d/(1-d)
-    stopping bound, (b) the fixpoint residual, and (c) rank-sum ≈ 1
-    conservation. (Round-7 lesson, CORRECTNESS_r07: the driver does NOT
-    support rows-only checks — an oracle-less registered query burns its
-    window slot on a guaranteed `err: no_oracle`.)
+    Oracle: a data-dependent stopping rule cannot be expressed as a
+    DuckDB query directly, but the contraction of the PageRank operator
+    makes the 12-round golden unroll's VALUES a valid oracle for the
+    ε-stopped iterate after round(…, 6) — see `_pagerank_converged_oracle`
+    for the quantified bound and the measured rounding margins. The
+    registered output therefore carries no iteration count (that IS
+    data-dependent); `tests/test_llm_ops.py` additionally pins (a)
+    agreement with an independently-iterated reference within the
+    guaranteed ε·d/(1-d) stopping bound, (b) the fixpoint residual, and
+    (c) rank-sum ≈ 1 conservation.
 
-    Resource bound: edges/nodes are tracked-persisted (released at the
-    next registered query); round k's localCheckpoint block is
-    unpersisted as soon as round k+1's is eagerly materialized (the new
-    blocks no longer reference the old), so at most TWO node-cardinality
-    checkpoint blocks are ever live. The final round's block must
-    outlive this function (the returned DataFrame reads it and, unlike a
-    persist, a truncated lineage cannot recompute), so it is registered
-    with `tracked_release` — freed when the next registered query
-    starts, the same sequential materialize-then-advance contract the
-    driver, tests, and bench all follow."""
-    from ..persistence import tracked_persist, tracked_release
+    Block lifecycle: edges/nodes are tracked-persisted (released at the
+    next registered query). The iterates run on a `CheckpointChain` that
+    keeps the last TWO node-cardinality blocks, because each round's
+    delta action joins the new iterate against the previous one; the
+    chain hands those two to the next release cycle on return (the
+    returned DataFrame reads the last, and a truncated lineage cannot
+    recompute) and drops them at once if the loop raises."""
+    from ..persistence import CheckpointChain, tracked_persist
 
     events = load_tables(spark, sf_dir)["events"]
     edges, nodes = _transition_graph(events)
@@ -356,18 +341,15 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport = (1.0 - _DAMPING) / n_nodes
 
     pr = nodes.select("node", F.lit(1.0 / n_nodes).alias("pr"))
-    prev_ckpt = None
     n_iter, delta = 0, float("inf")
-    # exception-path block release: see star_contraction_stars (round-11)
-    ok = False
-    try:
+    with CheckpointChain(keep=2) as chain:
         while n_iter < _PR_MAX_ITER and delta > _PR_EPS:
             contrib = (
                 pr.join(edges, pr["node"] == edges["src"])
                 .groupBy("dst")
                 .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
             )
-            new_pr = (
+            new_pr, _ = chain.step(
                 nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
                 .select(
                     "node",
@@ -376,7 +358,6 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                         + _DAMPING * F.coalesce("c", F.lit(0.0))
                     ).alias("pr"),
                 )
-                .localCheckpoint()  # eager: round k's blocks exist from here
             )
             delta = (
                 new_pr.select("node", F.col("pr").alias("pr_new"))
@@ -384,21 +365,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.max(F.abs(F.col("pr_new") - F.col("pr_old"))).alias("d"))
                 .first()[0]
             ) or 0.0
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist(False)  # round k-1's blocks are now dead
-            prev_ckpt = _ckpt_rdd(new_pr)
             pr = new_pr
             n_iter += 1
-        ok = True
-    finally:
-        if not ok and prev_ckpt is not None:
-            try:
-                prev_ckpt.unpersist(False)
-            except Exception:
-                pass
-    if prev_ckpt is not None:
-        final_ckpt = prev_ckpt
-        tracked_release(lambda: final_ckpt.unpersist(False))
     return pr.select(
         F.col("node").alias("event_type"),
         F.round("pr", 6).alias("pagerank"),
@@ -417,14 +385,13 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "iterative"),
 )
 def graph_pagerank_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The oracle-paired GOLDEN twin of `graph_pagerank_converged`
-    (VERDICT r6 stretch / ADVICE r6): the same driver-side iterative
-    loop — per round one key-shuffled join + one partial-agg'd aggregate,
-    `localCheckpoint` truncating lineage — but run to a FIXED,
-    data-independent depth of 12 rounds, 3-4x past the fixture's
-    measured ε-stop (3-4 rounds at every SF). Fixed depth makes the
-    converged VALUES SQL-expressible again (a 12-step unrolled-CTE
-    DuckDB replay); since round 8 the same unroll (minus the iteration-
+    """The oracle-paired GOLDEN twin of `graph_pagerank_converged`: the
+    same driver-side iterative loop — per round one key-shuffled join +
+    one partial-agg'd aggregate, `localCheckpoint` truncating lineage —
+    but run to a FIXED, data-independent depth of 12 rounds, 3-4x past
+    the fixture's measured ε-stop (3-4 rounds at every SF). Fixed depth
+    makes the converged VALUES SQL-expressible again (a 12-step
+    unrolled-CTE DuckDB replay); the same unroll (minus the iteration-
     count column) is the ε-stopped twin's own registered oracle, and
     `tests/test_llm_ops.py` pins the rounded ranks EQUAL plus a
     boundary-margin proof that the pairing is structurally safe.
@@ -435,11 +402,11 @@ def graph_pagerank_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     back as a broadcast 1-row), proving 12 rounds overshoot the
     fixpoint rather than assuming it.
 
-    Block lifecycle: at most two node-cardinality checkpoint blocks are
-    live during the loop; the LAST TWO iterates must outlive this
-    function (the residual join reads both and truncated lineage cannot
-    recompute), so both register with `tracked_release`."""
-    from ..persistence import tracked_persist, tracked_release
+    Block lifecycle: a `CheckpointChain` keeps the last TWO iterates'
+    blocks, because the residual join reads both; on return the chain
+    hands them to the next release cycle (the returned DataFrame reads
+    them, and a truncated lineage cannot recompute)."""
+    from ..persistence import CheckpointChain, tracked_persist
 
     events = load_tables(spark, sf_dir)["events"]
     edges, nodes = _transition_graph(events)
@@ -450,31 +417,26 @@ def graph_pagerank_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = nodes.crossJoin(F.broadcast(nn)).select(
         "node", (F.lit(1.0) / F.col("n_nodes")).alias("pr")
     )
-    prev_pr, ckpts = None, []
-    for _ in range(_GOLDEN_ITER):
-        contrib = (
-            pr.join(edges, pr["node"] == edges["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
-        )
-        new_pr = (
-            nodes.crossJoin(F.broadcast(nn))
-            .join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    (1 - _DAMPING) / F.col("n_nodes")
-                    + _DAMPING * F.coalesce("c", F.lit(0.0))
-                ).alias("pr"),
+    prev_pr = None
+    with CheckpointChain(keep=2) as chain:
+        for _ in range(_GOLDEN_ITER):
+            contrib = (
+                pr.join(edges, pr["node"] == edges["src"])
+                .groupBy("dst")
+                .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
             )
-            .localCheckpoint()
-        )
-        ckpts.append(_ckpt_rdd(new_pr))
-        if len(ckpts) > 2:  # keep the last TWO iterates (residual join)
-            ckpts.pop(0).unpersist(False)
-        prev_pr, pr = pr, new_pr
-    for rdd in ckpts:
-        tracked_release(lambda r=rdd: r.unpersist(False))
+            new_pr, _ = chain.step(
+                nodes.crossJoin(F.broadcast(nn))
+                .join(contrib, nodes["node"] == contrib["dst"], "left")
+                .select(
+                    "node",
+                    (
+                        (1 - _DAMPING) / F.col("n_nodes")
+                        + _DAMPING * F.coalesce("c", F.lit(0.0))
+                    ).alias("pr"),
+                )
+            )
+            prev_pr, pr = pr, new_pr
     res = (
         pr.select("node", F.col("pr").alias("pr_new"))
         .join(prev_pr.select("node", F.col("pr").alias("pr_old")), "node")
@@ -833,26 +795,13 @@ def graph_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`copurchase_edges`); each hop's joins key on node ids; frontier
     and visited sets only ever hold node ids.
 
-    Evolution of the execution strategy (measured at sf0.1):
-
-    * round 8: the lazily-unrolled one-plan form re-referenced every
-      earlier frontier from the census branches and later hops, so
-      WITHOUT a cache boundary per tier the hop chains re-executed once
-      per referencing branch (65-110s at sf0.001 under a vanilla
-      session — almost all task-scheduling on replayed tiny stages).
-      Per-tier persists + pre-cache coalesce fixed that (~5s).
-    * round 9: the census is SCALARS — one count per tier — so the
-      five aggregate branches and the unreachable anti-join are dead
-      weight once each tier is eagerly materialized anyway. Each hop
-      now localCheckpoints its frontier with the tier count OBSERVED by
-      the checkpoint job (the `graph_pagerank_converged` /
-      connected-components lifecycle: one job per hop, no separate
-      actions), unreachable = |nodes| - Σ tier counts, and the census
-      assembles from those observed scalars. Measured: 4.95-6.11s →
-      **2.89-3.11s** per invocation. The driver touches only the five
-      census scalars — never node data; every checkpoint block is
-      released before return (the output carries no lineage into them,
-      so no tracked_release is needed).
+    Execution: the census is SCALARS — one count per tier — so each hop
+    localCheckpoints its frontier with the tier count OBSERVED by the
+    checkpoint job (one job per hop, no separate actions), unreachable =
+    |nodes| - Σ tier counts, and the census assembles from those
+    scalars; the driver never touches node data. The measured history
+    of this strategy is in SCALE.md's "Driver round 8" and "Driver round
+    9: official record" sections.
 
     Empty-tier semantics (the oracle's static census): an exhausted
     frontier yields observed n=0 — the (distance, 0) row is still
@@ -869,82 +818,46 @@ def bfs_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
     (distance, n_nodes) census including the unreachable row (-1). Its
     scale curve on synthetic 100k/1M-node expander graphs is SCALE.md
     "Round-12: BFS scale curve"; the last numbers are the `bfs_expander_*`
-    keys of the `experiments` block in BENCH_local_r14opt_final.json."""
-    from pyspark.sql import Observation
+    keys of the `experiments` block in BENCH_local_r14opt_final.json.
+
+    Block lifecycle: a `CheckpointChain` keeps every tier's block while
+    the hops run (the visited union reads them all) and drops them all
+    when the loop ends, whether it returns or raises: the census is
+    built from driver-side scalars and carries no lineage into them."""
+    from ..persistence import CheckpointChain
 
     par = 2 * spark.sparkContext.defaultParallelism
     und = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).coalesce(par)
-
-    def _ckpt_observed(df: DataFrame) -> tuple[DataFrame, int]:
-        obs = Observation()
-        out = (
-            df.coalesce(par)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        return out, int(_observed(obs, out, F.count(F.lit(1)).alias("n"))["n"])
-
-    # ADVICE r9: the checkpoint blocks are only released by the unpersist
-    # loop below, so an exception mid-BFS (e.g. the _observed fallback
-    # raising) would leak truncated-lineage blocks for the session
-    # lifetime with no next-query release cycle to reclaim them. The
-    # try/finally guarantees every accumulated block is dropped on ANY
-    # exit; the blocks are safe to release eagerly because the returned
-    # DataFrame is built from driver-side scalars (createDataFrame) and
-    # carries no lineage into them.
-    ckpts: list[DataFrame] = []
-    try:
-        # ONE checkpoint job for the node census AND the source tier
-        # (round-13 optimization pass): the sources are a pure filter of
-        # the node set, so n_nodes and n0 ride the same observe and the
-        # frontier derives from the checkpointed nodes with no second
-        # eager job — was two sequential checkpoint jobs.
-        obs0 = Observation()
-        nodes = (
-            und.select(F.col("u").alias("node"))
-            .distinct()
-            .coalesce(par)
-            .observe(
-                obs0,
-                F.count(F.lit(1)).alias("n"),
-                F.count_if((F.col("node") % 10) == 0).alias("n0"),
-            )
-            .localCheckpoint()
-        )
-        got0 = _observed(
-            obs0,
-            nodes,
-            F.count(F.lit(1)).alias("n"),
+    n = F.count(F.lit(1)).alias("n")
+    with CheckpointChain(keep=None, hand_off=False) as chain:
+        # ONE checkpoint job for the node census AND the source tier: the
+        # sources are a pure filter of the node set, so n_nodes and n0 ride
+        # the same observe
+        nodes, got = chain.step(
+            und.select(F.col("u").alias("node")).distinct().coalesce(par),
+            n,
             F.count_if((F.col("node") % 10) == 0).alias("n0"),
         )
-        n_nodes, n0 = int(got0["n"]), int(got0["n0"])
-        ckpts.append(nodes)
-        frontier = nodes.filter(F.col("node") % 10 == 0)
-        counts = [n0]
-        visited = frontier
+        n_nodes = int(got["n"])
+        frontier = visited = nodes.filter(F.col("node") % 10 == 0)
+        counts = [int(got["n0"])]
         for _ in range(1, _BFS_HOPS + 1):
-            nxt, nk = _ckpt_observed(
+            frontier, got = chain.step(
                 frontier.join(und, frontier["node"] == und["u"])
                 .select(F.col("v").alias("node"))
                 .distinct()
                 .join(visited.select("node"), "node", "left_anti")
+                .coalesce(par),
+                n,
             )
-            ckpts.append(nxt)
-            counts.append(nk)
-            visited = visited.unionByName(nxt)
-            frontier = nxt
+            counts.append(int(got["n"]))
+            visited = visited.unionByName(frontier)
         census = [(-1, n_nodes - sum(counts))] + list(enumerate(counts))
         return spark.createDataFrame(
             census, "distance int, n_nodes long"
         ).orderBy("distance")
-    finally:
-        for c in ckpts:  # scalars extracted; no consumer reads these blocks
-            try:
-                c._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass  # release is best-effort; never mask the real error
 
 
 # ---------------------------- connected components, large-star/small-star
@@ -961,44 +874,6 @@ _CC_MAX_ROUNDS = 64
 # task's maxPartitionBytes working set.
 _PREPASS_EDGE_BUDGET = 1_000_000
 
-
-def _observed(obs, fallback_df: DataFrame, *exprs, timeout_s: float = 60.0) -> dict:
-    """Bounded-wait read of an Observation fed by an eager localCheckpoint.
-
-    ADVICE r8 (graph.py:1114): metric delivery by the checkpoint job relies
-    on localCheckpoint routing through withAction — an implementation
-    detail, not an API contract; the blocking `obs.get` would hang forever
-    if a Spark version change broke that. Poll the non-blocking JVM
-    accessor (normally satisfied on the FIRST probe, since the eager
-    checkpoint has already run the action) and, past the deadline, fail
-    LOUDLY into an explicit one-row aggregate of the same expressions over
-    the already-materialized checkpoint blocks — one extra cheap job
-    instead of an un-diagnosable hang (SKILL.md's hang signature)."""
-    import time as _time
-    import warnings
-
-    deadline = _time.monotonic() + timeout_s
-    wait = 0.0
-    while _time.monotonic() < deadline:
-        try:
-            # private JVM accessor — EXACTLY the version-drift surface
-            # this function exists to survive, so a probe failure must
-            # fall through to the loud fallback, not raise Py4JError
-            # mid-loop (round-11 review)
-            if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
-                return obs.get
-        except Exception:
-            break  # probe API gone: go straight to the fallback
-        _time.sleep(min(0.05 + wait, 0.5))
-        wait += 0.05
-    warnings.warn(
-        "Observation metrics not delivered by the localCheckpoint job "
-        f"within {timeout_s}s — Spark may no longer route localCheckpoint "
-        "through withAction; recomputing via an explicit aggregate",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return fallback_df.agg(*exprs).head().asDict()
 
 _CC_ORACLE = f"""
 WITH RECURSIVE {_edges_cte()},
@@ -1178,15 +1053,11 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output pins the assignment, not just the shape: per component-size
     bucket, the number of components AND the sum of their min-labels.
 
-    Block lifecycle: mirrors `graph_pagerank_converged` — each round's
-    edge set is eagerly localCheckpoint-ed (lineage truncation; without it
-    the plan doubles per round), at most two rounds' blocks are ever live
-    plus the entry checkpoint, and the final block outlives the function
-    via `tracked_release`. The expensive part — the co-purchase edge
-    BUILD — runs exactly ONCE (`_copurchase_edges`, two shuffles, no
-    join; the loop's entry checkpoint pins it) instead of being
-    re-derived by the first round, the node census, and the label
-    join-back, which is where most of the round-7 7.5s actually went."""
+    Block lifecycle lives in `star_contraction_stars`. The expensive
+    part — the co-purchase edge BUILD — runs exactly ONCE
+    (`_copurchase_edges`, two shuffles, no join; the loop's entry
+    checkpoint pins it) instead of being re-derived by the first round,
+    the node census, and the label join-back."""
     stars = star_contraction_stars(copurchase_edges(spark, sf_dir))
     # one star per component: size = child count + 1 (the root itself);
     # min-label = the root. One exchange on the root key, no label union.
@@ -1292,23 +1163,23 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
     round-9 sections (the `cc_path_*` keys of the `experiments` block in
     BENCH_local_r14opt_final.json).
 
-    Round-8 constant-shaving (VERDICT r7 #3), three structural changes:
+    Three structural choices keep each round's constant low:
 
     1. A partition-local union-find PRE-PASS (`_local_contract`, map-only,
        before the dedup shuffle so it sees the generator's natural edge
        locality) collapses whatever each partition can prove connected —
        the adversarial path graph enters the global loop with diameter
-       ≈ #partitions instead of #nodes. Round 9 made the pre-pass
-       partitioning ADAPTIVE: the input coalesces to
+       ≈ #partitions instead of #nodes. The pre-pass partitioning is
+       ADAPTIVE: the input coalesces to
        ceil(|E| / 1M) partitions (never more than it already has), so a
        graph whose edge relation fits one bounded chunk is solved
        OUTRIGHT by the local union-find and the global loop only
-       confirms the fixpoint (2 rounds). The budget bounds per-task
+       confirms the fixpoint (one round). The budget bounds per-task
        memory exactly like maxPartitionBytes bounds any map task (the
        kernel holds one dict entry per distinct node in its chunk,
        ≤ ~250 MB at the 1M-edge budget), so at 100 TB the rule degrades
-       gracefully to the round-8 behavior: many bounded chunks, maximal
-       local contraction, O(log n) global rounds over what remains.
+       gracefully to many bounded chunks, maximal local contraction,
+       and O(log n) global rounds over what remains.
        Measured: sf0.1 co-purchase graph 4 rounds / ~4.0 s → 2 rounds /
        ~1.8 s warm; adversarial 300k-edge path 6 rounds / 10-11.4 s →
        2 rounds / 5.2 s, exact labels everywhere. The |E| count comes
@@ -1323,11 +1194,17 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
     3. The convergence signature (edge count + xor-fold of edge hashes)
        rides the checkpoint job via `df.observe` instead of a second
        action — ONE job per round, and the driver still touches only
-       scalars.
-    """
-    from pyspark.sql import Observation
+       scalars. The entry checkpoint observes the same signature, so a
+       pre-pass output that is already the fixpoint stops after round 1.
 
-    from ..persistence import tracked_release
+    Block lifecycle: the entry checkpoint and every round run on one
+    `CheckpointChain(keep=1)`: each round's block replaces the previous
+    one as soon as it is materialized, the last block joins the next
+    release cycle on return (the returned stars read it), and every
+    block is dropped at once if the loop raises, non-convergence
+    included.
+    """
+    from ..persistence import CheckpointChain
 
     # canonical big->small orientation (map-only, keeps input locality for
     # the pre-pass); the star rounds preserve it
@@ -1339,18 +1216,6 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
     # an already-wider-than-needed input is left alone
     n_edges = edges.count()
     prepass_parts = max(1, -(-n_edges // _PREPASS_EDGE_BUDGET))
-    # entry checkpoint: the upstream edge BUILD (often the expensive part
-    # — e.g. the co-purchase pair aggregation) runs exactly once; round 1
-    # reads these blocks. Must stay live until the function's output is
-    # consumed (truncated lineage cannot recompute), hence tracked_release.
-    cur = (
-        _local_contract(canon.coalesce(prepass_parts))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    entry_ckpt = _ckpt_rdd(cur)
-    tracked_release(lambda: entry_ckpt.unpersist(False))
 
     def _star_round(rel: DataFrame) -> DataFrame:
         # large-star: around every node u, attach all LARGER neighbors to
@@ -1375,67 +1240,33 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
             .distinct()
         )
 
-    prev_ckpt = None
-    prev_sig: tuple | None = None
-    n_rounds = 0
-    # try/finally: an exception mid-loop (non-convergence RuntimeError, a
-    # failed round job) must not strand the last round's checkpoint
-    # blocks — they are invisible to release_tracked() and would pin
-    # executor storage for the session lifetime (round-11 review; same
-    # hazard graph_bfs_3hop already guards, ADVICE r9)
-    ok = False
-    try:
-        while n_rounds < _CC_MAX_ROUNDS:
-            # one star round per checkpoint/action (measured: fusing two
-            # rounds per checkpoint ran ~60% SLOWER — the deeper lineage
-            # defeats exchange reuse and adds an overshoot round; the
-            # observe-fused signature already makes a round exactly one job)
-            obs = Observation()
-            nxt = (
-                _star_round(cur)
-                # xor-fold of per-edge hashes: order-insensitive and immune
-                # to the long overflow an ANSI-mode sum() of 2^63-range
-                # hashes hits; observed metrics are computed BY the
-                # checkpoint job
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.bit_xor(F.xxhash64("a", "b")).alias("h"),
-                )
-                .localCheckpoint()  # eager: blocks exist from here
-            )
-            # delivered by the checkpoint job — no extra action (bounded
-            # wait + loud aggregate fallback, see _observed)
-            got = _observed(
-                obs,
-                nxt,
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("a", "b")).alias("h"),
-            )
-            sig = (got["n"], got["h"])
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist(False)
-            prev_ckpt = _ckpt_rdd(nxt)
-            cur = nxt
-            n_rounds += 1
-            if sig == prev_sig:
+    # xor-fold of per-edge hashes: order-insensitive and immune to the
+    # long overflow an ANSI-mode sum() of 2^63-range hashes hits
+    sig = (
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("a", "b")).alias("h"),
+    )
+    with CheckpointChain(keep=1) as chain:
+        # entry checkpoint: the upstream edge BUILD (often the expensive
+        # part — e.g. the co-purchase pair aggregation) runs exactly once;
+        # round 1 reads these blocks
+        cur, got = chain.step(
+            _local_contract(canon.coalesce(prepass_parts)).distinct(), *sig
+        )
+        prev_sig = (got["n"], got["h"])
+        for _ in range(_CC_MAX_ROUNDS):
+            # one star round per checkpoint (measured: fusing two rounds
+            # per checkpoint ran ~60% SLOWER — the deeper lineage defeats
+            # exchange reuse and adds an overshoot round)
+            cur, got = chain.step(_star_round(cur), *sig)
+            if (got["n"], got["h"]) == prev_sig:
                 break
-            prev_sig = sig
+            prev_sig = (got["n"], got["h"])
         else:
             raise RuntimeError(
                 f"large-star/small-star did not converge in "
                 f"{_CC_MAX_ROUNDS} rounds"
             )
-        ok = True
-    finally:
-        if not ok and prev_ckpt is not None:
-            try:
-                prev_ckpt.unpersist(False)
-            except Exception:
-                pass
-    if prev_ckpt is not None:
-        final_ckpt = prev_ckpt
-        tracked_release(lambda: final_ckpt.unpersist(False))
     return cur
 
 
@@ -1553,23 +1384,23 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KCORE_K = 3
 _KCORE_MAX_ROUNDS = 64
-_KCORE_ORACLE_UNROLL = 16  # measured fixpoint depth: 1 (sf0.001) / 11 (sf0.01)
 
 
 def _kcore_oracle() -> str:
     """Unrolled peel rounds: each round drops nodes of degree < K and the
     edges touching them. Peeling is MONOTONE (the edge set only shrinks),
     so once the fixpoint is reached every further unrolled round is the
-    identity — 16 rounds therefore EQUAL the converged core as long as the
-    fixture converges within 16 (measured: 11 at sf0.01), and the emitted
+    identity — unrolling `_KCORE_MAX_ROUNDS` rounds therefore EQUALS the
+    converged core whenever the query itself converges within its own
+    cap (and the query raises otherwise), and the emitted
     `min_core_degree` proves it IN the result (>= K, or 0 for an empty
     core) rather than assuming it.
 
     Every multiply-referenced CTE is `AS MATERIALIZED`: DuckDB inlines
-    plain CTEs, and each round references the previous one 3×, so 16
-    inlined rounds would expand the lineitem scan ~4^16 times — observed
-    as an FD-exhaustion IOException before any row is produced.
-    Materializing each round keeps the oracle linear (0.16 s at
+    plain CTEs, and each round references the previous one 3×, so
+    inlined rounds would expand the lineitem scan 4^rounds times —
+    observed as an FD-exhaustion IOException before any row is produced.
+    Materializing each round keeps the oracle linear (~0.5 s at
     sf0.01)."""
     rounds = ",".join(
         f"""
@@ -1583,9 +1414,9 @@ e{k} AS MATERIALIZED (
   WHERE u IN (SELECT node FROM d{k} WHERE deg >= {_KCORE_K})
     AND v IN (SELECT node FROM d{k} WHERE deg >= {_KCORE_K})
 )"""
-        for k in range(1, _KCORE_ORACLE_UNROLL + 1)
+        for k in range(1, _KCORE_MAX_ROUNDS + 1)
     )
-    last = f"e{_KCORE_ORACLE_UNROLL}"
+    last = f"e{_KCORE_MAX_ROUNDS}"
     return f"""
 WITH {_edges_cte(materialized=True, edges_name='e0')},{rounds},
 core_nodes AS (SELECT DISTINCT u AS node FROM {last} UNION SELECT v FROM {last}),
@@ -1614,24 +1445,22 @@ def kcore_peel(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
     pattern). Per round: one node-cardinality degree aggregate + two
     node-keyed semi-joins over a monotonically shrinking edge relation;
     localCheckpoint truncates lineage so round r's plan does not embed
-    rounds 1..r-1, with at most two rounds' blocks live at once (the
-    graph_pagerank_converged lifecycle). The surviving-edge count rides
-    the checkpoint job via `df.observe` (round 8) — ONE job per round,
-    no separate count() action. The returned DataFrame is the final
-    checkpointed block; its release is deferred through
-    `tracked_release`."""
-    from pyspark.sql import Observation
+    rounds 1..r-1. The surviving-edge count rides each checkpoint job
+    via `df.observe`, the entry checkpoint's included — ONE job per
+    round, no separate count() action.
 
-    from ..persistence import tracked_release
+    Block lifecycle: the entry checkpoint and every round run on one
+    `CheckpointChain(keep=1)`, so one round's blocks are live at a time;
+    the returned DataFrame is the last checkpoint, whose blocks join the
+    next release cycle, and every block is dropped at once if the loop
+    raises, non-convergence included."""
+    from ..persistence import CheckpointChain
 
-    cur = edges.select("u", "v").localCheckpoint()  # eager: round-0 blocks
-    prev_ckpt = _ckpt_rdd(cur)
-    prev_n = cur.count()
-    n_rounds = 0
-    # exception-path block release: see star_contraction_stars (round-11)
-    ok = False
-    try:
-        while n_rounds < _KCORE_MAX_ROUNDS:
+    n = F.count(F.lit(1)).alias("n")
+    with CheckpointChain(keep=1) as chain:
+        cur, got = chain.step(edges.select("u", "v"), n)
+        prev_n = got["n"]
+        for _ in range(_KCORE_MAX_ROUNDS):
             und = cur.select(F.col("u").alias("node")).unionAll(
                 cur.select(F.col("v").alias("node"))
             )
@@ -1641,38 +1470,20 @@ def kcore_peel(edges: DataFrame, k: int = _KCORE_K) -> DataFrame:
                 .filter(F.col("deg") >= k)
                 .select("node")
             )
-            obs = Observation()
-            nxt = (
+            cur, got = chain.step(
                 cur.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
                 .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-                .select("u", "v")
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
+                .select("u", "v"),
+                n,
             )
-            # monotone shrink => an unchanged count is a fixpoint certificate;
-            # the metric is computed BY the checkpoint job, not a second action
-            # (bounded wait + loud aggregate fallback, see _observed)
-            n = _observed(obs, nxt, F.count(F.lit(1)).alias("n"))["n"]
-            prev_ckpt.unpersist(False)
-            prev_ckpt = _ckpt_rdd(nxt)
-            cur = nxt
-            n_rounds += 1
-            if n == prev_n:
+            # monotone shrink => an unchanged count is a fixpoint certificate
+            if got["n"] == prev_n:
                 break
-            prev_n = n
+            prev_n = got["n"]
         else:
             raise RuntimeError(
                 f"k-core peel did not converge in {_KCORE_MAX_ROUNDS} rounds"
             )
-        ok = True
-    finally:
-        if not ok and prev_ckpt is not None:
-            try:
-                prev_ckpt.unpersist(False)
-            except Exception:
-                pass
-    final_ckpt = prev_ckpt
-    tracked_release(lambda: final_ckpt.unpersist(False))
     return cur
 
 
@@ -1690,12 +1501,12 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Like `graph_connected_components`, the fixpoint is EXACT (set-valued,
     no ε), so a converged driver-side loop still carries a full value
-    oracle: peeling is monotone, so a 16-round unrolled DuckDB replay
-    equals the fixpoint (measured depth: 11 rounds at sf0.01, 1 at
-    sf0.001; the emitted `min_core_degree >= k` PROVES convergence in the
-    result row — 0 marks the legitimately empty core, which the sf0.1
-    fixture produces). Convergence detection is one scalar count() per
-    round — monotone shrink makes an unchanged edge count a fixpoint
+    oracle: peeling is monotone, so a DuckDB replay unrolled to the
+    loop's own round cap equals the fixpoint whenever the loop converges
+    (the emitted `min_core_degree >= k` PROVES convergence in the result
+    row — 0 marks the legitimately empty core, which the sf0.1 fixture
+    produces). Convergence detection is one observed count per round —
+    monotone shrink makes an unchanged edge count a fixpoint
     certificate, no checksum needed.
 
     Scale shape: per round one node-cardinality degree aggregate + two

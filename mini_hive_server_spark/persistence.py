@@ -61,6 +61,19 @@ the end, pending entries included — the request's DataFrame is discarded
 once its rows are serialized, so no consumer is left to protect, and a
 per-request handler thread leaves nothing behind.
 
+`CheckpointChain` owns the blocks of an iterative query's eager
+``localCheckpoint`` loop. Those blocks have no lineage, so neither
+``clearCache()`` nor an unpersist of a DataFrame reaches them; only the
+checkpointed LogicalRDD's backing rdd can drop them. The chain records
+that rdd at every ``step``, reads the step's ``df.observe`` metrics from
+the checkpoint job itself (no second action per round), and drops every
+block older than the newest ``keep``. When its ``with`` block exits,
+the kept blocks join the thread's next release cycle if the block
+returned normally and ``hand_off`` holds (the returned DataFrame reads
+them, and a truncated lineage cannot recompute), and are dropped at once
+otherwise. A loop that raises, non-convergence included, therefore
+leaves no block behind, whoever called it.
+
 At cluster scale the same discipline matters more, not less: executor
 storage memory competes with shuffle/execution memory under the unified
 memory manager, and dead cached blocks evict live ones or spill to disk.
@@ -200,12 +213,94 @@ def tracked_persist(df: DataFrame, correctness_bearing: bool = False) -> DataFra
     return entry._df
 
 
-def tracked_release(unpersist_fn: Callable[[], None]) -> None:
-    """Register an arbitrary cleanup for the next release cycle — used for
-    blocks the DataFrame API cannot unpersist itself (localCheckpoint
-    RDDs: `catalog.clearCache` only drops InMemoryRelations, so an
-    iterative query's final checkpoint would otherwise outlive it)."""
-    _LIVE.append(unpersist_fn)
+_OBSERVE_TIMEOUT_S = 60.0
+
+
+def _observed(obs, fallback_df: DataFrame, *exprs) -> dict:
+    """Bounded-wait read of an Observation fed by an eager localCheckpoint.
+
+    Metric delivery by the checkpoint job relies on localCheckpoint
+    routing through withAction — an implementation detail, not an API
+    contract; the blocking `obs.get` would hang forever if a Spark version
+    change broke that. Poll the non-blocking JVM accessor (normally
+    satisfied on the FIRST probe, since the eager checkpoint has already
+    run the action) and, past the deadline, fail LOUDLY into an explicit
+    one-row aggregate of the same expressions over the already-
+    materialized checkpoint blocks — one extra cheap job instead of an
+    un-diagnosable hang."""
+    import time
+    import warnings
+
+    deadline = time.monotonic() + _OBSERVE_TIMEOUT_S
+    wait = 0.0
+    while time.monotonic() < deadline:
+        try:
+            # private JVM accessor — exactly the version-drift surface this
+            # function exists to survive, so a probe failure falls through
+            # to the loud fallback instead of raising Py4JError mid-loop
+            if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
+                return obs.get
+        except Exception:
+            break  # probe API gone: go straight to the fallback
+        time.sleep(min(0.05 + wait, 0.5))
+        wait += 0.05
+    warnings.warn(
+        "Observation metrics not delivered by the localCheckpoint job "
+        f"within {_OBSERVE_TIMEOUT_S}s — Spark may no longer route "
+        "localCheckpoint through withAction; recomputing via an explicit "
+        "aggregate",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+    return fallback_df.agg(*exprs).head().asDict()
+
+
+def _drop_block(rdd) -> None:
+    try:
+        rdd.unpersist(False)
+    except Exception:
+        pass  # session already stopped — blocks died with it
+
+
+class CheckpointChain:
+    """Owns the eager localCheckpoint blocks of one iterative loop (see
+    module docstring). `keep` is how many of the newest blocks stay live
+    while the loop runs (None: all of them); on exit they join the next
+    release cycle if the block returned and ``hand_off`` holds, and are
+    dropped at once otherwise."""
+
+    def __init__(self, keep: int | None = 1, hand_off: bool = True):
+        self._keep = keep
+        self._hand_off = hand_off
+        self._rdds: list = []
+
+    def __enter__(self) -> "CheckpointChain":
+        return self
+
+    def step(self, df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+        """Checkpoint ``df`` eagerly and return it with ``metrics`` (named
+        aggregate Columns) read from the checkpoint job itself."""
+        from pyspark.sql import Observation
+
+        if metrics:
+            obs = Observation()
+            df = df.observe(obs, *metrics)
+        out = df.localCheckpoint()
+        # the LogicalRDD's BACKING rdd: unpersisting the derived
+        # queryExecution().toRdd() is a silent no-op
+        self._rdds.append(out._jdf.queryExecution().analyzed().rdd())
+        got = _observed(obs, out, *metrics) if metrics else {}
+        while self._keep is not None and len(self._rdds) > self._keep:
+            _drop_block(self._rdds.pop(0))
+        return out, got
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        rdds, self._rdds = self._rdds, []
+        for rdd in rdds:
+            if exc_type is None and self._hand_off:
+                _LIVE.append(lambda r=rdd: r.unpersist(False))
+            else:
+                _drop_block(rdd)
 
 
 def _release(entries: list[Callable[[], None]], defer: bool) -> None:

@@ -764,32 +764,82 @@ def test_kcore_peel_matches_bruteforce(spark):
         assert got == brute(canon, k), name
 
 
-def test_lsh_clusters_agree_with_star_contraction(spark):
-    """Two independent connected-components implementations — the
-    min-label propagation inside `dedup_lsh_clusters` (O(diameter)
-    rounds) and the large-star/small-star core `star_contraction_labels`
-    (O(log n) rounds) — must produce identical cluster labels on the
-    real verified LSH pair graph. Cross-validates both fixpoints on live
-    data, not just synthetic shapes."""
-    from pyspark.sql import functions as F
+def test_kcore_oracle_reaches_the_fixpoint(spark, tmp_path):
+    """The k-core oracle equals the query whenever the query converges
+    within its own round cap: peeling is monotone, so an oracle unrolled
+    to `_KCORE_MAX_ROUNDS` rounds sits on the fixpoint. The fixture's
+    co-purchase graph is the square of a 60-node path (every edge bought
+    in 2 orders), whose 3-core peels away two nodes a round and is empty
+    after ~30 rounds — deeper than any fixed small unroll."""
+    import os
 
-    from mini_hive_server_spark.operators.dedup import dedup_minhash_lsh
-    from mini_hive_server_spark.operators.graph import star_contraction_labels
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    pairs = dedup_minhash_lsh(spark, SF_SMOKE).select("d1", "d2")
-    star = dict(
-        star_contraction_labels(
-            pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-        ).collect()
+    from mini_hive_server_spark.catalog import TABLE_NAMES, table_path
+    from mini_hive_server_spark.operators.graph import _KCORE_K
+
+    from .oracle_harness import compare, run_duckdb_oracle
+
+    sf_dir = str(tmp_path / "path_square")
+    os.makedirs(sf_dir)
+    for name in TABLE_NAMES:
+        if name != "lineitem":
+            os.symlink(table_path(SF_SMOKE, name), table_path(sf_dir, name))
+    edges = [(i, j) for i in range(1, 61) for j in (i + 1, i + 2) if j <= 60]
+    rows = [(2 * n + c, p) for n, e in enumerate(edges) for c in (0, 1) for p in e]
+    orderkeys, partkeys = zip(*rows)
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array(orderkeys, pa.int64()),
+                "l_partkey": pa.array(partkeys, pa.int64()),
+            }
+        ),
+        table_path(sf_dir, "lineitem"),
     )
-    prop = {
+
+    name = "graph_kcore_decomposition"
+    oracle = registry.oracles()[name]
+    assert not compare(name, QS[name](spark, sf_dir), oracle, sf_dir)
+    for d in (sf_dir, SF_SMOKE):
+        row = run_duckdb_oracle(oracle, d).to_pylist()[0]
+        assert row["min_core_degree"] >= _KCORE_K or row["n_core_edges"] == 0, (
+            d,
+            row,
+        )
+
+
+def test_lsh_clusters_agree_with_star_contraction(spark):
+    """`dedup_lsh_clusters` labels the real verified LSH pair graph
+    through the large-star/small-star core; an independent driver-side
+    union-find over the same collected `dedup_minhash_lsh` pairs must
+    give identical cluster labels (the component minimum), so star
+    contraction is cross-validated on live data, not just synthetic
+    shapes."""
+    from mini_hive_server_spark.operators.dedup import dedup_minhash_lsh
+
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in dedup_minhash_lsh(spark, SF_SMOKE).collect():
+        ru, rv = find(r["d1"]), find(r["d2"])
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    union_find = {x: find(x) for x in parent}
+    clusters = {
         r["doc_id"]: r["cluster_id"]
         for r in registry.queries()["dedup_lsh_clusters"](
             spark, SF_SMOKE
         ).collect()
     }
-    assert star == prop
-    assert star, "no near-dup clusters in the smoke fixture?"
+    assert clusters == union_find
+    assert union_find, "no near-dup clusters in the smoke fixture?"
 
 
 def test_minmax_mv_refresh_edge_cases(spark):

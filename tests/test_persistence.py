@@ -496,3 +496,61 @@ def test_thread_exit_releases_its_persists(spark):
     persistence.release_tracked()
     persistence.release_tracked()
     assert _drain_to(spark, pre) == pre, "an ended thread's persists stayed cached"
+
+
+def _new_persistent_ids(spark, before: set, timeout_s: float = 30.0) -> set:
+    """Poll until no persistent RDD outside ``before`` is left or the
+    timeout passes (unpersist is asynchronous); return what is left."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        new = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+        if not new or time.monotonic() > deadline:
+            return new
+        time.sleep(0.2)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_pagerank_converged",
+        "graph_pagerank_golden",
+        "graph_bfs_3hop",
+        "graph_connected_components",
+        "graph_kcore_decomposition",
+        "dedup_lsh_clusters",
+    ],
+)
+def test_iterative_query_blocks_drain(spark, name):
+    """Every block an iterative query allocates, its localCheckpoint
+    blocks included (no lineage: `clearCache()` alone never reaches
+    them), is gone after two release cycles and a `clearCache()`."""
+    persistence.release_tracked()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    registry.queries()[name](spark, SF_SMOKE).collect()
+    persistence.release_tracked()
+    persistence.release_tracked()
+    spark.catalog.clearCache()
+    assert _new_persistent_ids(spark, before) == set(), f"{name} left blocks"
+
+
+@pytest.mark.parametrize("loop", ["star_contraction_stars", "kcore_peel"])
+def test_iterative_loop_that_raises_drops_its_blocks(spark, monkeypatch, loop):
+    """A converged loop that raises (here: non-convergence within a
+    lowered round cap) drops every checkpoint block it allocated at once,
+    with no release cycle and outside any registry scope."""
+    from mini_hive_server_spark.operators import graph
+
+    monkeypatch.setattr(graph, "_CC_MAX_ROUNDS", 0)
+    # the square of a 60-node path peels two nodes a round at k=3
+    monkeypatch.setattr(graph, "_KCORE_MAX_ROUNDS", 2)
+    edges = spark.createDataFrame(
+        [(i, j) for i in range(60) for j in (i + 1, i + 2) if j < 60],
+        "u: long, v: long",
+    )
+    persistence.release_tracked()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    live = list(persistence._LIVE)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        getattr(graph, loop)(edges)
+    assert list(persistence._LIVE) == live, "a raising loop handed blocks off"
+    assert _new_persistent_ids(spark, before) == set(), f"{loop} left blocks"
