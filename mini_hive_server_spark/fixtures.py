@@ -42,14 +42,20 @@ quantified in tests: one of 690 worker slots).
 
 Scale note: these are model-parity fixtures (≤50k rows), not throughput
 fixtures — the 100 TB arguments live with the operators that also run on
-the driver's big tables. Synthesis itself is a map-only project over
-``range``; materialize_reference_fixtures() writes them as Parquet when a
-file-backed copy is wanted (e.g. to serve over the Thrift endpoint).
+the big TPC-H tables. Synthesis is a map-only project over ``range``,
+but 10-15 md5 hashes per row make it the bulk of a small ``ref_*``
+query's work, so each collection is synthesized once per session and
+held in the session's memo (``reference_table``). Still no files: the
+held copy lives in Spark's block manager, and an external
+``clearCache()`` makes the next call synthesize a fresh one.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
+
+from .catalog import session_memo
 
 N_USERS = 1_000
 N_TASKS = 5_000
@@ -294,35 +300,39 @@ def duck_cte(*tables: str) -> str:
     return ",\n".join(f"{t} AS ({_BUILDERS[t](d)})" for t in tables)
 
 
-def register_reference_views(spark: SparkSession) -> None:
-    """Create the six reference-shaped tables as temp views (lazy: each is
-    a pure projection over range(); nothing materializes until queried)."""
-    for t in REF_TABLE_NAMES:
-        spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW {t} AS {spark_sql_for(t)}")
-
-
 def reference_table(spark: SparkSession, table: str) -> DataFrame:
+    """The session's persisted copy of one synthesized collection.
+
+    Input caching, not result caching: every query that reads the copy
+    still plans and runs all of its own jobs; only the md5 synthesis of
+    its input is done once per session, as ``catalog.load_tables`` binds
+    the TPC-H tables once. When an external ``clearCache()`` has dropped
+    the copy (``storageLevel`` NONE), a FRESH plan is built and
+    persisted, never the stale captured DataFrame (the rule
+    ``graph.copurchase_edges`` follows, for the reason measured there).
+
+    Synthesis depends on no session conf, so a copy built under any
+    session reads the same in all of them: ``timestamp_seconds`` yields
+    an instant, not a wall-clock time, and no cast or arithmetic in the
+    generators can overflow or fail (md5 hex prefixes are valid bigints,
+    the epoch offsets stay far inside bigint), so ANSI mode changes
+    nothing either. The timezone pin below is for the callers: the
+    queries RENDER these timestamps with date_format, which follows the
+    session timezone, and a caller's vanilla session inherits the
+    host's. (Re-set on every call on purpose: the caller may have
+    flipped it.)
+
+    No lock: ``persist()`` is lazy, and Spark's CacheManager keeps one
+    entry per equal plan, so two threads racing on a cold memo cost one
+    extra dict write, not a second copy."""
     try:
-        # Same defense as catalog.load_tables: timestamp RENDERING
-        # (date_format over the synthesized createdAt/submitted_at columns)
-        # follows the session timezone, and the driver's vanilla session
-        # inherits the host tz — pin UTC so oracle comparison is stable.
-        # (Re-set on every call on purpose: the caller may have flipped it.)
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
         pass
-    return spark.sql(spark_sql_for(table))
-
-
-def materialize_reference_fixtures(
-    spark: SparkSession, out_dir: str = "/tmp/mhs_reference_fixtures"
-) -> dict[str, str]:
-    """Write the synthesized collections as Parquet (for file-backed
-    consumers, e.g. serving over the Thrift endpoint or external tools).
-    Returns {table: path}."""
-    out = {}
-    for t in REF_TABLE_NAMES:
-        path = f"{out_dir}/{t}.parquet"
-        reference_table(spark, t).write.mode("overwrite").parquet(path)
-        out[t] = path
-    return out
+    memo = session_memo(spark, "reference_tables")
+    df = memo.get(table)
+    if df is None or df.storageLevel == StorageLevel.NONE:
+        df = memo[table] = spark.sql(spark_sql_for(table)).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+    return df

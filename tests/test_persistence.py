@@ -16,7 +16,7 @@ import time
 
 import pytest
 
-from mini_hive_server_spark import persistence, registry
+from mini_hive_server_spark import fixtures, persistence, registry
 
 from .conftest import SF_SMOKE
 
@@ -433,7 +433,8 @@ def test_owner_counts_hold_under_concurrent_persists(spark):
 
 
 @pytest.mark.parametrize(
-    "use", ["load_tables", "copurchase_edges", "similarity_pq_adc"]
+    "use",
+    ["load_tables", "copurchase_edges", "similarity_pq_adc", "reference_table"],
 )
 def test_dropped_session_is_collectable(spark, use):
     """What a session memoizes must not outlive the session: the memoized
@@ -455,6 +456,8 @@ def test_dropped_session_is_collectable(spark, use):
         load_tables(child, SF_SMOKE)
     elif use == "copurchase_edges":
         copurchase_edges(child, SF_SMOKE).count()
+    elif use == "reference_table":
+        fixtures.reference_table(child, "ref_users").count()
     else:
         registry.queries()[use](child, SF_SMOKE).collect()
     clear_copurchase_cache()

@@ -772,3 +772,54 @@ def test_http_facade_routes_run_no_python(spark):
             plan = df._jdf.queryExecution().executedPlan().toString()
         found = [n for n in python_nodes if n in plan]
         assert not found, f"{name} plans {found}:\n{plan}"
+
+
+def _plan_leaves(plan) -> list[str]:
+    """Leaf node names of a logical plan, subquery plans included; a
+    cached relation is a leaf (its cached plan is not a child)."""
+    kids = [plan.children(), plan.subqueries()]
+    nodes = [seq.apply(i) for seq in kids for i in range(seq.size())]
+    if not nodes:
+        return [plan.nodeName()]
+    return [leaf for node in nodes for leaf in _plan_leaves(node)]
+
+
+def test_http_facade_requests_do_not_resynthesize_input(spark):
+    """Every facade query over the reference collections reads the
+    session's held copies (fixtures.reference_table): after one collect,
+    its cached-data plan has an InMemoryRelation and no `range` leaf
+    outside one. A second and third collect of the same query run the
+    same number of jobs, so nothing is replayed."""
+    from mini_hive_server_spark import http_server, persistence
+
+    names = sorted(
+        {
+            *http_server.ROUTES.values(),
+            *http_server.POST_ROUTES.values(),
+            http_server._TASK_DETAIL_QUERY,
+        }
+        - {"buyer_home_dashboard", "worker_home_stats"}
+    )
+    assert len(names) == 21, names
+    for name in names:
+        with persistence.scope(keep=False):
+            df = QS[name](spark, SF_SMOKE)
+            df.collect()
+            leaves = _plan_leaves(df._jdf.queryExecution().withCachedData())
+        assert "InMemoryRelation" in leaves, (name, leaves)
+        assert "Range" not in leaves, (name, leaves)
+
+    sc = spark.sparkContext
+    jobs = []
+    for rep in range(2):
+        group = f"facade-replay-{rep}"
+        sc.setJobGroup(group, group)
+        try:
+            with persistence.scope(keep=False):
+                QS[http_server.ROUTES["/api/buyer/pending-submissions"]](
+                    spark, SF_SMOKE
+                ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1] > 0, jobs

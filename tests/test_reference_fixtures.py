@@ -5,10 +5,17 @@ bit-identically in DuckDB (the property that makes them oracle-able)."""
 
 from __future__ import annotations
 
+import threading
+
 import duckdb
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
-from mini_hive_server_spark import fixtures
+from mini_hive_server_spark import fixtures, persistence
+from mini_hive_server_spark.catalog import session_memos
+
+from .conftest import SF_ORACLE
+from .oracle_harness import compare
 
 
 def _t(spark, name):
@@ -87,10 +94,12 @@ def test_withdrawal_and_oversubscription_edges(spark):
 
 
 def test_duckdb_reproduces_identical_rows(spark):
-    """Spot-check cross-engine determinism on the two quirk-heaviest
-    tables via full-row md5 rollups (cheap, order-insensitive)."""
+    """Cross-engine determinism of all six collections via full-row md5
+    rollups (cheap, order-insensitive): every `ref_*` query reads the
+    session's held copy, and its oracle re-synthesizes the same rows in
+    DuckDB."""
     con = duckdb.connect()
-    for table in ("ref_submissions", "ref_payments"):
+    for table in fixtures.REF_TABLE_NAMES:
         sdf = fixtures.reference_table(spark, table)
         cols = [
             F.date_format(n, "yyyy-MM-dd HH:mm:ss").alias(n)
@@ -124,3 +133,132 @@ def test_duckdb_reproduces_identical_rows(spark):
             f"FROM {table}"
         ).fetchone()
         assert (rollup.n, rollup.hsum) == duck, (table, rollup, duck)
+
+
+# --- the session's held copies ------------------------------------------
+
+
+def _forget_held_copies(spark) -> None:
+    """Empty every live session's reference memo and the shared cache:
+    the next `reference_table` call synthesizes from scratch."""
+    for memo in session_memos("reference_tables"):
+        memo.clear()
+    spark.catalog.clearCache()
+
+
+def _leaf_names(df) -> list[str]:
+    """Leaf node names of the plan ``df`` runs, after cached-data
+    substitution."""
+    leaves = df._jdf.queryExecution().withCachedData().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def _assert_same_rows(got, want, table: str) -> None:
+    assert got.exceptAll(want).count() == 0, table
+    assert want.exceptAll(got).count() == 0, table
+
+
+def _synthesize_uncached(spark, chain) -> dict:
+    """Each collection's defining SQL, run with nothing cached and held
+    as checkpoint blocks: a LogicalRDD matches no cached plan, so a later
+    comparison reads these rows and not the held copy."""
+    out = {}
+    for t in fixtures.REF_TABLE_NAMES:
+        out[t], _ = chain.step(spark.sql(fixtures.spark_sql_for(t)))
+        assert _leaf_names(out[t]) == ["LogicalRDD"], t
+    return out
+
+
+def test_warm_call_returns_the_held_copy(spark):
+    first = fixtures.reference_table(spark, "ref_tasks")
+    assert fixtures.reference_table(spark, "ref_tasks") is first
+    assert first.storageLevel != StorageLevel.NONE
+
+
+def test_held_copies_equal_fresh_synthesis(spark):
+    _forget_held_copies(spark)
+    with persistence.CheckpointChain(keep=None, hand_off=False) as chain:
+        fresh = _synthesize_uncached(spark, chain)
+        for t, want in fresh.items():
+            held = fixtures.reference_table(spark, t)
+            assert _leaf_names(held) == ["InMemoryRelation"], t
+            _assert_same_rows(held, want, t)
+
+
+def test_clear_cache_rebuilds_a_fresh_copy(spark):
+    old = fixtures.reference_table(spark, "ref_withdrawals")
+    old.count()
+    spark.catalog.clearCache()
+    assert old.storageLevel == StorageLevel.NONE
+    new = fixtures.reference_table(spark, "ref_withdrawals")
+    assert new is not old
+    assert new.storageLevel != StorageLevel.NONE
+    assert fixtures.reference_table(spark, "ref_withdrawals") is new
+
+
+def _rollup(df) -> tuple:
+    row = df.agg(F.count(F.lit(1)), F.sum(F.hash(*df.columns))).first()
+    return tuple(row)
+
+
+def test_concurrent_first_touch_builds_one_copy(spark):
+    """Handler threads racing on a cold memo each read the same rows,
+    and Spark caches one copy: the second persist of an equal plan is a
+    no-op, which is why `reference_table` takes no lock."""
+    _forget_held_copies(spark)
+    want = _rollup(fixtures.reference_table(spark, "ref_submissions"))
+    _forget_held_copies(spark)
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    barrier = threading.Barrier(4)
+    got: list = []
+    errors: list[str] = []
+
+    def touch() -> None:
+        try:
+            barrier.wait(timeout=60)
+            got.append(_rollup(fixtures.reference_table(spark, "ref_submissions")))
+        except Exception as e:  # surface in the main thread
+            errors.append(f"{type(e).__name__}: {e}")
+
+    threads = [threading.Thread(target=touch) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads), "threads did not finish"
+    assert not errors, errors
+    assert got == [want] * 4
+    new = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+    assert len(new) == 1, new
+
+
+def test_held_copies_ignore_the_building_session_conf(spark):
+    """Synthesis depends on no session conf: copies built first in a
+    child session that starts with a non-UTC timezone and ANSI off equal
+    the vanilla session's synthesis, and the two queries that render the
+    synthesized timestamps stay oracle-MATCH in both sessions."""
+    from mini_hive_server_spark import registry
+
+    _forget_held_copies(spark)
+    child = spark.newSession()
+    child.conf.set("spark.sql.session.timeZone", "America/New_York")
+    child.conf.set("spark.sql.ansi.enabled", "false")
+    with persistence.CheckpointChain(keep=None, hand_off=False) as chain:
+        fresh = _synthesize_uncached(spark, chain)
+        for t, want in fresh.items():
+            held = fixtures.reference_table(child, t)
+            assert _leaf_names(held) == ["InMemoryRelation"], t
+            _assert_same_rows(held, want, t)
+    specs = registry.all_specs()
+    for session in (child, spark):
+        for name in ("ref_worker_submission_page", "ref_notifications_feed"):
+            spec = specs[name]
+            before = session.conf.get("spark.sql.session.timeZone")
+            session.conf.set("spark.sql.session.timeZone", "America/New_York")
+            try:
+                problems = compare(name, spec.fn(session, SF_ORACLE), spec.oracle, SF_ORACLE)
+            finally:
+                session.conf.set("spark.sql.session.timeZone", before)
+            assert not problems, "\n".join(problems)
+    assert child.conf.get("spark.sql.ansi.enabled") == "false"
+    _forget_held_copies(spark)
