@@ -40,11 +40,6 @@ from ..registry import register
 
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS  # noqa: E402
-# 3-word shingles, 0-based in Spark (DuckDB oracles use 1-based range)
-_SHINGLES = (
-    f"array_distinct(transform(sequence(0, size({_WORDS}) - 3), "
-    f"i -> concat({_WORDS}[i], ' ', {_WORDS}[i+1], ' ', {_WORDS}[i+2])))"
-)
 
 _DUCK_SHINGLES_CTE = f"""
 words AS (
@@ -81,6 +76,7 @@ def shingle_arrays(docs: DataFrame) -> DataFrame:
     )
     return words.select(
         "doc_id",
+        # 0-based in Spark; the DuckDB oracles use a 1-based range
         F.expr(
             "array_distinct(transform(sequence(0, size(w) - 3), "
             "i -> concat(w[i], ' ', w[i+1], ' ', w[i+2])))"

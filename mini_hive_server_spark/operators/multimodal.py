@@ -1,16 +1,24 @@
 """Multimodal column plumbing — driver north-star extension.
 
 Image/audio/video content is modeled as opaque `binary` payload columns
-plus a typed metadata struct; per-item decode / feature-extraction runs as
-Arrow-batched Pandas iterators (`mapInPandas`) so the Python stage sees
-columnar batches, never rows.
+plus a typed metadata struct. Every per-item kernel runs through one
+helper, `_map_items`: an Arrow-batched `mapInPandas` stage that calls a
+plain per-item function once per input row, so the Python stage sees
+columnar batches on both sides and each kernel states only its per-item
+arithmetic.
 
-The decode kernels themselves are STUBBED (this container ships no
-image/audio codecs): `decode_image`/`decode_audio` raise
-NotImplementedError behind an import-try, and the registered query's
-"feature extraction" computes deterministic byte-level features (size, md5,
-pseudo width/height) so the Spark-side plumbing — schema, batch iteration,
-partitioning — is real and oracle-verified end-to-end.
+Two kinds of kernel run here:
+
+* byte-level stand-ins over the documents' utf-8 text (features, frame
+  sampling, resize, audio chunking, scene cuts). The ASCII fixture makes
+  byte windows equal text substrings, so each kernel is oracle-checked;
+* executed decoders that need no codec library: a generic 24-bit
+  uncompressed BMP parser (`decode_bmp`) and a RIFF/WAV PCM-16 chunk
+  walker (`decode_wav_pcm16`). Their payloads are synthesized per doc
+  from a closed-form byte formula, and the DuckDB oracles recompute the
+  expected pixel/sample checksums from that formula arithmetically,
+  never parsing the container, so any decoder bug surfaces as a value
+  mismatch.
 
 Scale notes: payloads at 100 TB dominate row size, so the rule is
 (1) never shuffle payload columns — project them away before any join/agg;
@@ -21,8 +29,10 @@ the Arrow buffer; (3) feature extraction is map-only → zero shuffles here.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,43 +40,36 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..registry import register
 
-try:  # codec libraries are not in the runtime image
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
+_PANDAS_DTYPES = {"long": "int64", "int": "int32"}
 
 
-def decode_image(payload: bytes):
-    """General image decode, gated on the codec library being present.
-    One format IS decodable without any codec: uncompressed 24-bit BMP —
-    see `decode_bmp` below, which executes for real in this runtime and
-    is oracle-checked end-to-end (`multimodal_bmp_decode`)."""
-    if payload[:2] == b"BM":
-        w, h, rgb = decode_bmp(payload)
-        return {"width": w, "height": h, "rgb": rgb}
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "non-BMP image decode requires PIL; not available in this "
-            "runtime — BMP decodes natively (decode_bmp), other formats "
-            "are exercised with deterministic byte features instead"
-        )
-    raise NotImplementedError("real decode wiring lands with the codec image")
+def _map_items(
+    df: DataFrame, item_fn: Callable[..., Iterable[tuple]], schema: str
+) -> DataFrame:
+    """One Arrow-batched `mapInPandas` stage that calls `item_fn(*row)`
+    once per input row, with the row's values in `df`'s column order.
+    `item_fn` returns (or yields) that item's output rows as tuples in
+    `schema` order — none, one or many per item. Each output batch is
+    rebuilt with the dtypes the DDL `schema` declares (`long` → int64,
+    `int` → int32, anything else object), so an empty batch keeps its
+    types. The stage carries `item_fn`'s name, so the plan shows
+    `MapInPandas <item_fn>(...)` and two kernels of one query stay
+    distinguishable."""
+    fields = [f.split() for f in schema.split(",")]
+    names = [name for name, _ in fields]
+    dtypes = {name: _PANDAS_DTYPES.get(t, "object") for name, t in fields}
 
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                out
+                for item in zip(*(pdf[c] for c in pdf.columns))
+                for out in item_fn(*item)
+            ]
+            yield pd.DataFrame.from_records(rows, columns=names).astype(dtypes)
 
-def decode_audio(payload: bytes):
-    """General audio decode, gated on a codec. One container IS decodable
-    without any codec: RIFF/WAV with 16-bit PCM — see `decode_wav_pcm16`
-    below, executed for real and oracle-checked
-    (`multimodal_wav_decode`)."""
-    if payload[:4] == b"RIFF":
-        rate, samples = decode_wav_pcm16(payload)
-        return {"sample_rate": rate, "samples": samples}
-    raise NotImplementedError(
-        "compressed audio decode requires an audio codec; not available "
-        "in this runtime — WAV/PCM decodes natively (decode_wav_pcm16)"
-    )
+    kernel.__name__ = kernel.__qualname__ = item_fn.__name__
+    return df.mapInPandas(kernel, schema=schema)
 
 
 def attach_payload(docs: DataFrame) -> DataFrame:
@@ -90,28 +93,18 @@ _FEATURE_SCHEMA = (
 )
 
 
-def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _extract_features(doc_id: int, payload: bytes) -> Iterator[tuple]:
     """Deterministic stand-in for a decode+feature kernel: byte length, md5,
-    and a pseudo width/height derived from the first two bytes. Runs per
-    Arrow batch — the exact shape a real decoder (PIL / ffmpeg / torchcodec)
-    would slot into."""
-    for pdf in batches:
-        payloads = pdf["payload"]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": payloads.map(len).astype("int32"),
-                "payload_md5": payloads.map(
-                    lambda b: hashlib.md5(bytes(b)).hexdigest()
-                ),
-                "width": payloads.map(lambda b: b[0] % 64 + 1 if len(b) else 0).astype(
-                    "int32"
-                ),
-                "height": payloads.map(
-                    lambda b: (b[1] % 64 + 1) if len(b) > 1 else 0
-                ).astype("int32"),
-            }
-        )
+    and a pseudo width/height derived from the first two bytes — the exact
+    shape a real decoder (PIL / ffmpeg / torchcodec) would slot into."""
+    b = bytes(payload)
+    yield (
+        doc_id,
+        len(b),
+        hashlib.md5(b).hexdigest(),
+        b[0] % 64 + 1 if len(b) else 0,
+        b[1] % 64 + 1 if len(b) > 1 else 0,
+    )
 
 
 _FEATURES_ORACLE = """
@@ -140,8 +133,8 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the Python batch path loses nothing."""
     docs = load_tables(spark, sf_dir)["documents"]
     records = attach_payload(docs)
-    features = records.select("doc_id", "payload").mapInPandas(
-        _extract_features, schema=_FEATURE_SCHEMA
+    features = _map_items(
+        records.select("doc_id", "payload"), _extract_features, _FEATURE_SCHEMA
     )
     return features.orderBy("doc_id")
 
@@ -184,31 +177,19 @@ _MAX_FRAMES = 4  # frames sampled per item
 _FRAME_SCHEMA = "doc_id long, frame_idx int, frame_md5 string"
 
 
-def _sample_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _sample_frames(doc_id: int, payload: bytes) -> Iterator[tuple]:
     """Frame-sampling kernel shape: emit a VARIABLE number of rows per
-    input item (one per sampled frame) — the plumbing a video decoder
-    (stride-sample k frames, embed each) slots into. Deterministic stand-in:
-    fixed-size byte windows at a fixed stride."""
-    for pdf in batches:
-        ids, idxs, hashes = [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload)
-            if len(b) < _FRAME_SIZE:
-                continue
-            n_frames = min(_MAX_FRAMES, (len(b) - _FRAME_SIZE) // _FRAME_STRIDE + 1)
-            for i in range(n_frames):
-                ids.append(doc_id)
-                idxs.append(i)
-                hashes.append(
-                    hashlib.md5(b[i * _FRAME_STRIDE : i * _FRAME_STRIDE + _FRAME_SIZE]).hexdigest()
-                )
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "frame_idx": pd.Series(idxs, dtype="int32"),
-                "frame_md5": pd.Series(hashes, dtype="object"),
-            }
-        )
+    input item (one per sampled frame, none under one frame) — the
+    plumbing a video decoder (stride-sample k frames, embed each) slots
+    into. Deterministic stand-in: fixed-size byte windows at a fixed
+    stride."""
+    b = bytes(payload)
+    if len(b) < _FRAME_SIZE:
+        return
+    n_frames = min(_MAX_FRAMES, (len(b) - _FRAME_SIZE) // _FRAME_STRIDE + 1)
+    for i in range(n_frames):
+        start = i * _FRAME_STRIDE
+        yield doc_id, i, hashlib.md5(b[start : start + _FRAME_SIZE]).hexdigest()
 
 
 _FRAME_ORACLE = f"""
@@ -231,8 +212,8 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     substrings, so the kernel is oracle-checkable end-to-end."""
     docs = load_tables(spark, sf_dir)["documents"]
     records = attach_payload(docs)
-    frames = records.select("doc_id", "payload").mapInPandas(
-        _sample_frames, schema=_FRAME_SCHEMA
+    frames = _map_items(
+        records.select("doc_id", "payload"), _sample_frames, _FRAME_SCHEMA
     )
     return frames.orderBy("doc_id", "frame_idx")
 
@@ -242,23 +223,13 @@ _RESIZE_TARGET = 64  # bytes in the "resized" payload
 _RESIZE_SCHEMA = "doc_id long, out_bytes int, resized_md5 string"
 
 
-def _resize_payloads(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _resize_payloads(doc_id: int, payload: bytes) -> Iterator[tuple]:
     """Resize kernel shape: per item, produce a fixed-size output payload
     (truncate or zero-pad to _RESIZE_TARGET bytes) — where a real image
     resize (decode -> scale -> re-encode) slots in. Deterministic, so the
     plumbing is oracle-checkable."""
-    for pdf in batches:
-        payloads = pdf["payload"]
-        resized = payloads.map(
-            lambda b: bytes(b)[:_RESIZE_TARGET].ljust(_RESIZE_TARGET, b"0")
-        )
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "out_bytes": resized.map(len).astype("int32"),
-                "resized_md5": resized.map(lambda b: hashlib.md5(b).hexdigest()),
-            }
-        )
+    resized = bytes(payload)[:_RESIZE_TARGET].ljust(_RESIZE_TARGET, b"0")
+    yield doc_id, len(resized), hashlib.md5(resized).hexdigest()
 
 
 _RESIZE_ORACLE = f"""
@@ -283,8 +254,8 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     resize before batching."""
     docs = load_tables(spark, sf_dir)["documents"]
     records = attach_payload(docs)
-    out = records.select("doc_id", "payload").mapInPandas(
-        _resize_payloads, schema=_RESIZE_SCHEMA
+    out = _map_items(
+        records.select("doc_id", "payload"), _resize_payloads, _RESIZE_SCHEMA
     )
     return out.orderBy("doc_id")
 
@@ -298,36 +269,16 @@ _AUDIO_CHUNK_SCHEMA = (
 )
 
 
-def _chunk_audio(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _chunk_audio(doc_id: int, source: str, payload: bytes) -> Iterator[tuple]:
     """Audio chunking kernel shape: split each payload into fixed-duration
     chunks (here _CHUNK_BYTES bytes ~ 1 s of PCM; the tail chunk keeps its
     short length — ASR-style pipelines pad it downstream), fingerprint
-    each chunk. Where a real resample/VAD/feature step slots in
-    (decode_audio is the honest stub for it); the chunk math and batch
-    shape are the real thing."""
-    for pdf in batches:
-        ids, srcs, idxs, sizes, hashes = [], [], [], [], []
-        for doc_id, source, payload in zip(
-            pdf["doc_id"], pdf["source"], pdf["payload"]
-        ):
-            b = bytes(payload)
-            n_chunks = max(1, -(-len(b) // _CHUNK_BYTES))
-            for i in range(n_chunks):
-                piece = b[i * _CHUNK_BYTES : (i + 1) * _CHUNK_BYTES]
-                ids.append(doc_id)
-                srcs.append(source)
-                idxs.append(i)
-                sizes.append(len(piece))
-                hashes.append(hashlib.md5(piece).hexdigest())
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "source": pd.Series(srcs, dtype="object"),
-                "chunk_idx": pd.Series(idxs, dtype="int32"),
-                "chunk_bytes": pd.Series(sizes, dtype="int32"),
-                "chunk_md5": pd.Series(hashes, dtype="object"),
-            }
-        )
+    each chunk. Where a real resample/VAD/feature step slots in; the
+    chunk math and batch shape are the real thing."""
+    b = bytes(payload)
+    for i in range(max(1, -(-len(b) // _CHUNK_BYTES))):
+        piece = b[i * _CHUNK_BYTES : (i + 1) * _CHUNK_BYTES]
+        yield doc_id, source, i, len(piece), hashlib.md5(piece).hexdigest()
 
 
 _AUDIO_CHUNK_ORACLE = f"""
@@ -374,7 +325,7 @@ def multimodal_audio_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     records = attach_payload(docs).select(
         "doc_id", F.col("meta.origin").alias("source"), "payload"
     )
-    chunks = records.mapInPandas(_chunk_audio, schema=_AUDIO_CHUNK_SCHEMA)
+    chunks = _map_items(records, _chunk_audio, _AUDIO_CHUNK_SCHEMA)
     return (
         chunks.groupBy("source")
         .agg(
@@ -425,42 +376,27 @@ ORDER BY doc_id
 _SCENE_SCHEMA = "doc_id long, n_frames long, n_cuts long, total_lum long"
 
 
-def _detect_scene_cuts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _detect_scene_cuts(doc_id: int, payload: bytes) -> Iterator[tuple]:
     """Scene-cut kernel shape: decode frames, reduce each to a luminance
     statistic, flag big deltas between CONSECUTIVE frames — where a real
     video decoder + histogram-difference detector slots in. Deterministic
-    stand-in: dense contiguous byte windows, luminance = byte sum."""
-    import numpy as np
-
-    for pdf in batches:
-        ids, nf, nc, tl = [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            b = bytes(payload)
-            n = min(_SCENE_MAX_FRAMES, len(b) // _SCENE_FRAME)
-            if n == 0:
-                continue
-            mat = np.frombuffer(
-                b[: n * _SCENE_FRAME], dtype=np.uint8
-            ).reshape(n, _SCENE_FRAME)
-            lum = mat.sum(axis=1, dtype=np.int64)
-            ids.append(doc_id)
-            nf.append(n)
-            nc.append(int((np.abs(np.diff(lum)) > _SCENE_CUT_THRESH).sum()))
-            tl.append(int(lum.sum()))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_frames": pd.Series(nf, dtype="int64"),
-                "n_cuts": pd.Series(nc, dtype="int64"),
-                "total_lum": pd.Series(tl, dtype="int64"),
-            }
-        )
+    stand-in: dense contiguous byte windows, luminance = byte sum. Items
+    shorter than one frame emit no row."""
+    b = bytes(payload)
+    n = min(_SCENE_MAX_FRAMES, len(b) // _SCENE_FRAME)
+    if n == 0:
+        return
+    mat = np.frombuffer(b[: n * _SCENE_FRAME], dtype=np.uint8).reshape(
+        n, _SCENE_FRAME
+    )
+    lum = mat.sum(axis=1, dtype=np.int64)
+    n_cuts = int((np.abs(np.diff(lum)) > _SCENE_CUT_THRESH).sum())
+    yield doc_id, n, n_cuts, int(lum.sum())
 
 
 # ----------------------- executable decode kernels (no codecs needed)
 #
-# VERDICT r6 "missing #2": every decode path above is an honest stub
-# because the image ships no codec libraries — but two real container
+# The runtime ships no image/audio codec library, but two real container
 # formats need none: uncompressed 24-bit BMP (a header parse + padding/
 # row-order/channel-order normalization) and RIFF/WAV 16-bit PCM (a
 # chunk walk + struct unpack). Each gets (a) a deterministic synthetic
@@ -483,8 +419,6 @@ def _pack_bmp24(w: int, h: int, rgb: bytes) -> bytes:
     container. The container stores rows BOTTOM-UP in BGR with rows
     padded to 4 bytes — the three traps a naive reader gets wrong,
     deliberately present."""
-    import struct
-
     pad = (4 - (w * 3) % 4) % 4
     rows = []
     for y in range(h - 1, -1, -1):  # bottom-up
@@ -516,8 +450,6 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
     row padding, flips bottom-up storage to top-down, reorders BGR→RGB.
     Returns (width, height, top-down row-major RGB bytes). Raises
     ValueError on anything malformed or unsupported."""
-    import struct
-
     if len(payload) < 54 or payload[:2] != b"BM":
         raise ValueError("not a BMP payload")
     (offset,) = struct.unpack_from("<I", payload, 10)
@@ -529,8 +461,8 @@ def decode_bmp(payload: bytes) -> tuple[int, int, bytes]:
         raise ValueError("degenerate BMP dimensions")
     if offset < 14 + hdr_size or offset > len(payload):
         # a malformed offset pointing into (or before) the header region
-        # would otherwise silently decode header bytes as pixels
-        # (round-11 review) — the contract promises ValueError instead
+        # would otherwise silently decode header bytes as pixels — the
+        # contract promises ValueError instead
         raise ValueError(f"pixel offset {offset} inside header or past EOF")
     bottom_up, h = h > 0, abs(h)
     stride = (w * 3 + 3) // 4 * 4
@@ -552,50 +484,27 @@ _BMP_DECODE_SCHEMA = (
 )
 
 
-def _synth_batches(synth):
-    """mapInPandas iterator factory: (doc_id) batches -> (doc_id, payload)
-    batches via the given per-doc synthesizer — one definition for the
-    BMP / WAV / BMP-variant payload sources (round-11 review: three
-    copy-pasted iterators differing only in the synth function)."""
+def _payloads(docs: DataFrame, synth: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, payload) rows, the payload synthesized per doc by `synth`
+    in one Arrow stage — standing in for payloads read from object
+    storage. The stage is named after `synth` in the plan."""
 
-    def _iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["doc_id"].map(lambda d: synth(int(d))),
-                }
-            )
+    def item(doc_id: int) -> Iterator[tuple]:
+        yield doc_id, synth(int(doc_id))
 
-    return _iter
+    item.__name__ = synth.__name__
+    return _map_items(docs.select("doc_id"), item, "doc_id long, payload binary")
 
 
-_synthesize_bmp_batches = _synth_batches(synthesize_bmp)
+def _weighted_sum(values) -> int:
+    """sum((i + 1) * v): a position-sensitive checksum, so a reordered
+    stream (wrong flip, channel order or chunk offset) changes it."""
+    return sum((i + 1) * v for i, v in enumerate(values))
 
 
-def _decode_bmp_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ws, hs, nb, ps, pw = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb = decode_bmp(bytes(payload))
-            ids.append(doc_id)
-            ws.append(w)
-            hs.append(h)
-            nb.append(len(rgb))
-            ps.append(sum(rgb))
-            pw.append(sum((i + 1) * v for i, v in enumerate(rgb)))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "n_bytes": pd.Series(nb, dtype="int32"),
-                "pixel_sum": pd.Series(ps, dtype="int64"),
-                "pixel_weighted": pd.Series(pw, dtype="int64"),
-            }
-        )
+def _decode_bmp_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    w, h, rgb = decode_bmp(bytes(payload))
+    yield doc_id, w, h, len(rgb), sum(rgb), _weighted_sum(rgb)
 
 
 _BMP_ORACLE = f"""
@@ -621,26 +530,23 @@ ORDER BY doc_id
 
 @register("multimodal_bmp_decode", oracle=_BMP_ORACLE, tags=("llm", "multimodal"))
 def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first EXECUTED image-decode path (VERDICT r6 item 5): each doc
-    gets a deterministic 24-bit uncompressed BMP (synthesized in one
-    Arrow stage — standing in for payloads read from object storage),
-    and a second Arrow stage runs the dependency-free GENERIC parser
-    `decode_bmp` — header-driven, stripping row padding, flipping the
-    bottom-up row order, reordering BGR→RGB. The oracle recomputes the
-    expected pixel stream arithmetically from the generator's closed
-    form and never touches the container, so every normalization step
-    the decoder performs is value-checked: get padding, flip, or channel
-    order wrong and pixel_weighted shifts.
+    """The executed image-decode path: each doc gets a deterministic
+    24-bit uncompressed BMP (synthesized in one Arrow stage — standing
+    in for payloads read from object storage), and a second Arrow stage
+    runs the dependency-free GENERIC parser `decode_bmp` — header-driven,
+    stripping row padding, flipping the bottom-up row order, reordering
+    BGR→RGB. The oracle recomputes the expected pixel stream
+    arithmetically from the generator's closed form and never touches
+    the container, so every normalization step the decoder performs is
+    value-checked: get padding, flip, or channel order wrong and
+    pixel_weighted shifts.
 
     Scale shape: two chained map-only Arrow stages, payload never
     shuffles (only the 6-number feature rows do); the presentation sort
     is the one exchange."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_bmp_batches, schema="doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
-        _decode_bmp_batches, schema=_BMP_DECODE_SCHEMA
+    return _map_items(
+        _payloads(docs, synthesize_bmp), _decode_bmp_batches, _BMP_DECODE_SCHEMA
     ).orderBy("doc_id")
 
 
@@ -658,8 +564,6 @@ def synthesize_wav(doc_id: int) -> bytes:
     ((doc_id*13 + i*5) % 4096) - 2048, little-endian signed. A JUNK
     chunk precedes fmt so a reader that assumes fixed offsets (fmt at
     12, data at 36) reads garbage — the chunk walk is mandatory."""
-    import struct
-
     n, rate = _wav_params(doc_id)
     samples = [
         ((doc_id * 13 + i * 5) % _WAV_SAMPLE_MOD) - _WAV_SAMPLE_MOD // 2
@@ -679,8 +583,6 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, list[int]]:
     aligned), requires a PCM mono 16-bit fmt chunk before data, unpacks
     signed little-endian samples. Returns (sample_rate, samples).
     Raises ValueError on malformed or unsupported payloads."""
-    import struct
-
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos, rate, n_channels, bits = 12, None, None, None
@@ -689,8 +591,8 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, list[int]]:
         (size,) = struct.unpack_from("<I", payload, pos + 4)
         body = payload[pos + 8 : pos + 8 + size]
         if len(body) < size:
-            # fuzz finding: a truncated chunk body previously fell
-            # through to struct.unpack and escaped as struct.error
+            # without this guard a truncated chunk body falls through
+            # to struct.unpack and escapes as struct.error
             raise ValueError(f"truncated {cid!r} chunk")
         if cid == b"fmt ":
             if size < 16:
@@ -722,32 +624,10 @@ _WAV_DECODE_SCHEMA = (
 )
 
 
-_synthesize_wav_batches = _synth_batches(synthesize_wav)
-
-
-def _decode_wav_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ns, rs, ss, sw, pk = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            rate, samples = decode_wav_pcm16(bytes(payload))
-            ids.append(doc_id)
-            ns.append(len(samples))
-            rs.append(rate)
-            ss.append(sum(samples))
-            sw.append(sum((i + 1) * s for i, s in enumerate(samples)))
-            pk.append(max(abs(s) for s in samples))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_samples": pd.Series(ns, dtype="int32"),
-                "sample_rate": pd.Series(rs, dtype="int32"),
-                "sample_sum": pd.Series(ss, dtype="int64"),
-                "sample_weighted": pd.Series(sw, dtype="int64"),
-                "peak": pd.Series(pk, dtype="int32"),
-            }
-        )
+def _decode_wav_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    rate, samples = decode_wav_pcm16(bytes(payload))
+    peak = max(abs(s) for s in samples)
+    yield doc_id, len(samples), rate, sum(samples), _weighted_sum(samples), peak
 
 
 _WAV_ORACLE = f"""
@@ -776,7 +656,7 @@ ORDER BY doc_id
 
 @register("multimodal_wav_decode", oracle=_WAV_ORACLE, tags=("llm", "multimodal"))
 def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first EXECUTED audio-decode path: deterministic RIFF/WAV
+    """The executed audio-decode path: deterministic RIFF/WAV
     mono-PCM-16 payloads (with a planted JUNK chunk so fixed-offset
     readers fail) decoded by the dependency-free chunk-walking parser
     `decode_wav_pcm16` in an Arrow batch stage. The oracle recomputes
@@ -785,11 +665,8 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_weighted/peak. Same two-map-stage scale shape as the BMP
     twin: payloads never shuffle."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_wav_batches, schema="doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
-        _decode_wav_batches, schema=_WAV_DECODE_SCHEMA
+    return _map_items(
+        _payloads(docs, synthesize_wav), _decode_wav_batches, _WAV_DECODE_SCHEMA
     ).orderBy("doc_id")
 
 
@@ -810,11 +687,9 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort."""
     docs = load_tables(spark, sf_dir)["documents"]
     records = attach_payload(docs)
-    return (
-        records.select("doc_id", "payload")
-        .mapInPandas(_detect_scene_cuts, schema=_SCENE_SCHEMA)
-        .orderBy("doc_id")
-    )
+    return _map_items(
+        records.select("doc_id", "payload"), _detect_scene_cuts, _SCENE_SCHEMA
+    ).orderBy("doc_id")
 
 
 # --------------------------------------- perceptual-hash image dedup (dHash)
@@ -823,12 +698,9 @@ _PHASH_GROUPS = 37  # distinct base images planted across the corpus
 _PHASH_BASE_MOD = 200  # base byte range [0,200) + shift [0,40) stays < 256
 _PHASH_SHIFTS = 40
 
-
-# the near-dup groups reuse the document dimension formula — ONE
-# definition (round-11 review: this was a byte-for-byte re-implementation
-# of _bmp_dims that could silently drift)
+# the near-dup groups reuse the document dimension formula, so the two
+# can never drift apart
 _phash_group_dims = _bmp_dims
-
 
 def synthesize_bmp_variant(doc_id: int) -> bytes:
     """Deterministic near-duplicate BMP: docs sharing `doc_id % 37` carry
@@ -869,30 +741,9 @@ def dhash_rgb(w: int, h: int, rgb: bytes) -> int:
     return code
 
 
-_synthesize_bmp_variant_batches = _synth_batches(synthesize_bmp_variant)
-
-
-def _decode_dhash_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ws, hs, ph, ps = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb = decode_bmp(bytes(payload))
-            ids.append(doc_id)
-            ws.append(w)
-            hs.append(h)
-            ph.append(dhash_rgb(w, h, rgb))
-            ps.append(sum(rgb))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "phash": pd.Series(ph, dtype="int64"),
-                "pixel_sum": pd.Series(ps, dtype="int64"),
-            }
-        )
+def _decode_dhash_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    w, h, rgb = decode_bmp(bytes(payload))
+    yield doc_id, w, h, dhash_rgb(w, h, rgb), sum(rgb)
 
 
 # The oracle recomputes luminance — hence the dHash — ARITHMETICALLY from
@@ -977,12 +828,10 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate cluster, which downstream keeps-one-per-cluster sampling
     (`dedup_provenance_best`) consumes directly."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_bmp_variant_batches, schema="doc_id long, payload binary"
-    )
-    hashed = payloads.mapInPandas(
+    hashed = _map_items(
+        _payloads(docs, synthesize_bmp_variant),
         _decode_dhash_batches,
-        schema="doc_id long, width int, height int, phash long, pixel_sum long",
+        "doc_id long, width int, height int, phash long, pixel_sum long",
     )
     return (
         hashed.groupBy("phash", "width", "height")
@@ -1018,30 +867,11 @@ def resize_nn(w: int, h: int, rgb: bytes, tw: int, th: int) -> bytes:
     return bytes(out)
 
 
-def _decode_thumbnail_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, ws, hs, ts, tws, dh = [], [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb = decode_bmp(bytes(payload))
-            thumb = resize_nn(w, h, rgb, _THUMB_W, _THUMB_H)
-            ids.append(doc_id)
-            ws.append(w)
-            hs.append(h)
-            ts.append(sum(thumb))
-            tws.append(sum((j + 1) * v for j, v in enumerate(thumb)))
-            dh.append(dhash_rgb(_THUMB_W, _THUMB_H, thumb))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-                "thumb_sum": pd.Series(ts, dtype="int64"),
-                "thumb_weighted": pd.Series(tws, dtype="int64"),
-                "thumb_dhash": pd.Series(dh, dtype="int64"),
-            }
-        )
+def _decode_thumbnail_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    w, h, rgb = decode_bmp(bytes(payload))
+    thumb = resize_nn(w, h, rgb, _THUMB_W, _THUMB_H)
+    dhash = dhash_rgb(_THUMB_W, _THUMB_H, thumb)
+    yield doc_id, w, h, sum(thumb), _weighted_sum(thumb), dhash
 
 
 # Replays decode + NN sampling arithmetically: thumb byte j maps to
@@ -1108,15 +938,11 @@ def multimodal_bmp_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only Arrow stages, payloads never shuffle, the presentation sort
     is the only exchange."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_bmp_batches, schema="doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
+    return _map_items(
+        _payloads(docs, synthesize_bmp),
         _decode_thumbnail_batches,
-        schema=(
-            "doc_id long, width int, height int, thumb_sum long, "
-            "thumb_weighted long, thumb_dhash long"
-        ),
+        "doc_id long, width int, height int, thumb_sum long, "
+        "thumb_weighted long, thumb_dhash long",
     ).orderBy("doc_id")
 
 
@@ -1147,35 +973,15 @@ def segment_energy(samples: list[int], frame: int = _SEG_FRAME):
     return n_frames, sum(active), n_segments, total
 
 
-def _decode_segment_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, nf, na, ns, es = [], [], [], [], []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            _rate, samples = decode_wav_pcm16(bytes(payload))
-            if len(samples) < _SEG_FRAME:
-                # oracle parity on sub-frame clips: range(0, (n//10)*10)
-                # yields no frame rows there, dropping the doc entirely —
-                # emitting an (n_frames=0) row here would row-mismatch.
-                # Unreachable on the synthesized fixture (n >= 20) but
-                # load-bearing for real WAVs (round-11 review).
-                continue
-            f, a, s, e = segment_energy(samples)
-            ids.append(doc_id)
-            nf.append(f)
-            na.append(a)
-            ns.append(s)
-            es.append(e)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "n_frames": pd.Series(nf, dtype="int32"),
-                "n_active": pd.Series(na, dtype="int32"),
-                "n_segments": pd.Series(ns, dtype="int32"),
-                "energy_sum": pd.Series(es, dtype="int64"),
-            }
-        )
+def _decode_segment_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    _rate, samples = decode_wav_pcm16(bytes(payload))
+    if len(samples) < _SEG_FRAME:
+        # oracle parity on sub-frame clips: range(0, (n//10)*10) yields no
+        # frame rows there, dropping the doc entirely — emitting an
+        # (n_frames=0) row here would row-mismatch. Unreachable on the
+        # synthesized fixture (n >= 20) but load-bearing for real WAVs.
+        return
+    yield (doc_id, *segment_energy(samples))
 
 
 # Frame energies are exact integer sums of squares (<= 10 * 2048^2), the
@@ -1239,19 +1045,14 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two chained map-only Arrow stages; per item the kernel
     is O(samples) with a 5-number output row, payloads never shuffle."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_wav_batches, schema="doc_id long, payload binary"
-    )
-    return payloads.mapInPandas(
+    return _map_items(
+        _payloads(docs, synthesize_wav),
         _decode_segment_batches,
-        schema=(
-            "doc_id long, n_frames int, n_active int, "
-            "n_segments int, energy_sum long"
-        ),
+        "doc_id long, n_frames int, n_active int, n_segments int, energy_sum long",
     ).orderBy("doc_id")
 
 
-# ------------------------- per-channel normalization constants (round 8)
+# --------------------------------------- per-channel normalization constants
 
 _CHANNEL_STATS_SCHEMA = (
     "doc_id long, n_px long, "
@@ -1259,24 +1060,13 @@ _CHANNEL_STATS_SCHEMA = (
 )
 
 
-def _decode_channel_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = {k: [] for k in (
-            "doc_id", "n_px", "r_sum", "r_sq", "g_sum", "g_sq", "b_sum", "b_sq"
-        )}
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, rgb = decode_bmp(bytes(payload))
-            rows["doc_id"].append(doc_id)
-            rows["n_px"].append(w * h)
-            for c, name in enumerate("rgb"):
-                ch = rgb[c::3]
-                rows[f"{name}_sum"].append(sum(ch))
-                rows[f"{name}_sq"].append(sum(v * v for v in ch))
-        yield pd.DataFrame(
-            {k: pd.Series(v, dtype="int64") for k, v in rows.items()}
-        )
+def _decode_channel_batches(doc_id: int, payload: bytes) -> Iterator[tuple]:
+    w, h, rgb = decode_bmp(bytes(payload))
+    sums = []
+    for c in range(3):  # r, g, b
+        ch = rgb[c::3]
+        sums += [sum(ch), sum(v * v for v in ch)]
+    yield (doc_id, w * h, *sums)
 
 
 _CHANNEL_STATS_ORACLE = f"""
@@ -1326,11 +1116,8 @@ def multimodal_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply, one sqrt, identical IEEE sequence both sides, rounded at
     the output only."""
     docs = load_tables(spark, sf_dir)["documents"]
-    payloads = docs.select("doc_id").mapInPandas(
-        _synthesize_bmp_batches, schema="doc_id long, payload binary"
-    )
-    sums = payloads.mapInPandas(
-        _decode_channel_batches, schema=_CHANNEL_STATS_SCHEMA
+    sums = _map_items(
+        _payloads(docs, synthesize_bmp), _decode_channel_batches, _CHANNEL_STATS_SCHEMA
     )
     grand = sums.agg(
         F.sum(F.col("n_px")).alias("n"),
@@ -1352,8 +1139,8 @@ def multimodal_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_channel
         # empty-input parity: the global agg emits one NULL-sums row even
         # over zero documents, which stack() expands to 3 NULL rows while
-        # the oracle's GROUP BY yields 0 rows — drop them (round-11
-        # review); n_values is never NULL on any non-empty input
+        # the oracle's GROUP BY yields 0 rows — drop them; n_values is
+        # never NULL on any non-empty input
         .filter(F.col("n_values").isNotNull())
         .select(
             "channel",

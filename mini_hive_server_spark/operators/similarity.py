@@ -246,9 +246,6 @@ ORDER BY d1, d2
 """
 
 
-_EMB_NEARDUP_PROBE_RADIUS = 2  # bucket-code Hamming radius probed per table
-
-
 @register("dedup_embedding_cosine", oracle=_EMB_NEARDUP_ORACLE, tags=("llm", "dedup", "similarity"))
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (threshold 0.45): semantic

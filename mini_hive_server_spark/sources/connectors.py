@@ -45,21 +45,14 @@ def _tmp_dir(sf_dir: str, leaf: str) -> str:
     # sharing a leaf name (e.g. /root/testdata/sf0.01 vs /tmp/alt/sf0.01)
     # must not share staged copies — the mtime freshness checks in the
     # staging helpers would otherwise silently serve the other dir's data
-    # (round-10 self-review)
-    import hashlib
-
-    ap = os.path.abspath(os.path.normpath(sf_dir))
-    sf_name = os.path.basename(ap)
-    tag = hashlib.md5(ap.encode()).hexdigest()[:8]
-    return os.path.join(_TMP_ROOT, f"{sf_name}-{tag}", leaf)
+    sf_name = os.path.basename(os.path.abspath(os.path.normpath(sf_dir)))
+    return os.path.join(_TMP_ROOT, f"{sf_name}-{_path_tag(sf_dir)}", leaf)
 
 
 def _path_tag(sf_dir: str) -> str:
-    """The _tmp_dir collision tag for use in METASTORE names too: the
-    round-10 self-review hardened the staged-copy paths against two
-    fixture dirs sharing a leaf name, but the bucketed DATABASE name had
-    kept basename-only keying (round-11 review) — same invariant, same
-    tag."""
+    """Short hash of the full fixture path: the `_tmp_dir` collision tag,
+    also used in metastore names (the bucketed database), so two fixture
+    dirs sharing a leaf name never share a staged copy or a database."""
     import hashlib
 
     ap = os.path.abspath(os.path.normpath(sf_dir))

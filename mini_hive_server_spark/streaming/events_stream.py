@@ -1004,8 +1004,7 @@ def tws_available() -> bool:
     """transformWithStateInPandas' Python runner hard-requires protobuf
     (`from google.protobuf import descriptor` at worker init); this
     container ships no protobuf, so the operator is implemented and
-    shape-complete but cannot EXECUTE here — same honest gating as the
-    multimodal decode kernels (no pip install allowed)."""
+    shape-complete but cannot EXECUTE here (no pip install allowed)."""
     try:
         from google.protobuf import descriptor  # noqa: F401
 

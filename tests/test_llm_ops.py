@@ -9,7 +9,6 @@ from __future__ import annotations
 import pytest
 
 from mini_hive_server_spark import registry
-from mini_hive_server_spark.operators.multimodal import decode_audio, decode_image
 
 from .conftest import SF_SMOKE
 
@@ -77,21 +76,11 @@ def test_minhash_equals_exhaustive(spark):
     assert exact == lsh
 
 
-def test_multimodal_decode_stubs_gated():
-    """Compressed formats stay honestly gated (no codecs in the image);
-    the BMP/WAV containers now decode for real (tests below)."""
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"OggS")
-
-
 def test_bmp_decoder_roundtrip_and_traps():
     """decode_bmp must undo all three container normalizations the
     synthesizer deliberately plants — row padding, bottom-up row order,
     BGR channel order — recovering the exact closed-form RGB stream, for
-    every width mod 4 (each padding case) and via the decode_image
-    dispatch."""
+    every width mod 4 (each padding case)."""
     from mini_hive_server_spark.operators.multimodal import (
         _bmp_dims,
         decode_bmp,
@@ -104,8 +93,6 @@ def test_bmp_decoder_roundtrip_and_traps():
         assert (got_w, got_h) == (w, h)
         expect = bytes((doc_id * 31 + i * 7) % 251 for i in range(w * h * 3))
         assert rgb == expect, doc_id
-    out = decode_image(synthesize_bmp(7))
-    assert out["width"] == 7 % 5 + 3 and len(out["rgb"]) > 0
 
     with pytest.raises(ValueError):
         decode_bmp(b"BM" + b"\x00" * 10)  # truncated header
@@ -135,8 +122,6 @@ def test_wav_decoder_roundtrip_and_traps():
         assert got_rate == rate and len(samples) == n
         expect = [((doc_id * 13 + i * 5) % 4096) - 2048 for i in range(n)]
         assert samples == expect, doc_id
-    out = decode_audio(synthesize_wav(5))
-    assert out["sample_rate"] == _wav_params(5)[1]
 
     with pytest.raises(ValueError):
         decode_wav_pcm16(b"RIFF\x00\x00\x00\x00AIFF")  # not WAVE
@@ -146,6 +131,34 @@ def test_wav_decoder_roundtrip_and_traps():
         decode_wav_pcm16(bytes(wav))
     with pytest.raises(ValueError):
         decode_wav_pcm16(synthesize_wav(1)[:-3])  # truncated data chunk
+
+
+def test_map_items_zero_rows_keep_declared_schema(spark):
+    """`_map_items` over no output rows: an empty input, and a kernel that
+    drops every item of a non-empty batch (`_sample_frames` emits nothing
+    for payloads shorter than one 16-byte frame; every fixture document
+    is longer). Both collect 0 rows with the declared schema, and the
+    plan names the MapInPandas stage after the item function."""
+    from mini_hive_server_spark.operators.multimodal import (
+        _FRAME_SCHEMA,
+        _map_items,
+        _sample_frames,
+        attach_payload,
+    )
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    empty = attach_payload(docs.limit(0)).select("doc_id", "payload")
+    short = spark.createDataFrame(
+        [(1, b""), (2, b"x" * 15), (3, b"0123456789")],
+        "doc_id long, payload binary",
+    )
+    declared = spark.createDataFrame([], _FRAME_SCHEMA).schema
+    for df in (empty, short):
+        out = _map_items(df, _sample_frames, _FRAME_SCHEMA)
+        assert out.collect() == []
+        assert out.schema == declared
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas _sample_frames(" in plan, plan
 
 
 def test_multimodal_metadata_never_reads_payload(spark):

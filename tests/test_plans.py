@@ -681,6 +681,8 @@ def test_multimodal_executed_kernels_are_two_map_stages(spark):
     partition by (cluster key, pixel_sum), then by cluster key — both
     keyed on the small post-projection rows."""
     for name, max_hash_shuffles in (
+        ("multimodal_bmp_decode", 0),
+        ("multimodal_wav_decode", 0),
         ("multimodal_phash_dedup", 2),
         ("multimodal_bmp_thumbnail", 0),
         ("multimodal_audio_segments", 0),

@@ -138,8 +138,7 @@ def test_tws_registration_tracks_protobuf_presence():
 def test_transform_with_state_twin_matches_batch(spark, sf_dir):
     """Spark-4 transformWithStateInPandas twin of user_running_stats:
     runs when the environment provides protobuf (the API's Python-runner
-    dependency), otherwise skips with the documented gate — the same
-    policy as the multimodal decode stubs."""
+    dependency), otherwise skips with the documented gate."""
     import pytest
 
     from mini_hive_server_spark.streaming.events_stream import (
