@@ -13,6 +13,11 @@ had to sweep ~30 sites by hand. This module is the one-touch home; a
 future change (e.g. adding U+0085/NBSP or a Unicode-aware class) edits
 exactly these two strings.
 
+``STOPWORDS`` is the quality-signal stopword list as an SQL IN-list
+body, valid in both engines (``x IN (...)`` in Spark,
+``list_contains([...], x)`` in DuckDB); the Gopher rule features, the
+per-document quality signals and the quality-decile census all read it.
+
 ``WORDS_SPARK`` is a Spark SQL expression string (double-escaped: the
 Python value contains ``'[ \\\\t...]+'`` which the SQL parser unescapes
 before handing to the Java regex engine); ``WORDS_DUCK`` is the DuckDB
@@ -33,3 +38,5 @@ WS_CLASS_PY = "[ \t\n\x0B\f\r]+"
 
 WORDS_SPARK = f"split(lower(trim(text)), '{WS_CLASS_SPARK}')"
 WORDS_DUCK = f"regexp_split_to_array(lower(trim(text)), '{WS_CLASS_DUCK}')"
+
+STOPWORDS = "'the','a','of','and','to'"

@@ -25,83 +25,31 @@ from ..catalog import load_tables, parallelize_scan
 from ..persistence import tracked_persist
 from ..registry import register
 
+from ._scoring import (
+    _GOPHER_PASS_SQL,
+    _GOPHER_RULES_SQL,
+    _LR_SCORE_SQL,
+    _doc_words,
+    _gopher_ctes,
+    _gopher_feature_cols,
+    _gopher_pass,
+    _gopher_rules,
+    _lr_score,
+)
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS_SPARK  # noqa: E402
 
-_STOPLIST = "'the','a','of','and','to'"
-
 # ------------------------------------------------ Gopher-style rule filter
 
-# Thresholds adapted to the synthetic corpus (docs are 10-99 words from a
-# small shared vocabulary); the published rules use [50, 100k] words etc.
-_MIN_WORDS, _MAX_WORDS = 30, 1000
-_MIN_AWL, _MAX_AWL = 2.0, 12.0
-_MIN_STOPWORDS = 2
-_MAX_TOP_WORD_FRAC = 0.15
-
-def _gopher_feature_cols() -> "list[F.Column]":
-    """The four Gopher rule features (nw, awl, ns, top_frac) as aliased
-    Columns over a tokenized relation carrying array column `w` — ONE
-    spelling shared by all six rule/classifier queries (round-11 review:
-    six hand-copied blocks had already drifted, `0` vs `0L` fold
-    accumulators and `(acc,x)` vs `(a,x)` lambda names; any future
-    threshold/feature change must land once, not six times). The `0L`
-    accumulator is the keeper: a pathological >2^31-char document would
-    overflow the int spelling. Values are int-sum / int-count IEEE
-    divisions — bit-identical cross-engine."""
-    nw = F.size(F.col("w"))
-    return [
-        nw.alias("nw"),
-        (
-            F.expr(
-                "aggregate(transform(w, x -> length(x)), 0L, (acc, x) -> acc + x)"
-            )
-            * F.lit(1.0)
-            / nw
-        ).alias("awl"),
-        F.size(F.expr(f"filter(w, x -> x IN ({_STOPLIST}))")).alias("ns"),
-        (
-            F.expr(
-                "array_max(transform(array_distinct(w),"
-                " x -> size(filter(w, y -> y = x))))"
-            )
-            * F.lit(1.0)
-            / nw
-        ).alias("top_frac"),
-    ]
-
-
-# the oracle-side twin of _gopher_feature_cols, spliced into each
-# oracle's `m` CTE — same single-spelling contract
-_GOPHER_M_EXPRS = f"""len(w) AS nw,
-         list_sum(list_transform(w, x -> length(x))) * 1.0 / len(w) AS awl,
-         len(list_filter(w, x -> list_contains([{_STOPLIST}], x))) AS ns,
-         list_max(list_transform(list_distinct(w),
-                                 x -> len(list_filter(w, y -> y = x))))
-           * 1.0 / len(w) AS top_frac"""
-
-
 _GOPHER_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, source, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT source,
-         {_GOPHER_M_EXPRS}
-  FROM t
-)
+WITH {_gopher_ctes("source")}
 SELECT source,
        count(*) AS n_docs,
-       count(*) FILTER (WHERE nw BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-                          AND awl BETWEEN {_MIN_AWL} AND {_MAX_AWL}
-                          AND ns >= {_MIN_STOPWORDS}
-                          AND top_frac <= {_MAX_TOP_WORD_FRAC}) AS n_pass,
-       count(*) FILTER (WHERE nw NOT BETWEEN {_MIN_WORDS} AND {_MAX_WORDS})
-         AS n_fail_len,
-       count(*) FILTER (WHERE awl NOT BETWEEN {_MIN_AWL} AND {_MAX_AWL})
-         AS n_fail_wordlen,
-       count(*) FILTER (WHERE ns < {_MIN_STOPWORDS}) AS n_fail_stop,
-       count(*) FILTER (WHERE top_frac > {_MAX_TOP_WORD_FRAC}) AS n_fail_rep
+       count(*) FILTER (WHERE {_GOPHER_PASS_SQL}) AS n_pass,
+       count(*) FILTER (WHERE NOT ({_GOPHER_RULES_SQL['len']})) AS n_fail_len,
+       count(*) FILTER (WHERE NOT ({_GOPHER_RULES_SQL['wordlen']})) AS n_fail_wordlen,
+       count(*) FILTER (WHERE NOT ({_GOPHER_RULES_SQL['stop']})) AS n_fail_stop,
+       count(*) FILTER (WHERE NOT ({_GOPHER_RULES_SQL['rep']})) AS n_fail_rep
 FROM m
 GROUP BY source
 ORDER BY source
@@ -122,28 +70,16 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(distinct x words) per document, bounded by document size, never by
     corpus size. Fractions are int-sum / int-count IEEE divisions —
     bit-identical cross-engine, so threshold comparisons can't flip."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "source", "text")).select(
-        "source", F.expr(_WORDS_SPARK).alias("w")
-    )
-    nw = F.size(F.col("w"))
-    m = t.select(
-        "source",
-        *_gopher_feature_cols(),
-    )
-    ok_len = F.col("nw").between(_MIN_WORDS, _MAX_WORDS)
-    ok_awl = F.col("awl").between(_MIN_AWL, _MAX_AWL)
-    ok_stop = F.col("ns") >= _MIN_STOPWORDS
-    ok_rep = F.col("top_frac") <= _MAX_TOP_WORD_FRAC
+    m = _doc_words(spark, sf_dir, "source").select("source", *_gopher_feature_cols())
     return (
         m.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.count_if(ok_len & ok_awl & ok_stop & ok_rep).alias("n_pass"),
-            F.count_if(~ok_len).alias("n_fail_len"),
-            F.count_if(~ok_awl).alias("n_fail_wordlen"),
-            F.count_if(~ok_stop).alias("n_fail_stop"),
-            F.count_if(~ok_rep).alias("n_fail_rep"),
+            F.count_if(_gopher_pass()).alias("n_pass"),
+            *[
+                F.count_if(~ok).alias(f"n_fail_{name}")
+                for name, ok in _gopher_rules().items()
+            ],
         )
         .orderBy("source")
     )
@@ -417,15 +353,11 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------- SemDeDup within-cluster dedup
 
-_SEM_THRESHOLD = 0.45  # same near-dup cosine as dedup_embedding_cosine
-
-# Spark-side dot product — same left-fold as similarity.py's _DOT, which is
-# documented there to produce bit-identical doubles to DuckDB's
-# list_dot_product.
-# the canonical bit-identical dot-product fold lives in similarity.py;
-# import rather than copy so an adjustment there cannot silently leave
-# this module on old semantics (round-11 review)
+# the bit-identical dot-product fold and the near-dup cosine threshold of
+# dedup_embedding_cosine live in similarity.py; import rather than copy so
+# an adjustment there cannot leave this module on old semantics
 from .similarity import _DOT as _SEM_DOT  # noqa: E402
+from .similarity import _EMB_NEARDUP_THRESHOLD as _SEM_THRESHOLD  # noqa: E402
 
 _SEMDEDUP_ORACLE = f"""
 WITH e AS (
@@ -565,26 +497,10 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- model-based quality classifier
 
-# Fixed logistic-regression weights over the rule features — the GPT-3 /
-# fastText-style learned quality filter's plan shape with a deterministic
-# stand-in for trained coefficients (training itself is out of engine
-# scope; deployment is: broadcast coefficients, map-side score).
-_LR_W = {"bias": -1.0, "nw": 0.02, "awl": 0.15, "stop": 0.08, "rep": -6.0}
-
 _CLASSIFIER_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, source, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT source,
-         {_GOPHER_M_EXPRS}
-  FROM t
-),
+WITH {_gopher_ctes("source")},
 s AS (
-  SELECT source,
-         1.0 / (1.0 + exp(-({_LR_W['bias']} + {_LR_W['nw']} * nw
-                            + {_LR_W['awl']} * awl + {_LR_W['stop']} * ns
-                            + {_LR_W['rep']} * top_frac))) AS score
+  SELECT source, {_LR_SCORE_SQL} AS score
   FROM m
 )
 SELECT source,
@@ -613,23 +529,8 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle except the per-source census. The same shape serves any
     linear scorer at 100 TB; a fastText-style bag-of-ngrams model lifts
     to a broadcast weight-table join plus this identical sigmoid."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "source", "text")).select(
-        "source", F.expr(_WORDS_SPARK).alias("w")
-    )
-    nw = F.size(F.col("w"))
-    m = t.select(
-        "source",
-        *_gopher_feature_cols(),
-    )
-    logit = (
-        F.lit(_LR_W["bias"])
-        + F.lit(_LR_W["nw"]) * F.col("nw")
-        + F.lit(_LR_W["awl"]) * F.col("awl")
-        + F.lit(_LR_W["stop"]) * F.col("ns")
-        + F.lit(_LR_W["rep"]) * F.col("top_frac")
-    )
-    s = m.select("source", (F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))).alias("score"))
+    m = _doc_words(spark, sf_dir, "source").select("source", *_gopher_feature_cols())
+    s = m.select("source", _lr_score().alias("score"))
     return (
         s.groupBy("source")
         .agg(
@@ -646,34 +547,23 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ composite quality dashboard
 
-_REPORT_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, source, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT source,
-         {_GOPHER_M_EXPRS},
+_DUP_BG_FRAC_SQL = """,
          CASE WHEN len(w) >= 2 THEN
            (len(w) - 1
             - len(list_distinct(list_transform(generate_series(1, len(w) - 1),
                                                i -> array_to_string(w[i:i+1], ' ')))))
            * 1.0 / (len(w) - 1)
-         ELSE 0.0 END AS dup_bg_frac
-  FROM t
-),
+         ELSE 0.0 END AS dup_bg_frac"""
+
+_REPORT_ORACLE = f"""
+WITH {_gopher_ctes("source", extra=_DUP_BG_FRAC_SQL)},
 s AS (
-  SELECT source, nw, awl, ns, top_frac, dup_bg_frac,
-         1.0 / (1.0 + exp(-({_LR_W['bias']} + {_LR_W['nw']} * nw
-                            + {_LR_W['awl']} * awl + {_LR_W['stop']} * ns
-                            + {_LR_W['rep']} * top_frac))) AS score
+  SELECT source, nw, awl, ns, top_frac, dup_bg_frac, {_LR_SCORE_SQL} AS score
   FROM m
 )
 SELECT source,
        count(*) AS n_docs,
-       count(*) FILTER (WHERE nw BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-                          AND awl BETWEEN {_MIN_AWL} AND {_MAX_AWL}
-                          AND ns >= {_MIN_STOPWORDS}
-                          AND top_frac <= {_MAX_TOP_WORD_FRAC}) AS n_gopher_pass,
+       count(*) FILTER (WHERE {_GOPHER_PASS_SQL}) AS n_gopher_pass,
        count(*) FILTER (WHERE round(score, 6) > 0.5) AS n_classifier_keep,
        count(*) FILTER (WHERE dup_bg_frac > {_REP_FLAG_FRAC}) AS n_repetition_flagged,
        round(avg(score), 4) AS avg_quality_score
@@ -693,10 +583,7 @@ def text_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation layer: three screens that would naively be three jobs over
     100 TB collapse into one words materialization, one pass of array
     expressions, and one per-source aggregation."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "source", "text")).select(
-        "source", F.expr(_WORDS_SPARK).alias("w")
-    )
+    t = _doc_words(spark, sf_dir, "source")
     nw = F.size(F.col("w"))
     n_bg = nw - 1
     m = t.select(
@@ -721,25 +608,12 @@ def text_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("dup_bg_frac"),
     )
-    logit = (
-        F.lit(_LR_W["bias"])
-        + F.lit(_LR_W["nw"]) * F.col("nw")
-        + F.lit(_LR_W["awl"]) * F.col("awl")
-        + F.lit(_LR_W["stop"]) * F.col("ns")
-        + F.lit(_LR_W["rep"]) * F.col("top_frac")
-    )
-    s = m.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-logit)))
-    gopher_pass = (
-        F.col("nw").between(_MIN_WORDS, _MAX_WORDS)
-        & F.col("awl").between(_MIN_AWL, _MAX_AWL)
-        & (F.col("ns") >= _MIN_STOPWORDS)
-        & (F.col("top_frac") <= _MAX_TOP_WORD_FRAC)
-    )
+    s = m.withColumn("score", _lr_score())
     return (
         s.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.count_if(gopher_pass).alias("n_gopher_pass"),
+            F.count_if(_gopher_pass()).alias("n_gopher_pass"),
             F.count_if(F.round(F.col("score"), 6) > 0.5).alias("n_classifier_keep"),
             F.count_if(F.col("dup_bg_frac") > _REP_FLAG_FRAC).alias(
                 "n_repetition_flagged"
@@ -923,23 +797,10 @@ def text_bigram_lm_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- classifier calibration bins
 
 _CALIBRATION_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT doc_id,
-         {_GOPHER_M_EXPRS}
-  FROM t
-),
+WITH {_gopher_ctes("doc_id")},
 s AS (
-  SELECT round(1.0 / (1.0 + exp(-({_LR_W['bias']} + {_LR_W['nw']} * nw
-                            + {_LR_W['awl']} * awl + {_LR_W['stop']} * ns
-                            + {_LR_W['rep']} * top_frac))), 6) AS score,
-         CASE WHEN nw BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-               AND awl BETWEEN {_MIN_AWL} AND {_MAX_AWL}
-               AND ns >= {_MIN_STOPWORDS}
-               AND top_frac <= {_MAX_TOP_WORD_FRAC}
-              THEN 1 ELSE 0 END AS gopher_pass
+  SELECT round({_LR_SCORE_SQL}, 6) AS score,
+         CASE WHEN {_GOPHER_PASS_SQL} THEN 1 ELSE 0 END AS gopher_pass
   FROM m
 )
 SELECT CAST(least(floor(score * 10), 9) AS INT) AS bin,
@@ -967,34 +828,11 @@ def classifier_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ in the last ulp; after the shared rounding the floor(×10)
     boundary decision is made on the same value in both engines). One
     10-group partial agg — a single corpus scan end to end."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "text")).select(
-        F.expr(_WORDS_SPARK).alias("w")
+    m = _doc_words(spark, sf_dir).select(*_gopher_feature_cols())
+    s = m.select(
+        F.round(_lr_score(), 6).alias("score"),
+        _gopher_pass().cast("int").alias("gopher_pass"),
     )
-    m = t.select(*_gopher_feature_cols())
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(
-                -(
-                    F.lit(_LR_W["bias"])
-                    + F.lit(_LR_W["nw"]) * F.col("nw")
-                    + F.lit(_LR_W["awl"]) * F.col("awl")
-                    + F.lit(_LR_W["stop"]) * F.col("ns")
-                    + F.lit(_LR_W["rep"]) * F.col("top_frac")
-                )
-            )
-        ),
-        6,
-    )
-    gopher = (
-        F.col("nw").between(_MIN_WORDS, _MAX_WORDS)
-        & F.col("awl").between(_MIN_AWL, _MAX_AWL)
-        & (F.col("ns") >= _MIN_STOPWORDS)
-        & (F.col("top_frac") <= _MAX_TOP_WORD_FRAC)
-    ).cast("int")
-    s = m.select(score.alias("score"), gopher.alias("gopher_pass"))
     return (
         s.select(
             F.least(F.floor(F.col("score") * 10), F.lit(9)).cast("int").alias("bin"),
@@ -1082,24 +920,11 @@ def text_safety_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------ average precision (PR-AUC)
 
 _PR_AUC_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT doc_id,
-         {_GOPHER_M_EXPRS}
-  FROM t
-),
+WITH {_gopher_ctes("doc_id")},
 s AS (
   SELECT doc_id,
-         round(1.0 / (1.0 + exp(-({_LR_W['bias']} + {_LR_W['nw']} * nw
-                            + {_LR_W['awl']} * awl + {_LR_W['stop']} * ns
-                            + {_LR_W['rep']} * top_frac))), 6) AS score,
-         CASE WHEN nw BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-               AND awl BETWEEN {_MIN_AWL} AND {_MAX_AWL}
-               AND ns >= {_MIN_STOPWORDS}
-               AND top_frac <= {_MAX_TOP_WORD_FRAC}
-              THEN 1 ELSE 0 END AS y
+         round({_LR_SCORE_SQL}, 6) AS score,
+         CASE WHEN {_GOPHER_PASS_SQL} THEN 1 ELSE 0 END AS y
   FROM m
 ),
 ranked AS (
@@ -1141,35 +966,12 @@ def classifier_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine (pre-rounded at 6 before the final mean at 4)."""
     from .ranking import global_cumsum
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "text")).select(
-        "doc_id", F.expr(_WORDS_SPARK).alias("w")
-    )
-    m = t.select("doc_id", *_gopher_feature_cols())
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(
-                -(
-                    F.lit(_LR_W["bias"])
-                    + F.lit(_LR_W["nw"]) * F.col("nw")
-                    + F.lit(_LR_W["awl"]) * F.col("awl")
-                    + F.lit(_LR_W["stop"]) * F.col("ns")
-                    + F.lit(_LR_W["rep"]) * F.col("top_frac")
-                )
-            )
-        ),
-        6,
-    )
-    y = (
-        F.col("nw").between(_MIN_WORDS, _MAX_WORDS)
-        & F.col("awl").between(_MIN_AWL, _MAX_AWL)
-        & (F.col("ns") >= _MIN_STOPWORDS)
-        & (F.col("top_frac") <= _MAX_TOP_WORD_FRAC)
-    ).cast("bigint")
+    m = _doc_words(spark, sf_dir, "doc_id").select("doc_id", *_gopher_feature_cols())
     s = m.select(
-        "doc_id", score.alias("score"), y.alias("y"), F.lit(1).cast("bigint").alias("one")
+        "doc_id",
+        F.round(_lr_score(), 6).alias("score"),
+        _gopher_pass().cast("bigint").alias("y"),
+        F.lit(1).cast("bigint").alias("one"),
     )
     ranked = global_cumsum(
         s,
@@ -1508,23 +1310,10 @@ def source_dsir_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------- ROC-AUC via rank statistic
 
 _ROC_AUC_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT doc_id,
-         {_GOPHER_M_EXPRS}
-  FROM t
-),
+WITH {_gopher_ctes("doc_id")},
 s AS (
-  SELECT round(1.0 / (1.0 + exp(-({_LR_W['bias']} + {_LR_W['nw']} * nw
-                            + {_LR_W['awl']} * awl + {_LR_W['stop']} * ns
-                            + {_LR_W['rep']} * top_frac))), 6) AS score,
-         CASE WHEN nw BETWEEN {_MIN_WORDS} AND {_MAX_WORDS}
-               AND awl BETWEEN {_MIN_AWL} AND {_MAX_AWL}
-               AND ns >= {_MIN_STOPWORDS}
-               AND top_frac <= {_MAX_TOP_WORD_FRAC}
-              THEN 1 ELSE 0 END AS y
+  SELECT round({_LR_SCORE_SQL}, 6) AS score,
+         CASE WHEN {_GOPHER_PASS_SQL} THEN 1 ELSE 0 END AS y
   FROM m
 ),
 g AS (
@@ -1575,38 +1364,12 @@ def classifier_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ranking.global_cumsum` — no single-partition window anywhere."""
     from .ranking import global_cumsum
 
-    docs = load_tables(spark, sf_dir)["documents"]
-    t = parallelize_scan(docs.select("doc_id", "text")).select(
-        "doc_id", F.expr(_WORDS_SPARK).alias("w")
-    )
-    m = t.select(*_gopher_feature_cols())
-    nw, awl, ns, top_frac = (
-        F.col("nw"), F.col("awl"), F.col("ns"), F.col("top_frac")
-    )
-    score = F.round(
-        F.lit(1.0)
-        / (
-            F.lit(1.0)
-            + F.exp(
-                -(
-                    F.lit(_LR_W["bias"])
-                    + F.lit(_LR_W["nw"]) * nw
-                    + F.lit(_LR_W["awl"]) * awl
-                    + F.lit(_LR_W["stop"]) * ns
-                    + F.lit(_LR_W["rep"]) * top_frac
-                )
-            )
-        ),
-        6,
-    )
-    y = (
-        nw.between(_MIN_WORDS, _MAX_WORDS)
-        & awl.between(_MIN_AWL, _MAX_AWL)
-        & (ns >= _MIN_STOPWORDS)
-        & (top_frac <= _MAX_TOP_WORD_FRAC)
-    ).cast("bigint")
+    m = _doc_words(spark, sf_dir, "doc_id").select(*_gopher_feature_cols())
     g = (
-        m.select(score.alias("score"), y.alias("y"))
+        m.select(
+            F.round(_lr_score(), 6).alias("score"),
+            _gopher_pass().cast("bigint").alias("y"),
+        )
         .groupBy("score")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -324,6 +324,33 @@ def _minhash_bands_k(sha: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
 
 
 
+def _lsh_verified_pairs(docs: DataFrame, sha: DataFrame, bands: DataFrame) -> DataFrame:
+    """The LSH tail every banded tier shares: candidate pairs are docs that
+    collide in any (band, bh) bucket, each pair once (`d1 < d2`), and
+    `_exact_jaccard_pairs` verifies them against `sha`.
+
+    `bands` is persisted first: the bucket self-join is a diamond over it,
+    and without a cache boundary BOTH join branches re-run the whole
+    signature and banding pipeline (measured at sf0.1 for the 64-perm
+    tier: signature+banding ≈ 0.44s per branch, the bucket-join stage
+    1.31s → 0.45s once persisted). A few small rows per doc — cheap to
+    cache at any scale relative to recomputing the signature pass twice."""
+    bands = tracked_persist(bands)
+    x = bands.alias("x")
+    y = bands.alias("y")
+    candidates = (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bh") == F.col("y.bh"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
+        .distinct()
+    )
+    return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
+
+
 @register("dedup_minhash_lsh", oracle=_NGRAM_JACCARD_ORACLE, tags=("llm", "dedup", "headline"))
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup detection, verified: shingle → 64 xxhash64
@@ -341,27 +368,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the verification join — without it Spark recomputes the
     # tokenize+shingle work once per branch of the diamond
     sha = tracked_persist(shingle_arrays(docs))
-    bands = minhash_bands(sha)
-    # persist the band relation: the candidate self-join is a diamond over
-    # `bands`, and without a cache boundary BOTH join branches re-run the
-    # whole explode→64-rehash-min-agg→banding pipeline (measured at sf0.1:
-    # signature+banding ≈ 0.44s per branch, the bucket-join stage 1.31s →
-    # 0.45s once persisted). 16 small rows per doc — cheap to cache at any
-    # scale relative to recomputing the signature pass twice.
-    bands = tracked_persist(bands)
-    x = bands.alias("x")
-    y = bands.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
+    return _lsh_verified_pairs(docs, sha, minhash_bands(sha))
 
 
 # ----------------------------------------------------------------- SimHash
@@ -750,20 +757,7 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     prescription over a corpus's measured shingles-per-doc strata."""
     docs = load_tables(spark, sf_dir)["documents"]
     sha = tracked_persist(shingle_arrays(docs))
-    bands = tracked_persist(oph_bands(sha))
-    x = bands.alias("x")
-    y = bands.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
+    return _lsh_verified_pairs(docs, sha, oph_bands(sha))
 
 
 _DF_CAP = 4  # max docs a shingle may appear in before it is cut
@@ -859,20 +853,7 @@ def _df_capped_pairs(docs: DataFrame) -> DataFrame:
     sha = tracked_persist(
         capped.groupBy("doc_id").agg(F.collect_list("sh").alias("sh_arr"))
     )
-    bands = tracked_persist(minhash_bands(sha))
-    x = bands.alias("x")
-    y = bands.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
+    return _lsh_verified_pairs(docs, sha, minhash_bands(sha))
 
 
 # ---------------------------------------- planted-boilerplate operating point
@@ -1010,20 +991,8 @@ def dedup_minhash_k256(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature row per doc."""
     docs = load_tables(spark, sf_dir)["documents"]
     sha = tracked_persist(shingle_arrays(docs))
-    bands = tracked_persist(_minhash_bands_k(sha, _K256_PERM, _K256_BANDS))
-    x = bands.alias("x")
-    y = bands.alias("y")
-    candidates = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bh") == F.col("y.bh"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
-        .distinct()
-    )
-    return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
+    bands = _minhash_bands_k(sha, _K256_PERM, _K256_BANDS)
+    return _lsh_verified_pairs(docs, sha, bands)
 
 
 # ----------------------------- signature-tier selection (measured surface)

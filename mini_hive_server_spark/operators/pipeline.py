@@ -19,6 +19,13 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables, parallelize_scan
 from ..registry import register
 
+from ._scoring import (
+    _GOPHER_PASS_SQL,
+    _doc_words,
+    _gopher_ctes,
+    _gopher_feature_cols,
+    _gopher_pass,
+)
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS_SPARK  # noqa: E402
 
@@ -499,25 +506,9 @@ def corpus_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RECIPE_PACK_BUDGET = 512
 
 _RECIPE_FUNNEL_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, text, {_WORDS_DUCK} AS w
-  FROM documents
-),
-m AS (
-  SELECT doc_id, text, len(w) AS nw,
-         list_sum(list_transform(w, x -> length(x))) * 1.0 / len(w) AS awl,
-         len(list_filter(w, x -> list_contains(['the','a','of','and','to'], x)))
-           AS ns,
-         list_max(list_transform(list_distinct(w),
-                                 x -> len(list_filter(w, y -> y = x))))
-           * 1.0 / len(w) AS top_frac,
-         w
-  FROM t
-),
+WITH {_gopher_ctes("doc_id", "text", extra=", w")},
 quality AS (
-  SELECT doc_id, text, nw, w FROM m
-  WHERE nw BETWEEN 30 AND 1000 AND awl BETWEEN 2.0 AND 12.0
-    AND ns >= 2 AND top_frac <= 0.15
+  SELECT doc_id, text, nw, w FROM m WHERE {_GOPHER_PASS_SQL}
 ),
 survivors AS (
   SELECT min(doc_id) AS doc_id
@@ -569,50 +560,19 @@ def corpus_recipe_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     every data recipe publishes (and the first thing reviewed when a
     filter change moves downstream eval).
 
-    Composes the SAME stage definitions the standalone queries register
-    (`text_gopher_quality`, `dedup_exact`, `decontaminate_ngram`,
-    `seq_packing_bins`), proving the operators stack into a pipeline
-    without semantic drift. Plan: word/feature metrics are computed once
-    map-side; the quality gate is a filter; dedup adds ONE fingerprint
-    shuffle; the contamination probe is a broadcast semi-join of the
-    benchmark-sized gram set; the funnel rows are 1-row aggregates
-    unioned. The corpus text column is scanned once for metrics and once
-    for grams — never shuffled."""
-    docs = parallelize_scan(
-        load_tables(spark, sf_dir)["documents"].select("doc_id", "text")
+    The quality stage IS `text_gopher_quality`'s rule gate (the shared
+    `_scoring` features and predicates, on both engines); the dedup,
+    decontamination and packing stages follow `dedup_exact`,
+    `decontaminate_ngram` and `seq_packing_bins`. Plan: word/feature
+    metrics are computed once map-side; the quality gate is a filter;
+    dedup adds ONE fingerprint shuffle; the contamination probe is a
+    broadcast semi-join of the benchmark-sized gram set; the funnel rows
+    are 1-row aggregates unioned. The corpus text column is scanned once
+    for metrics and once for grams — never shuffled."""
+    m = _doc_words(spark, sf_dir, "doc_id", "text").select(
+        "doc_id", "text", "w", *_gopher_feature_cols()
     )
-    m = docs.select(
-        "doc_id",
-        "text",
-        F.expr(_WORDS_SPARK).alias("w"),
-    ).select(
-        "doc_id",
-        "text",
-        "w",
-        F.size("w").alias("nw"),
-        (
-            F.expr("aggregate(transform(w, x -> length(x)), 0L, (a, x) -> a + x)")
-            * F.lit(1.0)
-            / F.size("w")
-        ).alias("awl"),
-        F.expr(
-            "size(filter(w, x -> x IN ('the','a','of','and','to')))"
-        ).alias("ns"),
-        (
-            F.expr(
-                "array_max(transform(array_distinct(w),"
-                " x -> size(filter(w, y -> y = x))))"
-            )
-            * F.lit(1.0)
-            / F.size("w")
-        ).alias("top_frac"),
-    )
-    quality = m.filter(
-        F.col("nw").between(30, 1000)
-        & F.col("awl").between(2.0, 12.0)
-        & (F.col("ns") >= 2)
-        & (F.col("top_frac") <= 0.15)
-    ).select("doc_id", "text", "nw", "w")
+    quality = m.filter(_gopher_pass()).select("doc_id", "text", "nw", "w")
     survivors = (
         quality.groupBy(F.md5(F.lower(F.trim(F.col("text")))).alias("fp"))
         .agg(F.min("doc_id").alias("doc_id"))

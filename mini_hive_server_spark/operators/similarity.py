@@ -20,20 +20,32 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables, parallelize_scan, session_memo
 from ..persistence import tracked_persist
 from ..registry import register
-from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
-from ._text import WORDS_SPARK as _WORDS_SPARK  # noqa: E402
+from ._scoring import _BM25_CTES, bm25_scores
 
 _DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
 def _dot(a: str, b: str):
     return F.expr(_DOT.format(a=a, b=b))
+
+
+def _top5(pairs: DataFrame) -> DataFrame:
+    """The exact top-5 cut every (qid, nid, cosine) tier ends in: each
+    query's 5 best neighbours by cosine, ties broken by nid, with their
+    1-based rank, ordered by (qid, rank)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select("qid", "nid", "cosine", "rank")
+        .orderBy("qid", "rank")
+    )
 
 
 _COSINE_TOPK_ORACLE = """
@@ -88,15 +100,7 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "cosine", "rank")
-        .orderBy("qid", "rank")
-    )
+    return _top5(pairs)
 
 
 _N_TABLES = 8  # independent hash tables
@@ -218,15 +222,7 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (norms here are per-candidate; the candidate set is already pruned to
     # bucket collisions, so the extra dots are not the dominant cost)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "cosine", "rank")
-        .orderBy("qid", "rank")
-    )
+    return _top5(pairs)
 
 
 _EMB_NEARDUP_THRESHOLD = 0.45
@@ -433,15 +429,7 @@ def _ivf_ann(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
             6,
         ).alias("cosine"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "cosine", "rank")
-        .orderBy("qid", "rank")
-    )
+    return _top5(pairs)
 
 
 _NORM_STATS_ORACLE = """
@@ -602,21 +590,13 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
     )
-    from pyspark.sql import Window
-
     corpus = emb.join(docs_keep, emb["vec_id"] == docs_keep["doc_id"], "left_semi")
     pairs = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.col("vec_id").alias("nid"),
         F.round(_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "cosine", "rank")
-        .orderBy("qid", "rank")
-    )
+    return _top5(pairs)
 
 
 # ----------------------------------- product quantization + ADC retrieval
@@ -691,8 +671,6 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant, see _pq_codebook), memoized per (session, sf_dir) in the
     session's memo like the catalog handles."""
     emb, q, scored = _pq_scored(spark, sf_dir)
-    from pyspark.sql import Window
-
     wc = Window.partitionBy("qid").orderBy(F.col("adc_score").desc(), F.col("nid"))
     cand = (
         scored.withColumn("crank", F.row_number().over(wc))
@@ -711,13 +689,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(_dot("qvn", "nvn"), 6).alias("cosine"),
         )
     )
-    wr = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", "cosine", "rank")
-        .orderBy("qid", "rank")
-    )
+    return _top5(exact)
 
 
 def _pq_scored(spark: SparkSession, sf_dir: str):
@@ -931,8 +903,6 @@ def embedding_mrl_truncation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s"),
     ).select("qid", "nid", "s.d", "s.cosine")
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid", "d").orderBy(F.col("cosine").desc(), F.col("nid"))
     tops = (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1096,8 +1066,6 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             cos.alias("cosine"),
         )
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")
     return (
         pairs.withColumn("rn", F.row_number().over(w))
@@ -1189,8 +1157,6 @@ def embedding_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def assign(centroids: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
         d = v.crossJoin(F.broadcast(centroids)).withColumn("sq", F.expr(sq_expr))
         w = Window.partitionBy("vec_id").orderBy("sq", "cid")
         return (
@@ -1232,40 +1198,11 @@ _RRF_DEPTH = 20  # per-ranker candidate depth
 _RRF_TOPN = 10
 
 _RRF_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w
-  FROM documents
-),
-m AS (
-  SELECT doc_id, len(w) AS dl,
-         len(list_filter(w, x -> x = 'spark')) AS tf0,
-         len(list_filter(w, x -> x = 'join')) AS tf1,
-         len(list_filter(w, x -> x = 'window')) AS tf2
-  FROM t
-),
-c AS (
-  SELECT count(*) AS n, avg(dl) AS avgdl,
-         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-  FROM m
-),
-lex_scored AS (
-  SELECT doc_id,
-         round(
-           ln(1 + (n - df0 + 0.5) / (df0 + 0.5)) * tf0 * (1.2 + 1)
-             / (tf0 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         + ln(1 + (n - df1 + 0.5) / (df1 + 0.5)) * tf1 * (1.2 + 1)
-             / (tf1 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
-         + ln(1 + (n - df2 + 0.5) / (df2 + 0.5)) * tf2 * (1.2 + 1)
-             / (tf2 + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl)),
-         4) AS bm25
-  FROM m, c
-),
+WITH {_BM25_CTES},
 lex AS (
   SELECT doc_id,
          row_number() OVER (ORDER BY bm25 DESC, doc_id) AS lex_rank
-  FROM lex_scored
+  FROM scored
   ORDER BY bm25 DESC, doc_id LIMIT 20
 ),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1318,46 +1255,12 @@ def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     the legs scale independently (BM25 via its doc-frequency joins, the
     dense leg via any ANN tier in this module) and the fusion cost is
     fixed at the candidate depths."""
-    from pyspark.sql import Window
-
-    from .text_analysis import _BM25_B, _BM25_K1, _BM25_TERMS
-
-    docs = parallelize_scan(
-        load_tables(spark, sf_dir)["documents"].select("doc_id", "text"),
-        "doc_id",
-    )
-    w_arr = F.expr(_WORDS_SPARK)
-    m = docs.select(
-        "doc_id",
-        F.size(w_arr).alias("dl"),
-        *[
-            F.size(F.expr(f"filter({_WORDS_SPARK}, x -> x = '{t}')")).alias(f"tf{i}")
-            for i, t in enumerate(_BM25_TERMS)
-        ],
-    )
-    c = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-
-    def leg_score(i: int):
-        idf = F.log(
-            1 + (F.col("n") - F.col(f"df{i}") + 0.5) / (F.col(f"df{i}") + 0.5)
-        )
-        tf = F.col(f"tf{i}")
-        return idf * tf * (_BM25_K1 + 1) / (
-            tf + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
-        )
-
-    lex_scored = m.crossJoin(F.broadcast(c)).select(
-        "doc_id",
-        F.round(sum(leg_score(i) for i in range(len(_BM25_TERMS))), 4).alias(
-            "bm25"
+    lex_scored = bm25_scores(
+        parallelize_scan(
+            load_tables(spark, sf_dir)["documents"].select("doc_id", "text"),
+            "doc_id",
         ),
+        "doc_id",
     )
     w_lex = Window.orderBy(F.col("bm25").desc(), "doc_id")
     lex = (

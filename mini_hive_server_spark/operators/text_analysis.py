@@ -23,11 +23,8 @@ from ..catalog import load_tables, parallelize_scan
 from ..persistence import tracked_persist
 from ..registry import register
 
-# shared normalization: lowercase, trim, whitespace-split
-# shared quality-signal stopword list (one constant; round-11 review —
-# four hand-copied literals could drift the decile census away from the
-# per-doc quality signal it documents itself as reusing)
-_STOPWORDS = "'the','a','of','and','to'"
+from ._scoring import _BM25_CTES, _doc_words, bm25_scores
+from ._text import STOPWORDS as _STOPWORDS  # noqa: E402
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS_SPARK  # noqa: E402
 
@@ -86,14 +83,9 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-token (distinct) ratio — the length/punct/stopword heuristics used
     to filter low-quality documents before training. All higher-order array
     functions (no UDF)."""
-    docs = load_tables(spark, sf_dir)["documents"]
     # materialize the words array once — lambdas are CodegenFallback, so
-    # inlining the split into each metric re-runs the regex per metric;
-    # parallelize_scan spreads the interpreted lambdas across cores when
-    # the corpus arrives in fewer splits than the cluster has slots
-    t = parallelize_scan(docs.select("doc_id", "text")).select(
-        "doc_id", F.expr(_WORDS_SPARK).alias("w")
-    )
+    # inlining the split into each metric re-runs the regex per metric
+    t = _doc_words(spark, sf_dir, "doc_id")
     n_words = F.size(F.col("w"))
     return t.select(
         "doc_id",
@@ -455,44 +447,10 @@ def text_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------ BM25 retrieval
 
-_BM25_TERMS = ("spark", "join", "window")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 _BM25_TOPN = 10
 
 _BM25_ORACLE = f"""
-WITH t AS (
-  SELECT doc_id, source, {_WORDS_DUCK} AS w FROM documents
-),
-m AS (
-  SELECT doc_id, source, len(w) AS dl,
-         len(list_filter(w, x -> x = '{_BM25_TERMS[0]}')) AS tf0,
-         len(list_filter(w, x -> x = '{_BM25_TERMS[1]}')) AS tf1,
-         len(list_filter(w, x -> x = '{_BM25_TERMS[2]}')) AS tf2
-  FROM t
-),
-c AS (
-  SELECT count(*) AS n, avg(dl) AS avgdl,
-         sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-         sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-         sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-  FROM m
-),
-scored AS (
-  SELECT doc_id, source, dl,
-         round(
-           ln(1 + (n - df0 + 0.5) / (df0 + 0.5))
-             * tf0 * ({_BM25_K1} + 1)
-             / (tf0 + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
-         + ln(1 + (n - df1 + 0.5) / (df1 + 0.5))
-             * tf1 * ({_BM25_K1} + 1)
-             / (tf1 + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl))
-         + ln(1 + (n - df2 + 0.5) / (df2 + 0.5))
-             * tf2 * ({_BM25_K1} + 1)
-             / (tf2 + {_BM25_K1} * (1 - {_BM25_B} + {_BM25_B} * dl / avgdl)),
-         4) AS bm25
-  FROM m, c
-),
+WITH {_BM25_CTES},
 ranked AS (
   SELECT *, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rn FROM scored
 )
@@ -511,57 +469,12 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits beside the embedding tiers (`similarity_*`) in any corpus-search
     stack — hybrid retrieval is this query unioned with cosine top-k.
 
-    Plan: per-document term frequencies are map-side higher-order array
-    ops (no tokenizer UDF); the corpus constants (N, avgdl, per-term df)
-    are ONE partial-agg'd row crossed back as a broadcast, so the corpus
-    is scanned twice and shuffled never. Ranking uses the ROUNDED score
-    (tie-broken by doc_id): round(…,4) absorbs the last-ulp `ln`
-    divergence between engines (the TF-IDF precedent), and rank ties can
-    then only form between docs with identical rounded scores, which the
-    doc_id tiebreak orders identically."""
-    docs = load_tables(spark, sf_dir)["documents"]
-    tf_cols = [
-        F.expr(f"size(filter({_WORDS_SPARK}, x -> x = '{t}'))").alias(f"tf{i}")
-        for i, t in enumerate(_BM25_TERMS)
-    ]
-    m = docs.select(
-        "doc_id",
-        "source",
-        F.expr(f"size({_WORDS_SPARK})").alias("dl"),
-        *tf_cols,
-    )
-    c = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(_BM25_TERMS))
-        ],
-    )
-    score = None
-    for i in range(len(_BM25_TERMS)):
-        tf, df = F.col(f"tf{i}"), F.col(f"df{i}")
-        idf = F.log(
-            1
-            + (F.col("n") - df + F.lit(0.5)) / (df + F.lit(0.5))
-        )
-        part = (
-            idf
-            * tf
-            * F.lit(_BM25_K1 + 1)
-            / (
-                tf
-                + F.lit(_BM25_K1)
-                * (
-                    F.lit(1 - _BM25_B)
-                    + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl")
-                )
-            )
-        )
-        score = part if score is None else score + part
-    scored = m.crossJoin(F.broadcast(c)).select(
-        "doc_id", "source", "dl", F.round(score, 4).alias("bm25")
-    )
+    Plan: `_scoring.bm25_scores` over the raw scan — map-side term
+    frequencies and one broadcast row of corpus constants, no shuffle.
+    Ranking uses the ROUNDED score (tie-broken by doc_id): rank ties can
+    only form between docs with identical rounded scores, which the
+    doc_id tiebreak orders identically in both engines."""
+    scored = bm25_scores(load_tables(spark, sf_dir)["documents"], "doc_id", "source")
     # total-ordered sort-limit compiles to TakeOrderedAndProject: each
     # partition keeps its local top-N and only N rows reach the driver-side
     # merge — no single-partition global window at any scale.

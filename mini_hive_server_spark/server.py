@@ -38,7 +38,6 @@ def get_thrift_spark(
     warehouse_dir: str = "/tmp/mhs_thrift_warehouse",
     metastore_dir: str = "/tmp/mhs_thrift_metastore",
     shuffle_partitions: int = 8,
-    local_threads: int | None = None,
 ) -> SparkSession:
     """Hive-enabled session pre-configured to host the Thrift endpoint.
 
@@ -68,14 +67,8 @@ def get_thrift_spark(
             "Boot the server in a fresh process (see serve_mini_hive / "
             "tests/test_thrift_server.py)."
         )
-    # local_threads (executor parallelism) is a separate knob from
-    # shuffle_partitions (reduce-side width) — one parameter driving both
-    # meant the shuffle count couldn't be raised without oversubscribing
-    # cores; it defaults to the old coupled behavior for compatibility
-    if local_threads is None:
-        local_threads = shuffle_partitions
     return (
-        SparkSession.builder.master(f"local[{local_threads}]")
+        SparkSession.builder.master(f"local[{shuffle_partitions}]")
         .appName("mini-hive-server-spark-thrift")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")

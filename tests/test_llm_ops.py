@@ -1027,17 +1027,18 @@ def test_roc_auc_matches_bruteforce_pair_count(spark):
     # per-score histogram the AUC query itself aggregates — so instead
     # collect scores straight from the shared expressions.
     from mini_hive_server_spark.catalog import load_tables, parallelize_scan
-    from mini_hive_server_spark.operators import curation as cu
+    from mini_hive_server_spark.operators import _scoring as cu
+    from mini_hive_server_spark.operators._text import STOPWORDS, WORDS_SPARK
 
     docs = load_tables(spark, SF_SMOKE)["documents"]
     t = parallelize_scan(docs.select("doc_id", "text")).select(
-        "doc_id", F.expr(cu._WORDS_SPARK).alias("w")
+        "doc_id", F.expr(WORDS_SPARK).alias("w")
     )
     nw = F.size(F.col("w"))
     awl = F.expr(
         "aggregate(transform(w, x -> length(x)), 0L, (a, x) -> a + x)"
     ) * F.lit(1.0) / nw
-    ns = F.expr(f"size(filter(w, x -> x IN ({cu._STOPLIST})))")
+    ns = F.expr(f"size(filter(w, x -> x IN ({STOPWORDS})))")
     top_frac = F.expr(
         "array_max(transform(array_distinct(w),"
         " x -> size(filter(w, y -> y = x))))"
@@ -1075,6 +1076,35 @@ def test_roc_auc_matches_bruteforce_pair_count(spark):
     assert abs(row["roc_auc"] - brute) < 1e-6, (row["roc_auc"], brute)
     assert row["roc_auc"] > 0.9
     assert abs(row["gini_index"] - (2 * row["roc_auc"] - 1)) < 2e-6
+
+
+def test_stacked_quality_and_retrieval_queries_agree_with_standalone(spark):
+    """Queries that stack a scoring rule must report what the standalone
+    query reports: the quality dashboard's Gopher / classifier columns,
+    the recipe funnel's first two stages, and the hybrid retriever's
+    lexical ranks against `text_bm25_topk`."""
+    gopher = {r.source: r for r in QS["text_gopher_quality"](spark, SF_SMOKE).collect()}
+    clf = {r.source: r for r in QS["text_quality_classifier"](spark, SF_SMOKE).collect()}
+    report = QS["text_quality_report"](spark, SF_SMOKE).collect()
+    assert {r.source for r in report} == set(gopher) == set(clf)
+    for r in report:
+        assert r.n_gopher_pass == gopher[r.source].n_pass, r
+        assert r.n_classifier_keep == clf[r.source].n_keep, r
+        assert r.avg_quality_score == clf[r.source].avg_score, r
+
+    funnel = {r.stage: r for r in QS["corpus_recipe_funnel"](spark, SF_SMOKE).collect()}
+    assert funnel["raw"].n_docs == sum(g.n_docs for g in gopher.values())
+    assert funnel["quality_pass"].n_docs == sum(g.n_pass for g in gopher.values())
+
+    bm25 = [r.doc_id for r in QS["text_bm25_topk"](spark, SF_SMOKE).collect()]
+    lexical = [
+        r
+        for r in QS["retrieval_rrf_hybrid"](spark, SF_SMOKE).collect()
+        if 1 <= r.lex_rank <= len(bm25)
+    ]
+    assert lexical, "no fused row carries a top-10 lexical rank"
+    for r in lexical:
+        assert r.doc_id == bm25[r.lex_rank - 1], (r, bm25)
 
 
 def test_signature_tier_selector_surface(spark):
