@@ -91,7 +91,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         n_words.alias("n_words"),
         F.round(
-            F.expr("aggregate(transform(w, x -> length(x)), 0, (acc, x) -> acc + x)")
+            F.expr("aggregate(transform(w, x -> length(x)), 0L, (acc, x) -> acc + x)")
             * F.lit(1.0)
             / n_words,
             4,

@@ -13,11 +13,17 @@ import urllib.request
 
 import pytest
 
-from mini_hive_server_spark import registry
+from pyspark.storagelevel import StorageLevel
+
+from mini_hive_server_spark import http_server as http_mod
+from mini_hive_server_spark import persistence, registry
+from mini_hive_server_spark.catalog import session_memo
 from mini_hive_server_spark.http_server import (
     POST_ROUTES,
     ROUTES,
     QueryHTTPServer,
+    _jsonable,
+    collect_route_rows,
 )
 
 from .conftest import SF_ORACLE
@@ -207,8 +213,6 @@ def test_requests_are_served_concurrently(http_server, monkeypatch):
     until its bounded wait times out (500) before starting the second."""
     import threading
 
-    from mini_hive_server_spark import http_server as http_mod
-
     first_path, second_path = "/buyer/home", "/top-workers"
     first_started, second_done = threading.Event(), threading.Event()
 
@@ -238,31 +242,32 @@ def test_requests_are_served_concurrently(http_server, monkeypatch):
     assert first.get("reply") == (200, [{"request": 1}])
 
 
+def _canon_body(body) -> list[str]:
+    """A response body (row list or single document), order-insensitive."""
+    rows = body if isinstance(body, list) else [body]
+    return sorted(json.dumps(r, sort_keys=True) for r in rows)
+
+
 def test_concurrent_clients_get_sequential_bodies(http_server, spark):
     """4 client threads send every GET and POST route at once; every body
     equals what a sequential `collect_route_rows` returns for the route
     (order-insensitive, through the same JSON encoding)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from mini_hive_server_spark.http_server import collect_route_rows
     from mini_hive_server_spark.plans.reference_model import _TASK_DETAIL_OID
-
-    def canon(body) -> list[str]:
-        rows = body if isinstance(body, list) else [body]
-        return sorted(json.dumps(r, sort_keys=True) for r in rows)
 
     requests = [("GET", p, n) for p, n in ROUTES.items()]
     requests.append(("GET", f"/tasks/{_TASK_DETAIL_OID}", "ref_task_detail"))
     requests += [("POST", p, n) for p, n in POST_ROUTES.items()]
     expected = {
-        path: canon(json.loads(json.dumps(collect_route_rows(spark, SF_ORACLE, name))))
+        path: _canon_body(json.loads(json.dumps(collect_route_rows(spark, SF_ORACLE, name))))
         for _, path, name in requests
     }
 
     def send(request):
         method, path, _ = request
         status, body = (_get if method == "GET" else _post)(http_server, path)
-        return path, status, canon(body)
+        return path, status, _canon_body(body)
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         replies = list(pool.map(send, requests))
@@ -270,3 +275,180 @@ def test_concurrent_clients_get_sequential_bodies(http_server, spark):
     for path, status, body in replies:
         assert status == 200, path
         assert body == expected[path], path
+
+
+# every query the facade serves: the route table, the write folds and
+# the GET /tasks/:id detail document
+_FACADE_QUERIES = sorted(
+    {*ROUTES.values(), *POST_ROUTES.values(), http_mod._TASK_DETAIL_QUERY}
+)
+_MEMO_ROUTE = ROUTES["/admin/home"]
+
+
+def _count_builds(monkeypatch) -> list[str]:
+    """From now on, record the name of every registered query function
+    that `registry.queries()` hands out and that is called."""
+    calls: list[str] = []
+    queries = registry.queries
+
+    def counted(name, fn):
+        def build(spark, sf_dir):
+            calls.append(name)
+            return fn(spark, sf_dir)
+
+        return build
+
+    monkeypatch.setattr(
+        registry,
+        "queries",
+        lambda: {n: counted(n, fn) for n, fn in queries().items()},
+    )
+    return calls
+
+
+def _fresh_rows(spark, name: str) -> list[dict]:
+    """The query's rows from a build that bypasses the facade's memo."""
+    with persistence.scope(keep=False):
+        df = registry.queries()[name](spark, SF_ORACLE)
+        return [
+            {k: _jsonable(v) for k, v in r.asDict(recursive=True).items()}
+            for r in df.collect()
+        ]
+
+
+def test_warm_route_is_not_rebuilt_and_equals_a_fresh_build(
+    spark, monkeypatch
+):
+    collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    fresh = _fresh_rows(spark, _MEMO_ROUTE)
+    calls = _count_builds(monkeypatch)
+    warm = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    assert calls == []
+    assert _canon_body(warm) == _canon_body(fresh)
+
+
+def test_ansi_flip_rebuilds_route(spark, monkeypatch):
+    """ANSI mode is bound at analysis, so a memoized plan built under
+    one value must not serve the other."""
+    collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    calls = _count_builds(monkeypatch)
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        spark.conf.set(
+            "spark.sql.ansi.enabled", "false" if ansi == "true" else "true"
+        )
+        flipped = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+        assert calls == [_MEMO_ROUTE]
+        collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+        assert calls == [_MEMO_ROUTE], "the flipped conf's entry is warm"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    back = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    assert calls == [_MEMO_ROUTE], "the original conf's entry stays warm"
+    assert _canon_body(flipped) == _canon_body(back)
+
+
+def test_zone_flip_rebuilds_route_which_repins_utc(spark, monkeypatch):
+    """The session zone is bound at analysis too. A build re-pins UTC
+    (`load_tables`), so a request under another zone rebuilds, leaves
+    the session at UTC, and the next request is warm again."""
+    zone = "spark.sql.session.timeZone"
+    before = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    original = spark.conf.get(zone)
+    calls = _count_builds(monkeypatch)
+    try:
+        spark.conf.set(zone, "America/New_York")
+        flipped = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+        assert calls == [_MEMO_ROUTE]
+        assert spark.conf.get(zone) == "UTC"
+        collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+        assert calls == [_MEMO_ROUTE]
+    finally:
+        spark.conf.set(zone, original)
+    assert _canon_body(flipped) == _canon_body(before)
+
+
+def test_clear_cache_rebuilds_route_and_repersists_its_inputs(
+    spark, monkeypatch
+):
+    """After an external clearCache() drops the held reference copies,
+    the route is rebuilt from a fresh plan (which persists the copies
+    again) instead of serving a plan that re-synthesizes them."""
+    before = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    key = http_mod._route_key(spark, SF_ORACLE, _MEMO_ROUTE)
+    _, held = session_memo(spark, "routes")[key]
+    assert held, "the route reads synthesized reference collections"
+    calls = _count_builds(monkeypatch)
+    spark.catalog.clearCache()
+    assert all(c.storageLevel == StorageLevel.NONE for c in held)
+    after = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    assert calls == [_MEMO_ROUTE]
+    df, held = session_memo(spark, "routes")[key]
+    assert held and all(c.storageLevel != StorageLevel.NONE for c in held)
+    cached = df.select("*")._jdf.queryExecution().withCachedData()
+    leaves = cached.collectLeaves()
+    names = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+    assert "InMemoryRelation" in names and "Range" not in names, names
+    collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    assert calls == [_MEMO_ROUTE]
+    assert _canon_body(after) == _canon_body(before)
+
+
+def test_route_with_tracked_persist_is_built_per_request(spark, monkeypatch):
+    """A build that registers a tracked persist is never memoized: each
+    request builds it afresh and releases its blocks when it ends."""
+    from pyspark.sql import functions as F
+
+    name = "route_memo_persisting_probe"
+    persisted = []
+
+    def build(spark, sf_dir):
+        df = spark.range(7).withColumn("route_memo_sq", F.col("id") * F.col("id"))
+        persisted.append(persistence.tracked_persist(df))
+        return persisted[-1]
+
+    queries = registry.queries
+    monkeypatch.setattr(registry, "queries", lambda: {**queries(), name: build})
+    for n in (1, 2):
+        rows = collect_route_rows(spark, SF_ORACLE, name)
+        assert sorted(r["route_memo_sq"] for r in rows) == [i * i for i in range(7)]
+        assert len(persisted) == n
+        assert persisted[-1].storageLevel == StorageLevel.NONE
+    assert all(k[0] != name for k in session_memo(spark, "routes"))
+
+
+def test_memo_hit_runs_as_many_jobs_as_a_fresh_build(spark):
+    """Serving from the memo skips only the build: every request still
+    plans and runs all of its jobs (a re-collected QueryExecution would
+    replay its materialized AQE stages and run fewer)."""
+    sc = spark.sparkContext
+    memo = session_memo(spark, "routes")
+    for name in _FACADE_QUERIES:  # warm: memo filled, inputs held
+        collect_route_rows(spark, SF_ORACLE, name)
+    jobs, bodies = {}, {}
+    for arm in ("hit", "fresh"):
+        group = f"route-memo-{arm}"
+        sc.setJobGroup(group, group)
+        try:
+            for name in _FACADE_QUERIES:
+                if arm == "fresh":
+                    memo.pop(http_mod._route_key(spark, SF_ORACLE, name))
+                bodies[arm, name] = _canon_body(
+                    collect_route_rows(spark, SF_ORACLE, name)
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[arm] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["hit"] == jobs["fresh"] > 0, jobs
+    for name in _FACADE_QUERIES:
+        assert bodies["hit", name] == bodies["fresh", name], name
+
+
+def test_every_facade_query_builds_without_tracked_persist(spark):
+    """The memo's precondition, pinned by name: a facade query that
+    starts persisting would silently fall back to a build per request."""
+    assert len(_FACADE_QUERIES) == 23
+    for name in _FACADE_QUERIES:
+        with persistence.scope(keep=False):
+            registry.queries()[name](spark, SF_ORACLE)
+            assert not len(persistence._LIVE), name

@@ -1269,3 +1269,34 @@ def test_salted_attribution_is_targeted_not_blanket(spark):
     # the census: a count-per-key aggregate and its mean threshold
     assert plan.count("ResolvedHint") >= 2, plan  # hot-set broadcasts
     assert "avg(" in plan, plan  # the FACTOR x mean threshold
+
+
+def _expression_nodes(plan, node_name: str) -> list:
+    """Every expression named ``node_name`` in a logical plan's tree."""
+    found = []
+
+    def walk(seq, visit):
+        for i in range(seq.size()):
+            visit(seq.apply(i))
+
+    def walk_expr(e):
+        if e.nodeName() == node_name:
+            found.append(e)
+        walk(e.children(), walk_expr)
+
+    def walk_plan(p):
+        walk(p.expressions(), walk_expr)
+        walk(p.children(), walk_plan)
+
+    walk_plan(plan)
+    return found
+
+
+def test_text_quality_word_length_fold_is_bigint(spark):
+    """`text_quality_score` sums word lengths in a bigint accumulator,
+    as the Gopher features do: an int sum overflows on a document of
+    more than 2^31 characters."""
+    df = QS["text_quality_score"](spark, SF_SMOKE)
+    folds = _expression_nodes(df._jdf.queryExecution().analyzed(), "aggregate")
+    assert folds
+    assert [f.dataType().simpleString() for f in folds] == ["bigint"] * len(folds)
