@@ -8,6 +8,9 @@
   (`_lr_score` / `_LR_SCORE_SQL`).
 - Okapi BM25 against a fixed three-term query (`bm25_scores` /
   `_BM25_CTES`).
+- The stopword ratio and distinct (type-token) ratio of a words column,
+  rounded to 4 places (`stopword_ratio` / `_STOPWORD_RATIO_SQL`,
+  `distinct_ratio` / `_DISTINCT_RATIO_SQL`).
 
 `_doc_words` and `_gopher_ctes` are the shared "documents → words →
 features" prefix of the Gopher-family queries, Spark side and oracle side.
@@ -128,6 +131,27 @@ _GOPHER_RULES_SQL = {
 }
 _GOPHER_PASS_SQL = " AND ".join(_GOPHER_RULES_SQL.values())
 
+# ------------------------------------------------- text-quality ratios
+
+
+def stopword_ratio() -> Column:
+    """The share of the words in array column `w` that are stopwords,
+    rounded to 4 places."""
+    n_stop = F.size(F.expr(f"filter(w, x -> x IN ({STOPWORDS}))"))
+    return F.round(n_stop * F.lit(1.0) / F.size(F.col("w")), 4)
+
+
+def distinct_ratio() -> Column:
+    """The type-token ratio of array column `w` (distinct words over
+    words), rounded to 4 places."""
+    n_distinct = F.size(F.array_distinct(F.col("w")))
+    return F.round(n_distinct * F.lit(1.0) / F.size(F.col("w")), 4)
+
+
+_STOPWORD_RATIO_SQL = f"""round(len(list_filter(w, x -> list_contains([{STOPWORDS}], x)))
+             * 1.0 / len(w), 4)"""
+_DISTINCT_RATIO_SQL = "round(len(list_distinct(w)) * 1.0 / len(w), 4)"
+
 # ------------------------------------- model-based quality classifier
 
 # Fixed logistic-regression weights over the rule features — the GPT-3 /
@@ -191,23 +215,9 @@ def bm25_scores(docs: DataFrame, *keep: str) -> DataFrame:
     score = None
     for i in range(len(_BM25_TERMS)):
         tf, df = F.col(f"tf{i}"), F.col(f"df{i}")
-        idf = F.log(
-            1
-            + (F.col("n") - df + F.lit(0.5)) / (df + F.lit(0.5))
-        )
-        part = (
-            idf
-            * tf
-            * F.lit(_BM25_K1 + 1)
-            / (
-                tf
-                + F.lit(_BM25_K1)
-                * (
-                    F.lit(1 - _BM25_B)
-                    + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl")
-                )
-            )
-        )
+        idf = F.log(1 + (F.col("n") - df + F.lit(0.5)) / (df + F.lit(0.5)))
+        norm = F.lit(1 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl")
+        part = idf * tf * F.lit(_BM25_K1 + 1) / (tf + F.lit(_BM25_K1) * norm)
         score = part if score is None else score + part
     return m.crossJoin(F.broadcast(c)).select(
         *keep, "dl", F.round(score, 4).alias("bm25")

@@ -12,19 +12,19 @@ aggregates (rows = users, not events) by the time they shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..registry import register
+from .windows import SESSION_FLAGS_SQL, sessionized
 
 
 def _cents(col: "F.Column | str") -> "F.Column":
     """The exact-money fold: ``floor(x*100 + 0.5) -> BIGINT`` — one
     identical IEEE op sequence in both engines, applied BEFORE any
-    aggregation so partial sums re-associate exactly (the round-8
-    money-hardening discipline). Centralized (round-11 review) so the
-    next money-determinism fix lands once, not in four copies. NOTE:
+    aggregation so partial sums re-associate exactly. The one
+    definition every money fold in this module reads. NOTE:
     floor(x*100+0.5) is round-HALF-UP, not half-away-from-zero — fine
     for the always-positive money columns this file folds; a negative-
     amount column needs a sign-split first."""
@@ -35,9 +35,8 @@ def _cents(col: "F.Column | str") -> "F.Column":
 def _md5_bucket(col: "F.Column", n: "int | F.Column") -> "F.Column":
     """Engine-stable deterministic bucket in [0, n): the first 8 hex
     digits of md5 as an integer, mod n — the same split family as
-    text_hash_split, shared (round-11 review) so the A/B arms, CUPED,
-    OOF folds, and negative sampling provably use ONE expression
-    instead of four hand-rolled copies that could silently drift."""
+    text_hash_split; the A/B arms, CUPED, OOF folds and negative
+    sampling all read this one expression, so their splits agree."""
     m = F.lit(n) if isinstance(n, int) else n
     return F.pmod(
         F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long"), m
@@ -47,7 +46,7 @@ def _md5_bucket(col: "F.Column", n: "int | F.Column") -> "F.Column":
 def _arm_moments(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(a, b) per-arm moment relations for the click-vs-view A/B pair —
     n / rounded mean / rounded var per arm, arm A = click, arm B = view.
-    Shared by the t-test and the power analysis (round-11 review): the
+    Shared by the t-test and the power analysis: the
     power sizing must use EXACTLY the arm definition and rounding grid
     the t-test tests, or the sample-size answer quietly stops matching
     the test it is sizing."""
@@ -119,22 +118,40 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TRANSITIONS_ORACLE = """
-WITH seq AS (
+def transition_counts(events: DataFrame, src: str, dst: str) -> DataFrame:
+    """(`src`, `dst`, n) under the given column names: per ordered pair
+    of event types, how often one of a user's events is directly
+    followed by the other, in (ts, event_id) order — the transition
+    edges `events_type_transitions` normalizes and the PageRanks run
+    on. `TRANSITIONS_SQL` is the oracle twin."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = events.select(
+        "event_type", F.lag("event_type").over(w).alias("prev_type")
+    ).filter(F.col("prev_type").isNotNull())
+    return seq.groupBy(
+        F.col("prev_type").alias(src), F.col("event_type").alias(dst)
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+# the oracles' `transitions(src, dst, n)` CTE, the twin of transition_counts
+TRANSITIONS_SQL = """seq AS (
   SELECT user_id, event_type,
          lag(event_type) OVER (PARTITION BY user_id
                                ORDER BY CAST(ts AS TIMESTAMP), event_id)
            AS prev_type
   FROM events
 ),
-t AS (
-  SELECT prev_type, event_type AS next_type, count(*) AS n
+transitions AS (
+  SELECT prev_type AS src, event_type AS dst, count(*) AS n
   FROM seq WHERE prev_type IS NOT NULL
   GROUP BY 1, 2
-)
-SELECT prev_type, next_type, n,
-       round(n * 1.0 / sum(n) OVER (PARTITION BY prev_type), 4) AS p
-FROM t
+)"""
+
+_TRANSITIONS_ORACLE = f"""
+WITH {TRANSITIONS_SQL}
+SELECT src AS prev_type, dst AS next_type, n,
+       round(n * 1.0 / sum(n) OVER (PARTITION BY src), 4) AS p
+FROM transitions
 ORDER BY prev_type, next_type
 """
 
@@ -152,16 +169,8 @@ def events_type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles once, on the same user_id partitioning every other
     behavioral query uses (a production layout would bucket events by
     user_id and make it free)."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    ).filter(F.col("prev_type").isNotNull())
-    t = seq.groupBy("prev_type", F.col("event_type").alias("next_type")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    t = transition_counts(events, "prev_type", "next_type")
     wnorm = Window.partitionBy("prev_type")
     return t.select(
         "prev_type",
@@ -255,7 +264,7 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined as broadcasts. The s and c stage aggregates are
     tracked_persisted: each feeds BOTH its own census and the next
     stage's join (the final plan would otherwise embed s three times and
-    c twice — ~6 event-table scans for one action; round-11 review)."""
+    c twice — ~6 event-table scans for one action)."""
     from ..persistence import tracked_persist
 
     events = load_tables(spark, sf_dir)["events"]
@@ -303,14 +312,18 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ATTRIBUTION_ORACLE = """
-WITH clicks AS (
+def _attribution_oracle(ctes: str, source: str) -> str:
+    """The attribution join over the relation `source` (an events-shaped
+    table or CTE; `ctes` defines it, each CTE ending in a comma): the
+    DuckDB twin of `_top_attributed`."""
+    return f"""
+WITH {ctes}clicks AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS cts
-  FROM events WHERE event_type = 'click'
+  FROM {source} WHERE event_type = 'click'
 ),
 purchases AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS pts
-  FROM events WHERE event_type = 'purchase'
+  FROM {source} WHERE event_type = 'purchase'
 )
 SELECT c.user_id, count(*) AS n_attributed
 FROM clicks c
@@ -322,6 +335,30 @@ GROUP BY c.user_id
 ORDER BY n_attributed DESC, c.user_id
 LIMIT 20
 """
+
+
+_ATTRIBUTION_ORACLE = _attribution_oracle("", "events")
+
+
+def _top_attributed(
+    clicks: DataFrame, purchases: DataFrame, on: "F.Column"
+) -> DataFrame:
+    """The 20 users with the most attributed (click, purchase) pairs: a
+    purchase at `pts` is attributed to a click at `cts` of the same user
+    when it lands within the hour after it. `on` is the join's equality
+    condition; the time window is added here."""
+    return (
+        clicks.join(
+            purchases,
+            on
+            & (F.col("pts") >= F.col("cts"))
+            & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
+        )
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n_attributed"))
+        .orderBy(F.col("n_attributed").desc(), "user_id")
+        .limit(20)
+    )
 
 
 @register("events_click_attribution", oracle=_ATTRIBUTION_ORACLE, tags=("events", "join", "skew"))
@@ -351,17 +388,8 @@ def events_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("user_id").alias("p_user_id"), F.col("ts").alias("pts")
     )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("p_user_id") == F.col("user_id"))
-            & (F.col("pts") >= F.col("cts"))
-            & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_attributed"))
-        .orderBy(F.col("n_attributed").desc(), "user_id")
-        .limit(20)
+    return _top_attributed(
+        clicks, purchases, F.col("p_user_id") == F.col("user_id")
     )
 
 
@@ -369,7 +397,7 @@ _N_JOIN_SALT = 8
 
 # a key is "hot" when its probe-side row count exceeds FACTOR x the mean
 # rows-per-key; only hot keys are salted (and only their build rows
-# replicated). Measured motivation (SCALE.md round 13): blanket salting
+# replicated). Measured motivation (SCALE.md): blanket salting
 # replicates the ENTIRE build side N x and left 3.7x on the table vs
 # AQE's forced skew-split at the planted 30%-hot-key point — targeted
 # salting pays the replication only where the skew is. The census is
@@ -380,7 +408,7 @@ _HOT_KEY_CAP = 64
 # the salted-join twin must return the IDENTICAL result as the plain
 # attribution join — salting is a physical rewrite, not a semantic one
 # — so the oracle IS the attribution oracle, aliased rather than
-# duplicated so the two can never drift (round-11 review)
+# duplicated so the two can never drift
 _SALTED_JOIN_ORACLE = _ATTRIBUTION_ORACLE
 
 
@@ -398,7 +426,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the salt domain; everything else joins exactly as the plain
     query does, through the same single (user_id, salt) equi-join.
 
-    Cost model vs AQE skew-split, measured round 13 (SCALE.md four-arm
+    Cost model vs AQE skew-split, measured (SCALE.md four-arm
     experiment at the planted 30%-hot-key point): AQE's DEFAULT skew
     rules decline this exact shape — the join feeds a groupBy on the
     join key, so the split would break the aggregation's required
@@ -416,8 +444,8 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _salted_attribution(events: DataFrame) -> DataFrame:
     """The salted attribution join body, shared by the natural-corpus
-    query and the planted-hot-key operating point (round 13 factoring —
-    the `_df_capped_pairs` pattern), TARGETED form (round 13 rework):
+    query and the planted-hot-key operating point (the
+    `_df_capped_pairs` pattern), TARGETED form:
 
     1. heavy-hitter census on the probe side — one partial-agg'd
        groupBy(user_id).count vs `_HOT_KEY_FACTOR` x the mean, capped at
@@ -433,7 +461,7 @@ def _salted_attribution(events: DataFrame) -> DataFrame:
        N x the whole relation.
 
     The blanket salt-all first cut replicated the ENTIRE build side N x;
-    the round-13 four-arm measurement (SCALE.md) read it at 7.6 s vs
+    the four-arm measurement (SCALE.md) read it at 7.6 s vs
     AQE-forced-split 2.1 s at the planted 100k point — the unconditional
     replication was the gap, and this rewrite removes it while keeping
     the defense portable (no AQE, no conf surgery, works where the
@@ -474,7 +502,7 @@ def _salted_attribution(events: DataFrame) -> DataFrame:
     # top-CAP ordering) and the hot set feeds TWO broadcast flag-joins —
     # unpersisted, every consumer re-ran the corpus-wide groupBy as its
     # own sub-job (measured: census 3.7 s of repeated scans at the 100k
-    # experiment point vs ~1 s persisted; SCALE.md round 13)
+    # experiment point vs ~1 s persisted; SCALE.md)
     counts = tracked_persist(
         clicks_raw.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     )
@@ -533,19 +561,12 @@ def _salted_attribution(events: DataFrame) -> DataFrame:
             ).alias("p_salt"),
         )
     )
-    return (
-        clicks.join(
-            purchases,
-            (F.col("p_user_id") == F.col("user_id"))
-            & (F.col("p_salt") == F.col("salt"))
-            & (F.col("pbkt") == F.col("cbkt"))
-            & (F.col("pts") >= F.col("cts"))
-            & (F.col("pts") <= F.col("cts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_attributed"))
-        .orderBy(F.col("n_attributed").desc(), "user_id")
-        .limit(20)
+    return _top_attributed(
+        clicks,
+        purchases,
+        (F.col("p_user_id") == F.col("user_id"))
+        & (F.col("p_salt") == F.col("salt"))
+        & (F.col("pbkt") == F.col("cbkt")),
     )
 
 
@@ -577,29 +598,16 @@ def planted_skew_events(events: DataFrame) -> DataFrame:
     )
 
 
-_PLANTED_SALTED_ORACLE = f"""
-WITH planted AS (
+_PLANTED_SALTED_ORACLE = _attribution_oracle(
+    f"""planted AS (
   SELECT CASE WHEN user_id % {_HOT_USER_MOD} < {_HOT_USER_REM}
               THEN {_HOT_USER_ID} ELSE user_id END AS user_id,
-         event_type, CAST(ts AS TIMESTAMP) AS ts
+         event_type, ts
   FROM events
 ),
-clicks AS (
-  SELECT user_id, ts AS cts FROM planted WHERE event_type = 'click'
-),
-purchases AS (
-  SELECT user_id, ts AS pts FROM planted WHERE event_type = 'purchase'
+""",
+    "planted",
 )
-SELECT c.user_id, count(*) AS n_attributed
-FROM clicks c
-JOIN purchases p
-  ON p.user_id = c.user_id
- AND p.pts >= c.cts
- AND p.pts <= c.cts + INTERVAL 1 HOUR
-GROUP BY c.user_id
-ORDER BY n_attributed DESC, c.user_id
-LIMIT 20
-"""
 
 
 @register(
@@ -609,7 +617,7 @@ LIMIT 20
 )
 def join_salted_skew_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The salted join under a PLANTED hot key — the second operating
-    point of the skew defense (round 13, VERDICT r12 #7, the
+    point of the skew defense (the
     `dedup_lsh_df_capped_planted` pattern). `join_salted_skew` proves
     salting is result-invariant on the natural corpus, but the fixture's
     skew is mild (top user ≈ 4% of events — barely above uniform); this
@@ -684,8 +692,6 @@ def events_cep_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     state bounded by run length — and the streaming twin would be
     applyInPandasWithState carrying (current_type, run_len), the same
     state the batch islands encode positionally."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
     wo = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = events.select(
@@ -879,16 +885,8 @@ def events_engagement_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------- session top paths
 
-_PATHS_ORACLE = """
-WITH ordered AS (
-  SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
-         CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                OR epoch_us(CAST(ts AS TIMESTAMP))
-                   - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-),
+_PATHS_ORACLE = f"""
+WITH {SESSION_FLAGS_SQL},
 sessions AS (
   SELECT user_id, event_id, event_type, t,
          sum(new_session) OVER (PARTITION BY user_id ORDER BY t, event_id
@@ -932,13 +930,6 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every window partitions by user or session — no global ordering
     until the 10-row result."""
     events = load_tables(spark, sf_dir)["events"]
-    from pyspark.sql import Window
-
-    # shared gaps-and-islands sessionizer (windows.sessionized):
-    # microsecond-precision 30-min gap, one definition for all three
-    # batch sessionizers (round-11 review)
-    from .windows import sessionized
-
     sessions = sessionized(events, "event_type")
     ws = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     stepped = sessions.select(
@@ -1133,7 +1124,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dev feeds BOTH the mad aggregate and the flagged join — without a
     # cache boundary the final plan evaluates dev twice, each embedding
     # the med aggregation (~4 event scans + two median computations per
-    # run; round-11 review)
+    # run)
     dev = tracked_persist(events.join(F.broadcast(med), "event_type"))
     mad = dev.groupBy("event_type").agg(
         F.round(F.median(F.abs(F.col("value") - F.col("med"))), 6).alias("mad")
@@ -1198,8 +1189,6 @@ def customer_ltv_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     window IS single-partition, bounded at 10 rows by construction).
     Every downstream float (decile revenue, total, shares) is computed
     from round(2)-ed inputs identically in both engines."""
-    from pyspark.sql import Window
-
     from .ranking import global_ntile
 
     per_cust = (
@@ -1272,8 +1261,8 @@ def events_dau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_tables(spark, sf_dir)["events"]
     # du feeds THREE consumers (dau, the day spine, the wau probe) —
     # tracked_persist keeps 'the only event-volume pass' true in the
-    # executed plan, not just the docstring (round-11 review: unpersisted
-    # it re-ran the events scan + distinct shuffle once per consumer)
+    # executed plan, not just the docstring (unpersisted, it re-runs
+    # the events scan + distinct shuffle once per consumer)
     du = tracked_persist(
         events.select(F.to_date("ts").alias("d"), "user_id").distinct()
     )
@@ -1363,8 +1352,6 @@ def events_conversion_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff(F.to_date("t1"), F.to_date("t0")).alias("day_off")
     ).agg(F.count(F.lit(1)).alias("n_converted"))
     tot = s.agg(F.count(F.lit(1)).alias("n_signup"))
-    from pyspark.sql import Window
-
     w = Window.orderBy("day_off").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
         hist.crossJoin(F.broadcast(tot))
@@ -1422,11 +1409,11 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     its cohort (AQE picks the strategy — both sides SF-proportional, no
     hint), and the matrix is one (cohort x age) groupBy — quarters since
     epoch as a pure integer expression on both engines, so cohort/age
-    assignment is exact. Money hardened round 8 (sf0.001 stress sweep):
-    the previous round(sum(double)) revenue and its divided-then-rounded
-    per-customer figure could land a quotient exactly on a .xx5 boundary
-    (measured: 5224302.63/18), where the engines' round() tie handling
-    diverges on the same double. Now cents fold to BIGINT before the
+    assignment is exact. Money is exact: a round(sum(double)) revenue
+    and its divided-then-rounded per-customer figure can land a
+    quotient exactly on a .xx5 boundary (measured on the sf0.001
+    fixture: 5224302.63/18), where the engines' round() tie handling
+    diverges on the same double. So cents fold to BIGINT before the
     sum and rev_per_customer floor-rounds the bigint/bigint quotient —
     bit-identical operands end to end."""
     orders = load_tables(spark, sf_dir)["orders"]
@@ -1716,16 +1703,8 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------- bounce rate
 
-_BOUNCE_ORACLE = """
-WITH ordered AS (
-  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS t,
-         CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
-                OR epoch_us(CAST(ts AS TIMESTAMP))
-                   - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-),
+_BOUNCE_ORACLE = f"""
+WITH {SESSION_FLAGS_SQL},
 sessions AS (
   SELECT user_id, t,
          sum(new_session) OVER (PARTITION BY user_id ORDER BY t, event_id
@@ -1753,16 +1732,12 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by session start day — the engagement-quality headline next
     to the session-count and top-paths views, built on the SAME
     microsecond-precise gaps-and-islands sessionizer (`unix_micros`
-    matching the oracle's `epoch_us`; the boundary-precision class the
-    round-4 ADVICE flagged is pinned once here and everywhere).
+    matching the oracle's `epoch_us`, so a gap within a second of the
+    30-minute boundary is classified alike by every sessionizer).
 
     Plan: one user-keyed window pass sessionizes, one (user, session)
     groupBy reduces to session cardinality, and the daily census is a
     day-cardinality aggregate — events shuffle once."""
-    from pyspark.sql import Window
-
-    from .windows import sessionized
-
     events = load_tables(spark, sf_dir)["events"]
     sessions = sessionized(events)
     per_session = sessions.groupBy("user_id", "sid").agg(
@@ -1826,8 +1801,6 @@ def events_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding cannot flip on a ulp."""
     events = load_tables(spark, sf_dir)["events"]
     tc = events.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
-    from pyspark.sql import Window
-
     tot = Window.partitionBy("user_id")
     ent = (
         tc.withColumn("p", F.col("n") / F.sum("n").over(tot))
@@ -2001,8 +1974,6 @@ def events_velocity_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents — both engines count an event's window on floored epoch
     seconds), then a user-cardinality max and a 1-row census. One
     exchange total."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
     e = events.select(
         "user_id", F.unix_timestamp("ts").alias("tse")
@@ -2064,8 +2035,6 @@ def customers_tier_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides already aggregates) and the matrix is ≤ years x 16 rows.
     Pre-rounded revenues + key tiebreaks make tier assignment
     engine-identical."""
-    from pyspark.sql import Window
-
     yearly = (
         load_tables(spark, sf_dir)["orders"]
         .groupBy(
@@ -2151,15 +2120,27 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- inter-event gap histogram
 
-_GAP_HIST_ORACLE = """
-WITH gaps AS (
+
+def _gap_us() -> "F.Column":
+    """Microseconds since the same user's previous event in (ts,
+    event_id) order; NULL on a user's first event. `_GAPS_SQL` is the
+    oracle twin."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+
+
+# the oracles' `gaps(user_id, gap_us)` CTE, the twin of _gap_us
+_GAPS_SQL = """gaps AS (
   SELECT user_id,
          epoch_us(CAST(ts AS TIMESTAMP))
            - lag(epoch_us(CAST(ts AS TIMESTAMP)))
              OVER (PARTITION BY user_id
                    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS gap_us
   FROM events
-)
+)"""
+
+_GAP_HIST_ORACLE = f"""
+WITH {_GAPS_SQL}
 SELECT CAST(floor(log2(gap_us / 1000000.0)) AS BIGINT) AS gap_bucket_log2s,
        count(*) AS n_gaps,
        round(min(gap_us) / 1000000.0, 3) AS min_gap_s,
@@ -2184,15 +2165,10 @@ def events_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionizer's axis), then a map-side log2 bucket and a dozen-row
     census. Gaps measured in integer microseconds on both engines;
     bucket floors operate on identical quotients."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = events.select(
-        (
-            F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
-        ).alias("gap_us")
-    ).filter(F.col("gap_us").isNotNull() & (F.col("gap_us") > 0))
+    gaps = events.select(_gap_us().alias("gap_us")).filter(
+        F.col("gap_us").isNotNull() & (F.col("gap_us") > 0)
+    )
     return (
         gaps.groupBy(
             F.floor(F.log2(F.col("gap_us") / 1000000.0))
@@ -2292,15 +2268,8 @@ def events_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------------------- burstiness
 
-_BURSTINESS_ORACLE = """
-WITH gaps AS (
-  SELECT user_id,
-         epoch_us(CAST(ts AS TIMESTAMP))
-           - lag(epoch_us(CAST(ts AS TIMESTAMP)))
-             OVER (PARTITION BY user_id
-                   ORDER BY CAST(ts AS TIMESTAMP), event_id) AS gap_us
-  FROM events
-),
+_BURSTINESS_ORACLE = f"""
+WITH {_GAPS_SQL},
 per_user AS (
   SELECT user_id,
          round(avg(gap_us / 1000000.0), 6) AS mu,
@@ -2339,16 +2308,9 @@ def events_burstiness_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     then user-cardinality moments and a 8-band census. mu/sigma are
     pre-rounded before the B ratio, and the band floor runs on the
     rounded B, so banding is engine-identical."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gaps = events.select(
-        "user_id",
-        (
-            (F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w))
-            / 1000000.0
-        ).alias("gap_s"),
+        "user_id", (_gap_us() / 1000000.0).alias("gap_s")
     ).filter(F.col("gap_s").isNotNull())
     per_user = (
         gaps.groupBy("user_id")
@@ -2469,8 +2431,6 @@ def events_user_activity_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (single-partition but bounded at 100 rows post-limit; same
     pattern as text_zipf_slope). One regr_* moment aggregate over 100
     identical log operands closes it."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
     per_user = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     w = Window.orderBy(F.col("n").desc(), "user_id")
@@ -2518,8 +2478,6 @@ def events_type_mix_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one partial-agg'd groupBy to (month x type) cardinality, one
     share window over that aggregate. Shares are integer-count ratios —
     identical division operands in both engines."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
     m = events.groupBy(
         F.date_format("ts", "yyyy-MM").alias("month_s"), "event_type"
@@ -2781,8 +2739,6 @@ def events_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("cts") < F.col("pts"))
         & (F.col("cts") >= F.col("pts") - F.expr(f"INTERVAL {_MTA_WINDOW_DAYS} DAY")),
     )
-    from pyspark.sql import Window
-
     w_pos = Window.partitionBy("conv_id").orderBy("cts", "click_id")
     w_all = Window.partitionBy("conv_id")
     credited = touches.select(
@@ -3172,8 +3128,6 @@ def events_bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     over m rows by construction. The z denominators are single IEEE
     ops on round-free moments, with |z| rounded at 4 BEFORE ranking so
     rank order is engine-identical."""
-    from pyspark.sql import Window
-
     events = load_tables(spark, sf_dir)["events"]
     g = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -3206,7 +3160,7 @@ def events_bh_fdr_control(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = ranked.filter(F.col("abs_z") >= thresh).agg(
         F.coalesce(F.max("rnk"), F.lit(0)).alias("k_max")
     )
-    # family-visibility columns (round-11 review, the chisq-dof pattern):
+    # family-visibility columns (the chisq-dof pattern):
     # the z table is hardcoded for ranks 1..len(_BH_Z) at m=len(_BH_Z);
     # if event-type arity ever exceeds it, ranks past the table get NULL
     # thresholds and silently fall out of the step-up family on BOTH
@@ -3535,8 +3489,6 @@ def customers_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.lit(1) - F.col("churned")).cast("bigint").alias("c"),
     )
     tot = labeled.agg(F.count(F.lit(1)).cast("bigint").alias("t"))
-    from pyspark.sql import Window
-
     w_prev = Window.orderBy("dur_month").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -3966,8 +3918,8 @@ def orders_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame
     # `(SELECT tn FROM tot WHERE yr = Y)` yields NULL when a pivot year
     # is absent, keeping every segment row with NULL shares — a bare
     # filter here would instead produce an EMPTY relation whose
-    # crossJoin annihilates all rows (round-11 review: row-count
-    # mismatch on any fixture missing one of the two years). max over
+    # crossJoin annihilates all rows (a row-count mismatch on any
+    # fixture missing one of the two years). max over
     # the <=1 matching row is the scalar-subquery analog: 1 row, NULL
     # when the year is absent.
     t1 = tot.agg(
@@ -3990,10 +3942,10 @@ def orders_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame
         .crossJoin(F.broadcast(t2))
         .na.fill(0, ["n1", "s1", "n2", "s2"])
     )
-    r1 = F.when(
+    rate1 = F.when(
         F.col("n1") > 0, F.col("s1") * 1.0 / F.col("n1") / 100
     ).otherwise(0.0)
-    r2 = F.when(
+    rate2 = F.when(
         F.col("n2") > 0, F.col("s2") * 1.0 / F.col("n2") / 100
     ).otherwise(0.0)
     w1 = F.col("n1") * 1.0 / F.col("tn1")
@@ -4002,10 +3954,10 @@ def orders_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame
         "segment",
         F.round(w1, 4).alias("share_y1"),
         F.round(w2, 4).alias("share_y2"),
-        F.round(r1, 2).alias("avg_value_y1"),
-        F.round(r2, 2).alias("avg_value_y2"),
-        F.round((w2 - w1) * r1, 4).alias("mix_effect"),
-        F.round(w2 * (r2 - r1), 4).alias("rate_effect"),
+        F.round(rate1, 2).alias("avg_value_y1"),
+        F.round(rate2, 2).alias("avg_value_y2"),
+        F.round((w2 - w1) * rate1, 4).alias("mix_effect"),
+        F.round(w2 * (rate2 - rate1), 4).alias("rate_effect"),
     ).orderBy("segment")
 
 

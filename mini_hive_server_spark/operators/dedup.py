@@ -12,7 +12,7 @@ Four tiers, each a different cost/recall point:
                     against the exhaustive result.
 * SimHash         — 64-bit near-dup fingerprint via a vectorized Pandas UDF
                     (the designated Arrow slow-path demo); oracle-checked
-                    since round 3 (md5 bit-vote replayed in DuckDB SQL).
+                    (md5 bit-vote replayed in DuckDB SQL).
 
 Scale design (the entire point of LSH): the exhaustive pair join is
 O(pairs-sharing-a-shingle) and collapses at corpus scale; the LSH path's
@@ -41,10 +41,15 @@ from ..registry import register
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS  # noqa: E402
 
-_DUCK_SHINGLES_CTE = f"""
+
+def _duck_shingles(source: str) -> str:
+    """The oracles' `words` and `shingles(doc_id, sh)` CTEs over the
+    (doc_id, text) relation `source`: distinct word-3-gram shingles of
+    every document with at least 3 words, the twin of `shingle_sets`."""
+    return f"""
 words AS (
   SELECT doc_id, {_WORDS_DUCK} AS w
-  FROM documents
+  FROM {source}
 ),
 shingles AS (
   SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
@@ -52,6 +57,9 @@ shingles AS (
   WHERE len(w) >= 3
 )
 """
+
+
+_DUCK_SHINGLES_CTE = _duck_shingles("documents")
 
 
 def shingle_arrays(docs: DataFrame) -> DataFrame:
@@ -134,20 +142,32 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JACCARD_THRESHOLD = 0.8
 
-_NGRAM_JACCARD_ORACLE = f"""
-WITH {_DUCK_SHINGLES_CTE},
-sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
+
+def _jaccard_ctes(shingles: str) -> str:
+    """The oracles' `sizes` (shingles per doc) and `inter` (shared
+    shingles per doc pair d1 < d2) CTEs over the (doc_id, sh) relation
+    `shingles`, which `_JACCARD_SELECT` reads."""
+    return f"""sizes AS (SELECT doc_id, count(*) AS n FROM {shingles} GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
+  FROM {shingles} a JOIN {shingles} b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
-)
-SELECT d1, d2,
+)"""
+
+
+# the exhaustive Jaccard truth: every pair at or above the threshold,
+# rounded to 4 places — the DuckDB twin of _exact_jaccard_pairs
+_JACCARD_SELECT = f"""SELECT d1, d2,
        round(c * 1.0 / (s1.n + s2.n - c), 4) AS jaccard
 FROM inter
 JOIN sizes s1 ON s1.doc_id = d1
 JOIN sizes s2 ON s2.doc_id = d2
-WHERE c * 1.0 / (s1.n + s2.n - c) >= {_JACCARD_THRESHOLD}
+WHERE c * 1.0 / (s1.n + s2.n - c) >= {_JACCARD_THRESHOLD}"""
+
+_NGRAM_JACCARD_ORACLE = f"""
+WITH {_DUCK_SHINGLES_CTE},
+{_jaccard_ctes("shingles")}
+{_JACCARD_SELECT}
 ORDER BY d1, d2
 """
 
@@ -268,7 +288,7 @@ def minhash_bands(sha: DataFrame) -> DataFrame:
     element and benched ~40x slower).
 
     Permutation family: xxhash64(h, i) per permutation index. NEGATIVE
-    result (round 10, measured so it isn't retried): the "cheaper"
+    result (measured, so it isn't retried): the "cheaper"
     overflow-free Carter-Wegman family — h1, h2 reduced into [0, 2^31),
     then min over (h1 + i*h2) mod p (and a bitwiseAND-mask variant of
     the same) — is ANSI-safe and keeps LSH recall complete
@@ -296,7 +316,7 @@ def _minhash_bands_k(sha: DataFrame, n_perm: int, n_bands: int) -> DataFrame:
     shh = sha.select("doc_id", F.explode_outer("sh_arr").alias("sh")).select(
         "doc_id", F.xxhash64("sh").alias("h")
     )
-    # SQL-string expressions (round 14, guide §5 "the driver"): the
+    # SQL-string expressions keep driver time flat: the
     # Column-API listcomps built the identical K-column min-agg and
     # band array through hundreds of py4j round trips per call (~0.45 s
     # of driver time at K=64 across the sig+band constructions); each
@@ -394,8 +414,8 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
         # which the oracle's RE2 class does not — and str(None) used to
         # tokenize the literal 'none' while the oracle's regexp_split of
         # NULL yields no rows, so two NULL-text docs would pair each
-        # other at Hamming 0 on the Spark side only (round-12 review;
-        # same class as the round-11 UDTF fix). Token-less docs (NULL,
+        # other at Hamming 0 on the Spark side only (the same class as
+        # the UDTF's NULL handling). Token-less docs (NULL,
         # whitespace-only) emit a NULL fingerprint, filtered below —
         # the oracle's `WHERE tok <> ''` drops them identically.
         ws = re.compile(WS_CLASS_PY)
@@ -617,7 +637,7 @@ def dedup_lsh_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OPH_BUCKETS = 64  # sketch width (same as _N_PERM — comparable band layout)
 
 
-def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BANDS) -> DataFrame:
+def oph_bands(sha: DataFrame) -> DataFrame:
     """(doc_id, band, bh) banded ONE-PERMUTATION-HASHING signature: hash
     each shingle once, partition the hash space into 64 buckets, keep the
     per-bucket minimum — ONE aggregation pass replaces the classic
@@ -631,15 +651,14 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
     banding needs (slot j of two docs collides iff both borrow an equal
     source value at the SAME distance).
 
-    Densification history: the original per-doc Python loop measured 94s
-    at the 100x curve point (round-10 rework → all-JVM window dataflow:
-    64-row spine per doc, left-join, two window passes — 32.5 s at 100x);
-    round 14 removed the spine and the windows entirely — densify from a
-    per-doc bucket→min MAP in one map-only transform (see the inline
-    comment below), measured 4.2 s at the same 100x point, bit-equal.
-    Borrowing stays xxhash64(source, distance) — a rehash instead of the
-    pre-round-10 `source + distance` offset, which could overflow under
-    ANSI and could collide across distances.
+    Densification cost: a per-doc Python loop measured 94s at the 100x
+    curve point, an all-JVM window dataflow (64-row spine per doc,
+    left-join, two window passes) 32.5 s; densifying from a per-doc
+    bucket→min MAP in one map-only transform (see the inline comment
+    below) measured 4.2 s at the same 100x point, bit-equal.
+    Borrowing is xxhash64(source, distance) — a rehash, not a
+    `source + distance` offset, which could overflow under ANSI and
+    could collide across distances.
 
     Banding: same 16x4 layout as the classic tier, so the recall analysis
     carries over; completeness at the fixture's planted >= 0.9
@@ -651,14 +670,12 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
             "doc_id",
             F.xxhash64("sh").alias("h"),
         )
-        .withColumn("bucket", F.pmod("h", F.lit(buckets)).cast("int"))
+        .withColumn("bucket", F.pmod("h", F.lit(_OPH_BUCKETS)).cast("int"))
         .groupBy("doc_id", "bucket")
         .agg(F.min("h").alias("mn"))
     )
-    # Round-14 densification rework (the round's larger-SF A/B sweep,
-    # guide §2.4 remove-shuffles + §1.1 first-principles): densify from
-    # a per-doc bucket→min MAP in ONE expression instead of the round-10
-    # spine-explode + left-join + two window passes. The old form
+    # Densify from a per-doc bucket→min MAP in ONE expression instead
+    # of a spine-explode + left-join + two window passes. The spine form
     # shuffled a 64-row spine per doc through a join and two WindowExecs
     # (3 exchanges over a 64x-exploded relation); this form needs ONE
     # (doc, bucket) aggregate and a map-only transform: slot j takes
@@ -671,11 +688,11 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
     # runs only for EMPTY slots (~25% of 64 at fixture doc lengths).
     # Measured (bit-equality-gated, exceptAll both ways = 0): 10x corpus
     # 3.07 s → 0.92 s, 100x 32.5 s → 4.2 s for the signature+banding
-    # pipeline; the r13 'map_from_entries wash' verdict measured a
-    # variant that KEPT the spine join — eliminating the spine is what
-    # pays. NULL notes: a shingle-less doc still yields one per_bucket
-    # row (explode_outer emits NULL, xxhash64(NULL) = the seed), so the
-    # doc sets match the old spine's; mp values are never NULL, so
+    # pipeline; a map_from_entries variant that KEPT the spine join
+    # measured a wash — eliminating the spine is what pays. NULL notes:
+    # a shingle-less doc still yields one per_bucket row (explode_outer
+    # emits NULL, xxhash64(NULL) = the seed), so the doc sets match the
+    # spine form's; mp values are never NULL, so
     # coalesce/first-hit logic cannot confuse "empty slot" with a NULL
     # minimum.
     mp = per_bucket.groupBy("doc_id").agg(
@@ -683,7 +700,7 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
             "mp"
         )
     )
-    k = buckets
+    k = _OPH_BUCKETS
     fill = (
         f"transform(sequence(0, {k - 1}), j -> coalesce(mp[j], "
         f"aggregate(sequence(1, {k - 1}), cast(null as bigint), "
@@ -691,7 +708,7 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
         f"THEN xxhash64(mp[pmod(j + d, {k})], d) END))))"
     )
     dense = mp.select("doc_id", F.expr(fill).alias("m"))
-    rows_per_band = buckets // n_bands
+    rows_per_band = _OPH_BUCKETS // _N_BANDS
     # inline_outer(array(named_struct(...))) — one parsed expression
     # instead of the per-band Column listcomp (~150 py4j calls), same
     # literal types (int band ids) so every band hash is unchanged
@@ -702,7 +719,7 @@ def oph_bands(sha: DataFrame, buckets: int = _OPH_BUCKETS, n_bands: int = _N_BAN
                 f"m[{b * rows_per_band + r}]" for r in range(rows_per_band)
             ),
         )
-        for b in range(n_bands)
+        for b in range(_N_BANDS)
     )
     return dense.select("doc_id", F.expr(f"inline_outer(array({bands_sql}))"))
 
@@ -721,12 +738,11 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.65s — at fixture scale the classic tier WINS: its 64 rehashes are
     fused in-register by whole-stage codegen, while OPH pays a
     64x-finer-grained (doc, bucket) aggregation plus the densification
-    window's shuffles. The round-10 scale curve (SCALE.md "Round-10
-    scale curves", 128-shingle docs at 10x/100x corpus)
-    measured the same verdict at scale — classic ~3s vs OPH ~26s at
-    500k docs — so at K=64 the classic tier is the default at EVERY
-    scale. Round 11 MEASURED the "K in the hundreds" crossover
-    hypothesis by adding K=256 arms to the same curve
+    window's shuffles. The scale curve (SCALE.md, 128-shingle docs at
+    10x/100x corpus) measured the same verdict at scale — classic ~3s
+    vs OPH ~26s at 500k docs — so at K=64 the classic tier is the
+    default at EVERY scale. The "K in the hundreds" crossover
+    hypothesis was MEASURED by adding K=256 arms to the same curve
     (`dedup_minhash_k256`, 64 bands x 4 rows): classic-256 21s vs
     OPH-256 32s at the 100x point — classic STILL wins, refuting the
     prose condition for this corpus shape. The reason is the second
@@ -734,8 +750,8 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPH's slots are empty and the densification window (256-row spine
     per doc, two window passes) dominates; OPH's O(1)-per-element
     advantage needs shingles-per-doc >> sketch width (book-length
-    documents), not merely large K. Round 12 MEASURED that remaining
-    axis (SCALE.md "Round-12: the OPH long-document point", 15k docs x
+    documents), not merely large K. That remaining axis was MEASURED
+    too (SCALE.md "the OPH long-document point", 15k docs x
     4096 shingles/doc — same ~61M total shingles as the 100x corpus point,
     so only per-doc length varies): committed quiet record classic-256
     30.4s vs OPH-256 4.6s — **OPH wins 6.7x** (2.8x in the same-day
@@ -751,7 +767,7 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the production default; this one is the long-document large-K
     path, with the condition now three A/B measurement points (the
     curve also caught and drove out the original Python densify kernel
-    — 94s at the 100x point). Since round 13 the surface is EXECUTABLE:
+    — 94s at the 100x point). The surface is EXECUTABLE:
     `signature_tier_select` returns the prescribed scheme per (doc
     length, K), and `dedup_signature_tier_census` reports the
     prescription over a corpus's measured shingles-per-doc strata."""
@@ -766,7 +782,7 @@ _DF_CAP = 4  # max docs a shingle may appear in before it is cut
 def _df_capped_oracle(shingles_cte: str) -> str:
     """The df-capped exhaustive-Jaccard oracle tail, parameterized by the
     shingle CTE so the natural-corpus and planted-boilerplate operating
-    points share one definition (round 12)."""
+    points share one definition."""
     return f"""
 WITH {shingles_cte},
 df AS (SELECT sh, count(*) AS c FROM shingles GROUP BY sh),
@@ -774,18 +790,8 @@ capped AS (
   SELECT s.doc_id, s.sh FROM shingles s JOIN df ON df.sh = s.sh
   WHERE df.c <= {_DF_CAP}
 ),
-sizes AS (SELECT doc_id, count(*) AS n FROM capped GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT d1, d2,
-       round(c * 1.0 / (s1.n + s2.n - c), 4) AS jaccard
-FROM inter
-JOIN sizes s1 ON s1.doc_id = d1
-JOIN sizes s2 ON s2.doc_id = d2
-WHERE c * 1.0 / (s1.n + s2.n - c) >= {_JACCARD_THRESHOLD}
+{_jaccard_ctes("capped")}
+{_JACCARD_SELECT}
 ORDER BY d1, d2
 """
 
@@ -802,7 +808,7 @@ def dedup_lsh_df_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     always prescribed for the band join's one failure mode at 100 TB
     ("a hot shingle → hot bucket ... capped upstream by dropping
     shingles with document frequency above a threshold, exactly like a
-    stopword cut"), made executable instead of prose (round 11).
+    stopword cut"), made executable instead of prose.
 
     Semantics: shingles appearing in more than {_DF_CAP} documents are
     removed BEFORE signatures, candidates, and verification — similarity
@@ -839,14 +845,14 @@ def hot_shingles(sh: DataFrame) -> DataFrame:
 
 def _df_capped_pairs(docs: DataFrame) -> DataFrame:
     """The df-capped LSH pipeline body, shared by the natural-corpus and
-    planted-boilerplate operating points (round 12): df census → broadcast
+    planted-boilerplate operating points: df census → broadcast
     LEFT ANTI cut → classic 64-perm banding → bucket join → candidate-only
     exact verification over the capped arrays."""
     # persist the COMPACT array relation before the diamond: the df
     # census and the anti-join probe both derive from it, and without a
     # cache boundary each branch re-runs the whole split+shingle
     # pipeline (the module's measured ~8s-at-sf0.1 stage) — same
-    # discipline as every sibling tier (round-11 review)
+    # discipline as every sibling tier
     raw_sha = tracked_persist(shingle_arrays(docs))
     sh = raw_sha.select("doc_id", F.explode_outer("sh_arr").alias("sh"))
     capped = sh.join(F.broadcast(hot_shingles(sh)), "sh", "left_anti")
@@ -860,10 +866,10 @@ def _df_capped_pairs(docs: DataFrame) -> DataFrame:
 
 # a 256-word boilerplate header → 254 pure-header shingles with df = 30%
 # of the corpus, planted on every doc_id ≡ 0,1,2 (mod 10). Two design
-# decisions, both MEASURED (round 12):
+# decisions, both MEASURED:
 # * df at ~0.3·N: the natural fixture's max df is 7-9 (barely above the
 #   cap of 4); the plant drives the defense at its design point — a
-#   boilerplate shingle shared by ~30% of all documents (VERDICT r11 #8).
+#   boilerplate shingle shared by ~30% of all documents.
 # * header LONGER than the content it pollutes: the first cut planted a
 #   10-word header, and the hot-bucket test REFUTED the expected blowup —
 #   32 uncapped candidate pairs where ~11k were predicted — because 8
@@ -887,17 +893,7 @@ planted AS (
          CASE WHEN doc_id % {_PLANT_MOD} < {_PLANT_REM}
               THEN '{_PLANT_HEADER} ' || text ELSE text END AS text
   FROM documents
-),
-words AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w
-  FROM planted
-),
-shingles AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-  FROM words, unnest(range(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 3
-)
-"""
+),{_duck_shingles("planted")}"""
 
 
 def planted_documents(docs: DataFrame) -> DataFrame:
@@ -925,8 +921,8 @@ def planted_documents(docs: DataFrame) -> DataFrame:
 )
 def dedup_lsh_df_capped_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped LSH tier under a PLANTED 30%-df boilerplate header —
-    the second operating point of the hot-shingle defense (round 12,
-    VERDICT r11 #8). `dedup_lsh_df_capped` proves the cap is live on the
+    the second operating point of the hot-shingle defense.
+    `dedup_lsh_df_capped` proves the cap is live on the
     natural corpus, but the fixture's max df (7-9) is barely above the
     cap; this query drives the defense at its design point: a constant
     256-word header prepended to 30% of documents (doc_id % 10 < 3)
@@ -979,7 +975,7 @@ def dedup_minhash_k256(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic-256 tier is the short-document large-K point, and the OPH
     tier is the long-document one. See `dedup_minhash_oph` for the full
     measured surface, and `signature_tier_select` /
-    `dedup_signature_tier_census` (round 13) for the surface as
+    `dedup_signature_tier_census` for the surface as
     executable engine logic.
 
     Recall strictly dominates the K=64 tier at equal rows-per-band
@@ -1008,10 +1004,9 @@ _TIER_LONG_DOC_SHINGLES = 1024
 
 
 def signature_tier_select(n_sh, k: int):
-    """The measured OPH/classic crossover surface as engine logic
-    (round 13, VERDICT r12 #6): given a shingles-per-doc column and the
-    sketch width K, return the signature scheme the three A/B points
-    (SCALE.md rounds 10-12) prescribe — 'classic' at K<=64 at every
+    """The measured OPH/classic crossover surface as engine logic:
+    given a shingles-per-doc column and the sketch width K, return the
+    signature scheme the three A/B points (SCALE.md) prescribe — 'classic' at K<=64 at every
     measured doc length (64 fused in-register rehash-mins beat OPH's
     finer-grained aggregation even at 4096 shingles/doc); at K in the
     hundreds, 'classic' for short docs and 'oph' once shingles-per-doc
@@ -1070,8 +1065,7 @@ def dedup_signature_tier_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     `signature_tier_select`. On the fixture corpus every stratum reads
     'short' -> classic at both widths, which is itself the census's
     finding: this corpus never reaches the OPH crossover regime, so no
-    long-document OPH query tier is registered for it (VERDICT r12 #7's
-    conditional). Map-only shingle sizing (no join: docs with <3 words
+    long-document OPH query tier is registered for it. Map-only shingle sizing (no join: docs with <3 words
     census as 0 shingles inline), one stratum-keyed aggregation —
     2-row output at any corpus scale."""
     docs = load_tables(spark, sf_dir)["documents"]
@@ -1289,8 +1283,8 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("arr")
         )
     )
-    # tracked_persist the exploded prefix relation (round-13 optimization
-    # pass, guide §5 caching): the candidate join below references it
+    # tracked_persist the exploded prefix relation: the candidate join
+    # below references it
     # TWICE (the x/y self-join arms) — unpersisted, the entire
     # df-census → join → per-doc sort → slice chain executed once PER
     # ARM. The relation is ~(1-t)|x|+1 prefix tokens per doc — doc-
@@ -1328,24 +1322,15 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_jaccard_pairs(docs, candidates=candidates, sha=sha)
 
 
-# ------------------------ MinHash estimator fidelity report (round 8)
+# ------------------------------------ MinHash estimator fidelity report
 
 _FIDELITY_PERMS = 16
 
 _FIDELITY_ORACLE = f"""
 WITH {_DUCK_SHINGLES_CTE.strip()},
-sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-  FROM shingles a JOIN shingles b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
+{_jaccard_ctes("shingles")},
 pairs AS (
-  SELECT d1, d2, round(c * 1.0 / (s1.n + s2.n - c), 4) AS j
-  FROM inter
-  JOIN sizes s1 ON s1.doc_id = d1
-  JOIN sizes s2 ON s2.doc_id = d2
-  WHERE c * 1.0 / (s1.n + s2.n - c) >= {_JACCARD_THRESHOLD}
+{_JACCARD_SELECT}
 ),
 slots AS (
   SELECT doc_id, p.i AS perm,
@@ -1356,17 +1341,17 @@ slots AS (
   GROUP BY doc_id, p.i
 ),
 agree AS (
-  SELECT p.d1, p.d2, p.j,
+  SELECT p.d1, p.d2, p.jaccard,
          count(CASE WHEN a.m = b.m THEN 1 END) AS k
   FROM pairs p
   JOIN slots a ON a.doc_id = p.d1
   JOIN slots b ON b.doc_id = p.d2 AND b.perm = a.perm
   GROUP BY 1, 2, 3
 )
-SELECT d1, d2, j AS exact_jaccard,
+SELECT d1, d2, jaccard AS exact_jaccard,
        CAST(k AS BIGINT) AS n_slots_equal,
        round(k / {_FIDELITY_PERMS}.0, 4) AS est_jaccard,
-       round(abs(k / {_FIDELITY_PERMS}.0 - j), 4) AS abs_err
+       round(abs(k / {_FIDELITY_PERMS}.0 - jaccard), 4) AS abs_err
 FROM agree
 ORDER BY d1, d2
 """

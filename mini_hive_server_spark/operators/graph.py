@@ -21,26 +21,27 @@ the oracle implement the same recurrence, so the check is exact.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables, session_memo, session_memos
 from ..registry import register
+from .behavior import TRANSITIONS_SQL, transition_counts
 
 _DAMPING = 0.85
 # the teleport numerator interpolated into the ORACLES as the Python
 # float's exact repr: DuckDB evaluates (1 - 0.85) in DECIMAL (exact 0.15
 # -> double 0.1499999999999999944) while every Spark path computes the
 # Python float 1 - 0.85 = 0.15000000000000002 — a 2-ulp divergence that
-# compounds per iteration and contradicted the docstring's
-# 'engine-identical' claim (round-11 review, verified numerically)
+# compounds per iteration (verified numerically); the repr keeps both
+# engines on the same double
 _TELEPORT_NUM = repr(1 - _DAMPING)
 
 
 # the co-purchase edge relation's ORACLE preamble, shared by every graph
-# oracle (round-11 review: seven verbatim copies of the correctness
-# anchor — DISTINCT projection, u < v orientation, min-support HAVING —
-# could silently drift apart). The Spark twin is copurchase_edges.
+# oracle so the correctness anchor — DISTINCT projection, u < v
+# orientation, min-support HAVING — is spelled once. The Spark twin is
+# copurchase_edges.
 def _edges_cte(materialized: bool = False, edges_name: str = "edges") -> str:
     m = " MATERIALIZED" if materialized else ""
     return f"""op AS{m} (
@@ -61,17 +62,7 @@ def _transition_graph(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     out-edge relation (src, dst, w) with per-src weights normalized to 1,
     and the node relation. One window (lag) + one partial-agg'd groupBy
     over events; everything downstream is node/edge cardinality."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = events.select(
-        "event_type", F.lag("event_type").over(w).alias("prev_type")
-    )
-    raw_edges = (
-        seq.filter(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    raw_edges = transition_counts(events, "src", "dst")
     wsrc = Window.partitionBy("src")
     edges = raw_edges.select(
         "src",
@@ -84,61 +75,65 @@ def _transition_graph(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     nodes = events.select(F.col("event_type").alias("node")).distinct()
     return edges, nodes
 
-_PAGERANK_ORACLE = f"""
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY CAST(ts AS TIMESTAMP), event_id)
-           AS prev_type
-  FROM events
-),
-raw_edges AS (
-  SELECT prev_type AS src, event_type AS dst, count(*) AS n
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY 1, 2
-),
+
+def _pr_steps(last: int) -> str:
+    """The oracles' unrolled PageRank rounds `pr1` .. `pr{last}`, each
+    computed from the one before it: the twin of `_pr_step`."""
+    return ",\n".join(
+        f"""pr{k} AS (
+  SELECT n.node,
+         {_TELEPORT_NUM} / nn.n_nodes
+           + {_DAMPING} * coalesce(sum(p.pr * e.w), 0) AS pr
+  FROM nodes n CROSS JOIN nn
+  LEFT JOIN edges e ON e.dst = n.node
+  LEFT JOIN pr{k - 1} p ON p.node = e.src
+  GROUP BY n.node, nn.n_nodes
+)"""
+        for k in range(1, last + 1)
+    )
+
+
+# the PageRank oracles' graph and start state: the transition graph
+# `_transition_graph` builds, its node count, and uniform ranks `pr0`
+_PR_GRAPH_SQL = f"""{TRANSITIONS_SQL},
 edges AS (
   SELECT src, dst,
          CAST(n AS DOUBLE)
            / CAST(sum(n) OVER (PARTITION BY src) AS DOUBLE) AS w
-  FROM raw_edges
+  FROM transitions
 ),
 nodes AS (SELECT DISTINCT event_type AS node FROM events),
 nn AS (SELECT count(*) AS n_nodes FROM nodes),
 pr0 AS (
   SELECT node, 1.0 / n_nodes AS pr FROM nodes, nn
-),
-pr1 AS (
-  SELECT n.node,
-         {_TELEPORT_NUM} / nn.n_nodes
-           + {_DAMPING} * coalesce(sum(p.pr * e.w), 0) AS pr
-  FROM nodes n CROSS JOIN nn
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN pr0 p ON p.node = e.src
-  GROUP BY n.node, nn.n_nodes
-),
-pr2 AS (
-  SELECT n.node,
-         {_TELEPORT_NUM} / nn.n_nodes
-           + {_DAMPING} * coalesce(sum(p.pr * e.w), 0) AS pr
-  FROM nodes n CROSS JOIN nn
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN pr1 p ON p.node = e.src
-  GROUP BY n.node, nn.n_nodes
-),
-pr3 AS (
-  SELECT n.node,
-         {_TELEPORT_NUM} / nn.n_nodes
-           + {_DAMPING} * coalesce(sum(p.pr * e.w), 0) AS pr
-  FROM nodes n CROSS JOIN nn
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN pr2 p ON p.node = e.src
-  GROUP BY n.node, nn.n_nodes
-)
+)"""
+
+_PAGERANK_ORACLE = f"""
+WITH {_PR_GRAPH_SQL},
+{_pr_steps(_N_ITER)}
 SELECT node AS event_type, round(pr, 6) AS pagerank
-FROM pr3
+FROM pr{_N_ITER}
 ORDER BY event_type
 """
+
+
+def _pr_step(
+    pr: DataFrame, edges: DataFrame, nodes: DataFrame, teleport: "F.Column"
+) -> DataFrame:
+    """One PageRank round: every node's new rank is `teleport` plus the
+    damped sum of rank flowing in along its in-edges (`pr` joined to the
+    out-edge relation on src, summed per dst). `nodes` carries the node
+    set and any column `teleport` reads; nodes without in-edges keep
+    only the teleport term."""
+    contrib = (
+        pr.join(edges, pr["node"] == edges["src"])
+        .groupBy("dst")
+        .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
+    )
+    return nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
+        "node",
+        (teleport + _DAMPING * F.coalesce("c", F.lit(0.0))).alias("pr"),
+    )
 
 
 @register("graph_pagerank_3iter", oracle=_PAGERANK_ORACLE, tags=("graph", "iterative"))
@@ -164,21 +159,11 @@ def graph_pagerank_3iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", (F.lit(1.0) / F.col("n_nodes")).alias("pr")
     )
     for _ in range(_N_ITER):
-        contrib = (
-            pr.join(edges, pr["node"] == edges["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
-        )
-        pr = (
-            nodes.crossJoin(F.broadcast(nn))
-            .join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (
-                    (1 - _DAMPING) / F.col("n_nodes")
-                    + _DAMPING * F.coalesce("c", F.lit(0.0))
-                ).alias("pr"),
-            )
+        pr = _pr_step(
+            pr,
+            edges,
+            nodes.crossJoin(F.broadcast(nn)),
+            (1 - _DAMPING) / F.col("n_nodes"),
         )
     return pr.select(
         F.col("node").alias("event_type"), F.round("pr", 6).alias("pagerank")
@@ -197,46 +182,10 @@ def _pagerank_golden_oracle() -> str:
     cannot host the per-iteration aggregate (group-sum of contributions),
     so the DuckDB replay unrolls all 12 steps programmatically — same
     recurrence as `_PAGERANK_ORACLE`, deeper."""
-    steps = []
-    for k in range(1, _GOLDEN_ITER + 1):
-        steps.append(
-            f"""pr{k} AS (
-  SELECT n.node,
-         {_TELEPORT_NUM} / nn.n_nodes
-           + {_DAMPING} * coalesce(sum(p.pr * e.w), 0) AS pr
-  FROM nodes n CROSS JOIN nn
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN pr{k - 1} p ON p.node = e.src
-  GROUP BY n.node, nn.n_nodes
-)"""
-        )
     last, prev = f"pr{_GOLDEN_ITER}", f"pr{_GOLDEN_ITER - 1}"
-    unrolled = ",\n".join(steps)
     return f"""
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY CAST(ts AS TIMESTAMP), event_id)
-           AS prev_type
-  FROM events
-),
-raw_edges AS (
-  SELECT prev_type AS src, event_type AS dst, count(*) AS n
-  FROM seq WHERE prev_type IS NOT NULL
-  GROUP BY 1, 2
-),
-edges AS (
-  SELECT src, dst,
-         CAST(n AS DOUBLE)
-           / CAST(sum(n) OVER (PARTITION BY src) AS DOUBLE) AS w
-  FROM raw_edges
-),
-nodes AS (SELECT DISTINCT event_type AS node FROM events),
-nn AS (SELECT count(*) AS n_nodes FROM nodes),
-pr0 AS (
-  SELECT node, 1.0 / n_nodes AS pr FROM nodes, nn
-),
-{unrolled},
+WITH {_PR_GRAPH_SQL},
+{_pr_steps(_GOLDEN_ITER)},
 res AS (
   SELECT max(abs(a.pr - b.pr)) < {_PR_EPS} AS converged
   FROM {last} a JOIN {prev} b ON a.node = b.node
@@ -254,8 +203,7 @@ def _pagerank_converged_oracle() -> str:
     (see `_pagerank_golden_oracle` below for the construction), emitting
     the converged query's (event_type, pagerank, converged) columns.
 
-    Why a fixed unroll may stand in for a data-dependent stop — the
-    round-8 pairing argument (VERDICT r7 "missing #2"):
+    Why a fixed unroll may stand in for a data-dependent stop:
 
     * contraction bound: stopping at max|Δpr| ≤ ε leaves the iterate
       within ε·d/(1−d) ≈ 5.7e-6 of the fixpoint, and each further round
@@ -276,11 +224,11 @@ def _pagerank_converged_oracle() -> str:
     out = golden.replace(
         f"\n       CAST({_GOLDEN_ITER} AS INT) AS n_iterations,", ""
     )
-    # ADVICE r8: string surgery on the golden template no-ops silently if
+    # string surgery on the golden template no-ops silently if
     # the SELECT line's formatting drifts, and the converged oracle would
     # then grow an extra column that only surfaces as a driver hash
     # mismatch. Fail at import time instead — with a raise, not an assert,
-    # so the guard survives `python -O` (ADVICE r9).
+    # so the guard survives `python -O`.
     if "n_iterations" in out:
         raise RuntimeError(
             "golden SQL template drifted: n_iterations SELECT line not removed"
@@ -344,20 +292,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_iter, delta = 0, float("inf")
     with CheckpointChain(keep=2) as chain:
         while n_iter < _PR_MAX_ITER and delta > _PR_EPS:
-            contrib = (
-                pr.join(edges, pr["node"] == edges["src"])
-                .groupBy("dst")
-                .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
-            )
             new_pr, _ = chain.step(
-                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(teleport)
-                        + _DAMPING * F.coalesce("c", F.lit(0.0))
-                    ).alias("pr"),
-                )
+                _pr_step(pr, edges, nodes, F.lit(teleport))
             )
             delta = (
                 new_pr.select("node", F.col("pr").alias("pr_new"))
@@ -420,20 +356,12 @@ def graph_pagerank_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_pr = None
     with CheckpointChain(keep=2) as chain:
         for _ in range(_GOLDEN_ITER):
-            contrib = (
-                pr.join(edges, pr["node"] == edges["src"])
-                .groupBy("dst")
-                .agg(F.sum(F.col("pr") * F.col("w")).alias("c"))
-            )
             new_pr, _ = chain.step(
-                nodes.crossJoin(F.broadcast(nn))
-                .join(contrib, nodes["node"] == contrib["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        (1 - _DAMPING) / F.col("n_nodes")
-                        + _DAMPING * F.coalesce("c", F.lit(0.0))
-                    ).alias("pr"),
+                _pr_step(
+                    pr,
+                    edges,
+                    nodes.crossJoin(F.broadcast(nn)),
+                    (1 - _DAMPING) / F.col("n_nodes"),
                 )
             )
             prev_pr, pr = pr, new_pr
@@ -695,7 +623,7 @@ _DEG_SALT_BUCKETS = 16
 def graph_degree_salted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 hub nodes of the co-purchase graph by degree, computed with
     an EXPLICIT two-stage salted aggregation — the graph family's AQE-less
-    skew twin (VERDICT r9 #6). `graph_degree_distribution` relies on
+    skew twin. `graph_degree_distribution` relies on
     Spark's map-side partial aggregation to keep a power-law hub from
     melting one reducer; that safety evaporates whenever partial
     aggregation degrades (high-cardinality spill to sort-based fallback,
@@ -800,8 +728,7 @@ def graph_bfs_3hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint job (one job per hop, no separate actions), unreachable =
     |nodes| - Σ tier counts, and the census assembles from those
     scalars; the driver never touches node data. The measured history
-    of this strategy is in SCALE.md's "Driver round 8" and "Driver round
-    9: official record" sections.
+    of this strategy is in SCALE.md's driver-run sections.
 
     Empty-tier semantics (the oracle's static census): an exhausted
     frontier yields observed n=0 — the (distance, 0) row is still
@@ -865,7 +792,7 @@ def bfs_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
 _CC_MAX_ROUNDS = 64
 # Per-task edge budget for the adaptive union-find pre-pass (see
 # star_contraction_stars docstring point 1): ≤1M edges/chunk bounds the
-# kernel's per-task Python memory — MEASURED (round 10, VERDICT r9 #6):
+# kernel's per-task Python memory — MEASURED:
 # 94.3 MiB tracemalloc peak on the worst-case budget-sized chunk (a
 # 1M-edge path graph — every node distinct, every node in the parent
 # dict, full star output), i.e. the documented ~250 MB ceiling holds
@@ -912,12 +839,11 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     self-join formulation's three (distinct + reused-exchange join +
     pair groupBy) and no join build; measured ~1.5x faster at sf0.1.
     Used by the CONVERGED iterative queries (connected components,
-    k-core), where the build dominated end-to-end latency (VERDICT r7
-    #3); `graph_triangle_count` keeps the explicit self-join as the
+    k-core), where the build dominated end-to-end latency;
+    `graph_triangle_count` keeps the explicit self-join as the
     classic formulation demo."""
-    # EXPLICIT conf-width exchange (round-13 optimization pass, guide
-    # §2.5 "synthetic partitioning" / §2.2): left to ENSURE_REQUIREMENTS,
-    # AQE's byte-based coalescing ran this stage in 3-4 tasks at sf0.1
+    # EXPLICIT conf-width exchange ("synthetic partitioning"): left to
+    # ENSURE_REQUIREMENTS, AQE's byte-based coalescing ran this stage in 3-4 tasks at sf0.1
     # (event-log profile: 0.59 s of the ~1.05 s build) — but the stage is
     # COMPUTE-dense, not byte-dense: it builds per-order sets and then
     # explodes the QUADRATIC per-order pair expansion, so its output
@@ -1038,10 +964,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     each round is two (groupBy-min + equi-join + distinct) passes over an
     edge relation that only ever shrinks toward one star per component.
 
-    This was the registry's first CONVERGED iterative query to carry a
-    full value oracle without extra argument: a data-dependent stopping
-    rule left `graph_pagerank_converged` rows-only until round 8's
-    contraction-bound pairing (an ε-stopped FLOAT fixpoint is
+    A CONVERGED iterative query with a full value oracle and no extra
+    argument: a data-dependent stopping rule needs
+    `graph_pagerank_converged`'s contraction-bound pairing (an ε-stopped
+    FLOAT fixpoint is
     path-dependent), but CC's fixpoint is EXACT — however many rounds the
     loop takes, the converged labels equal the transitive-closure minimum,
     which DuckDB computes independently via a recursive CTE (restricted to
@@ -1159,9 +1085,8 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
     component's size is its child count + 1 — one exchange fewer than
     going through labels). Property-tested against union-find on
     synthetic path/star/random graphs in tests/test_llm_ops.py. The
-    path-graph round-growth curve is in SCALE.md's round-8 and late
-    round-9 sections (the `cc_path_*` keys of the `experiments` block in
-    BENCH_local_r14opt_final.json).
+    path-graph round-growth curve is in SCALE.md (the `cc_path_*` keys
+    of the `experiments` block in BENCH_local_r14opt_final.json).
 
     Three structural choices keep each round's constant low:
 
@@ -1185,7 +1110,7 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
        2 rounds / 5.2 s, exact labels everywhere. The |E| count comes
        from one count() on the (usually persisted) input — for the
        session-cached co-purchase edges it doubles as the cache
-       materialization round 1 needed anyway.
+       materialization the first round needs anyway.
     2. The large-star step exploits the canonical a > b orientation:
        m(u) = min(N(u) ∪ {u}) can only come from u's SMALLER neighbors,
        so one groupBy("a").min("b") replaces the both-directions union
@@ -1195,7 +1120,8 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
        rides the checkpoint job via `df.observe` instead of a second
        action — ONE job per round, and the driver still touches only
        scalars. The entry checkpoint observes the same signature, so a
-       pre-pass output that is already the fixpoint stops after round 1.
+       pre-pass output that is already the fixpoint stops after one
+       round.
 
     Block lifecycle: the entry checkpoint and every round run on one
     `CheckpointChain(keep=1)`: each round's block replaces the previous
@@ -1249,7 +1175,7 @@ def star_contraction_stars(edges: DataFrame) -> DataFrame:
     with CheckpointChain(keep=1) as chain:
         # entry checkpoint: the upstream edge BUILD (often the expensive
         # part — e.g. the co-purchase pair aggregation) runs exactly once;
-        # round 1 reads these blocks
+        # the first round reads these blocks
         cur, got = chain.step(
             _local_contract(canon.coalesce(prepass_parts)).distinct(), *sig
         )
@@ -1331,15 +1257,13 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge relation against the current labeling, one (node, label) count
     aggregate, and one per-node argmax window (hash-partitioned by
     node — never global). Output: the community-size histogram after
-    round 2 — deterministic because the vote tiebreak is total.
+    the second round — deterministic because the vote tiebreak is total.
 
     Scale shape: the edge relation is support-thresholded and persisted
     once (same bound as graph_triangle_count); rounds are statically
     unrolled into one lazy plan; all movement keys on node ids. The
     synchronous variant is the one that parallelizes — asynchronous LP
     is inherently sequential."""
-    from pyspark.sql import Window
-
     from ..persistence import tracked_persist
 
     edges = copurchase_edges(spark, sf_dir)  # session-scoped cached build

@@ -11,12 +11,12 @@ batch, the rest is the standing corpus).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..registry import register
-from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
+from .dedup import _DUCK_SHINGLES_CTE, _JACCARD_THRESHOLD
 
 _INC_DEDUP_ORACLE = """
 WITH existing AS (
@@ -228,8 +228,6 @@ def ingest_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER rank selection — a delete must win over older upserts, not be
     filtered into resurrecting them."""
     events = load_tables(spark, sf_dir)["events"]
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -258,15 +256,7 @@ def ingest_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------ incremental MinHash near-dup probe
 
 _INC_MINHASH_ORACLE = f"""
-WITH words AS (
-  SELECT doc_id, {_WORDS_DUCK} AS w
-  FROM documents
-),
-shingles AS (
-  SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
-  FROM words, unnest(range(1, len(w) - 1)) AS t(i)
-  WHERE len(w) >= 3
-),
+WITH {_DUCK_SHINGLES_CTE.strip()},
 sizes AS (SELECT doc_id, count(*) AS n FROM shingles GROUP BY doc_id),
 inter AS (
   SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
@@ -279,7 +269,7 @@ matches AS (
   FROM inter
   JOIN sizes s1 ON s1.doc_id = d1
   JOIN sizes s2 ON s2.doc_id = d2
-  WHERE c * 1.0 / (s1.n + s2.n - c) >= 0.8
+  WHERE c * 1.0 / (s1.n + s2.n - c) >= {_JACCARD_THRESHOLD}
 )
 SELECT d1 AS doc_id,
        count(*) AS n_corpus_matches,

@@ -951,7 +951,7 @@ def multimodal_bmp_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEG_FRAME = 10  # samples per analysis frame
 
 
-def segment_energy(samples: list[int], frame: int = _SEG_FRAME):
+def segment_energy(samples: list[int]):
     """Energy-based activity segmentation over decoded PCM samples — the
     voice-activity-style chunking an audio pipeline runs to split a
     recording before transcription/embedding. A frame is ACTIVE when its
@@ -959,17 +959,15 @@ def segment_energy(samples: list[int], frame: int = _SEG_FRAME):
     integer cross-multiplied form (e * n_frames > total_e) so the
     decision replays identically in SQL; a segment is a maximal run of
     active frames. Partial tail frames are dropped (n // frame full
-    frames)."""
-    n_frames = len(samples) // frame
+    frames of `_SEG_FRAME` samples)."""
+    n_frames = len(samples) // _SEG_FRAME
     energies = [
-        sum(v * v for v in samples[f * frame : (f + 1) * frame])
+        sum(v * v for v in samples[f * _SEG_FRAME : (f + 1) * _SEG_FRAME])
         for f in range(n_frames)
     ]
     total = sum(energies)
     active = [e * n_frames > total for e in energies]
-    n_segments = sum(
-        1 for f, a in enumerate(active) if a and (f == 0 or not active[f - 1])
-    )
+    n_segments = sum(a and (f == 0 or not active[f - 1]) for f, a in enumerate(active))
     return n_frames, sum(active), n_segments, total
 
 

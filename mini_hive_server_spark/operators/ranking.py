@@ -51,7 +51,7 @@ _TOT = "__rng_tot"
 def _cols(order_cols) -> list[Column]:
     # a bare string would otherwise iterate CHARACTER BY CHARACTER —
     # usually an AnalysisException, but on single-letter schemas it
-    # silently ranges by the wrong keys (round-10 self-review)
+    # silently ranges by the wrong keys
     if isinstance(order_cols, (str, Column)):
         order_cols = [order_cols]
     return [F.col(c) if isinstance(c, str) else c for c in order_cols]
@@ -95,7 +95,7 @@ def _ranged(df: DataFrame, cols: list[Column], num_partitions: int | None) -> Da
     ``correctness_bearing=True`` makes the tracked release DEFERRED: the
     persist survives release cycles until its buffers were actually
     built, so a caller that builds the NEXT registered query before
-    collecting this one (ADVICE r6) cannot strand the consumer on a
+    collecting this one cannot strand the consumer on a
     freshly-re-sampled exchange — persistence.py documents the
     contract.
 
@@ -108,7 +108,7 @@ def _ranged(df: DataFrame, cols: list[Column], num_partitions: int | None) -> Da
     same-session A/B at sf0.1 (4 pairs each): RFM 2.91 ckpt vs 2.66
     persist, ABC 1.44 vs 1.30, zipf wash — the barrier costs more than
     the shallower analysis saves, the same serialized-vs-overlapped
-    lesson as r13's fidelity/RFM/OPH/PCA experiments."""
+    lesson as the fidelity/RFM/OPH/PCA experiments in SCALE.md."""
     from ..persistence import tracked_persist
 
     if num_partitions is None:
@@ -137,7 +137,7 @@ def _prefix_offsets(
     ``per_partition`` aggregate MUST be (castable to) bigint — the fold's
     accumulator and the packed-struct DDL below hard-code ``bigint``
     fields, so a double aggregate would fail with an opaque type
-    mismatch inside ``F.aggregate`` (ADVICE r13)."""
+    mismatch inside ``F.aggregate``."""
     names = list(per_partition)
     packed = (
         ranged.groupBy(_PID)
@@ -148,9 +148,8 @@ def _prefix_offsets(
             ).alias("pc")
         )
     )
-    # ONE O(P) fold over the pid-sorted partials (round-13 optimization
-    # pass), replacing the per-pid transform ∘ filter ∘ aggregate form:
-    # that shape evaluated O(P^2) interpreted lambda steps inside a
+    # ONE O(P) fold over the pid-sorted partials, not a per-pid
+    # transform ∘ filter ∘ aggregate: that shape evaluates O(P^2) interpreted lambda steps inside a
     # single task — ~1e8 steps at a 10k-partition cluster conf, a real
     # 100 TB hazard — and its nested-lambda analysis cost ~0.24 s of
     # driver time PER CALL (three calls in the RFM chain). The fold
@@ -164,8 +163,8 @@ def _prefix_offsets(
     # this module promises bit-parity with simply skips NULLs (pinned by
     # test_global_cumsum_null_partition_regression).
     #
-    # The whole fold is ONE SQL string (round 14): the Column-API form
-    # built the identical expression through hundreds of py4j round
+    # The whole fold is ONE SQL string: the Column-API form builds the
+    # identical expression through hundreds of py4j round
     # trips (~0.14 s of driver time per call, 3 calls in the RFM chain);
     # one expr() is one parse. The accumulator sums are positional
     # (a_0..a_{k-1}, in `names` order); every offset name goes through
@@ -201,14 +200,13 @@ def global_row_number(
     order_cols,
     rank_col: str = "rk",
     total_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact 1-based global ``row_number`` over ``order_cols`` (a total
     order) with no single-partition exchange; optionally attaches the
     total row count as ``total_col`` (same broadcast join, no extra
     cross join). See module docstring for the plan shape."""
     cols = _cols(order_cols)
-    ranged = _ranged(df, cols, num_partitions)
+    ranged = _ranged(df, cols, None)
     local = ranged.withColumn(
         "__rng_lrk", F.row_number().over(Window.partitionBy(_PID).orderBy(*cols))
     )
@@ -217,8 +215,8 @@ def global_row_number(
         {_OFF: F.count(F.lit(1)).cast("bigint")},
         with_total=bool(total_col),
     )
-    # one select instead of withColumn + rename + drop (round 14: each
-    # DataFrame op is a full py4j-analysis round trip; the output column
+    # one select instead of withColumn + rename + drop (each DataFrame
+    # op is a full py4j-analysis round trip; the output column
     # order is unchanged — df's columns, then total, then rank)
     outputs = {total_col: F.col(_TOT)} if total_col else {}
     outputs[rank_col] = (F.col(_OFF) + F.col("__rng_lrk")).cast("bigint")
@@ -232,7 +230,6 @@ def global_ntile(
     n: int,
     order_cols,
     bucket_col: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact ``ntile(n) OVER (ORDER BY order_cols)`` (larger buckets
     first, identical to Spark's and DuckDB's window ntile) computed from
@@ -242,7 +239,7 @@ def global_ntile(
     # below would instead compute `% 0` → NULL buckets under non-ANSI
     # sessions (and n is f-string-interpolated — keep it an int)
     # reject bool explicitly: isinstance(True, int) holds, and ntile(True)
-    # would silently mean ntile(1) (ADVICE r10)
+    # would silently mean ntile(1)
     if not isinstance(n, int) or isinstance(n, bool) or n < 1:
         raise ValueError(f"global_ntile: n must be a positive int, got {n!r}")
     ranked = global_row_number(
@@ -250,7 +247,6 @@ def global_ntile(
         order_cols,
         rank_col="__nt_rk",
         total_col="__nt_n",
-        num_partitions=num_partitions,
     )
     # Pure integer arithmetic (SQL `div`): with q = N div n, r = N mod n,
     # ranks 1..r*(q+1) fall in the first r (larger) buckets; the rest in
@@ -281,9 +277,9 @@ def global_cumsum(
     domain: token counts, arm counts, byte sizes); float inputs would
     re-associate the summation order.
 
-    NULL semantics match the window form exactly (round-10 self-review —
-    the fold previously NULL-poisoned every partition after an all-NULL
-    one): window running-sum SKIPS NULLs, and a row whose entire prefix
+    NULL semantics match the window form exactly (a naive fold
+    NULL-poisons every partition after an all-NULL one): window
+    running-sum SKIPS NULLs, and a row whose entire prefix
     holds no non-NULL value gets NULL. The offsets therefore carry a
     non-null COUNT alongside each sum: cum is NULL iff the local running
     sum is NULL (all-NULL local prefix) AND no earlier partition held a
@@ -367,9 +363,9 @@ def global_cummin(
         .agg(F.collect_list(F.struct(_PID, "m")).alias("pc"))
     )
     # ONE O(P) fold over the pid-sorted partials — the least-merge twin
-    # of `_prefix_offsets`'s sum fold (ported round 14 per VERDICT r13
-    # #2; the previous per-pid transform ∘ filter ∘ aggregate form was
-    # O(P²) interpreted lambda steps inside one task). The fold carries
+    # of `_prefix_offsets`'s sum fold (a per-pid transform ∘ filter ∘
+    # aggregate form is O(P²) interpreted lambda steps inside one
+    # task). The fold carries
     # one running minimum; element k's emitted offset is the minimum
     # accumulated BEFORE folding it — exactly "min over all lower pids".
     # NULL semantics preserved verbatim: the running min starts NULL

@@ -35,6 +35,41 @@ def _dot(a: str, b: str):
     return F.expr(_DOT.format(a=a, b=b))
 
 
+def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm): every embedding as array<double> with its L2
+    norm, computed once per row — per pair it would cost two extra dot
+    products for identical doubles (sqrt of the same sum in the same
+    order)."""
+    return (
+        parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
+        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .withColumn("nrm", F.sqrt(_dot("v", "v")))
+    )
+
+
+def _cosine() -> "F.Column":
+    """The exact cosine of query vector `qv` (norm `qnrm`) and row vector
+    `v` (norm `nrm`), rounded to 6 places; `_COSINE_SQL` is the oracle
+    twin."""
+    return F.round(_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 6)
+
+
+def _exact_top5(emb: DataFrame, corpus: DataFrame) -> DataFrame:
+    """The exact top-5 cosine neighbours of the 5 query vectors
+    (`vec_id < 5` of the `_normed_embeddings` relation `emb`) among the
+    other rows of `corpus`, a subset of `emb`: the queries broadcast and
+    the corpus is scanned map-only."""
+    q = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+    )
+    pairs = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
+        "qid", F.col("vec_id").alias("nid"), _cosine().alias("cosine")
+    )
+    return _top5(pairs)
+
+
 def _top5(pairs: DataFrame) -> DataFrame:
     """The exact top-5 cut every (qid, nid, cosine) tier ends in: each
     query's 5 best neighbours by cosine, ties broken by nid, with their
@@ -48,13 +83,17 @@ def _top5(pairs: DataFrame) -> DataFrame:
     )
 
 
-_COSINE_TOPK_ORACLE = """
+# the exact cosine of query vector `qv` and row vector `v`, rounded to 6
+# places: the oracles' twin of _cosine
+_COSINE_SQL = """round(list_dot_product(qv, v)
+               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))), 6)"""
+
+_COSINE_TOPK_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5),
 pairs AS (
   SELECT qid, e.vec_id AS nid,
-         round(list_dot_product(qv, v)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))), 6)
+         {_COSINE_SQL}
            AS cosine
   FROM q, e
   WHERE e.vec_id <> qid
@@ -74,43 +113,43 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for 5 query vectors: broadcast the queries,
     one map-only pass over the corpus, per-query top-k window. The exactness
     baseline every ANN tier is measured against."""
-    # precompute each row's L2 norm once — computing it per pair costs two
-    # extra dot products per (query, corpus) pair for identical doubles
-    # (sqrt of the same sum in the same order)
-    emb = (
-        parallelize_scan(
-            load_tables(spark, sf_dir)["embeddings"], "vec_id"
-        )
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    pairs = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("vec_id").alias("nid"),
-            F.round(
-                _dot("qv", "v") / (F.col("qnrm") * F.col("nrm")),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    return _top5(pairs)
+    emb = _normed_embeddings(spark, sf_dir)
+    return _exact_top5(emb, emb)
 
 
 _N_TABLES = 8  # independent hash tables
 _N_BITS = 6  # sign bits per table → 64 buckets/table
 
 
-def _hyperplanes(dim: int = 64) -> np.ndarray:
-    """Fixed-seed random hyperplanes (N_TABLES·N_BITS, dim) — deterministic
-    across runs and executor counts."""
-    return np.random.RandomState(42).randn(_N_TABLES * _N_BITS, dim)
+def _hyperplanes() -> np.ndarray:
+    """Fixed-seed random hyperplanes (N_TABLES·N_BITS, 64) for the 64-dim
+    embeddings — deterministic across runs and executor counts."""
+    return np.random.RandomState(42).randn(_N_TABLES * _N_BITS, 64)
+
+
+def _probe_buckets() -> "F.Column":
+    """Multi-probe LSH over the `bkts` column: one array of (tbl, bucket)
+    structs holding, for every table, the row's own bucket and each
+    bucket within Hamming radius 2 of it (1 + 6 + 15 = 22 per table)."""
+    probes = []
+    for t in range(_N_TABLES):
+        b = F.col("bkts")[t]
+        probes.append(F.struct(F.lit(t).alias("tbl"), b.alias("bucket")))
+        for i in range(_N_BITS):
+            probes.append(
+                F.struct(
+                    F.lit(t).alias("tbl"),
+                    b.bitwiseXOR(F.lit(1 << i)).alias("bucket"),
+                )
+            )
+            for j in range(i + 1, _N_BITS):
+                probes.append(
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        b.bitwiseXOR(F.lit((1 << i) | (1 << j))).alias("bucket"),
+                    )
+                )
+    return F.array(*probes)
 
 
 def _bucket_kernel(vs: pd.Series) -> pd.Series:
@@ -179,28 +218,10 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # query side: own bucket + every 1-bit and 2-bit flip per table
     q = emb.filter(F.col("vec_id") < 5)
-    probes = []
-    for t in range(_N_TABLES):
-        b = F.col("bkts")[t]
-        probes.append(F.struct(F.lit(t).alias("tbl"), b.alias("bucket")))
-        for i in range(_N_BITS):
-            probes.append(
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    b.bitwiseXOR(F.lit(1 << i)).alias("bucket"),
-                )
-            )
-            for j in range(i + 1, _N_BITS):
-                probes.append(
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        b.bitwiseXOR(F.lit((1 << i) | (1 << j))).alias("bucket"),
-                    )
-                )
     queries = q.select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
-        F.explode_outer(F.array(*probes)).alias("tb"),
+        F.explode_outer(_probe_buckets()).alias("tb"),
     ).select("qid", "qv", "tb.tbl", "tb.bucket")
     candidates = (
         corpus.join(
@@ -269,40 +290,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The bucketed relation feeds candidate generation (both sides) and
     # exact verification (both probes) — persist so the pandas-UDF bucket
     # pass and the norm computation run once.
-    emb = (
-        parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-        .withColumn("bkts", lsh_bucket_ids("v"))
+    emb = tracked_persist(
+        _normed_embeddings(spark, sf_dir).withColumn("bkts", lsh_bucket_ids("v"))
     )
-    emb = tracked_persist(emb)
     # corpus side: exact (table, bucket) per table
     corpus = emb.select(
         "vec_id", F.posexplode_outer("bkts").alias("tbl", "bucket")
     )
     # probe side: own bucket + every 1-bit and 2-bit flip per table
-    probes = []
-    for t in range(_N_TABLES):
-        b = F.col("bkts")[t]
-        probes.append(F.struct(F.lit(t).alias("tbl"), b.alias("bucket")))
-        for i in range(_N_BITS):
-            probes.append(
-                F.struct(
-                    F.lit(t).alias("tbl"),
-                    b.bitwiseXOR(F.lit(1 << i)).alias("bucket"),
-                )
-            )
-            for j in range(i + 1, _N_BITS):
-                probes.append(
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        b.bitwiseXOR(F.lit((1 << i) | (1 << j))).alias(
-                            "bucket"
-                        ),
-                    )
-                )
     probe_side = emb.select(
-        "vec_id", F.explode_outer(F.array(*probes)).alias("tb")
+        "vec_id", F.explode_outer(_probe_buckets()).alias("tb")
     ).select(F.col("vec_id").alias("pid"), "tb.tbl", "tb.bucket")
     candidates = (
         probe_side.join(
@@ -493,8 +490,8 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries kilobytes. This beats any driver-side vector summation and
     needs no UDF.
 
-    Centroid values hardened round 8 (sf0.001 stress sweep): round(avg)
-    over raw floats is a .xxxx5-boundary lottery across engines —
+    Centroid values are exact: round(avg) over raw floats is a
+    .xxxx5-boundary lottery across engines —
     components quantize to integer micro-units per row, sum as BIGINT,
     divide by the BIGINT count, floor-round; every op is bit-identical
     on both sides (and an exactly-zero integer sum yields +0.0, never
@@ -530,7 +527,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ filtered vector search
 
-_FILTERED_TOPK_ORACLE = """
+_FILTERED_TOPK_ORACLE = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 keep AS (
   SELECT doc_id FROM documents WHERE lang = 'en' AND n_chars >= 200
@@ -538,8 +535,7 @@ keep AS (
 q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 5),
 pairs AS (
   SELECT qid, e.vec_id AS nid,
-         round(list_dot_product(qv, v)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))), 6)
+         {_COSINE_SQL}
            AS cosine
   FROM q, e
   WHERE e.vec_id <> qid AND e.vec_id IN (SELECT doc_id FROM keep)
@@ -580,23 +576,9 @@ def similarity_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("lang") == "en") & (F.col("n_chars") >= 200))
         .select("doc_id")
     )
-    emb = (
-        parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-    )
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     corpus = emb.join(docs_keep, emb["vec_id"] == docs_keep["doc_id"], "left_semi")
-    pairs = corpus.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        F.col("vec_id").alias("nid"),
-        F.round(_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 6).alias("cosine"),
-    )
-    return _top5(pairs)
+    return _exact_top5(emb, corpus)
 
 
 # ----------------------------------- product quantization + ADC retrieval
@@ -727,30 +709,29 @@ def _pq_scored_over(
     """The encode → LUT → ADC machinery over a normalized corpus (column
     `vn`), the collected query rows (qid, qvn) sorted by qid, and a
     trained codebook. Its 10x/100x scale curve (20k/200k synthetic
-    vectors) is SCALE.md "Round-10 scale curves" and "Round-11: PQ-ADC
-    encode+score fusion"; the last numbers are the `pq_adc_*` keys of
-    the `experiments` block in BENCH_local_r14opt_final.json.
+    vectors) is in SCALE.md's PQ scale-curve and encode+score fusion
+    sections; the last numbers are the `pq_adc_*` keys of the
+    `experiments` block in BENCH_local_r14opt_final.json.
 
-    Round-10 rework (the r10 PQ scale curve caught it): the original ADC
-    join broadcast the per-query (M x k) LUT as a COLUMN and scored with
-    a higher-order `aggregate(transform(...))` — which materialized the
-    16 KB LUT struct into EVERY (query, code-row) output row (at the
-    curve's 200k-vector point: 1M rows x 16 KB ≈ 16 GB of row traffic,
-    21-41 s measured; invisible at the 2k-vector fixture). The LUTs are
-    driver-bounded (|q| x M x k doubles, 80 KB at 5 queries), so they
-    now ride the Arrow kernel's task closure — what the registered
-    query's docstring always claimed — and each code row is scored for
-    ALL queries in one vectorized numpy gather, emitting thin
-    (nid, qid, adc_score) rows only. Query vectors come from one
+    The LUTs never become a column: broadcasting the per-query (M x k)
+    LUT as a COLUMN and scoring with a higher-order
+    `aggregate(transform(...))` materializes the 16 KB LUT struct into
+    EVERY (query, code-row) output row (at the curve's 200k-vector
+    point: 1M rows x 16 KB ≈ 16 GB of row traffic, 21-41 s measured;
+    invisible at the 2k-vector fixture). The LUTs are driver-bounded
+    (|q| x M x k doubles, 80 KB at 5 queries), so they ride the Arrow
+    kernel's task closure, and each code row is scored for ALL queries
+    in one vectorized numpy gather, emitting thin (nid, qid, adc_score)
+    rows only. Query vectors come from one
     bounded |q|-row collect (serving-scale, like the codebook's own
     bounded-sample fit).
 
-    Round-11 fusion (VERDICT r10 #2): encode and ADC used to be two
-    CHAINED pandas UDFs — two ArrowEvalPython nodes, so every corpus row
-    crossed the JVM↔Python boundary twice (vn out / codes back, then
-    codes out / scores back) and paid two kernel dispatches per batch.
-    The registered query never needs the codes as a COLUMN, so both
-    steps now run in ONE Arrow kernel pass over `vn`: argmin-encode then
+    Encode and ADC are one kernel: as two CHAINED pandas UDFs (two
+    ArrowEvalPython nodes) every corpus row crosses the JVM↔Python
+    boundary twice (vn out / codes back, then codes out / scores back)
+    and pays two kernel dispatches per batch. The registered query never
+    needs the codes as a COLUMN, so both steps run in ONE Arrow kernel
+    pass over `vn`: argmin-encode then
     LUT-gather on the same in-memory numpy batch, emitting the per-query
     score array directly. Halves the Python hops and Arrow traffic at
     every scale without reintroducing the LUT-as-column shape; a
@@ -787,7 +768,7 @@ def _pq_scored_over(
     # input and push it below the repartition exchange — which re-runs
     # the ENTIRE Arrow kernel a second time, serially, on the
     # pre-repartition partition layout, just to evaluate the filter
-    # (round-11 plan read: two ArrowEvalPython nodes for one UDF; 1.4s vs
+    # (the plan shows two ArrowEvalPython nodes for one UDF; 1.4s vs
     # 0.5s at sf0.1 and a 2x kernel tax at every scale). The kernel
     # always returns a fixed |q|-width array, so outer semantics are
     # value-identical; tests/test_plans.py pins the single-evaluation
@@ -1001,15 +982,14 @@ def embedding_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame
 
 # ----------------------------------------------------- hard-negative mining
 
-_HARD_NEG_ORACLE = """
+_HARD_NEG_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
 ),
 q AS (SELECT vec_id AS qid, label AS qlabel, v AS qv FROM e WHERE vec_id < 5),
 pairs AS (
   SELECT qid, qlabel, e.vec_id AS nid, e.label AS nlabel,
-         round(list_dot_product(qv, v)
-               / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))), 6)
+         {_COSINE_SQL}
            AS cosine
   FROM q, e
   WHERE e.label <> qlabel
@@ -1209,9 +1189,7 @@ e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
 sem_scored AS (
   SELECT vec_id AS doc_id,
-         round(list_dot_product(qv, v)
-               / (sqrt(list_dot_product(qv, qv))
-                  * sqrt(list_dot_product(v, v))), 6) AS cosine
+         {_COSINE_SQL} AS cosine
   FROM e, q WHERE vec_id <> 0
 ),
 sem AS (
@@ -1269,23 +1247,14 @@ def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.row_number().over(w_lex).alias("lex_rank"))
     )
 
-    emb = (
-        parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-    )
+    emb = _normed_embeddings(spark, sf_dir)
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
     sem_scored = (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(_dot("qv", "v") / (F.col("qnrm") * F.col("nrm")), 6).alias(
-                "cosine"
-            ),
-        )
+        .select(F.col("vec_id").alias("doc_id"), _cosine().alias("cosine"))
     )
     w_sem = Window.orderBy(F.col("cosine").desc(), "doc_id")
     sem = (

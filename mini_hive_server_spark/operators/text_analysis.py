@@ -16,21 +16,28 @@ from __future__ import annotations
 import pandas as pd  # module-level: the grouped-agg UDAF's type hint must
 # resolve from module globals (PEP 563 stringifies annotations and pyspark's
 # infer_eval_type resolves them against the defining module's namespace)
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables, parallelize_scan
 from ..persistence import tracked_persist
 from ..registry import register
 
-from ._scoring import _BM25_CTES, _doc_words, bm25_scores
-from ._text import STOPWORDS as _STOPWORDS  # noqa: E402
+from ._scoring import (
+    _BM25_CTES,
+    _DISTINCT_RATIO_SQL,
+    _STOPWORD_RATIO_SQL,
+    _doc_words,
+    bm25_scores,
+    distinct_ratio,
+    stopword_ratio,
+)
 from ._text import WORDS_DUCK as _WORDS_DUCK  # noqa: E402
 from ._text import WORDS_SPARK as _WORDS_SPARK  # noqa: E402
 
 # explicit whitespace class, NOT backslash-s: Java's class includes
 # x0B but RE2's does not, and the same pattern string feeds both
-# engines (round-11 review; the word splits got the same treatment)
+# engines (the word splits get the same treatment)
 _TOKEN_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 \\t\\n\\x0B\\f\\r]"
 
 _TOKEN_COUNT_ORACLE = f"""
@@ -69,9 +76,8 @@ SELECT doc_id,
        len(w) AS n_words,
        round(list_sum(list_transform(w, x -> length(x))) * 1.0 / len(w), 4)
          AS avg_word_len,
-       round(len(list_filter(w, x -> list_contains([{_STOPWORDS}], x)))
-             * 1.0 / len(w), 4) AS stopword_ratio,
-       round(len(list_distinct(w)) * 1.0 / len(w), 4) AS distinct_ratio
+       {_STOPWORD_RATIO_SQL} AS stopword_ratio,
+       {_DISTINCT_RATIO_SQL} AS distinct_ratio
 FROM t
 ORDER BY doc_id
 """
@@ -96,15 +102,8 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             / n_words,
             4,
         ).alias("avg_word_len"),
-        F.round(
-            F.size(F.expr(f"filter(w, x -> x IN ({_STOPWORDS}))"))
-            * F.lit(1.0)
-            / n_words,
-            4,
-        ).alias("stopword_ratio"),
-        F.round(
-            F.size(F.array_distinct(F.col("w"))) * F.lit(1.0) / n_words, 4
-        ).alias("distinct_ratio"),
+        stopword_ratio().alias("stopword_ratio"),
+        distinct_ratio().alias("distinct_ratio"),
     ).orderBy("doc_id")
 
 
@@ -277,8 +276,8 @@ def text_tokenize_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
         def eval(self, text):
             if text is None:
                 # str(None) would tokenize the literal 'none' while the
-                # oracle's regexp_split(NULL) yields no rows (round-11
-                # review) — a NULL document emits nothing
+                # oracle's regexp_split(NULL) yields no rows — a NULL
+                # document emits nothing
                 return
             for i, t in enumerate(str(text).lower().split()):
                 yield i, t
@@ -592,8 +591,6 @@ def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n").desc(), "tok")
         .limit(_ZIPF_TOP)
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.col("n").desc(), "tok")
     ranked = freq.withColumn("r", F.row_number().over(w))
     return ranked.select(
@@ -664,8 +661,8 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
     # persist + parallelize the tokenize pass: firsts (term-keyed) and
     # doc_tokens (doc-keyed) shuffle on DIFFERENT keys, so no exchange
-    # reuse applies and the docstring's 'one tokenization pass' was only
-    # true with this cache boundary (round-11 review)
+    # reuse applies and the docstring's 'one tokenization pass' is only
+    # true with this cache boundary
     w = tracked_persist(
         parallelize_scan(docs.select("doc_id", "text"), "doc_id").select(
             "doc_id", F.explode(F.expr(_WORDS_SPARK)).alias("term")
@@ -799,9 +796,8 @@ WITH t AS (
 ),
 q AS (
   SELECT doc_id, n_chars,
-         round(len(list_filter(w, x -> list_contains([{_STOPWORDS}], x)))
-               * 1.0 / len(w), 4)
-           + round(len(list_distinct(w)) * 1.0 / len(w), 4) AS score
+         {_STOPWORD_RATIO_SQL}
+           + {_DISTINCT_RATIO_SQL} AS score
   FROM t
 ),
 tiled AS (
@@ -846,21 +842,8 @@ def documents_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = parallelize_scan(docs.select("doc_id", "text", "n_chars")).select(
         "doc_id", "n_chars", F.expr(_WORDS_SPARK).alias("w")
     )
-    n_words = F.size(F.col("w"))
     scored = t.select(
-        "doc_id",
-        "n_chars",
-        (
-            F.round(
-                F.size(F.expr(f"filter(w, x -> x IN ({_STOPWORDS}))"))
-                * F.lit(1.0)
-                / n_words,
-                4,
-            )
-            + F.round(
-                F.size(F.array_distinct(F.col("w"))) * F.lit(1.0) / n_words, 4
-            )
-        ).alias("score"),
+        "doc_id", "n_chars", (stopword_ratio() + distinct_ratio()).alias("score")
     )
     tiled = global_ntile(
         scored, 10, [F.col("score").desc(), "doc_id"], "decile"
@@ -946,9 +929,9 @@ def _bpe_pair_counts(state: DataFrame) -> DataFrame:
     -pair counts weighted by word frequency. Words with a single
     remaining token have no pairs (guarded — `sequence(0, -1)` would
     DESCEND, not empty)."""
-    # ONE SQL string (round 14, guide §5 "the driver"): the Column-API
-    # form re-built the split() subtree per reference and paid ~60 py4j
-    # round trips per call (3 calls per BPE chain); expr() is one parse.
+    # ONE SQL string keeps driver time flat: the Column-API form re-built
+    # the split() subtree per reference and paid ~60 py4j round trips
+    # per call (3 calls per BPE chain); expr() is one parse.
     # The '\\]\\[' literal is the same `\]\[` regex the Column form
     # passed to F.split.
     arr = "split(substring(s, 2, length(s) - 2), '\\\\]\\\\[')"
@@ -1006,7 +989,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     rows). The state keeps the original word next to its merged token
     string, so it doubles as the word→tokens map for application.
 
-    The per-round argmax is COLLECTED to the driver (round 14) — one
+    The per-round argmax is COLLECTED to the driver — one
     bounded scalar row per merge round, the same driver-coordination
     budget as the graph family's per-round convergence counts, and
     exactly how production BPE training iterates on the aggregated
@@ -1020,7 +1003,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     plan is linear in merge depth, and the merge table is literal rows.
     Interleaved same-session A/B at sf0.1 (4 pairs, bench protocol):
     1.76 s → 1.23 s median, outputs row-identical. The `words` persist
-    (round 12) stays the one cache boundary — the corpus is still
+    stays the one cache boundary — the corpus is still
     scanned exactly once per invocation.
 
     Tokens are [a-z]+ by construction (the regexp_extract_all below),
@@ -1241,9 +1224,8 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "block",
             "df_block",
             "tf_block",
-            # both outputs derive from the ONE gaps expression — the old
-            # inline re-spelling meant a d-gap formula fix could land in
-            # gaps_csv but not max_gap or vice versa (round-11 review)
+            # both outputs derive from the ONE gaps expression, so a
+            # d-gap formula fix lands in gaps_csv and max_gap alike
             F.array_join(
                 F.transform(gaps, lambda g: g.cast("string")), ","
             ).alias("gaps_csv"),
@@ -1272,9 +1254,8 @@ def _occurrences(col: Column, pat: str) -> Column:
     arithmetic — exact integers, engine-identical (no regex dialect in
     play). Patterns are chosen without quotes or regex metacharacters."""
     return (
-        # F.replace over the PASSED column — the old f-string expr
-        # hardcoded column name `t`, silently breaking any caller whose
-        # column isn't literally named t (round-11 review)
+        # F.replace over the PASSED column, so the count works whatever
+        # the caller's column is named
         (F.length(col) - F.length(F.replace(col, F.lit(pat), F.lit(""))))
         / F.lit(len(pat))
     ).cast("bigint")
@@ -1345,7 +1326,7 @@ def text_blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------- TextRank keyword extraction (round 8)
+# ---------------------------------------- TextRank keyword extraction
 
 _TR_DAMPING = 0.85
 _TR_BASE = 0.15  # the folded (1 - damping) literal; see the ws comment
@@ -1427,9 +1408,8 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-bounded (Heaps' law: ~N^0.5); the ITERATED edge relation
     is distinct-BIGRAM-bounded, which stays far below the corpus only
     because real text is Zipf-distributed with exponent ~1 (the head
-    absorbs new adjacency mass) — the `textrank_*` scale curve (SCALE.md
-    "Driver round 9: scale-curve harness extended to the text/iterative
-    family"; last numbers in BENCH_local_r14opt_final.json's
+    absorbs new adjacency mass) — the `textrank_*` scale curve (SCALE.md's
+    scale-curve harness for the text/iterative family; last numbers in BENCH_local_r14opt_final.json's
     `experiments` block) measures 10x corpus -> 1.3x wall under a 1/k
     word law, and its documented negative result shows a flatter
     exponent-1/2 law loses the bound (distinct bigrams then grow
@@ -1455,8 +1435,8 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("p.0").alias("a"), F.col("p.1").alias("b"))
     from ..persistence import tracked_persist
 
-    # tracked_persist `edges` — the CORPUS-SCAN boundary (round-13
-    # optimization pass, guide §5 caching): `und` below references edges
+    # tracked_persist `edges` — the CORPUS-SCAN boundary: `und` below
+    # references edges
     # TWICE (the union's two arms), and BOTH `degs` and `contrib_edges`
     # materialize through `und`, so without this persist the
     # tokenize→adjacency→edge-aggregate pipeline — the only
@@ -1507,7 +1487,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # 1-0.85 = 0.15000000000000002, one ulp ABOVE the 0.15
                 # DuckDB's DECIMAL fold produces — a systematic per-node
                 # per-iteration offset, not reassociation noise
-                # (round-11 review, verified numerically)
+                # (verified numerically)
                 F.lit(_TR_BASE)
                 + _TR_DAMPING * F.coalesce("c", F.lit(0.0))
             ).alias("ws"),

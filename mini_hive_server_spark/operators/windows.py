@@ -103,31 +103,17 @@ _SESSION_GAP_US = 1_800_000_000  # 30-minute inactivity gap, microseconds
 
 def session_flags(events: DataFrame, *cols: str) -> DataFrame:
     """(user_id, event_id, *cols, ts, new_session) — the 30-min-gap
-    gaps-and-islands session-start flag, shared by every batch
-    sessionizer (events_sessionize here; top-paths and bounce-rate in
-    behavior.py — round-11 review: three verbatim copies meant a
-    boundary-precision fix had to land three times or the sessionizers
-    silently diverged). Microsecond precision on purpose: unix_timestamp
-    truncates to whole seconds and misclassifies gaps within ~1 s of the
-    30-min boundary (the events fixture carries sub-second micros)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return events.select(
-        "user_id",
-        "event_id",
-        *cols,
-        "ts",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (
-                F.unix_micros(F.col("ts"))
-                - F.unix_micros(F.lag("ts").over(w))
-                > _SESSION_GAP_US
-            ),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
+    gaps-and-islands session-start flag, the one Spark definition every
+    batch sessionizer reads (events_sessionize here; top-paths and
+    bounce-rate in behavior.py), so the sessionizers cannot diverge on
+    the boundary. `SESSION_FLAGS_SQL` is its oracle twin. Microsecond
+    precision on purpose: unix_timestamp truncates to whole seconds and
+    misclassifies gaps within ~1 s of the 30-min boundary (the events
+    fixture carries sub-second micros)."""
+    prev = F.lag("ts").over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
+    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev)
+    flag = F.when(prev.isNull() | (gap_us > _SESSION_GAP_US), 1).otherwise(0)
+    return events.select("user_id", "event_id", *cols, "ts", flag.alias("new_session"))
 
 
 def sessionized(events: DataFrame, *cols: str) -> DataFrame:
@@ -135,24 +121,24 @@ def sessionized(events: DataFrame, *cols: str) -> DataFrame:
     user): the full gaps-and-islands sessionizer for consumers that
     need per-session grouping keys."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return session_flags(events, *cols).withColumn(
-        "sid",
-        F.sum("new_session").over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return session_flags(events, *cols).withColumn("sid", F.sum("new_session").over(run))
 
 
-_SESSION_ORACLE = """
-WITH ordered AS (
-  SELECT user_id,
+# the oracles' `ordered(user_id, event_id, event_type, t, new_session)`
+# CTE over events: the twin of session_flags
+SESSION_FLAGS_SQL = f"""ordered AS (
+  SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS t,
          CASE WHEN lag(CAST(ts AS TIMESTAMP)) OVER w IS NULL
                 OR epoch_us(CAST(ts AS TIMESTAMP))
-                   - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w) > 1800000000
+                   - epoch_us(lag(CAST(ts AS TIMESTAMP)) OVER w) > {_SESSION_GAP_US}
               THEN 1 ELSE 0 END AS new_session
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id)
-)
+)"""
+
+_SESSION_ORACLE = f"""
+WITH {SESSION_FLAGS_SQL}
 SELECT user_id, CAST(sum(new_session) AS BIGINT) AS n_sessions, count(*) AS n_events
 FROM ordered
 GROUP BY user_id
@@ -163,9 +149,11 @@ ORDER BY user_id
 @register("events_sessionize", oracle=_SESSION_ORACLE, tags=("event-time", "window-fn"))
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap) as gaps-and-islands: lag +
-    conditional flag + per-user count. Batch-checkable equivalent of
-    `session_window`; the streaming module exposes the native
-    `session_window` form."""
+    conditional flag + per-user count. A gap of exactly 30 minutes stays
+    in the session here (`>`); the streaming module's native
+    `session_window` form (`streaming_sessionize`) uses a half-open
+    interval and starts a new session at exactly 30 minutes (`>=`), so
+    the two agree except on gaps of exactly the threshold."""
     events = load_tables(spark, sf_dir)["events"]
     flagged = session_flags(events)
     return (
@@ -416,9 +404,9 @@ def events_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (completion_date stored but unused, index.js:499). DuckDB's dow is
     0=Sunday; Spark's dayofweek is 1=Sunday, so shift by one.
 
-    avg_value hardened round 8 (sf0.001 stress sweep): round(avg(double))
-    is a boundary lottery — accumulation order can move the mean across a
-    .xx5 tie, and the engines' tie handling differs. Instead, quantize to
+    avg_value is not round(avg(double)): that is a boundary lottery —
+    accumulation order can move the mean across a .xx5 tie, and the
+    engines' tie handling differs. Instead, quantize to
     integer micro-units per row (one identical IEEE fold), sum as BIGINT,
     divide by the BIGINT count, and floor-round — every op sees
     bit-identical operands on both engines, so no boundary exists."""

@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 from ..catalog import load_tables
 from ..registry import register
 
-# Money discipline (round-10 self-review — the same .xx5 tie class the
-# reference_model._cents retrofit fixed after a real round-8 driver red):
-# `round(sum(<double product>), 2)` lets the two engines' different
+# Money discipline (the same .xx5 tie class reference_model._cents
+# guards against): `round(sum(<double product>), 2)` lets the two
+# engines' different
 # summation orders land on opposite sides of a half-cent boundary. Both
 # sides now fold each term to EXACT integer units first (o_totalprice is
 # 2-decimal → cents; the price*(1-disc) product is 4-decimal → ten-
@@ -26,7 +26,27 @@ from ..registry import register
 # 2-decimal value with one identical IEEE op sequence. Exact while the
 # integer sum stays under 2^53 (≈ $9e11 per tenant — far above any
 # per-tenant balance).
-_BUYER_HOME_ORACLE = """
+
+
+def tenk_sql(x: str) -> str:
+    """The SQL expression `x` folded to exact integer ten-thousandths,
+    the unit of a 4-decimal money product (the oracles' twin of
+    `tpch.tenk`)."""
+    return f"CAST(floor({x} * 10000 + 0.5) AS BIGINT)"
+
+
+def tenk_sum_sql(units: str) -> str:
+    """The exact sum of ten-thousandths `units` shown as 2-decimal money
+    (the oracles' twin of `tpch.tenk_sum`)."""
+    return f"floor((sum({units}) + 50) / 100.0) / 100.0"
+
+
+# an approved submission's value in ten-thousandths, 0 for the others
+_APPROVED_TENK = f"""CASE WHEN l_linestatus = 'F'
+                          THEN {tenk_sql("l_extendedprice * (1 - l_discount)")}
+                          ELSE 0 END"""
+
+_BUYER_HOME_ORACLE = f"""
 SELECT * FROM
   (SELECT c_name AS name, c_acctbal AS coins
    FROM customer WHERE c_custkey = 42)
@@ -40,11 +60,7 @@ CROSS JOIN
   (SELECT count(*)                                AS n_submissions,
           count(*) FILTER (WHERE l_linestatus = 'O')    AS n_pending,
           count(*) FILTER (WHERE l_linestatus = 'F')    AS n_approved,
-          floor((sum(CASE WHEN l_linestatus = 'F'
-                          THEN CAST(floor(l_extendedprice * (1 - l_discount)
-                                          * 10000 + 0.5) AS BIGINT)
-                          ELSE 0 END) + 50) / 100.0) / 100.0
-                                                  AS approved_value
+          {tenk_sum_sql(_APPROVED_TENK)} AS approved_value
    FROM lineitem
    WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_custkey = 42))
 """
@@ -104,7 +120,7 @@ def buyer_home_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return profile.crossJoin(order_stats).crossJoin(sub_stats)
 
 
-_WORKER_HOME_ORACLE = """
+_WORKER_HOME_ORACLE = f"""
 SELECT * FROM
   (SELECT s_name AS name, s_acctbal AS coins
    FROM supplier WHERE s_suppkey = 7)
@@ -112,11 +128,7 @@ CROSS JOIN
   (SELECT count(*)                             AS total_submissions,
           count(*) FILTER (WHERE l_linestatus = 'O') AS pending_submissions,
           count(*) FILTER (WHERE l_linestatus = 'F') AS approved_submissions,
-          floor((sum(CASE WHEN l_linestatus = 'F'
-                          THEN CAST(floor(l_extendedprice * (1 - l_discount)
-                                          * 10000 + 0.5) AS BIGINT)
-                          ELSE 0 END) + 50) / 100.0) / 100.0
-                                               AS total_earning
+          {tenk_sum_sql(_APPROVED_TENK)} AS total_earning
    FROM lineitem WHERE l_suppkey = 7)
 """
 

@@ -28,9 +28,24 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..registry import register
+from .lifecycle import tenk_sql, tenk_sum_sql
 
-# Money discipline (round-10, same retrofit as plans/lifecycle.py): the
-# old `round(sum(<double>), 2)` / `round(avg(<double>), N)` spellings are
+
+def tenk(x: "F.Column") -> "F.Column":
+    """`x` folded to exact integer ten-thousandths, the unit of a
+    4-decimal money product; `lifecycle.tenk_sql` is the oracle twin."""
+    return F.floor(x * 10000 + F.lit(0.5)).cast("bigint")
+
+
+def tenk_sum(units: "F.Column") -> "F.Column":
+    """The exact sum of ten-thousandths `units` shown as 2-decimal money
+    (half-up to cents, then one IEEE division); `lifecycle.tenk_sum_sql`
+    is the oracle twin."""
+    return F.floor((F.sum(units) + F.lit(50)) / F.lit(100.0)) / F.lit(100.0)
+
+
+# Money discipline (as in plans/lifecycle.py): the
+# `round(sum(<double>), 2)` / `round(avg(<double>), N)` spellings are
 # the .xx5 tie class — Spark's partial-agg summation order vs DuckDB's
 # sequential order can land the float sum on opposite sides of a
 # half-unit boundary, and even the SAME double rounds differently
@@ -54,14 +69,13 @@ from ..registry import register
 # conversion needs an integer-moment rewrite whose n*Σx² term can
 # overflow ANSI bigint at extreme per-key cardinality, so the exposure
 # is documented instead of traded for an overflow at scale.
-_Q1_ORACLE = """
+_Q1_ORACLE = f"""
 SELECT
   l_returnflag,
   l_linestatus,
   sum(CAST(floor(l_quantity + 0.5) AS BIGINT)) / 1.0               AS sum_qty,
   sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) / 100.0  AS sum_base_price,
-  floor((sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000
-                        + 0.5) AS BIGINT)) + 50) / 100.0) / 100.0  AS sum_disc_price,
+  {tenk_sum_sql(tenk_sql("l_extendedprice * (1 - l_discount)"))} AS sum_disc_price,
   floor((sum(CAST(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax)
                         * 1000000 + 0.5) AS BIGINT)) + 5000)
         / 10000.0) / 100.0                                         AS sum_charge,
@@ -94,7 +108,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = F.lit(0.5)
     qty_i = F.floor(F.col("l_quantity") + half).cast("bigint")
     cents_price = F.floor(F.col("l_extendedprice") * 100 + half).cast("bigint")
-    tenk_dp = F.floor(disc_price * 10000 + half).cast("bigint")
     um_charge = F.floor(
         disc_price * (1 + F.col("l_tax")) * 1000000 + half
     ).cast("bigint")
@@ -106,10 +119,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (F.sum(qty_i) / F.lit(1.0)).alias("sum_qty"),
             (F.sum(cents_price) / F.lit(100.0)).alias("sum_base_price"),
-            (
-                F.floor((F.sum(tenk_dp) + F.lit(50)) / F.lit(100.0))
-                / F.lit(100.0)
-            ).alias("sum_disc_price"),
+            tenk_sum(tenk(disc_price)).alias("sum_disc_price"),
             (
                 F.floor((F.sum(um_charge) + F.lit(5000)) / F.lit(10000.0))
                 / F.lit(100.0)
@@ -132,11 +142,10 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q3_ORACLE = """
+_Q3_ORACLE = f"""
 SELECT
   l_orderkey,
-  floor((sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000
-                        + 0.5) AS BIGINT)) + 50) / 100.0) / 100.0 AS revenue,
+  {tenk_sum_sql(tenk_sql("l_extendedprice * (1 - l_discount)"))} AS revenue,
   strftime(o_orderdate, '%Y-%m-%d')                 AS orderdate,
   o_orderpriority
 FROM customer
@@ -179,24 +188,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
-            # exact integer ten-thousandths fold (see the q1 money-
-            # discipline comment)
-            (
-                F.floor(
-                    (
-                        F.sum(
-                            F.floor(
-                                F.col("l_extendedprice")
-                                * (1 - F.col("l_discount"))
-                                * 10000
-                                + F.lit(0.5)
-                            ).cast("bigint")
-                        )
-                        + F.lit(50)
-                    )
-                    / F.lit(100.0)
-                )
-                / F.lit(100.0)
+            tenk_sum(
+                tenk(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("revenue")
         )
         .select(
@@ -210,10 +203,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q5_ORACLE = """
+_Q5_ORACLE = f"""
 SELECT n_name,
-       floor((sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000
-                             + 0.5) AS BIGINT)) + 50) / 100.0) / 100.0 AS revenue
+       {tenk_sum_sql(tenk_sql("l_extendedprice * (1 - l_discount)"))} AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -267,24 +259,8 @@ def q5_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("n_name")
         .agg(
-            # exact integer ten-thousandths fold (see the q1 money-
-            # discipline comment)
-            (
-                F.floor(
-                    (
-                        F.sum(
-                            F.floor(
-                                F.col("l_extendedprice")
-                                * (1 - F.col("l_discount"))
-                                * 10000
-                                + F.lit(0.5)
-                            ).cast("bigint")
-                        )
-                        + F.lit(50)
-                    )
-                    / F.lit(100.0)
-                )
-                / F.lit(100.0)
+            tenk_sum(
+                tenk(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("revenue")
         )
         .orderBy(F.col("revenue").desc(), F.col("n_name"))
@@ -394,10 +370,9 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q7_ORACLE = """
+_Q7_ORACLE = f"""
 SELECT supp_nation, cust_nation, yr,
-       floor((sum(CAST(floor(volume * 10000 + 0.5) AS BIGINT)) + 50)
-             / 100.0) / 100.0 AS revenue
+       {tenk_sum_sql(tenk_sql("volume"))} AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
          year(l_shipdate) AS yr,
@@ -463,32 +438,17 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_nation", "cust_nation", "yr")
         # exact integer ten-thousandths fold (see the q1 money-discipline
         # comment); volume is the 4-decimal disc_price product
-        .agg(
-            (
-                F.floor(
-                    (
-                        F.sum(
-                            F.floor(
-                                F.col("volume") * 10000 + F.lit(0.5)
-                            ).cast("bigint")
-                        )
-                        + F.lit(50)
-                    )
-                    / F.lit(100.0)
-                )
-                / F.lit(100.0)
-            ).alias("revenue")
-        )
+        .agg(tenk_sum(tenk(F.col("volume"))).alias("revenue"))
         .orderBy("supp_nation", "cust_nation", "yr")
     )
 
 
-_Q8_ORACLE = """
+_Q8_ORACLE = f"""
 SELECT yr,
        floor((sum(CASE WHEN supp_nation = 'NATION_5'
-                       THEN CAST(floor(volume * 10000 + 0.5) AS BIGINT)
+                       THEN {tenk_sql("volume")}
                        ELSE 0 END)
-              / sum(CAST(floor(volume * 10000 + 0.5) AS BIGINT)))
+              / sum({tenk_sql("volume")}))
              * 1000000.0 + 0.5) / 1000000.0 AS mkt_share
 FROM (
   SELECT year(o_orderdate) AS yr,
@@ -560,16 +520,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.sum(
                             F.when(
                                 F.col("supp_nation") == "NATION_5",
-                                F.floor(
-                                    F.col("volume") * 10000 + F.lit(0.5)
-                                ).cast("bigint"),
+                                tenk(F.col("volume")),
                             ).otherwise(F.lit(0))
                         )
-                        / F.sum(
-                            F.floor(
-                                F.col("volume") * 10000 + F.lit(0.5)
-                            ).cast("bigint")
-                        )
+                        / F.sum(tenk(F.col("volume")))
                     )
                     * F.lit(1000000.0)
                     + F.lit(0.5)
@@ -622,14 +576,12 @@ def q13_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q14_ORACLE = """
+_Q14_ORACLE = f"""
 SELECT floor(
          (100.0 * sum(CASE WHEN p_type = 'PROMO'
-                           THEN CAST(floor(l_extendedprice * (1 - l_discount)
-                                           * 10000 + 0.5) AS BIGINT)
+                           THEN {tenk_sql("l_extendedprice * (1 - l_discount)")}
                            ELSE 0 END)
-          / sum(CAST(floor(l_extendedprice * (1 - l_discount) * 10000
-                           + 0.5) AS BIGINT)))
+          / sum({tenk_sql("l_extendedprice * (1 - l_discount)")}))
          * 10000.0 + 0.5) / 10000.0 AS promo_revenue
 FROM lineitem
 JOIN part ON l_partkey = p_partkey
@@ -668,10 +620,10 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * F.sum(
                             F.when(
                                 F.col("p_type") == "PROMO",
-                                F.floor(vol * 10000 + F.lit(0.5)).cast("bigint"),
+                                tenk(vol),
                             ).otherwise(F.lit(0))
                         )
-                        / F.sum(F.floor(vol * 10000 + F.lit(0.5)).cast("bigint"))
+                        / F.sum(tenk(vol))
                     )
                     * F.lit(10000.0)
                     + F.lit(0.5)

@@ -31,15 +31,18 @@ import time
 from pyspark.sql import SparkSession
 
 DEFAULT_THRIFT_PORT = 10815
+# how long start_thrift_server waits for the endpoint to accept TCP
+_THRIFT_START_TIMEOUT_S = 90
 
 
 def get_thrift_spark(
     port: int = DEFAULT_THRIFT_PORT,
     warehouse_dir: str = "/tmp/mhs_thrift_warehouse",
     metastore_dir: str = "/tmp/mhs_thrift_metastore",
-    shuffle_partitions: int = 8,
 ) -> SparkSession:
-    """Hive-enabled session pre-configured to host the Thrift endpoint.
+    """Hive-enabled session pre-configured to host the Thrift endpoint,
+    one local thread and one shuffle partition per core
+    (`session.local_cpu_count`, as `get_spark` sizes its session).
 
     The port must be fixed at session build time: `hive.server2.thrift.port`
     is read from the HiveConf snapshotted when the Hive session state
@@ -51,12 +54,12 @@ def get_thrift_spark(
     getOrCreate against an existing session silently IGNORES every
     build-time config here (thrift port, hive catalog, metastore), and
     the failure mode is a server that binds the wrong port with the
-    wrong catalog 90 seconds later (round-10 self-review)."""
+    wrong catalog 90 seconds later."""
     # cross-thread AND liveness-checked (mirrors session.get_hive_spark):
     # getActiveSession alone misses sessions created on other threads,
     # and a stale _instantiatedSession left behind by a STOPPED context
-    # must not permanently block thrift startup (round-11 review)
-    from mini_hive_server_spark.session import existing_live_session
+    # must not permanently block thrift startup
+    from mini_hive_server_spark.session import existing_live_session, local_cpu_count
 
     existing = existing_live_session()
     if existing is not None:
@@ -67,10 +70,11 @@ def get_thrift_spark(
             "Boot the server in a fresh process (see serve_mini_hive / "
             "tests/test_thrift_server.py)."
         )
+    cpus = local_cpu_count()
     return (
-        SparkSession.builder.master(f"local[{shuffle_partitions}]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("mini-hive-server-spark-thrift")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", warehouse_dir)
@@ -84,19 +88,16 @@ def get_thrift_spark(
     )
 
 
-def start_thrift_server(
-    spark: SparkSession, port: int = DEFAULT_THRIFT_PORT, timeout_s: int = 90
-) -> None:
+def start_thrift_server(spark: SparkSession, port: int = DEFAULT_THRIFT_PORT) -> None:
     """Start HiveThriftServer2 inside this session's JVM and block until
-    the TCP port accepts connections. The session must come from
+    the TCP port accepts connections (`_THRIFT_START_TIMEOUT_S` at most). The session must come from
     `get_thrift_spark` (the port conf is build-time-only, see there).
 
     Pre-checks that nothing already answers on the port: the readiness
     probe below can only see "something accepts TCP" — if a stale server
     from a previous run still held the port, this JVM's bind would fail
     while the probe false-positively reported success against the OLD
-    process and clients would silently query stale data (round-10
-    self-review)."""
+    process and clients would silently query stale data."""
     try:
         socket.create_connection(("localhost", port), 1).close()
     except OSError:
@@ -112,14 +113,14 @@ def start_thrift_server(
     spark._jvm.org.apache.spark.sql.hive.thriftserver.HiveThriftServer2.startWithContext(
         jctx
     )
-    deadline = time.monotonic() + timeout_s
+    deadline = time.monotonic() + _THRIFT_START_TIMEOUT_S
     while time.monotonic() < deadline:
         try:
             socket.create_connection(("localhost", port), 1).close()
             return
         except OSError:
             time.sleep(0.5)
-    raise TimeoutError(f"Thrift server did not open port {port} in {timeout_s}s")
+    raise TimeoutError(f"Thrift server did not open port {port} in {_THRIFT_START_TIMEOUT_S}s")
 
 
 def _beeline_path() -> str:
@@ -159,8 +160,7 @@ def beeline_sql(sql: str, port: int = DEFAULT_THRIFT_PORT) -> list[list[str]]:
     # prefix wherever it appears, then every non-empty line is a data row
     # (header suppressed above). csv2 double-quotes any cell containing a
     # comma/quote, so parse with the csv module — a naive split(',')
-    # corrupted such cells into extra columns with literal quote chars
-    # (round-10 self-review).
+    # corrupts such cells into extra columns with literal quote chars.
     import csv as _csv
     import io as _io
 
@@ -220,7 +220,7 @@ def _create_reference_tables(spark: SparkSession, database: str) -> None:
         ).saveAsTable(f"{database}.{t}")
 
 
-def main(argv: list[str] | None = None) -> None:
+def main() -> None:
     """`python -m mini_hive_server_spark.server` — stand up the engine as
     an actual server: fixture tables (and optionally the reference-shaped
     model) as catalogued tables behind a listening Thrift/JDBC endpoint.
@@ -246,7 +246,7 @@ def main(argv: list[str] | None = None) -> None:
         help="skip the synthesized reference-shaped collections "
         "(served by default)",
     )
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = serve_fixtures(
         args.sf_dir,

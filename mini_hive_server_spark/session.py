@@ -41,8 +41,8 @@ def existing_live_session() -> "SparkSession | None":
     still LIVE — PySpark can leave `_instantiatedSession` pointing at a
     stopped session, and treating that corpse as "existing" would
     permanently block first-session-only paths like the thrift/hive
-    factories (round-11 review; the liveness probe mirrors PySpark's own
-    getOrCreate: `session._sc._jsc is not None`)."""
+    factories (the liveness probe mirrors PySpark's own getOrCreate:
+    `session._sc._jsc is not None`)."""
     for s in (
         SparkSession.getActiveSession(),
         getattr(SparkSession, "_instantiatedSession", None),
@@ -58,7 +58,6 @@ def existing_live_session() -> "SparkSession | None":
 
 
 def get_hive_spark(
-    app_name: str = DEFAULT_APP_NAME + "-hive",
     warehouse_dir: str = "/tmp/mhs_hive_warehouse",
     metastore_dir: str = "/tmp/mhs_hive_metastore",
     shuffle_partitions: int | None = None,
@@ -78,9 +77,9 @@ def get_hive_spark(
     metastore service instead of Derby.
     """
     # cross-thread AND liveness-checked: see existing_live_session —
-    # getActiveSession alone misses sessions built on other threads
-    # (round-10 self-review), and a stale _instantiatedSession from a
-    # stopped context must not block startup (round-11 review)
+    # getActiveSession alone misses sessions built on other threads, and
+    # a stale _instantiatedSession from a stopped context must not block
+    # startup
     active = existing_live_session()
     if active is not None:
         impl = active.conf.get("spark.sql.catalogImplementation", "in-memory")
@@ -92,7 +91,7 @@ def get_hive_spark(
         # reuse is only safe if the existing hive session points at the
         # SAME metastore/warehouse the caller asked for — getOrCreate
         # would silently ignore the arguments otherwise and DDL would
-        # land in the wrong Derby database (round-10 self-review)
+        # land in the wrong Derby database
         got_wh = active.conf.get("spark.sql.warehouse.dir", "")
         got_ms = active.conf.get("javax.jdo.option.ConnectionURL", "")
         if not got_wh.rstrip("/").endswith(
@@ -108,7 +107,7 @@ def get_hive_spark(
     cpus = local_cpu_count()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        .appName(DEFAULT_APP_NAME + "-hive")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -169,7 +168,7 @@ def get_spark(
 
 # applicationIds whose context already received the package zip — addPyFile
 # is idempotent-by-name but re-zipping per query would be pure waste.
-# The lock closes a check-then-act race (round-11 review): two threads
+# The lock closes a check-then-act race: two threads
 # first-touching the same context would otherwise both open ZipFile(path,
 # "w") on the identical pid+appId path and ship a corrupt archive — the
 # very executor-side ModuleNotFoundError this function exists to fix,
@@ -180,7 +179,7 @@ _SHIP_LOCK = __import__("threading").Lock()
 
 def ship_package_to_executors(spark: SparkSession) -> None:
     """Make ``mini_hive_server_spark`` importable on executor Python
-    workers regardless of the launch cwd (VERDICT r10 #6).
+    workers regardless of the launch cwd.
 
     Package functions captured in Arrow-UDF closures are pickled BY
     REFERENCE (module + qualname), so the worker must import the package
