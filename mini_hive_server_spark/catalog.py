@@ -19,6 +19,9 @@ relational tables. Two modes:
   (`bucketBy(n, "l_orderkey")`) so repeated joins on the key shuffle zero
   bytes.
 
+Timestamps are bound zone-free (``EPOCH_NTZ`` below): no query reads its
+caller's session timezone, and none writes it.
+
 Scale note (100 TB): fixtures are single Parquet files; production tables
 would be date-partitioned directories (`partitionBy("o_orderdate")`) so
 partition pruning cuts scans, with file sizes targeted at 128-512 MB via
@@ -31,7 +34,7 @@ import os
 import threading
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # Driver fixture tables (TESTDATA.md) — the relational modeling surface for
@@ -88,48 +91,63 @@ def events_ts_encoding(sf_dir: str) -> str:
     return "timestamp"
 
 
-# the ns->us decode, shared VERBATIM by the batch reader below and the
-# streaming reader (streaming.events_stream.read_events_stream): ns -> µs
-# must FLOOR (what a timestamp downcast means); `div` truncates toward
-# zero, which would shift a pre-epoch (negative) ts 1µs late. One
-# definition so a future repair cannot land in one reader and not the
-# other (round-11 review).
-NS_TO_TS_EXPR = (
-    "timestamp_micros(ts div 1000 - "
-    "(CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END))"
-)
+# Timestamps are bound zone-free, so no query depends on its caller's
+# session timezone: batch timestamps are TIMESTAMP_NTZ holding UTC
+# wall-clock time, streamed ones are TIMESTAMP instants, and every
+# conversion below reads no zone. `cast(ntz AS string)`, `unix_timestamp`,
+# `hour`, `to_date`, `window` and `timestampadd` over NTZ do not depend
+# on the zone; `date_format`, `date_trunc` and `timestampdiff` shift an
+# NTZ value that falls inside a DST gap, and `unix_micros` rejects NTZ.
+EPOCH_NTZ = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
 
-def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read events with ts normalized to Spark TIMESTAMP (µs, UTC session).
 
-    Three fixture encodings are handled (see events_ts_encoding):
-    * int64 / TIMESTAMP(NANOS): read ns as long (legacy conf, set at runtime
-      so it also applies to a foreign SparkSession, e.g. the driver's) and
-      truncate with integer division — `ts div 1000` stays in int64; a float
-      path would lose precision above 2^53 ns.
-    * timestamp[us] no-tz (current fixtures): arrives as TIMESTAMP_NTZ;
-      cast to TIMESTAMP. The session tz is pinned UTC (load_tables), so
-      NTZ→LTZ is value-preserving.
-    * tz-adjusted timestamp: already Spark TIMESTAMP — passthrough.
-    """
+def ntz_micros(ts: Column | str) -> Column:
+    """Epoch microseconds of an NTZ column, equal under every session
+    zone: whole seconds from `unix_timestamp`, plus the micros of the
+    second."""
+    ts = F.col(ts) if isinstance(ts, str) else ts
+    frac = (F.extract(F.lit("SECOND"), ts) * 1_000_000).cast("bigint") % 1_000_000
+    return F.unix_timestamp(ts) * 1_000_000 + frac
+
+
+def utc_text(instant: Column | str) -> Column:
+    """A TIMESTAMP instant as its UTC `yyyy-MM-dd HH:mm:ss` text, whatever
+    the session zone (`date_format` renders in the session zone)."""
+    whole = F.timestamp_add("SECOND", F.unix_seconds(instant), F.expr(EPOCH_NTZ))
+    return whole.cast("string")
+
+
+def events_ts_micros(spark: SparkSession, sf_dir: str) -> tuple[str, Column]:
+    """(encoding, epoch micros of the raw ts column): the one decode of
+    events.ts that the batch reader and the stream reader
+    (streaming.events_stream.read_events_stream) both bind from.
+
+    ns -> µs must FLOOR (what a timestamp downcast means); `div`
+    truncates toward zero, which would shift a pre-epoch ts 1 µs late,
+    and `ts div 1000` stays in int64 where a float path loses precision
+    above 2^53 ns. Reading the legacy ns vintage as a long needs
+    `spark.sql.legacy.parquet.nanosAsLong`, the one conf the package
+    writes to its caller's session: no read option exists, and only
+    that fixture vintage sets it."""
     kind = events_ts_encoding(sf_dir)
     if kind == "ns":
-        # No fallback exists if this conf can't be set: no session in the
-        # repo (including session.py) sets it by default, so a build where
-        # conf.set raises would fault on the nanos read anyway — let the
-        # conf error surface with context instead of a bare parquet error.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return kind, F.expr("ts div 1000 - (CASE WHEN ts % 1000 < 0 THEN 1 ELSE 0 END)")
+    if kind == "ntz_us":
+        return kind, ntz_micros("ts")
+    return kind, F.unix_micros("ts")
+
+
+def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Read events with ts bound as TIMESTAMP_NTZ holding UTC wall-clock
+    time, as the current fixture stores it (and as `orders.o_orderdate`
+    and `lineitem.l_shipdate` are bound); the other encodings
+    (events_ts_encoding) go through their epoch micros."""
+    kind, micros = events_ts_micros(spark, sf_dir)
     df = spark.read.parquet(table_path(sf_dir, "events"))
-    dtype = dict(df.dtypes).get("ts")
-    if dtype == "bigint":
-        # ns → µs must FLOOR (what a timestamp downcast means); `div`
-        # truncates toward zero, which would shift a pre-epoch (negative)
-        # ts 1µs late. The generator emits post-epoch data today, but the
-        # exact form costs one CASE on this legacy-vintage path only.
-        df = df.withColumn("ts", F.expr(NS_TO_TS_EXPR))
-    elif dtype == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    if kind == "ntz_us":
+        return df
+    return df.withColumn("ts", F.timestamp_add("MICROSECOND", micros, F.expr(EPOCH_NTZ)))
 
 
 # What the engine reuses across the queries of one session lives in one
@@ -161,6 +179,15 @@ def session_memos(kind: str) -> list[dict]:
         return [vars(s)[_MEMO_ATTR].setdefault(kind, {}) for s in _SESSIONS]
 
 
+def session_with(spark: SparkSession, conf: dict[str, str]) -> SparkSession:
+    """A clone of `spark` with `conf` set on the clone only, so that no
+    query writes its caller's session conf. The clone shares the
+    SparkContext and the table cache and starts from the caller's SQL
+    conf and temp views as of this call (~16 ms); what it registers
+    (temp views, memory-sink tables) stays in the clone."""
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession(), conf)
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Read every fixture table as a DataFrame (lazy — no scan happens here).
 
@@ -176,13 +203,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     from mini_hive_server_spark.session import ship_package_to_executors
 
     ship_package_to_executors(spark)
-    try:
-        # Timestamp rendering (date_format) follows the session timezone;
-        # oracle comparison requires UTC regardless of the caller's session.
-        # (Re-set on every call on purpose: the caller may have flipped it.)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
     memo = session_memo(spark, "tables")
     cached = memo.get(sf_dir)
     if cached is not None:

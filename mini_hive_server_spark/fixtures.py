@@ -8,7 +8,9 @@ synthesizes those collections DETERMINISTICALLY as pure SQL over
 the row index, so the SAME rows are reproducible in both engines — Spark
 builds temp views from the Spark-dialect SQL, and each query's DuckDB
 oracle embeds the DuckDB-dialect CTEs. No files, no RNG state, no
-synthesis drift: the fixture IS its defining expression.
+synthesis drift: the fixture IS its defining expression. Timestamps are
+TIMESTAMP_NTZ holding UTC wall-clock time, so no row depends on the
+session timezone.
 
 The generators bake in every §2.11 semantic quirk and FIXTURES.md §C edge
 case the reference exhibits:
@@ -55,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-from .catalog import session_memo
+from .catalog import EPOCH_NTZ, session_memo
 
 N_USERS = 1_000
 N_TASKS = 5_000
@@ -103,9 +105,10 @@ class _Dialect:
         return self.h_on(seed, "id")
 
     def ts(self, epoch_expr: str) -> str:
-        # epoch seconds -> TIMESTAMP (session/engine-naive UTC)
+        # epoch seconds -> UTC wall-clock time with no zone (Spark
+        # TIMESTAMP_NTZ, DuckDB TIMESTAMP); timestampadd reads no zone
         if self.spark:
-            return f"timestamp_seconds({epoch_expr})"
+            return f"timestampadd(SECOND, {epoch_expr}, {EPOCH_NTZ})"
         return f"epoch_ms(({epoch_expr}) * 1000)"
 
     def oid(self, seed: str) -> str:
@@ -312,23 +315,18 @@ def reference_table(spark: SparkSession, table: str) -> DataFrame:
     ``graph.copurchase_edges`` follows, for the reason measured there).
 
     Synthesis depends on no session conf, so a copy built under any
-    session reads the same in all of them: ``timestamp_seconds`` yields
-    an instant, not a wall-clock time, and no cast or arithmetic in the
-    generators can overflow or fail (md5 hex prefixes are valid bigints,
-    the epoch offsets stay far inside bigint), so ANSI mode changes
-    nothing either. The timezone pin below is for the callers: the
-    queries RENDER these timestamps with date_format, which follows the
-    session timezone, and a caller's vanilla session inherits the
-    host's. (Re-set on every call on purpose: the caller may have
-    flipped it.)
+    session reads the same in all of them: every timestamp is a
+    TIMESTAMP_NTZ holding UTC wall-clock time, built with
+    ``timestampadd``, which reads no zone, and no cast or arithmetic in
+    the generators can overflow or fail (md5 hex prefixes are valid
+    bigints, the epoch offsets stay far inside bigint), so ANSI mode
+    changes nothing either. The queries render these timestamps with
+    ``cast(c AS string)``, which reads no zone either, so the caller's
+    session timezone is neither read nor written.
 
     No lock: ``persist()`` is lazy, and Spark's CacheManager keeps one
     entry per equal plan, so two threads racing on a cold memo cost one
     extra dict write, not a second copy."""
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
     memo = session_memo(spark, "reference_tables")
     df = memo.get(table)
     if df is None or df.storageLevel == StorageLevel.NONE:

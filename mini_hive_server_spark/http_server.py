@@ -68,13 +68,12 @@ Design notes:
   collected: re-executing one QueryExecution replays its materialized
   AQE stages, which would be result caching.
 
-  - *Key:* (query name, ``sf_dir``) plus every conf analysis binds,
-    ``spark.sql.ansi.enabled`` and ``spark.sql.session.timeZone``. An
-    entry is stored under the values read after its build and looked
-    up under the values of the request, so a request under any other
-    value builds fresh, with the build's own conf writes
-    (``load_tables`` re-pins UTC), exactly as an unmemoized request
-    would.
+  - *Key:* (query name, ``sf_dir``, ``spark.sql.ansi.enabled``), the
+    one session conf that analysis binds and a route's rows depend on,
+    so a request under the other ANSI value builds fresh. The session
+    timezone is not in the key: timestamps are bound zone-free
+    (``catalog.EPOCH_NTZ``), so a route built under one zone serves the
+    same rows under any other, and no build writes the session's conf.
   - *Eligibility:* a route is memoized only if its build registered no
     tracked persist (the request's persistence scope is still empty
     after the build). A route that does is built fresh per request and
@@ -177,13 +176,7 @@ def _jsonable(v):
 
 
 def _route_key(spark: SparkSession, sf_dir: str, name: str) -> tuple:
-    conf = spark.conf
-    return (
-        name,
-        sf_dir,
-        conf.get("spark.sql.ansi.enabled"),
-        conf.get("spark.sql.session.timeZone"),
-    )
+    return (name, sf_dir, spark.conf.get("spark.sql.ansi.enabled"))
 
 
 def _route_df(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, ntz_micros
 from ..registry import register
 from .windows import SESSION_FLAGS_SQL, sessionized
 
@@ -1731,7 +1731,7 @@ def events_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily bounce rate: share of sessions containing exactly one event,
     bucketed by session start day — the engagement-quality headline next
     to the session-count and top-paths views, built on the SAME
-    microsecond-precise gaps-and-islands sessionizer (`unix_micros`
+    microsecond-precise gaps-and-islands sessionizer (`ntz_micros`
     matching the oracle's `epoch_us`, so a gap within a second of the
     30-minute boundary is classified alike by every sessionizer).
 
@@ -1887,8 +1887,8 @@ def events_abtest_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "value",
         (
-            2 * F.unix_micros("ts")
-            < F.unix_micros("t0") + F.unix_micros("t1")
+            2 * ntz_micros("ts")
+            < ntz_micros("t0") + ntz_micros("t1")
         ).alias("is_pre"),
     )
     per_user = marked.groupBy("user_id").agg(
@@ -2126,7 +2126,7 @@ def _gap_us() -> "F.Column":
     event_id) order; NULL on a user's first event. `_GAPS_SQL` is the
     oracle twin."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return F.unix_micros("ts") - F.lag(F.unix_micros("ts")).over(w)
+    return ntz_micros("ts") - F.lag(ntz_micros("ts")).over(w)
 
 
 # the oracles' `gaps(user_id, gap_us)` CTE, the twin of _gap_us

@@ -35,14 +35,14 @@ def _dot(a: str, b: str):
     return F.expr(_DOT.format(a=a, b=b))
 
 
-def _normed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, nrm): every embedding as array<double> with its L2
-    norm, computed once per row — per pair it would cost two extra dot
+def _normed_embeddings(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, v, nrm): every embedding as array<double> with its
+    L2 norm, computed once per row — per pair it would cost two extra dot
     products for identical doubles (sqrt of the same sum in the same
     order)."""
     return (
         parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        .select("vec_id", *cols, F.col("embedding").cast("array<double>").alias("v"))
         .withColumn("nrm", F.sqrt(_dot("v", "v")))
     )
 
@@ -203,46 +203,33 @@ def similarity_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on (table, bucket), and candidate re-rank touches only
     collided vectors."""
     lsh_bucket_ids = F.pandas_udf(_bucket_kernel, "array<int>")
-    emb = (
-        parallelize_scan(
-            load_tables(spark, sf_dir)["embeddings"], "vec_id"
-        )
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("bkts", lsh_bucket_ids("v"))
-    )
+    emb = _normed_embeddings(spark, sf_dir).withColumn("bkts", lsh_bucket_ids("v"))
     # corpus side: one (table, bucket) row per table
     corpus = emb.select(
         # posexplode_outer: bkts is a fixed-length pandas_udf result; plain
         # posexplode's implicit size>0 filter can duplicate the UDF eval
-        "vec_id", "v", F.posexplode_outer("bkts").alias("tbl", "bucket")
+        "vec_id", "v", "nrm", F.posexplode_outer("bkts").alias("tbl", "bucket")
     )
     # query side: own bucket + every 1-bit and 2-bit flip per table
     q = emb.filter(F.col("vec_id") < 5)
     queries = q.select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
         F.explode_outer(_probe_buckets()).alias("tb"),
-    ).select("qid", "qv", "tb.tbl", "tb.bucket")
+    ).select("qid", "qv", "qnrm", "tb.tbl", "tb.bucket")
     candidates = (
         corpus.join(
             F.broadcast(queries),
             ["tbl", "bucket"],
         )
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "qv", "vec_id", "v")
+        .select("qid", "qv", "qnrm", "vec_id", "v", "nrm")
         .distinct()
     )
     pairs = candidates.select(
-        "qid",
-        F.col("vec_id").alias("nid"),
-        F.round(
-            _dot("qv", "v")
-            / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("v", "v"))),
-            6,
-        ).alias("cosine"),
+        "qid", F.col("vec_id").alias("nid"), _cosine().alias("cosine")
     )
-    # (norms here are per-candidate; the candidate set is already pruned to
-    # bucket collisions, so the extra dots are not the dominant cost)
     return _top5(pairs)
 
 
@@ -365,9 +352,7 @@ def _ivf_ann(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    emb = parallelize_scan(
-        load_tables(spark, sf_dir)["embeddings"], "vec_id"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    emb = _normed_embeddings(spark, sf_dir)
     # Train the coarse quantizer on a bounded sample. No driver-side
     # count() to size the fraction (that's a full corpus pass before any
     # work starts): a fixed fraction with a hard row cap — sample() keeps
@@ -402,12 +387,13 @@ def _ivf_ann(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     nearest_cell = F.pandas_udf(_nearest_kernel, "int")
     probe_cells = F.pandas_udf(_probe_kernel, "array<int>")
 
-    corpus = emb.select("vec_id", "v", nearest_cell("v").alias("cell"))
+    corpus = emb.select("vec_id", "v", "nrm", nearest_cell("v").alias("cell"))
     queries = (
         emb.filter(F.col("vec_id") < 5)
         .select(
             F.col("vec_id").alias("qid"),
             F.col("v").alias("qv"),
+            F.col("nrm").alias("qnrm"),
             # explode_outer: avoid duplicating the pandas_udf via implicit filter
             F.explode_outer(probe_cells("v")).alias("cell"),
         )
@@ -415,16 +401,11 @@ def _ivf_ann(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     candidates = (
         corpus.join(F.broadcast(queries), "cell")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "qv", "vec_id", "v")
+        .select("qid", "qv", "qnrm", "vec_id", "v", "nrm")
         .distinct()
     )
     pairs = candidates.select(
-        "qid",
-        F.col("vec_id").alias("nid"),
-        F.round(
-            _dot("qv", "v") / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("v", "v"))),
-            6,
-        ).alias("cosine"),
+        "qid", F.col("vec_id").alias("nid"), _cosine().alias("cosine")
     )
     return _top5(pairs)
 
@@ -1019,22 +1000,15 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     before ranking. Per-anchor top-3 via rank window over anchor-bounded
     rows. At 100 TB the anchor batch stays the broadcast side; the ANN
     tiers (LSH/IVF/PQ) drop in for the corpus scan unchanged."""
-    emb = load_tables(spark, sf_dir)["embeddings"].select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    emb = parallelize_scan(emb, "vec_id")
+    emb = _normed_embeddings(spark, sf_dir, "label")
     q = (
         emb.filter(F.col("vec_id") < 5)
         .select(
             F.col("vec_id").alias("qid"),
             F.col("label").alias("qlabel"),
             F.col("v").alias("qv"),
+            F.col("nrm").alias("qnrm"),
         )
-    )
-    cos = F.round(
-        _dot("qv", "v")
-        / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("v", "v"))),
-        6,
     )
     pairs = (
         emb.join(F.broadcast(q), F.col("label") != F.col("qlabel"))
@@ -1043,7 +1017,7 @@ def similarity_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qlabel",
             F.col("vec_id").alias("nid"),
             F.col("label").alias("nlabel"),
-            cos.alias("cosine"),
+            _cosine().alias("cosine"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")

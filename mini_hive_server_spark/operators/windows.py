@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, ntz_micros
 from ..registry import register
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -111,7 +111,7 @@ def session_flags(events: DataFrame, *cols: str) -> DataFrame:
     misclassifies gaps within ~1 s of the 30-min boundary (the events
     fixture carries sub-second micros)."""
     prev = F.lag("ts").over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(prev)
+    gap_us = ntz_micros("ts") - ntz_micros(prev)
     flag = F.when(prev.isNull() | (gap_us > _SESSION_GAP_US), 1).otherwise(0)
     return events.select("user_id", "event_id", *cols, "ts", flag.alias("new_session"))
 

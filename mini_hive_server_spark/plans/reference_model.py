@@ -28,8 +28,15 @@ from pyspark.sql import functions as F
 from ..fixtures import duck_cte, reference_table
 from ..registry import register
 
-_TS = "yyyy-MM-dd HH:mm:ss"
 _STRF = "%Y-%m-%d %H:%M:%S"
+
+
+def _ts_text(col: str) -> "F.Column":
+    """A synthesized timestamp as `yyyy-MM-dd HH:mm:ss` text: the fixtures
+    hold whole-second TIMESTAMP_NTZ values, which a cast renders in that
+    form under every session zone (`date_format` shifts the values that
+    fall inside a DST gap)."""
+    return F.col(col).cast("string")
 
 
 def _cents(col) -> "F.Column":
@@ -95,7 +102,7 @@ def ref_worker_submission_page(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("task_title", F.lit("Unknown Task")).alias("task_title"),
             F.coalesce("payable_amount", F.lit(0.0)).alias("payable_amount"),
             "status",
-            F.date_format("submitted_at", _TS).alias("submitted_at"),
+            _ts_text("submitted_at").alias("submitted_at"),
         )
         .orderBy(F.col("submitted_at").desc(), "id")
         .limit(20)
@@ -263,7 +270,7 @@ def ref_notifications_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id",
             "message",
             "actionRoute",
-            F.date_format("time", _TS).alias("time"),
+            _ts_text("time").alias("time"),
         )
         .orderBy(F.col("time").desc(), "id")
         .limit(10)
@@ -315,7 +322,7 @@ def ref_withdrawal_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cents("withdrawal_amount").alias("withdrawal_amount"),
             "payment_system",
             _cents("coins").alias("worker_coins"),
-            F.date_format("withdraw_date", _TS).alias("withdraw_date"),
+            _ts_text("withdraw_date").alias("withdraw_date"),
         )
         .orderBy("withdraw_date", "id")
         .limit(25)
@@ -352,7 +359,7 @@ def ref_open_tasks_listing(spark: SparkSession, sf_dir: str) -> DataFrame:
             "task_title",
             "required_workers",
             _cents("payable_amount").alias("payable_amount"),
-            F.date_format("createdAt", _TS).alias("createdAt"),
+            _ts_text("createdAt").alias("createdAt"),
         )
         .orderBy(F.col("createdAt").desc(), "id")
         .limit(20)
@@ -968,7 +975,7 @@ def ref_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "photo",
         "role",
         _cents("coins").alias("coins"),
-        F.date_format("createdAt", _TS).alias("created_at"),
+        _ts_text("createdAt").alias("created_at"),
     )
 
 
@@ -1012,7 +1019,7 @@ def ref_buyer_tasks(spark: SparkSession, sf_dir: str) -> DataFrame:
             _cents("payable_amount").alias("payable_amount"),
             "completion_date",
             "status",
-            F.date_format("createdAt", _TS).alias("createdAt"),
+            _ts_text("createdAt").alias("createdAt"),
         )
         .orderBy(F.col("createdAt").desc(), "id")
     )
@@ -1055,7 +1062,7 @@ def ref_worker_open_tasks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "required_workers",
             _cents("payable_amount").alias("payable_amount"),
             "buyer_name",
-            F.date_format("createdAt", _TS).alias("createdAt"),
+            _ts_text("createdAt").alias("createdAt"),
         )
         .orderBy(F.col("createdAt").desc(), "id")
         .limit(25)
@@ -1100,7 +1107,7 @@ def ref_task_detail(spark: SparkSession, sf_dir: str) -> DataFrame:
         "buyer_email",
         "buyer_name",
         "status",
-        F.date_format("createdAt", _TS).alias("createdAt"),
+        _ts_text("createdAt").alias("createdAt"),
     )
 
 
@@ -1190,7 +1197,7 @@ def ref_buyer_submissions(spark: SparkSession, sf_dir: str) -> DataFrame:
             # NULL payable stays NULL (contrast ref_worker_submission_page)
             _cents("payable_amount").alias("payable_amount"),
             "status",
-            F.date_format("submitted_at", _TS).alias("submitted_at"),
+            _ts_text("submitted_at").alias("submitted_at"),
         )
         .orderBy("submitted_at", "id")
         .limit(25)
@@ -1314,7 +1321,7 @@ def ref_buyer_tasks_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         "task_image_url",
         "buyer_email",
         "buyer_name",
-        F.date_format("createdAt", _TS).alias("createdAt"),
-        F.date_format("updatedAt", _TS).alias("updatedAt"),
+        _ts_text("createdAt").alias("createdAt"),
+        _ts_text("updatedAt").alias("updatedAt"),
         "status",
     )

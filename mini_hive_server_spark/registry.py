@@ -5,14 +5,13 @@ extensions) registers itself here with:
 
 * a PySpark callable ``(spark, sf_dir) -> DataFrame``;
 * a DuckDB-runnable SQL oracle string computing the same result on the
-  same Parquet tables (the driver's correctness gate). The schema allows
-  oracle-less registration, but since round 8 NO registered query uses it
-  (`tests/test_oracle_parity.py::test_no_rows_only_queries`): the driver
-  does not support rows-only checks — an oracle-less query burns its
-  window slot on a guaranteed `err: no_oracle` (the round-7 lesson).
-  Non-SQL-expressible semantics get an oracle anyway via an equivalence
-  argument (batch twins for streaming, provably-exact operating points
-  for ANN, the contraction bound for the ε-stopped PageRank).
+  same Parquet tables (the driver's correctness gate). The oracle is
+  required and non-empty: the driver does not support rows-only checks,
+  so an oracle-less query would burn its window slot on a guaranteed
+  `err: no_oracle`. Non-SQL-expressible semantics get an oracle anyway
+  via an equivalence argument (batch twins for streaming, provably-exact
+  operating points for ANN, the contraction bound for the ε-stopped
+  PageRank).
 
 Determinism rules every registered query obeys (so order-insensitive
 value-hash comparison against DuckDB is stable):
@@ -44,7 +43,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None = None
+    oracle: str
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
 
@@ -171,17 +170,15 @@ _DRIVER_WINDOW = (
 
 
 def register(
-    name: str, oracle: str | None = None, tags: tuple[str, ...] = ()
+    name: str, oracle: str, tags: tuple[str, ...] = ()
 ) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        if oracle is None:
-            # enforce the since-round-8 invariant at the production
-            # surface, not just in the test suite: an oracle-less query
-            # reaching the driver burns its window slot on a guaranteed
-            # `err: no_oracle` (module docstring) — fail at registration,
-            # where the developer is, instead of in the remote gate
+        if not oracle:
+            # an empty oracle reaching the driver burns its window slot on
+            # a guaranteed `err: no_oracle` (module docstring): fail at
+            # registration, where the developer is
             raise ValueError(
                 f"query '{name}' registered without an oracle — every "
                 "registered query must be oracle-paired (give non-SQL-"
@@ -211,11 +208,10 @@ def register(
     return deco
 
 
-# A module that failed to import is retried by every later _ensure_loaded
-# call (Python drops it from sys.modules), and the retry trips the
-# duplicate-name guard on the module's own EARLIER, innocent
-# registrations — masking the real error. Remember the first failure and
-# re-raise IT (round-10 self-review).
+# A module that failed to import must keep raising its first error: a
+# retry (Python drops the module from sys.modules) would trip the
+# duplicate-name guard on the module's own earlier registrations and
+# mask the real error. So the first failure is remembered and re-raised.
 _LOAD_FAILED: dict[str, BaseException] = {}
 
 
@@ -247,8 +243,4 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracles() -> dict[str, str]:
-    return {
-        name: spec.oracle
-        for name, spec in all_specs().items()
-        if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in all_specs().items()}

@@ -150,9 +150,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # events.ts encoding varies by fixture vintage (ns-as-long vs
         # timestamp[us]); catalog.events_ts_encoding probes the footer and
-        # catalog._read_events / streaming.read_events_stream normalize —
-        # the legacy nanosAsLong conf is set there at runtime only when the
-        # footer actually says ns, keeping the concern in one place.
+        # catalog.events_ts_micros decodes for both readers — the legacy
+        # nanosAsLong conf is set there at runtime only when the footer
+        # actually says ns, keeping the concern in one place.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")

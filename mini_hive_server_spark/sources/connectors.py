@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import load_tables, table_path
+from ..catalog import load_tables, session_with, table_path
 from ..registry import register
 
 _TMP_ROOT = "/tmp/mhs_spark_sources"
@@ -573,12 +573,12 @@ def merge_rollup_delta(spark: SparkSession, sf_dir: str, out: str) -> None:
             F.sum("total_value").alias("total_value"),
         )
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("day").parquet(out)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(out)
+    )
 
 
 @register("source_incremental_rollup", oracle=_INCR_ROLLUP_ORACLE, tags=("source", "sink"))
@@ -589,7 +589,7 @@ def source_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-partitioned rollup from on-time events; the late-arriving delta
     (10% of rows in the last 3 days) is aggregated alone, merged with
     ONLY the affected base partitions, and written back with
-    `spark.sql.sources.partitionOverwriteMode=dynamic`, which replaces
+    the writer option `partitionOverwriteMode=dynamic`, which replaces
     exactly the partitions present in the write — every other day's
     files stay untouched (file-identity asserted in tests). The oracle
     is the full recompute over all events: incremental maintenance must
@@ -849,6 +849,27 @@ FROM synth
 """
 
 
+def _register_source(spark: SparkSession, source: type) -> None:
+    """Register a Python data source in `spark`'s own manager, once.
+    Spark refuses a name the thread's ACTIVE session already holds but
+    resolves `format(name)` in the reading session's manager, so a
+    second session (`newSession()`) registers with itself made active;
+    any other registration error surfaces here, not as 'data source not
+    found' at read time."""
+    if spark._jsparkSession.sessionState().dataSourceManager().dataSourceExists(source.name()):
+        return
+    jss = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    active = jss.getActiveSession()
+    jss.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if active.isDefined():
+            jss.setActiveSession(active.get())
+        else:
+            jss.clearActiveSession()
+
+
 @register("source_python_datasource", oracle=_PYDS_ORACLE, tags=("source", "udf"))
 def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Python DataSource API end-to-end: register a custom source
@@ -867,14 +888,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     range-sliced external system; the checksum contract stays.)"""
     if not _HAS_PY_DATASOURCE:  # pragma: no cover
         raise NotImplementedError("Python DataSource API requires Spark 4+")
-    try:
-        spark.dataSource.register(SynthRangeDataSource)
-    except Exception as ex:
-        # tolerate ONLY the already-registered case — swallowing every
-        # failure turned real registration errors into a baffling
-        # 'data source not found' at read time (round-11 review)
-        if "already" not in str(ex).lower():
-            raise
+    _register_source(spark, SynthRangeDataSource)
     df = (
         spark.read.format("synthrange")
         .option("n", str(_PYDS_N))
@@ -995,35 +1009,22 @@ def source_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters/null-counts make pushdown inapplicable).
 
     Spark only plans this through the DataSource V2 parquet reader, so
-    the query temporarily clears parquet from `useV1SourceList` (and
-    restores the previous conf — the driver session runs 50 queries
-    after this one). tests/test_sources.py asserts PushedAggregation is
-    actually in the executed scan — without the conf dance this would
-    silently degrade to a full scan and still return the right answer,
-    the worst kind of performance regression."""
+    the query runs in a clone of the caller's session
+    (catalog.session_with) with parquet cleared from `useV1SourceList`;
+    the caller's conf is untouched. tests/test_sources.py asserts
+    PushedAggregation is actually in the executed scan — without the
+    clone's conf this would silently degrade to a full scan and still
+    return the right answer, the worst kind of performance regression."""
     v1_key = "spark.sql.sources.useV1SourceList"
-    push_key = "spark.sql.parquet.aggregatePushdown"
-    prev_v1 = spark.conf.get(v1_key)
-    prev_push = spark.conf.get(push_key)
-    spark.conf.set(v1_key, ",".join(
-        s for s in prev_v1.split(",") if s and s != "parquet"
-    ))
-    spark.conf.set(push_key, "true")
-    try:
-        df = spark.read.parquet(table_path(sf_dir, "orders")).agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.min("o_totalprice").alias("min_price"),
-            F.max("o_totalprice").alias("max_price"),
-            F.min("o_orderkey").alias("min_key"),
-            F.max("o_orderkey").alias("max_key"),
-        )
-        # force analysis/planning while the conf is active; the returned
-        # (lazy) DataFrame keeps the already-planned V2 relation
-        df._jdf.queryExecution().executedPlan()
-        return df
-    finally:
-        spark.conf.set(v1_key, prev_v1)
-        spark.conf.set(push_key, prev_push)
+    v1 = ",".join(s for s in spark.conf.get(v1_key).split(",") if s and s != "parquet")
+    v2 = session_with(spark, {v1_key: v1, "spark.sql.parquet.aggregatePushdown": "true"})
+    return v2.read.parquet(table_path(sf_dir, "orders")).agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.min("o_totalprice").alias("min_price"),
+        F.max("o_totalprice").alias("max_price"),
+        F.min("o_orderkey").alias("min_key"),
+        F.max("o_orderkey").alias("max_key"),
+    )
 
 
 # ------------------------------ Python DataSource API, STREAMING reader
@@ -1138,11 +1139,7 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
         )
     from ..streaming.events_stream import run_to_memory
 
-    try:
-        spark.dataSource.register(SynthTickStreamSource)
-    except Exception as ex:
-        if "already" not in str(ex).lower():  # see SynthRange note
-            raise
+    _register_source(spark, SynthTickStreamSource)
     stream = (
         spark.readStream.format("synthtick")
         .option("n", str(_PYSTREAM_N))

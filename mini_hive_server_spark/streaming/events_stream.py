@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import events_ts_encoding, load_tables
+from ..catalog import events_ts_micros, session_with, table_path, utc_text
 from ..operators import behavior, ingest
 from ..operators.windows import _SESSION_GAP_US
 from ..registry import register
@@ -47,32 +47,17 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 def read_events_stream(
     spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
 ) -> DataFrame:
-    """File-stream source over the events parquet, ts normalized to a Spark
-    TIMESTAMP (µs, UTC session) — same three-encoding contract as the batch
-    reader (catalog._read_events); the footer probe is shared so batch and
-    streaming can never diverge on decode. `glob` widens the file pin for
+    """File-stream source over the events parquet, ts bound as a TIMESTAMP
+    instant built from the epoch micros of the batch reader's decode
+    (catalog.events_ts_micros), so batch and streaming cannot diverge on
+    decode. Watermarks need TIMESTAMP (an NTZ event time fails analysis),
+    and `timestamp_micros` reads no zone. `glob` widens the file pin for
     staged source dirs that add files beside the events copy (the flush
     sentinel)."""
-    try:
-        # NTZ->TIMESTAMP casts and date_format renders follow the session
-        # timezone — pin UTC defensively like catalog.load_tables does,
-        # so a driver-owned non-UTC session can't shift every window
-        # boundary off the oracle
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:
-        pass
-    kind = events_ts_encoding(sf_dir)
-    if kind == "ns":
-        # no fallback exists if this conf can't be set — declaring ts as
-        # LongType against timestamp[ns] files would fail (or mis-decode)
-        # at stream start with no hint; let the conf error surface with
-        # context instead (same repair as catalog._read_events)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts_type: T.DataType = T.LongType()
-    elif kind == "ntz_us":
-        ts_type = T.TimestampNTZType()
-    else:
-        ts_type = T.TimestampType()
+    kind, micros = events_ts_micros(spark, sf_dir)
+    ts_type = {"ns": T.LongType(), "ntz_us": T.TimestampNTZType()}.get(
+        kind, T.TimestampType()
+    )
     # the file-stream source requires a directory: stream the fixture dir
     # with a glob pinned to the events file
     raw = (
@@ -81,16 +66,7 @@ def read_events_stream(
         .option("pathGlobFilter", glob)
         .load(sf_dir)
     )
-    if kind == "ns":
-        # the SHARED decode expression (catalog.NS_TO_TS_EXPR): one
-        # definition for batch and streaming so the decoders cannot
-        # drift
-        from ..catalog import NS_TO_TS_EXPR
-
-        return raw.withColumn("ts", F.expr(NS_TO_TS_EXPR))
-    if kind == "ntz_us":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    return raw.withColumn("ts", F.timestamp_micros(micros))
 
 
 def hourly_windowed_counts(events: DataFrame) -> DataFrame:
@@ -105,7 +81,7 @@ def hourly_windowed_counts(events: DataFrame) -> DataFrame:
             F.round(F.sum("value"), 2).alias("total_value"),
         )
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            utc_text("w.start").alias("window_start"),
             "event_type",
             "n",
             "total_value",
@@ -122,7 +98,7 @@ def session_window_counts(events: DataFrame) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
-            F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+            utc_text("sw.start").alias("session_start"),
             "n_events",
         )
     )
@@ -226,7 +202,16 @@ def run_to_parquet_sink(
         q.stop()
 
 
-_STATE_PARTITIONS = "32"
+# Every registered stream runs in a clone of its caller's session
+# (catalog.session_with) whose stateful shuffle has 32 partitions: a
+# vanilla session's 200 default means 200 state-store instances
+# initialized and committed per micro-batch, pure per-partition overhead
+# against the fixture's ~150 keys (measured in the driver-like session:
+# streaming CDC merge 15.1s → 1.8s, running stats 7.5s → 2.0s). The
+# count is captured at stream start and is result-invariant: it only
+# re-buckets the state hash partitioning. At production you size it to
+# key cardinality × state size, exactly like any other shuffle.
+_STREAM_CONF = {"spark.sql.shuffle.partitions": "32"}
 
 
 def run_to_memory(
@@ -234,17 +219,7 @@ def run_to_memory(
 ) -> None:
     """Drive a streaming aggregation to completion over the static fixture
     (processAllAvailable = deterministic local run), results in the
-    `query_name` in-memory table.
-
-    The stateful shuffle is pinned to 32 partitions FOR THE STREAM ONLY
-    (saved/restored around the run): a vanilla session's 200 default
-    means 200 state-store instances initialized and committed per
-    micro-batch — pure per-partition overhead against the fixture's
-    ~150 keys (measured in the driver-like session: streaming CDC merge
-    15.1s → 1.8s, running stats 7.5s → 2.0s). The count is captured at
-    stream start and is result-invariant — it only re-buckets the state
-    hash partitioning. At production you size it to key cardinality ×
-    state size, exactly like any other shuffle."""
+    `query_name` in-memory table of the stream's session."""
     spark = agg.sparkSession
     try:
         # idempotent re-runs: a lingering memory-sink table from a previous
@@ -252,21 +227,16 @@ def run_to_memory(
         spark.catalog.dropTempView(query_name)
     except Exception:
         pass
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
+    q = (
+        agg.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
     try:
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        q.stop()
 
 
 _USER_STATS_ORACLE = """
@@ -294,6 +264,7 @@ def streaming_user_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation), max. Intermediate emit timing stays unchecked (not
     SQL-expressible); the per-micro-batch path is exercised by the pytest
     gate."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     run_to_memory(user_running_stats(stream), "mhs_stream_user_stats", "update")
     out = spark.table("mhs_stream_user_stats")
@@ -354,6 +325,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (lag-based, Mongo-ish "strictly more than 30 minutes idle")
     uses `>` — the two definitions differ only on exact-boundary events,
     and BOTH are driver-gated so a drift in either shows up."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     run_to_memory(session_window_counts(stream), "mhs_stream_sessions", "complete")
     out = spark.table("mhs_stream_sessions")
@@ -396,6 +368,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle-paired: over the static fixture every row lands in one
     micro-batch, so the appended output is exactly the batch DISTINCT —
     checked per event_type after running the stream to completion."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     deduped = stream.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "ts"]
@@ -470,6 +443,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compare at microsecond precision (the stream truncates the
     fixture's nanosecond timestamps; the oracle CASTs to DuckDB's µs
     TIMESTAMP)."""
+    spark = session_with(spark, _STREAM_CONF)
     clicks = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -522,9 +496,10 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: dimension lookups against a slowly-changing table while facts
     stream through. Oracle-paired: over the static fixture the complete-
     mode result equals the batch join + aggregate."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     cust = (
-        load_tables(spark, sf_dir)["customer"]
+        spark.read.parquet(table_path(sf_dir, "customer"))
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
     agg = (
@@ -670,6 +645,7 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     see stage_events_with_flush_sentinel). Sentinel rows are dropped
     from the output. State stays one constraint-window wide per user,
     same as the inner variant."""
+    spark = session_with(spark, _STREAM_CONF)
     src_dir = stage_events_with_flush_sentinel(sf_dir)
 
     def side(event_type: str) -> DataFrame:
@@ -715,6 +691,13 @@ _CDC_STATE_SCHEMA = (
 )
 
 
+def _with_ts_us(events: DataFrame) -> DataFrame:
+    """Events with ts as epoch micros (`ts_us`) for a pandas kernel: the
+    Arrow hand-off renders a TIMESTAMP as wall-clock time in the session
+    zone, `unix_micros` reads the instant."""
+    return events.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
+
+
 def cdc_merge_state(events: DataFrame) -> DataFrame:
     """Streaming twin of `ingest_cdc_merge`: per-key latest-wins upsert
     state maintained across micro-batches in a GroupState — the standing
@@ -748,7 +731,7 @@ def cdc_merge_state(events: DataFrame) -> DataFrame:
             if not len(pdf):
                 continue
             n += len(pdf)
-            t = pdf["ts"].values.astype("datetime64[us]").astype("int64")
+            t = pdf["ts_us"].values.astype("int64")
             e = pdf["event_id"].values.astype("int64")
             last = np.lexsort((e, t))[-1]
             if not have or (int(t[last]), int(e[last])) > (ts_us, eid):
@@ -777,7 +760,7 @@ def cdc_merge_state(events: DataFrame) -> DataFrame:
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return _with_ts_us(events).groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=_CDC_OUT_SCHEMA,
         stateStructType=_CDC_STATE_SCHEMA,
@@ -798,9 +781,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER version selection (a delete must win over older upserts), and
     render identically to the batch merge — the oracle IS the batch
     merge's SQL, pinning stream/batch semantic equivalence."""
-    # presentation renders last_ts via date_format — pin UTC exactly like
-    # catalog.load_tables so the string can't shift with the host tz
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     run_to_memory(cdc_merge_state(stream), "mhs_stream_cdc_merge", "update")
     out = spark.table("mhs_stream_cdc_merge")
@@ -813,9 +794,7 @@ def streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_type",
             F.round("last_value", 2).alias("last_value"),
             "n_changes",
-            F.date_format(F.timestamp_micros("ts_us"), "yyyy-MM-dd HH:mm:ss").alias(
-                "last_ts"
-            ),
+            utc_text(F.timestamp_micros("ts_us")).alias("last_ts"),
         )
         .orderBy("user_id")
     )
@@ -858,7 +837,7 @@ def cep_burst_state(events: DataFrame) -> DataFrame:
         frames = [pdf for pdf in pdfs if len(pdf)]
         if frames:
             all_rows = pd.concat(frames, ignore_index=True)
-            t = all_rows["ts"].values.astype("datetime64[us]").astype("int64")
+            t = all_rows["ts_us"].values.astype("int64")
             order = np.lexsort((all_rows["event_id"].values.astype("int64"), t))
             for et in all_rows["event_type"].values[order]:
                 seen += 1
@@ -884,7 +863,7 @@ def cep_burst_state(events: DataFrame) -> DataFrame:
             }
         )
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    return _with_ts_us(events).groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=_CEP_OUT_SCHEMA,
         stateStructType=_CEP_STATE_SCHEMA,
@@ -904,6 +883,7 @@ def streaming_cep_error_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     burst-free users, and render identically to the batch pattern match —
     the oracle IS the batch gaps-and-islands SQL, pinning the NFA-state
     streaming form to the positional batch form."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     run_to_memory(cep_burst_state(stream), "mhs_stream_cep_bursts", "update")
     out = spark.table("mhs_stream_cep_bursts")
@@ -969,13 +949,14 @@ def streaming_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern (aggregate continuously, rank at serving). The oracle expands
     each event into its two windows arithmetically and replays the same
     dense_rank-free row_number with the type tiebreak."""
+    spark = session_with(spark, _STREAM_CONF)
     stream = read_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            utc_text("w.start").alias("window_start"),
             "event_type",
             "n",
         )
@@ -1065,25 +1046,15 @@ def _streaming_user_running_stats_tws(spark: SparkSession, sf_dir: str) -> DataF
     """Driver-facing wrapper for the transformWithStateInPandas twin —
     same oracle and final-state selection as `streaming_user_running_stats`,
     run through the Spark-4 StatefulProcessor instead of GroupState. The
-    API requires the RocksDB state store provider; the conf is set for
-    the (blocking) stream drain and restored after."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        run_to_memory(
-            user_running_stats_tws(stream), "mhs_stream_tws_stats", "update"
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    API requires the RocksDB state store provider, set in the stream's
+    session clone."""
+    spark = session_with(spark, {
+        **_STREAM_CONF,
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    })
+    stream = read_events_stream(spark, sf_dir)
+    run_to_memory(user_running_stats_tws(stream), "mhs_stream_tws_stats", "update")
     out = spark.table("mhs_stream_tws_stats")
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (

@@ -108,7 +108,7 @@ def test_create_managed_tables_refreshes_on_sf_switch(spark):
     embeds the sf name) and rewrites on mismatch; same-sf re-creates stay
     the cheap skip path. Events must also arrive ts-normalized (the raw
     read bypassed _read_events and could fault on nanos-vintage fixtures
-    or store NTZ where the view path serves TIMESTAMP)."""
+    or store another ts type than the view path's TIMESTAMP_NTZ)."""
     from mini_hive_server_spark.catalog import create_managed_tables
 
     db = "mhs_stale_check"
@@ -117,7 +117,7 @@ def test_create_managed_tables_refreshes_on_sf_switch(spark):
         create_managed_tables(spark, "/root/testdata/sf0.001", database=db, tables=tabs)
         n_before = spark.table(f"{db}.customer").count()
         # ts normalization reached the managed table
-        assert dict(spark.table(f"{db}.events").dtypes)["ts"] == "timestamp"
+        assert dict(spark.table(f"{db}.events").dtypes)["ts"] == "timestamp_ntz"
         create_managed_tables(spark, "/root/testdata/sf0.01", database=db, tables=tabs)
         n_after = spark.table(f"{db}.customer").count()
         assert n_after > n_before, (

@@ -348,21 +348,21 @@ def test_ansi_flip_rebuilds_route(spark, monkeypatch):
     assert _canon_body(flipped) == _canon_body(back)
 
 
-def test_zone_flip_rebuilds_route_which_repins_utc(spark, monkeypatch):
-    """The session zone is bound at analysis too. A build re-pins UTC
-    (`load_tables`), so a request under another zone rebuilds, leaves
-    the session at UTC, and the next request is warm again."""
+def test_zone_flip_serves_warm_route_with_identical_body(spark, monkeypatch):
+    """Timestamps are bound zone-free, so the session zone is not in the
+    route key: a request under another zone is served from the warm
+    route with an identical body, and the zone stays as the caller set
+    it. The route renders synthesized timestamps."""
+    route = ROUTES["/submissions"]
     zone = "spark.sql.session.timeZone"
-    before = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
+    before = collect_route_rows(spark, SF_ORACLE, route)
     original = spark.conf.get(zone)
     calls = _count_builds(monkeypatch)
     try:
         spark.conf.set(zone, "America/New_York")
-        flipped = collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
-        assert calls == [_MEMO_ROUTE]
-        assert spark.conf.get(zone) == "UTC"
-        collect_route_rows(spark, SF_ORACLE, _MEMO_ROUTE)
-        assert calls == [_MEMO_ROUTE]
+        flipped = collect_route_rows(spark, SF_ORACLE, route)
+        assert calls == []
+        assert spark.conf.get(zone) == "America/New_York"
     finally:
         spark.conf.set(zone, original)
     assert _canon_body(flipped) == _canon_body(before)

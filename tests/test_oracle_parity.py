@@ -17,9 +17,11 @@ ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle)
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, name):
     spec = SPECS[name]
+    before = spark.conf.getAll
     df = spec.fn(spark, SF_ORACLE)
     problems = compare(name, df, spec.oracle, SF_ORACLE)
     assert not problems, "\n".join(problems)
+    assert spark.conf.getAll == before, f"{name} wrote its caller's conf"
 
 
 def test_no_rows_only_queries():
@@ -45,15 +47,13 @@ def test_hostile_session_full_sweep(spark):
     under a session with hostile SQL confs. Opt-in via
     MHS_HOSTILE_SWEEP=1 (a second full ~8-min sweep).
 
-    What the sweep actually exercises (round-10 self-review corrected
-    an over-claim here): the LIVE hostile dimensions are ansi-mode OFF
-    and a non-default shuffle-partition count. A hostile non-UTC
-    timezone is SET but deliberately NEUTRALIZED by the engine itself —
-    `load_tables` re-pins spark.sql.session.timeZone to UTC on every
-    call (catalog.py), so the first swept query reverts it; this test
-    asserts that defense fired rather than claiming timezone coverage
-    the reset makes impossible (the defense itself is unit-pinned by
-    test_load_tables_repins_utc_timezone).
+    The hostile dimensions are ansi-mode OFF, a non-default
+    shuffle-partition count and a half-hour-offset timezone
+    (Asia/Kolkata). All three stay in force for the whole sweep:
+    timestamps are bound zone-free and no query writes its caller's
+    conf (tests/test_conf_writes.py), so the zone the sweep sets is the
+    zone every query runs under (tier-1 covers America/New_York in
+    tests/test_timezone.py).
 
     ADVICE r9 (medium): the round-9 form used
     `SparkSession.builder...getOrCreate()`, which inside the suite
@@ -70,7 +70,7 @@ def test_hostile_session_full_sweep(spark):
     from mini_hive_server_spark.operators.graph import clear_copurchase_cache
 
     hostile = spark.newSession()
-    hostile.conf.set("spark.sql.session.timeZone", "America/New_York")
+    hostile.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
     hostile.conf.set("spark.sql.ansi.enabled", "false")
     hostile.conf.set("spark.sql.shuffle.partitions", "32")
     # the isolation contract this test depends on: per-session SQLConf
@@ -87,18 +87,17 @@ def test_hostile_session_full_sweep(spark):
     try:
         for name in ORACLE_NAMES:
             spec = SPECS[name]
+            before = hostile.conf.getAll
             fails += compare(
                 name, spec.fn(hostile, SF_ORACLE), spec.oracle, SF_ORACLE
             )
+            if hostile.conf.getAll != before:
+                fails.append(f"{name} wrote its caller's conf")
     finally:
         clear_copurchase_cache()  # drop hostile-session blocks eagerly
     assert not fails, fails[:10]
-    # the engine's timezone defense must have fired on the hostile
-    # session (load_tables re-pins UTC on every call)
-    assert hostile.conf.get("spark.sql.session.timeZone") == "UTC", (
-        "load_tables did not re-pin the hostile session to UTC"
-    )
-    # ...while the genuinely-hostile confs stayed in force for the sweep
+    # the hostile confs stayed as set for the whole sweep
+    assert hostile.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata"
     assert hostile.conf.get("spark.sql.ansi.enabled") == "false"
     # the shared session must come out exactly as it went in
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

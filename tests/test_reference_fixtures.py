@@ -262,3 +262,30 @@ def test_held_copies_ignore_the_building_session_conf(spark):
             assert not problems, "\n".join(problems)
     assert child.conf.get("spark.sql.ansi.enabled") == "false"
     _forget_held_copies(spark)
+
+
+def test_synthesized_timestamps_render_alike_in_every_zone(spark):
+    """Every synthesized timestamp is a TIMESTAMP_NTZ holding UTC wall-clock
+    time, and its render (`reference_model._ts_text`) reads the same under
+    America/New_York as under UTC, the 10 rows inside New York's DST gaps
+    included (where `date_format` would read an hour late)."""
+    from mini_hive_server_spark.plans.reference_model import _ts_text
+
+    new_york = spark.newSession()
+    new_york.conf.set("spark.sql.session.timeZone", "America/New_York")
+    in_gap = 0
+    for table in fixtures.REF_TABLE_NAMES:
+        types = dict(_t(spark, table).dtypes)
+        cols = [c for c, t in types.items() if t.startswith("timestamp")]
+        assert cols and all(types[c] == "timestamp_ntz" for c in cols), (table, types)
+        rendered = [
+            sorted(_t(s, table).select("id", *(_ts_text(c) for c in cols)).collect())
+            for s in (spark, new_york)
+        ]
+        assert rendered[0] == rendered[1], table
+        in_gap += sum(
+            (v or "")[:13] in ("2024-03-10 02", "2025-03-09 02")
+            for row in rendered[0]
+            for v in row[1:]
+        )
+    assert in_gap == 10

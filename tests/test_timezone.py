@@ -1,13 +1,10 @@
-"""Driver-environment robustness: the external driver builds its OWN
-vanilla SparkSession, which inherits the host timezone — not necessarily
-UTC. `catalog.load_tables` pins `spark.sql.session.timeZone=UTC` at query
-time precisely so every date_format/window result is stable no matter what
-session the engine is handed; these tests prove that defense by running
-the timestamp-heavy oracles under a deliberately hostile session tz.
-(`reference_table` applies the same pin since round 4. A one-off full
-sweep — all 145 registered queries compared against their oracles under
-America/New_York — passed clean; this file keeps the fast representative
-subset.)"""
+"""Zone independence: the external driver builds its OWN vanilla
+SparkSession, which inherits the host timezone, and the HTTP facade and
+Thrift reuse one session across callers. Timestamps are bound zone-free
+in the readers (`catalog.EPOCH_NTZ`), so every query matches its oracle
+under any session timezone and none writes its caller's conf. These
+tests run the full registry in a `newSession()` set to America/New_York
+and check that its conf is identical before and after every query."""
 
 from __future__ import annotations
 
@@ -19,69 +16,40 @@ from .conftest import SF_ORACLE
 from .oracle_harness import compare
 
 SPECS = registry.all_specs()
-
-# the queries whose output shifts if timestamp rendering follows a
-# non-UTC session timezone: event-time windows, date parts, and
-# timestamp-to-string presentation
-_TZ_SENSITIVE = (
-    "events_tumbling_hourly",
-    "events_date_parts",
-    "events_sessionize",
-    "order_desc_recent",
-    # reference-model rows render synthesized timestamps via date_format;
-    # reference_table pins UTC the same way load_tables does (the bug was
-    # live until round 4 — these two failed under America/New_York)
-    "ref_worker_submission_page",
-    "ref_notifications_feed",
-    # round 5: renders day strings from event timestamps on both the
-    # write and read side of the partitioned rollup
-    "source_incremental_rollup",
-    # round 6: both CDC merges render the state's last_ts via date_format
-    # (the streaming twin pins UTC in its own wrapper)
-    "ingest_cdc_merge",
-    "streaming_cdc_merge",
-    # both as-of directions render event timestamps as strings
-    "events_asof_last_click",
-    "events_asof_next_error",
-    # round 6: renders per-event timestamps alongside RANGE-frame sums
-    "events_trailing_window_range",
-    # round 8: the date-arithmetic BI family — month/quarter/day bucketing
-    # and day-string rendering all shift if the session tz leaks through
-    "orders_yoy_growth",
-    "events_dau_stickiness",
-    "events_changepoint_cusum",
-    "events_asof_prev_click_tol",
-    "orders_cohort_ltv",
-    "streaming_sliding_topk",
-)
+ORACLE_NAMES = sorted(SPECS)
+_ZONE = "spark.sql.session.timeZone"
+_NEW_YORK = "America/New_York"
 
 
-@pytest.mark.parametrize("name", _TZ_SENSITIVE)
-def test_oracle_parity_under_non_utc_session(spark, name):
-    before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        spec = SPECS[name]
-        df = spec.fn(spark, SF_ORACLE)
-        problems = compare(name, df, spec.oracle, SF_ORACLE)
-        assert not problems, "\n".join(problems)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", before)
+@pytest.fixture(scope="module")
+def new_york(spark):
+    from mini_hive_server_spark.operators.graph import clear_copurchase_cache
 
-def test_load_tables_repins_utc_timezone(spark):
-    """The defense itself, unit-pinned (round-10 self-review): the
-    hostile-sweep and the parametrized tests above rely on
-    `load_tables` re-setting spark.sql.session.timeZone to UTC on EVERY
-    call — flip the session tz, call load_tables, and the conf must be
-    UTC again before any query executes."""
+    session = spark.newSession()
+    session.conf.set(_ZONE, _NEW_YORK)
+    yield session
+    clear_copurchase_cache()  # drop the New York session's graph blocks
+
+
+@pytest.mark.parametrize("name", ORACLE_NAMES)
+def test_oracle_parity_under_non_utc_session(new_york, name):
+    spec = SPECS[name]
+    before = new_york.conf.getAll
+    problems = compare(name, spec.fn(new_york, SF_ORACLE), spec.oracle, SF_ORACLE)
+    assert not problems, "\n".join(problems)
+    assert new_york.conf.getAll == before, f"{name} wrote its caller's conf"
+
+
+def test_load_tables_leaves_caller_conf_unchanged(spark):
+    """Binding the tables reads the caller's session and writes none of
+    its conf: a fresh New York session keeps its zone and every other
+    conf."""
     from mini_hive_server_spark.catalog import load_tables
 
-    before = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        load_tables(spark, SF_ORACLE)
-        assert spark.conf.get("spark.sql.session.timeZone") == "UTC", (
-            "load_tables must re-pin the session timezone to UTC"
-        )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", before)
+    session = spark.newSession()
+    session.conf.set(_ZONE, _NEW_YORK)
+    before = session.conf.getAll
+    tables = load_tables(session, SF_ORACLE)
+    assert session.conf.getAll == before
+    assert session.conf.get(_ZONE) == _NEW_YORK
+    assert dict(tables["events"].dtypes)["ts"] == "timestamp_ntz"
