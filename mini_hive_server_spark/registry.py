@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from . import persistence
+from .session import ship_package_to_executors
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -195,7 +196,11 @@ def register(
             # persists survive until the NEXT top-level invocation. The
             # scope releases what a query that raises had registered.
             # release_tracked is looked up at call time so a tracer can
-            # wrap it (perfbench's traced run does).
+            # wrap it (perfbench's traced run does). Every registered
+            # query ships the package zip to the executors, so a
+            # driver-owned session works from any cwd, also for a query
+            # that reads no fixture (once per SparkContext).
+            ship_package_to_executors(spark)
             persistence.release_tracked()
             with persistence.scope():
                 return fn(spark, sf_dir)

@@ -193,9 +193,10 @@ def ship_package_to_executors(spark: SparkSession) -> None:
     cluster this replaces the usual --py-files deploy step; locally it
     costs one ~100 KB zip per context.
 
-    Called from get_spark AND from catalog.load_tables so driver-owned
-    vanilla sessions (the correctness gate imports __spark_entry__ with
-    its own SparkSession) are covered too."""
+    Called from get_spark AND from the wrapper `registry.register` puts
+    around every query, so driver-owned vanilla sessions (the correctness
+    gate imports __spark_entry__ with its own SparkSession) are covered
+    too, including a query that reads no fixture as the session's first."""
     import tempfile
     import zipfile
 

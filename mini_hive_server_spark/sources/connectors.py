@@ -30,12 +30,18 @@ from __future__ import annotations
 import contextlib
 import os
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_tables, session_with, table_path
 from ..registry import register
+from . import synth_sources
+
+# the Python data sources reach workers as code, not as a package import
+# (see synth_sources)
+cloudpickle.register_pickle_by_value(synth_sources)
 
 _TMP_ROOT = "/tmp/mhs_spark_sources"
 
@@ -789,47 +795,6 @@ def source_json_corrupt_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- Python DataSource API reader
 
-try:  # Spark 4+ Python DataSource API
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class SynthRangeDataSource(DataSource):
-        """Custom batch source via the Python DataSource API (Spark 4):
-        a partition-parallel deterministic row generator — the minimal
-        harness for plugging ANY Python-reachable system (REST API,
-        message queue, bespoke format) into `spark.read.format(...)`.
-        Each InputPartition reads its residue class independently, so the
-        scan parallelizes exactly like a file source's splits."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "synthrange"
-
-        def schema(self) -> str:
-            return "id bigint, shard int, fp string"
-
-        def reader(self, schema):
-            return _SynthRangeReader(self.options)
-
-    class _SynthRangeReader(DataSourceReader):
-        def __init__(self, options):
-            self.n = int(options.get("n", "1000"))
-            self.parts = int(options.get("partitions", "8"))
-
-        def partitions(self):
-            return [InputPartition(i) for i in range(self.parts)]
-
-        def read(self, partition):
-            import hashlib
-
-            shard = partition.value
-            for i in range(shard, self.n, self.parts):
-                yield (i, shard, hashlib.md5(str(i).encode()).hexdigest())
-
-    _HAS_PY_DATASOURCE = True
-except ImportError:  # pragma: no cover - older Spark
-    _HAS_PY_DATASOURCE = False
-
-
 _PYDS_N = 5000
 _PYDS_PARTS = 8
 
@@ -886,9 +851,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources; Arrow batches carry rows JVM-side. The aggregate is one
     1-row partial-agg. (A production reader points read() at its
     range-sliced external system; the checksum contract stays.)"""
-    if not _HAS_PY_DATASOURCE:  # pragma: no cover
-        raise NotImplementedError("Python DataSource API requires Spark 4+")
-    _register_source(spark, SynthRangeDataSource)
+    _register_source(spark, synth_sources.SynthRangeDataSource)
     df = (
         spark.read.format("synthrange")
         .option("n", str(_PYDS_N))
@@ -1029,72 +992,6 @@ def source_agg_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------ Python DataSource API, STREAMING reader
 
-try:  # Spark 4+ streaming Python DataSource
-    from pyspark.sql.datasource import DataSourceStreamReader
-
-    class SynthTickStreamSource(DataSource):
-        """Custom STREAMING source via the Python DataSource API — the
-        streaming twin of `SynthRangeDataSource`, using the
-        EXECUTOR-PARALLEL `DataSourceStreamReader` (not the
-        driver-prefetching Simple variant): the driver only tracks
-        offsets; `partitions(start, end)` splits each micro-batch's
-        offset range into shards and executors run `read()` in
-        parallel — the Kafka-consumer split model, reachable from pure
-        Python. This is how a bespoke queue/REST/changelog system plugs
-        into Structured Streaming without JVM code."""
-
-        @classmethod
-        def name(cls) -> str:
-            return "synthtick"
-
-        def schema(self) -> str:
-            return "id bigint, batch int, fp string"
-
-        def streamReader(self, schema):
-            return _SynthTickStreamReader(self.options)
-
-    class _SynthTickStreamReader(DataSourceStreamReader):
-        def __init__(self, options):
-            self.n = int(options.get("n", "2000"))
-            self.batch = int(options.get("batch", "500"))
-            self.parts = int(options.get("partitions", "4"))
-            self._latest = 0
-
-        def initialOffset(self) -> dict:
-            return {"offset": 0}
-
-        def latestOffset(self) -> dict:
-            # one batch-worth of new rows becomes available per poll,
-            # until the configured end of stream
-            self._latest = min(self._latest + self.batch, self.n)
-            return {"offset": self._latest}
-
-        def partitions(self, start: dict, end: dict):
-            lo, hi = start["offset"], end["offset"]
-            return [
-                InputPartition((lo, hi, i, self.parts, self.batch))
-                for i in range(self.parts)
-            ]
-
-        def read(self, partition):
-            import hashlib
-
-            lo, hi, shard, parts, batch = partition.value
-            for i in range(lo + shard, hi, parts):
-                yield (
-                    i,
-                    i // batch,
-                    hashlib.md5(str(i).encode()).hexdigest(),
-                )
-
-        def commit(self, end: dict) -> None:
-            pass  # nothing to clean up: the generator is stateless
-
-    _HAS_PY_STREAM_DATASOURCE = True
-except ImportError:  # pragma: no cover - older Spark
-    _HAS_PY_STREAM_DATASOURCE = False
-
-
 _PYSTREAM_N = 2000
 _PYSTREAM_BATCH = 500
 
@@ -1133,13 +1030,9 @@ def source_python_stream_datasource(spark: SparkSession, sf_dir: str) -> DataFra
     sink is the verification harness; a production run points
     writeStream at the exactly-once parquet sink
     (`streaming/events_stream.py::run_to_parquet_sink`)."""
-    if not _HAS_PY_STREAM_DATASOURCE:  # pragma: no cover
-        raise NotImplementedError(
-            "streaming Python DataSource requires Spark 4+"
-        )
     from ..streaming.events_stream import run_to_memory
 
-    _register_source(spark, SynthTickStreamSource)
+    _register_source(spark, synth_sources.SynthTickStreamSource)
     stream = (
         spark.readStream.format("synthtick")
         .option("n", str(_PYSTREAM_N))

@@ -970,116 +970,3 @@ def streaming_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("window_start", "rk", "event_type", "n")
         .orderBy("window_start", "rk")
     )
-
-
-# ------------------- transformWithState twin (Spark 4 API, env-gated)
-
-def tws_available() -> bool:
-    """transformWithStateInPandas' Python runner hard-requires protobuf
-    (`from google.protobuf import descriptor` at worker init); this
-    container ships no protobuf, so the operator is implemented and
-    shape-complete but cannot EXECUTE here (no pip install allowed)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def user_running_stats_tws(events: DataFrame) -> DataFrame:
-    """The `user_running_stats` stateful operator re-expressed on Spark
-    4's `transformWithStateInPandas` — the successor API to
-    applyInPandasWithState: an object-oriented StatefulProcessor with
-    named state variables (ValueState here; ListState/MapState, timers,
-    and TTL are the API's additions), requiring the RocksDB state store
-    provider. Same semantics as the GroupState twin: per-user running
-    (count, sum, max) with state partitioned by key across executors.
-
-    Runtime-gated on `tws_available()` (protobuf absent in this image —
-    verified: the streaming Python runner exits -2 with ImportError);
-    `tests/test_streaming.py` runs it when the environment allows and
-    skips with the documented reason otherwise, so the code path is
-    exercised the moment the dependency exists."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", _STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                n, total, mx = self._state.get()
-            else:
-                n, total, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                if len(pdf):
-                    mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningStats(),
-        outputStructType=USER_STATS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _streaming_user_running_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-facing wrapper for the transformWithStateInPandas twin —
-    same oracle and final-state selection as `streaming_user_running_stats`,
-    run through the Spark-4 StatefulProcessor instead of GroupState. The
-    API requires the RocksDB state store provider, set in the stream's
-    session clone."""
-    spark = session_with(spark, {
-        **_STREAM_CONF,
-        "spark.sql.streaming.stateStore.providerClass":
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    })
-    stream = read_events_stream(spark, sf_dir)
-    run_to_memory(user_running_stats_tws(stream), "mhs_stream_tws_stats", "update")
-    out = spark.table("mhs_stream_tws_stats")
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "user_id",
-            "n_events",
-            F.round("total_value", 2).alias("total_value"),
-            "max_value",
-        )
-        .orderBy("user_id")
-    )
-
-
-if tws_available():  # pragma: no cover — protobuf absent in this image
-    # presence-gated auto-registration: the moment the
-    # environment gains protobuf, the tws twin registers itself and the
-    # oracle gate covers it like any other query — the documented skip
-    # self-heals instead of waiting for a human to notice the dependency
-    # appeared. `tests/test_streaming.py::
-    # test_tws_registration_tracks_protobuf_presence` pins that the
-    # registration state always equals `tws_available()`.
-    register(
-        "streaming_user_running_stats_tws",
-        oracle=_USER_STATS_ORACLE,
-        tags=("streaming",),
-    )(_streaming_user_running_stats_tws)

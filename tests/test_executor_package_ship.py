@@ -10,6 +10,11 @@ from ANY other directory, `graph_connected_components` and
 SparkContext and `addPyFile`s it; this test reproduces the original
 failure shape — a vanilla session built in a subprocess whose cwd is a
 temp dir — and pins that a Python-kernel query now executes.
+
+The two Python data-source queries run first in that session. They read
+no fixture, so they pass only if every registered query ships the
+package (not just the fixture reader), and the streaming source passes
+only if its classes are pickled by value (`sources/synth_sources.py`).
 """
 
 from __future__ import annotations
@@ -20,8 +25,8 @@ import tempfile
 
 REPO = "/root/repo"
 
-# graph_connected_components was one of the two queries the round-10
-# verdict observed failing from a foreign cwd: its union-find pre-pass
+# graph_connected_components was one of the two queries first observed
+# failing from a foreign cwd: its union-find pre-pass
 # ships package-level functions to Python workers. sf0.001 keeps the
 # subprocess JVM under ~1 min.
 _SCRIPT = f"""
@@ -38,9 +43,13 @@ spark.sparkContext.setLogLevel("ERROR")
 import os
 assert os.getcwd() != {REPO!r}, "test must run from a foreign cwd"
 from mini_hive_server_spark import registry
-df = registry.queries()["graph_connected_components"](
-    spark, "/root/testdata/sf0.001"
-)
+qs = registry.queries()
+# the Python data sources first: they read no fixture, so the package
+# ships only through the registry wrapper, and the streaming source's
+# planner worker sees no shipped zip at all
+for name in ("source_python_datasource", "source_python_stream_datasource"):
+    print(name, qs[name](spark, "/root/testdata/sf0.001").collect())
+df = qs["graph_connected_components"](spark, "/root/testdata/sf0.001")
 n = df.count()
 print("FOREIGN_CWD_OK", n)
 spark.stop()

@@ -269,8 +269,11 @@ def test_pq_adc_candidates_cover_true_topk(spark):
     ADC top-C candidate set contains the true top-5 for every fixed
     query. Measure the required depth through the production scoring path
     (_pq_scored) at both correctness SFs and require >= 2x margin under
-    _PQ_C — codebook drift (Spark ML k-means changes, fixture
-    regeneration) fails here before it reaches the driver."""
+    _PQ_C. The codebook is a pure function of the fixture (see
+    test_pq_codebook_is_independent_of_partitioning), so the depth
+    measured here is the depth at every core count; a change to the
+    k-means or the training sample, or a regenerated fixture, fails here
+    before it reaches the driver."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -294,6 +297,24 @@ def test_pq_adc_candidates_cover_true_topk(spark):
             f"{sf}: true top-5 sits at ADC depth {needed}, "
             f"need <= {_PQ_C // 2} for 2x margin"
         )
+
+
+def test_pq_codebook_is_independent_of_partitioning(spark):
+    """The PQ codebook depends only on the fixture: the training sample
+    is chosen by key hash under an ordered limit, so the same centres come
+    out however the corpus is partitioned (`sample()` drew per partition,
+    and the scan has one partition per core)."""
+    import numpy as np
+
+    from mini_hive_server_spark.operators.similarity import (
+        _pq_codebook,
+        _pq_scored,
+        _train_sample,
+    )
+
+    emb, _, _ = _pq_scored(spark, "/root/testdata/sf0.01")
+    books = [_pq_codebook(_train_sample(emb.repartition(n), "vn")[0]) for n in (3, 7)]
+    assert np.array_equal(*books)
 
 
 def test_oph_candidates_cover_jaccard_pairs(spark):

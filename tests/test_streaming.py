@@ -121,80 +121,6 @@ def test_streaming_dedup_matches_batch_distinct(spark):
     assert streamed == batch
 
 
-def test_tws_registration_tracks_protobuf_presence():
-    """The tws twin's registration is presence-gated, not hand-toggled:
-    `streaming_user_running_stats_tws` must be registered exactly when
-    `tws_available()` — so if the image ever gains protobuf, the query
-    enters the oracle gate automatically and this suite's skip
-    self-heals (VERDICT r11 #8)."""
-    from mini_hive_server_spark import registry
-    from mini_hive_server_spark.streaming.events_stream import tws_available
-
-    assert (
-        "streaming_user_running_stats_tws" in registry.all_specs()
-    ) == tws_available()
-
-
-def test_transform_with_state_twin_matches_batch(spark, sf_dir):
-    """Spark-4 transformWithStateInPandas twin of user_running_stats:
-    runs when the environment provides protobuf (the API's Python-runner
-    dependency), otherwise skips with the documented gate."""
-    import pytest
-
-    from mini_hive_server_spark.streaming.events_stream import (
-        read_events_stream,
-        run_to_memory,
-        tws_available,
-        user_running_stats_tws,
-    )
-
-    if not tws_available():
-        pytest.skip(
-            "protobuf absent: transformWithStateInPandas' Python runner "
-            "cannot start in this image (events_stream.tws_available)"
-        )
-    from pyspark.sql import functions as F
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        run_to_memory(
-            user_running_stats_tws(stream), "mhs_stream_tws_stats", "update"
-        )
-        out = spark.table("mhs_stream_tws_stats")
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-        final = (
-            out.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("user_id", "n_events")
-        )
-        from mini_hive_server_spark.catalog import load_tables
-
-        batch = (
-            load_tables(spark, sf_dir)["events"]
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-        )
-        got = {r.user_id: r.n_events for r in final.collect()}
-        want = {r.user_id: r.n_events for r in batch.collect()}
-        assert got == want
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-
 def test_stateful_streams_on_rocksdb_state_store(spark):
     """The default HDFS-backed state store keeps all key state on the
     executor HEAP — fine for the fixture, an OOM at 100 TB key
