@@ -33,9 +33,11 @@ from __future__ import annotations
 import os
 import threading
 import weakref
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 # Driver fixture tables (TESTDATA.md) — the relational modeling surface for
 # every reference query shape plus the LLM-pipeline extension tables.
@@ -65,12 +67,12 @@ def table_path(sf_dir: str, name: str) -> str:
 def events_ts_encoding(sf_dir: str) -> str:
     """Probe the physical encoding of events.ts from the parquet footer.
 
-    The driver's fixture generator has shipped the column as TIMESTAMP(NANOS)
-    (round 1-2) and as timestamp[us] (round 3+); a future run could emit
-    tz-adjusted micros. The footer read is pure pyarrow — no JVM round-trip —
-    and is the single source of truth for BOTH the batch reader below and the
-    streaming source schema (streaming/events_stream.py), so every consumer
-    normalizes identically. Returns one of: "ns" (int64 nanos under the
+    Fixture vintages differ in how they store the column: TIMESTAMP(NANOS),
+    timestamp[us], or tz-adjusted micros. The footer read is pure pyarrow —
+    no JVM round-trip — and is the single source of truth for BOTH the batch
+    reader below and the streaming source schema
+    (streaming/events_stream.py), so every consumer normalizes every
+    vintage identically. Returns one of: "ns" (int64 nanos under the
     legacy conf), "ntz_us" (timestamp[us], no tz → Spark TIMESTAMP_NTZ),
     "ltz" (tz-adjusted → Spark TIMESTAMP), "timestamp" (unknown-but-castable
     fallback).
@@ -249,6 +251,25 @@ def _scan_partitions(df: DataFrame) -> int:
     if n is None:
         n = memo[key] = df.rdd.getNumPartitions()
     return n
+
+
+def local_rows(spark: SparkSession, rows: Iterable[tuple], schema: str) -> DataFrame:
+    """A DataFrame of `rows`, tuples the driver already holds, typed by
+    the DDL string `schema` (every column nullable).
+
+    Each value becomes a typed literal, `lit(v).cast(type)`, so no value
+    is rendered into SQL text, and the rows are `inline`d over a
+    one-partition range. A DataFrame made from a Python list is a Python
+    RDD instead: every action on it ships tasks to Python workers, and a
+    global sort over it runs a sampling job first. Over one partition a
+    sort needs no exchange, so this relation materializes in one task of
+    one job on the JVM alone."""
+    st = StructType.fromDDL(schema)
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType) for v, f in zip(row, st.fields, strict=True)])
+        for row in rows
+    ]
+    return spark.range(0, 1, 1, 1).select(F.inline(F.array(*structs).cast(ArrayType(st))))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

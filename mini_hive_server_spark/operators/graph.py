@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables, session_memo, session_memos
+from ..catalog import load_tables, local_rows, session_memo, session_memos
 from ..registry import register
 from .behavior import TRANSITIONS_SQL, transition_counts
 
@@ -750,7 +750,12 @@ def bfs_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
     Block lifecycle: a `CheckpointChain` keeps every tier's block while
     the hops run (the visited union reads them all) and drops them all
     when the loop ends, whether it returns or raises: the census is
-    built from driver-side scalars and carries no lineage into them."""
+    built from driver-side scalars and carries no lineage into them.
+
+    The census is a one-partition literal relation (`catalog.local_rows`),
+    so its sorted five rows come from one task of one JVM job. A
+    Python-RDD DataFrame took three jobs for the same sort, two of them
+    on Python workers (the range-bound sampling and the shuffle map)."""
     from ..persistence import CheckpointChain
 
     par = 2 * spark.sparkContext.defaultParallelism
@@ -782,9 +787,7 @@ def bfs_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
             counts.append(int(got["n"]))
             visited = visited.unionByName(frontier)
         census = [(-1, n_nodes - sum(counts))] + list(enumerate(counts))
-        return spark.createDataFrame(
-            census, "distance int, n_nodes long"
-        ).orderBy("distance")
+        return local_rows(spark, census, "distance int, n_nodes long").orderBy("distance")
 
 
 # ---------------------------- connected components, large-star/small-star

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, local_rows
 from ..registry import register
 
 _SEMI_ORACLE = """
@@ -226,9 +226,7 @@ def range_join_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose skew AQE can manage. `dedup.py`'s band-bucket join is the same
     idea with hashes for bands."""
     events = load_tables(spark, sf_dir)["events"]
-    tiers = spark.createDataFrame(
-        list(_TIERS), "lo double, hi double, tier string"
-    )
+    tiers = local_rows(spark, _TIERS, "lo double, hi double, tier string")
     return (
         events.join(
             F.broadcast(tiers),
@@ -284,9 +282,7 @@ def join_null_safe_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nation = load_tables(spark, sf_dir)["nation"]
     dim = nation.select(F.col("n_nationkey").alias("nk"), "n_name").unionAll(
-        nation.sparkSession.createDataFrame(
-            [(None, "UNKNOWN")], "nk bigint, n_name string"
-        )
+        local_rows(spark, [(None, "UNKNOWN")], "nk bigint, n_name string")
     )
     return (
         cust.join(F.broadcast(dim), cust["nk"].eqNullSafe(dim["nk"]))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables
+from ..catalog import load_tables, local_rows
 from ..registry import register
 
 _INSERT_ORACLE = """
@@ -45,9 +45,10 @@ def mutation_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_tables(spark, sf_dir)["customer"].select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
-    new_rows = spark.createDataFrame(
+    new_rows = local_rows(
+        spark,
         [(9001, "BUILDING", 50.0), (9002, "MACHINERY", 10.0)],
-        schema="c_custkey long, c_mktsegment string, c_acctbal double",
+        "c_custkey long, c_mktsegment string, c_acctbal double",
     )
     return (
         cust.unionByName(new_rows)

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_tables, parallelize_scan
+from ..catalog import load_tables, local_rows, parallelize_scan
 from ..persistence import tracked_persist
 from ..registry import register
 from ._scoring import _BM25_CTES, bm25_scores
@@ -35,16 +35,19 @@ def _dot(a: str, b: str):
     return F.expr(_DOT.format(a=a, b=b))
 
 
+def _vectors(embeddings: DataFrame, *cols: str) -> DataFrame:
+    """(vec_id, *cols, v): each row of the embeddings table with its
+    vector as array<double>."""
+    return embeddings.select("vec_id", *cols, F.col("embedding").cast("array<double>").alias("v"))
+
+
 def _normed_embeddings(spark: SparkSession, sf_dir: str, *cols: str) -> DataFrame:
     """(vec_id, *cols, v, nrm): every embedding as array<double> with its
     L2 norm, computed once per row — per pair it would cost two extra dot
     products for identical doubles (sqrt of the same sum in the same
     order)."""
-    return (
-        parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
-        .select("vec_id", *cols, F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn("nrm", F.sqrt(_dot("v", "v")))
-    )
+    emb = parallelize_scan(load_tables(spark, sf_dir)["embeddings"], "vec_id")
+    return _vectors(emb, *cols).withColumn("nrm", F.sqrt(_dot("v", "v")))
 
 
 _TRAIN_CAP = 4096  # training rows per codebook: bounds the collect and the fit
@@ -57,7 +60,12 @@ def _train_sample(emb: DataFrame, col: str) -> "tuple[np.ndarray, list]":
     fixture: `sample()` draws per partition, so its rows (and a codebook
     trained on them) changed with the core count. The five query rows
     (vec_id < 5) sort first under the same ordered limit, so one
-    TakeOrderedAndProject job fetches both."""
+    TakeOrderedAndProject job fetches both.
+
+    `emb` must be the embeddings scan itself, not its
+    `parallelize_scan`: the ordered limit then runs map-side over the
+    file scan, where over the repartition it shuffles the corpus first
+    for the same rows."""
     train = F.expr("pmod(xxhash64(vec_id), 2) = 0")
     rows = (
         emb.filter(train | (F.col("vec_id") < 5))
@@ -400,7 +408,8 @@ def _ivf_ann(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     coarse quantizer is trained on every call, on the driver, from the
     same bounded sample as the PQ codebook."""
     emb = _normed_embeddings(spark, sf_dir)
-    centers = _kmeans(_train_sample(emb, "v")[0], _IVF_K)  # (k, dim)
+    scan = _vectors(load_tables(spark, sf_dir)["embeddings"])
+    centers = _kmeans(_train_sample(scan, "v")[0], _IVF_K)  # (k, dim)
     # Centroids ride in the pandas_udf closures (~8 KB shipped once per
     # task), and each Arrow batch does ONE (batch x dim) @ (dim x k)
     # matmul. The earlier form inlined every centroid as a plan-literal
@@ -677,19 +686,20 @@ def _pq_scored(spark: SparkSession, sf_dir: str):
     relation) so the coverage test measures candidate depth through the
     exact production path. One bounded collect fetches the training
     vectors and the query rows; nothing is kept between calls."""
-    emb = parallelize_scan(
-        load_tables(spark, sf_dir)["embeddings"], "vec_id"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    # normalize once: ADC then approximates the cosine directly
-    emb = emb.withColumn(
-        "vn",
-        F.expr("transform(v, e -> e / sqrt(" + _DOT.format(a="v", b="v") + "))"),
-    )
+    def _unit(embeddings: DataFrame) -> DataFrame:
+        # normalize once: ADC then approximates the cosine directly
+        return _vectors(embeddings).withColumn(
+            "vn",
+            F.expr("transform(v, e -> e / sqrt(" + _DOT.format(a="v", b="v") + "))"),
+        )
+
+    scan = load_tables(spark, sf_dir)["embeddings"]
+    emb = _unit(parallelize_scan(scan, "vec_id"))
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"),
         F.col("vn").alias("qvn"),
     )
-    train, qrows = _train_sample(emb, "vn")
+    train, qrows = _train_sample(_unit(scan), "vn")
     return emb, q, _pq_scored_over(emb, _pq_codebook(train), qrows)
 
 
@@ -1643,9 +1653,8 @@ def retrieval_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((step, top["vec_id"], top["rel"], top["maxsim"], top["score"]))
         picked_vecs.append(list(top["qv"]))
 
-    return spark.createDataFrame(
-        picks,
-        "pick_order int, vec_id long, rel long, maxsim long, score long",
+    return local_rows(
+        spark, picks, "pick_order int, vec_id long, rel long, maxsim long, score long"
     ).orderBy("pick_order")
 
 
@@ -1774,6 +1783,6 @@ def corpus_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         picks.append((step, top["vec_id"], top["norm2"], top["mind2"]))
         sel_vecs.append((list(top["qv"]), top["norm2"]))
 
-    return spark.createDataFrame(
-        picks, "pick_order int, vec_id long, norm2 long, mind2 long"
+    return local_rows(
+        spark, picks, "pick_order int, vec_id long, norm2 long, mind2 long"
     ).orderBy("pick_order")

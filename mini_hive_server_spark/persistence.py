@@ -34,8 +34,8 @@ Two classes of tracked block exist:
   sampled with a per-RDD seed. If the persist were dropped BEFORE the
   consumer materialized, a late action could plan the two subtrees as two
   independent range exchanges with independently-sampled bounds —
-  silently wrong ranks, not just wasted work (ADVICE r6). Release is
-  therefore DEFERRED: at each cycle the tracker asks the CacheManager
+  silently wrong ranks, not just wasted work. Release is therefore
+  DEFERRED: at each cycle the tracker asks the CacheManager
   whether the cached buffers were ever built; if not (consumer never ran
   — e.g. a caller built query N+1 before collecting query N, or the plan
   audit explains without executing), the entry re-registers itself on
@@ -201,9 +201,9 @@ def tracked_persist(df: DataFrame, correctness_bearing: bool = False) -> DataFra
     range bounds, nondeterministic ids)."""
     entry = (_DeferredRelease if correctness_bearing else _OwnedPersist)(df)
     _LIVE.append(entry)
-    # Contract boundary (round-10 self-review): deferral protects the
-    # never-materialized direction only. Once the buffers were built AND
-    # a later registered query's start released them, a FURTHER action on
+    # Contract boundary: deferral protects the never-materialized
+    # direction only. Once the buffers were built AND a later registered
+    # query's start released them, a FURTHER action on
     # the earlier query's still-held DataFrame recomputes from scratch —
     # for a sampled range exchange that means freshly-sampled bounds and
     # silently different ranks. The engine's own consumers never do this

@@ -521,6 +521,30 @@ def test_pq_adc_kernel_evaluated_exactly_once(spark):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
+def test_codebook_training_collect_reads_the_scan_map_side(spark, monkeypatch):
+    """The PQ codebook's and the IVF cells' training sample is an
+    ordered limit over the embeddings scan itself: one map-side
+    TakeOrderedAndProject job. Over `parallelize_scan` the same rows
+    would cost a corpus shuffle and a second job first."""
+    from mini_hive_server_spark.operators.similarity import _ivf_ann, _pq_scored
+
+    plans = []
+    frame = type(spark.range(1))
+    collect = frame.collect
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    _pq_scored(spark, SF_SMOKE)
+    _ivf_ann(spark, SF_SMOKE, nprobe=1)
+    assert len(plans) == 2, plans
+    for plan in plans:
+        assert "TakeOrderedAndProject" in plan and "FileScan" in plan, plan
+        assert "Exchange" not in plan, plan
+
+
 def test_asof_forward_is_window_not_range_join(spark):
     """Forward as-of guard: the next-error carry must be one window pass
     per user partition (a single key exchange) — never a time-range
