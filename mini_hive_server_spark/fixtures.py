@@ -47,9 +47,9 @@ fixtures — the 100 TB arguments live with the operators that also run on
 the big TPC-H tables. Synthesis is a map-only project over ``range``,
 but 10-15 md5 hashes per row make it the bulk of a small ``ref_*``
 query's work, so each collection is synthesized once per session and
-held in the session's memo (``reference_table``). Still no files: the
-held copy lives in Spark's block manager, and an external
-``clearCache()`` makes the next call synthesize a fresh one.
+held, in one partition, in the session's memo (``reference_table``).
+Still no files: the held copy lives in Spark's block manager, and an
+external ``clearCache()`` makes the next call synthesize a fresh one.
 """
 
 from __future__ import annotations
@@ -86,8 +86,9 @@ class _Dialect:
         self.spark = spark
 
     def src(self, n: int) -> str:
-        # row source with a bigint column `id` = 0..n-1
-        return f"range({n})" if self.spark else f"range({n}) t(id)"
+        # row source with a bigint column `id` = 0..n-1; Spark's is one
+        # partition (reference_table says why)
+        return f"range(0, {n}, 1, 1)" if self.spark else f"range({n}) t(id)"
 
     def h_on(self, seed: str, idx_expr: str) -> str:
         # deterministic 32-bit non-negative int per (seed, expr): first 8
@@ -313,6 +314,19 @@ def reference_table(spark: SparkSession, table: str) -> DataFrame:
     the copy (``storageLevel`` NONE), a FRESH plan is built and
     persisted, never the stale captured DataFrame (the rule
     ``graph.copurchase_edges`` follows, for the reason measured there).
+
+    The copy is ONE partition: it is synthesized over a one-slice
+    ``range``, so its executed plan reports ``SinglePartition``, which
+    satisfies every distribution an operator can ask for. A hash or
+    global aggregate, a sort or a window over it then plans no exchange,
+    and a query over held copies runs as one single-task job plus its
+    broadcasts instead of a shuffle stage per operator at
+    ``defaultParallelism`` tasks each (SCALE.md "Held reference copies
+    in one partition"). What bounds it: the row counts are the ``N_*``
+    constants, the same at every scale factor, and each materialized
+    copy stays far under 64 MB (``tests/test_reference_fixtures.py``
+    pins that ceiling); a collection that grew with the scale factor
+    would need more partitions.
 
     Synthesis depends on no session conf, so a copy built under any
     session reads the same in all of them: every timestamp is a

@@ -84,6 +84,15 @@ Design notes:
     the route is rebuilt from a fresh plan, which re-persists the
     copies it reads; serving the old plan would re-run their md5
     synthesis on every later request.
+* **A warm pass runs 44 jobs.** One request to each of the 23 facade
+  queries (the route table, GET /tasks/:id and the three POST folds)
+  runs 44 Spark jobs and, at sf0.01, 44 tasks. Held reference copies
+  spread over ``defaultParallelism`` partitions ran 67 jobs and 175
+  tasks on a 4-core host. The copies are one partition
+  (``fixtures.reference_table``), so the 21 routes that read only them
+  plan no shuffle: each runs one job plus one per broadcast, and 11 of
+  them run as a single job. The other two routes read the TPC-H
+  fixtures (6 and 3 jobs). `tests/test_http_server.py` pins the budget.
 * **Auth is out of scope** — the reference's Firebase-token middleware
   (``verifyFBToken``, index.js:60-80) is identity plumbing, not query
   semantics; the facade serves the already-synthesized multi-tenant

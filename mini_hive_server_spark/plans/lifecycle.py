@@ -28,16 +28,28 @@ from ..registry import register
 # per-tenant balance).
 
 
+def tenk(x: F.Column) -> F.Column:
+    """`x` folded to exact integer ten-thousandths, the unit of a
+    4-decimal money product; `tenk_sql` is the oracle twin."""
+    return F.floor(x * 10000 + F.lit(0.5)).cast("bigint")
+
+
+def tenk_sum(units: F.Column) -> F.Column:
+    """The exact sum of ten-thousandths `units` shown as 2-decimal money
+    (half-up to cents, then one IEEE division); `tenk_sum_sql` is the
+    oracle twin."""
+    return F.floor((F.sum(units) + F.lit(50)) / F.lit(100.0)) / F.lit(100.0)
+
+
 def tenk_sql(x: str) -> str:
-    """The SQL expression `x` folded to exact integer ten-thousandths,
-    the unit of a 4-decimal money product (the oracles' twin of
-    `tpch.tenk`)."""
+    """The SQL expression `x` folded to exact integer ten-thousandths
+    (the oracles' twin of `tenk`)."""
     return f"CAST(floor({x} * 10000 + 0.5) AS BIGINT)"
 
 
 def tenk_sum_sql(units: str) -> str:
     """The exact sum of ten-thousandths `units` shown as 2-decimal money
-    (the oracles' twin of `tpch.tenk_sum`)."""
+    (the oracles' twin of `tenk_sum`)."""
     return f"floor((sum({units}) + 50) / 100.0) / 100.0"
 
 
@@ -45,6 +57,15 @@ def tenk_sum_sql(units: str) -> str:
 _APPROVED_TENK = f"""CASE WHEN l_linestatus = 'F'
                           THEN {tenk_sql("l_extendedprice * (1 - l_discount)")}
                           ELSE 0 END"""
+
+
+def _approved_tenk() -> F.Column:
+    """The Column twin of `_APPROVED_TENK`."""
+    return F.when(
+        F.col("l_linestatus") == "F",
+        tenk(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
+    ).otherwise(F.lit(0))
+
 
 _BUYER_HOME_ORACLE = f"""
 SELECT * FROM
@@ -91,30 +112,13 @@ def buyer_home_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = t["lineitem"]
     keys = my_orders.select("o_orderkey")
-    tenk_value = F.floor(
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 10000
-        + F.lit(0.5)
-    ).cast("bigint")
     sub_stats = (
         li.join(F.broadcast(keys), li.l_orderkey == keys.o_orderkey, "left_semi")
         .agg(
             F.count(F.lit(1)).alias("n_submissions"),
             F.count(F.when(F.col("l_linestatus") == "O", 1)).alias("n_pending"),
             F.count(F.when(F.col("l_linestatus") == "F", 1)).alias("n_approved"),
-            (
-                F.floor(
-                    (
-                        F.sum(
-                            F.when(
-                                F.col("l_linestatus") == "F", tenk_value
-                            ).otherwise(F.lit(0))
-                        )
-                        + F.lit(50)
-                    )
-                    / F.lit(100.0)
-                )
-                / F.lit(100.0)
-            ).alias("approved_value"),
+            tenk_sum(_approved_tenk()).alias("approved_value"),
         )
     )
     return profile.crossJoin(order_stats).crossJoin(sub_stats)
@@ -148,10 +152,6 @@ def worker_home_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t["lineitem"].filter(F.col("l_suppkey") == 7)
     # same exact integer-units money fold + empty-safe conditional counts
     # as buyer_home_dashboard (see the money-discipline comment there)
-    tenk_value = F.floor(
-        (F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 10000
-        + F.lit(0.5)
-    ).cast("bigint")
     stats = li.agg(
         F.count(F.lit(1)).alias("total_submissions"),
         F.count(F.when(F.col("l_linestatus") == "O", 1)).alias(
@@ -160,20 +160,7 @@ def worker_home_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("l_linestatus") == "F", 1)).alias(
             "approved_submissions"
         ),
-        (
-            F.floor(
-                (
-                    F.sum(
-                        F.when(
-                            F.col("l_linestatus") == "F", tenk_value
-                        ).otherwise(F.lit(0))
-                    )
-                    + F.lit(50)
-                )
-                / F.lit(100.0)
-            )
-            / F.lit(100.0)
-        ).alias("total_earning"),
+        tenk_sum(_approved_tenk()).alias("total_earning"),
     )
     return profile.crossJoin(stats)
 

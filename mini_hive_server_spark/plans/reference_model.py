@@ -2,21 +2,24 @@
 quirk queries running on rows shaped like the reference's actual MongoDB
 collections (fixtures.py), not on TPC-H analogs.
 
-Round-2 verdict ("What's missing" #2): the quirk semantics were
-oracle-checked but exercised on synthetic analog columns. This module
-closes that: each query below is one of the reference's route read paths
-(index.js citation per query) over users/tasks/submissions/payments/
-notifications/withdrawals rows that carry the real quirks — dual key
-spellings, dual payment writer shapes, misspelled status values, missing
-fields, orphan references, out-of-enum roles. Oracles reproduce the SAME
-synthesized rows in DuckDB (fixtures.duck_cte), so every query here is
-value-hash-gated like the rest of the registry.
+The quirk semantics are exercised on rows shaped like the reference's,
+not only on synthetic analog columns: each query below is one of the
+reference's route read paths (index.js citation per query) over
+users/tasks/submissions/payments/notifications/withdrawals rows that
+carry the real quirks — dual key spellings, dual payment writer shapes,
+misspelled status values, missing fields, orphan references, out-of-enum
+roles. Oracles reproduce the SAME synthesized rows in DuckDB
+(fixtures.duck_cte), so every query here is value-hash-gated like the
+rest of the registry.
 
 Plan shapes: users/tasks are broadcast-sized dims at any realistic scale
 (they grow with tenancy, not traffic) — explicit F.broadcast; submissions/
 payments/notifications/withdrawals are the fact sides and are never
-shuffled for a join in these queries. Aggregations are partial-agg'd
-hash groupBys; every LIMIT carries a unique-id tiebreak (registry
+shuffled for a join in these queries. The held copies these queries read
+are one partition each (fixtures.reference_table), which satisfies every
+required distribution, so a groupBy, a global aggregate, a sort or a
+window over them plans no exchange: a query is one job plus its
+broadcasts. Every LIMIT carries a unique-id tiebreak (registry
 determinism rule 3).
 """
 
@@ -42,19 +45,18 @@ def _ts_text(col: str) -> "F.Column":
 def _cents(col) -> "F.Column":
     """Floor-cents rounding for per-row money doubles: floor(x*100+0.5)/100.
 
-    ADVICE r8 (reference_model.py:907): `round(x, 2)` is the .xx5 tie
-    class — Spark routes the double through BigDecimal HALF_UP while
-    DuckDB multiplies-then-rounds, and the two can disagree on the SAME
-    stored double near a .xx5 boundary (the exact failure round 8 fixed
-    in four other queries). floor(x*100 + 0.5)/100 is computed in IEEE
+    `round(x, 2)` is the .xx5 tie class — Spark routes the double
+    through BigDecimal HALF_UP while DuckDB multiplies-then-rounds, and
+    the two can disagree on the SAME stored double near a .xx5
+    boundary. floor(x*100 + 0.5)/100 is computed in IEEE
     double arithmetic identically on both engines over the bit-identical
     operand, so a regenerated fixture landing on a boundary cannot flake
     the driver row. The SQL oracles use the literal
     `floor(x * 100 + 0.5) / 100` spelling of the same fold.
 
-    Accepts a column NAME or a Column expression (round-10 self-review:
-    the name-only form made `coins_after` re-spell the fold inline on
-    `coins + added`, a drift hazard for any future fix to the fold).
+    Accepts a column NAME or a Column expression, so a derived value
+    such as `coins + added` goes through this one fold rather than an
+    inline re-spelling of it.
     """
     from pyspark.sql import Column
 
@@ -300,14 +302,13 @@ LIMIT 25
 def ref_withdrawal_queue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The admin withdrawal queue (GET /admin/withdrawals,
     index.js:1099-1109) enriched with the worker's current coin balance
-    (broadcast users dim). Round-11 fidelity fix: the reference's READ
-    route has NO minimum-coin filter — the 200-coin minimum
-    (index.js:1062) applies at request CREATION only — so the sub-200
-    rows the fixture plants (representing direct inserts that bypassed
-    the API) appear in the queue exactly as the reference would return
-    them; the earlier >= 200 read-side filter both miscited the
-    reference and contradicted `ref_approve_withdrawal_batch`, which
-    processes every pending row."""
+    (broadcast users dim). The reference's READ route has NO
+    minimum-coin filter — the 200-coin minimum (index.js:1062) applies
+    at request CREATION only — so the sub-200 rows the fixture plants
+    (representing direct inserts that bypassed the API) appear in the
+    queue exactly as the reference would return them, and the queue
+    agrees with `ref_approve_withdrawal_batch`, which processes every
+    pending row."""
     wds = reference_table(spark, "ref_withdrawals")
     users = reference_table(spark, "ref_users").select(
         F.col("email").alias("u_email"), "coins"
@@ -979,11 +980,11 @@ def ref_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------- round-9 reads: the last five mappable routes
-# (VERDICT r8 "missing #3" / next-round #5). With these, every reference
-# READ route whose semantics are a query is served by the facade; the
-# remainder of index.js is auth middleware, Stripe side-effects, and
-# duplicate route registrations.
+# ------------------------- tenant reads: buyer tasks, worker queue, task
+# detail, admin stats, buyer submissions. With these and the two below,
+# every reference READ route whose semantics are a query is served by
+# the facade; the remainder of index.js is auth middleware, Stripe
+# side-effects, and duplicate route registrations.
 
 _BUYER_EMAIL = "user7@example.com"
 
@@ -1204,12 +1205,11 @@ def ref_buyer_submissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------- round-10 reads: the final two facade routes
-# (VERDICT r9 #5). `/api/buyer/stats` and `/buyer-tasks` had their
-# SEMANTICS registered since round 9 (`ref_buyer_pending_review` pins the
-# 'approve'/'approved' spelling; `ref_buyer_tasks` is the sorted
-# projection of the same tenant's tasks) but not the routes' EXACT output
-# shapes; these two close the reference's read surface in the facade dict.
+# ------------------------- route-exact shapes: `/api/buyer/stats` and
+# `/buyer-tasks`. Their semantics are shared with `ref_buyer_pending_review`
+# (which pins the 'approve'/'approved' spelling) and `ref_buyer_tasks`
+# (the sorted projection of the same tenant's tasks); these two return
+# the routes' EXACT output shapes.
 
 _BUYER_STATS_ORACLE = f"""
 WITH {duck_cte("ref_tasks", "ref_submissions")}

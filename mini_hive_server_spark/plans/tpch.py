@@ -28,20 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..registry import register
-from .lifecycle import tenk_sql, tenk_sum_sql
-
-
-def tenk(x: "F.Column") -> "F.Column":
-    """`x` folded to exact integer ten-thousandths, the unit of a
-    4-decimal money product; `lifecycle.tenk_sql` is the oracle twin."""
-    return F.floor(x * 10000 + F.lit(0.5)).cast("bigint")
-
-
-def tenk_sum(units: "F.Column") -> "F.Column":
-    """The exact sum of ten-thousandths `units` shown as 2-decimal money
-    (half-up to cents, then one IEEE division); `lifecycle.tenk_sum_sql`
-    is the oracle twin."""
-    return F.floor((F.sum(units) + F.lit(50)) / F.lit(100.0)) / F.lit(100.0)
+from .lifecycle import tenk, tenk_sql, tenk_sum, tenk_sum_sql
 
 
 # Money discipline (as in plans/lifecycle.py): the

@@ -452,3 +452,23 @@ def test_every_facade_query_builds_without_tracked_persist(spark):
         with persistence.scope(keep=False):
             registry.queries()[name](spark, SF_ORACLE)
             assert not len(persistence._LIVE), name
+
+
+def test_warm_facade_pass_job_budget(spark):
+    """A warm serial pass of the 23 facade requests (the benchmark's
+    http_dashboard bag: every query in `_FACADE_QUERIES` once) runs at
+    most 44 Spark jobs. The held reference copies are one partition, so
+    a route over them runs one job plus its broadcasts; copies spread
+    over the default parallelism ran 67 jobs on a 4-core host."""
+    for name in _FACADE_QUERIES:  # warm: memo filled, inputs held
+        collect_route_rows(spark, SF_ORACLE, name)
+    sc = spark.sparkContext
+    group = "facade-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        for name in _FACADE_QUERIES:
+            collect_route_rows(spark, SF_ORACLE, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 44, jobs

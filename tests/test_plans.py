@@ -810,13 +810,11 @@ def _plan_leaves(plan) -> list[str]:
     return [leaf for node in nodes for leaf in _plan_leaves(node)]
 
 
-def test_http_facade_requests_do_not_resynthesize_input(spark):
-    """Every facade query over the reference collections reads the
-    session's held copies (fixtures.reference_table): after one collect,
-    its cached-data plan has an InMemoryRelation and no `range` leaf
-    outside one. A second and third collect of the same query run the
-    same number of jobs, so nothing is replayed."""
-    from mini_hive_server_spark import http_server, persistence
+def _reference_only_routes() -> list[str]:
+    """The 21 facade queries that read only the held reference copies:
+    every GET and POST route and GET /tasks/<oid>, less the two that
+    read the TPC-H fixtures."""
+    from mini_hive_server_spark import http_server
 
     names = sorted(
         {
@@ -827,7 +825,18 @@ def test_http_facade_requests_do_not_resynthesize_input(spark):
         - {"buyer_home_dashboard", "worker_home_stats"}
     )
     assert len(names) == 21, names
-    for name in names:
+    return names
+
+
+def test_http_facade_requests_do_not_resynthesize_input(spark):
+    """Every facade query over the reference collections reads the
+    session's held copies (fixtures.reference_table): after one collect,
+    its cached-data plan has an InMemoryRelation and no `range` leaf
+    outside one. A second and third collect of the same query run the
+    same number of jobs, so nothing is replayed."""
+    from mini_hive_server_spark import http_server, persistence
+
+    for name in _reference_only_routes():
         with persistence.scope(keep=False):
             df = QS[name](spark, SF_SMOKE)
             df.collect()
@@ -849,3 +858,53 @@ def test_http_facade_requests_do_not_resynthesize_input(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert jobs[0] == jobs[1] > 0, jobs
+
+
+def _final_plan_nodes(plan) -> list[str]:
+    """Class names of every node of an executed physical plan: the final
+    plan of each adaptive plan and query stage, reused exchanges and
+    subquery plans included; a cached relation's own plan is not
+    entered (its scan is a leaf)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    elif name == "ReusedExchangeExec":
+        kids = [plan.child()]
+    else:
+        seqs = [plan.children(), plan.subqueries()]
+        kids = [seq.apply(i) for seq in seqs for i in range(seq.size())]
+    return [name, *(n for kid in kids for n in _final_plan_nodes(kid))]
+
+
+def test_held_reference_copies_are_one_partition(spark):
+    """SCALE.md "Held reference copies in one partition": each held
+    copy (fixtures.reference_table) is one partition, and its executed
+    plan reports SinglePartition, which satisfies every distribution an
+    aggregate, sort or window asks for."""
+    from mini_hive_server_spark import fixtures
+
+    for table in fixtures.REF_TABLE_NAMES:
+        held = fixtures.reference_table(spark, table)
+        assert held.rdd.getNumPartitions() == 1, table
+        part = held._jdf.queryExecution().executedPlan().outputPartitioning()
+        assert part.toString() == "SinglePartition", (table, part.toString())
+
+
+def test_reference_routes_plan_no_shuffle(spark):
+    """Every facade route over the held copies alone (all but the two
+    that read the TPC-H fixtures) runs without a shuffle: after one
+    collect, its final adaptive plan has no shuffle exchange; broadcast
+    exchanges are allowed."""
+    from mini_hive_server_spark import persistence
+
+    shuffled = {}
+    for name in _reference_only_routes():
+        with persistence.scope(keep=False):
+            df = QS[name](spark, SF_SMOKE)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan()
+            if "ShuffleExchangeExec" in _final_plan_nodes(plan):
+                shuffled[name] = plan.toString()
+    assert not shuffled, shuffled

@@ -185,6 +185,25 @@ def test_held_copies_equal_fresh_synthesis(spark):
             _assert_same_rows(held, want, t)
 
 
+# ceiling on one held copy's materialized (in-memory columnar) size: a
+# copy lives in one partition, so one task builds and scans all of it
+_HELD_COPY_CEILING_MB = 64
+
+
+def test_held_copies_stay_under_the_one_partition_ceiling(spark):
+    """Each held copy is one partition (fixtures.reference_table), which
+    is justified only while its size is fixed and small: the row counts
+    are the `N_*` constants, the same at every scale factor, and the
+    materialized copy stays under the stated ceiling."""
+    for table in fixtures.REF_TABLE_NAMES:
+        held = fixtures.reference_table(spark, table)
+        held.count()
+        leaves = held._jdf.queryExecution().withCachedData().collectLeaves()
+        assert leaves.size() == 1, table
+        size = leaves.apply(0).cacheBuilder().sizeInBytesStats().value()
+        assert 0 < size < _HELD_COPY_CEILING_MB * 2**20, (table, size)
+
+
 def test_clear_cache_rebuilds_a_fresh_copy(spark):
     old = fixtures.reference_table(spark, "ref_withdrawals")
     old.count()
